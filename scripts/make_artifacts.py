@@ -54,7 +54,10 @@ def run_leg(sf):
     # provenance: legs run through this harness are the builder's
     # rested-machine procedure — the artifact of record (VERDICT r17
     # #2); the driver's own end-of-round leg keeps the default stamp
+    # the record is stamped local[32] below; Bench's unset-env default
+    # is the host's processor count, so pin the cores explicitly
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=f"/root/testdata/{sf}",
+               SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_BENCH_FULL=full_path,
                SPARK_GRAFT_BENCH_SOURCE="quiet-host")
     cmd = (f"java {OPENS} -Xmx16g -Dspark.ui.enabled=false "

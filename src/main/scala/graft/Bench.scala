@@ -2,132 +2,84 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): times every registered query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A small warm-up runs
-  * first so JVM/classloader/codegen startup is not billed to the
-  * first query (the steady-state figure is what scales to a cluster;
-  * cold-start is a fixed cost paid once per application).
+/** Benchmark main: times every registered query on
+  * `$SPARK_GRAFT_SF_DIR` (default sf0.1) through [[Measure.once]] and
+  * prints ONE JSON line. [[Measure.warmUp]] runs first so JVM,
+  * classloader and codegen start-up is not billed to the first query
+  * (the steady-state figure is what scales to a cluster; cold start
+  * is a fixed cost paid once per application). A query that throws is
+  * reported with a NEGATIVE elapsed time and an `"error"` entry, so a
+  * failure is distinguishable from a fast query.
   *
-  * Each query is materialized through the `noop` sink, which pulls
-  * EVERY output column through the full physical plan (unlike
-  * `.count()`, under which Catalyst prunes computed columns and drops
-  * the final sort — that under-measured projection-shaped queries in
-  * round 1). A query that throws is reported with a NEGATIVE elapsed
-  * time and an `"errors"` entry so the driver can distinguish a
-  * failure from a fast query.
-  *
-  * Every query runs four times: the primary `value` figure is the
-  * COLD run (first execution, including Catalyst planning and Janino
-  * whole-stage-codegen compilation — the conservative number), and
-  * `value_warm` is the MEDIAN of three immediate re-runs. Median-of-3
-  * replaced round-7's min-of-2 because the r7↔r8 no-change diff
-  * showed ±20–50% per-query run-to-run noise at the 0.1–0.5 s scale:
-  * the median is robust to a one-off GC/safepoint stall in either
-  * direction, and the recorded min/max spread makes any future
-  * round-over-round regression claim checkable against the noise
-  * band. Profiling showed compile cost is ~0.3–0.5 s per query at
-  * tiny SF — a fixed per-query-SHAPE cost that amortizes to noise on
-  * a cluster running a query over 100 TB, which is why both numbers
+  * Every query runs four times: `value` is the COLD run (first
+  * execution, including Catalyst planning and Janino whole-stage
+  * codegen compilation — the conservative number) and `value_warm`
+  * the MEDIAN of three immediate re-runs. Identical code varies
+  * ±20–50% per query at the 0.1–0.5 s scale; the median is robust to
+  * a one-off GC/safepoint stall in either direction, and the recorded
+  * warm min/max spread makes a regression claim checkable against the
+  * noise band. Compile cost (~0.3–0.5 s per query at tiny SF) is a
+  * fixed per-query-shape cost that amortizes at scale, so both numbers
   * are reported: cold bounds the worst case, warm approximates the
-  * steady-state marginal cost that actually scales.
+  * steady-state marginal cost.
   *
-  * OUTPUT CONTRACT (changed in round 9 after eight rounds of
-  * `parsed: null` driver artifacts): the driver retains only a few KB
-  * of process-output tail, and at 83 queries the full per-query map
-  * on one line overflowed it — the captured tail started mid-object.
-  * So the stdout line now carries ONLY compact totals plus the five
-  * slowest queries (≈400 bytes — fits any plausible tail), and the
-  * complete per-query detail (cold, warm median, warm min/max spread,
-  * GC ms, errors) is written to `BENCH_FULL.json` in the working
-  * directory, committed to the repo per round.
+  * Output contract: a consumer may retain only a few KB of process
+  * output, so stdout carries ONLY compact totals plus the five slowest
+  * queries (≈400 bytes); the full per-query detail (cold, warm median,
+  * warm min/max, GC ms, phases, errors) goes to `BENCH_FULL.json`
+  * (`$SPARK_GRAFT_BENCH_FULL`).
   *
-  * SELF-DEFENSE (round 15): queries whose warm spread exceeds 3× or
-  * whose warm median exceeds cold ×1.5 (both load signatures, seen on
-  * the r14 driver record) are re-measured once and the better median
-  * wins; `sentinel_clean` in both artifacts states whether the final
-  * record is free of load signatures.
+  * Load sentinels, summarized by `sentinel_clean`:
+  *  - within-run: a query whose warm spread exceeds 3× or whose warm
+  *    median exceeds cold ×1.5 (both load signatures) is re-measured;
+  *  - cross-record: within-run tests cannot see a UNIFORM slowdown, so
+  *    the prior committed `BENCH_FULL.json` (read before this run
+  *    overwrites it; `$SPARK_GRAFT_BENCH_PRIOR`, `none` disables) flags
+  *    any query whose warm median, normalized by [[Bench.calibScale]]
+  *    (stamped as `calib_scale_vs_prior`), exceeds 2.5× its last clean
+  *    warm; one that never clears is counted in `n_prior_regressed`
+  *    and sinks `sentinel_clean`, since host load cannot fake the
+  *    prior record. Only a prior stamped
+  *    `sentinel_clean: true` on the same SF is trusted, and queries new
+  *    since then are exempt. A deliberate regression also trips it;
+  *    `$SPARK_GRAFT_BENCH_ACCEPT=q101,q157` exempts the named queries
+  *    (stamped in the artifact) without dropping the check for the rest;
+  *  - codegen fallback: compile-failure / fallback log events during
+  *    the run are counted into `n_codegen_fallbacks`; fail-closed, so
+  *    a run whose log appender never armed reports -1 and can never
+  *    stamp `sentinel_clean`.
   *
-  * CROSS-RECORD SENTINEL (round 17, VERDICT r16 #2): within-run
-  * spread and warm-vs-cold ratios cannot see a UNIFORM slowdown — the
-  * r16 final record passed both while running +24% over the session-3
-  * committed record (q101 11× with zero code change). So the prior
-  * committed `BENCH_FULL.json` (read BEFORE this run overwrites it)
-  * now supplies a third signature: any query whose latest warm median
-  * exceeds 2.5× its last committed clean warm is flagged, retried
-  * like the other signatures, and counted in `n_prior_regressed` if
-  * it never clears — which also sinks `sentinel_clean`, since host
-  * load cannot fake the prior record. Only a prior stamped
-  * `sentinel_clean: true` is trusted as a reference; queries new
-  * since the prior record are exempt. A REAL regression (a deliberate
-  * plan change) will also trip this — that is intended: the builder
-  * attributes it in BENCH_NOTES and the next committed clean record
-  * resets the reference. `SPARK_GRAFT_BENCH_PRIOR=none` disables
-  * (e.g. benching a different SF than the committed record).
-  * `SPARK_GRAFT_BENCH_ACCEPT=q101,q157` exempts NAMED queries from
-  * the cross-record check (an attributed, deliberate regression —
-  * BENCH_NOTES carries the why) WITHOUT dropping the sentinel for
-  * every other query; accepted names are stamped in the artifact.
-  *
-  * ROUND 20 (VERDICT r19 #3/#4 + ADVICE): (a) the cross-record check
-  * is CALIB-NORMALIZED — see [[Bench.calibScale]] for the documented
-  * tolerance (slower-host credit only, capped at 3×), so the r19-
-  * style host drift neither flags false regressions nor lets a real
-  * one hide behind "host was slow" prose; the applied scale is
-  * stamped as `calib_scale_vs_prior`. (b) Artifact-lifecycle queries
-  * stamp per-phase seconds (`phases_cold` / `phases_warm`, via
-  * [[PhaseTimer]]) so build-once cost and query-many serve cost are
-  * priced separately. (c) The codegen-fallback sentinel is
-  * fail-closed: `codegen_sentinel_armed` records whether the log
-  * appender actually installed; an unarmed run reports
-  * `n_codegen_fallbacks: -1` and can never stamp `sentinel_clean`.
-  *
-  * RECORD PROVENANCE (round 18, VERDICT r17 #2): the r16/r17 rounds
-  * each produced TWO sf0.1 records — the driver's end-of-round leg
-  * (run concurrently with whatever else the host is doing) and the
-  * builder's quiet-host record (scripts/rerun_sf01_leg.py on a rested
-  * machine) — that disagreed by 10–12% purely on host load. Both
-  * artifacts now stamp `record_source` (`SPARK_GRAFT_BENCH_SOURCE`,
-  * default "end-of-round-leg"; the rerun harness stamps
-  * "quiet-host") so the two can never be misread as a regression:
-  * the quiet-host record is the artifact of record, the driver leg
-  * is the snapshot. */
+  * Artifact-lifecycle queries stamp per-phase seconds (`phases_cold` /
+  * `phases_warm`, via [[PhaseTimer]]) so build-once and query-many
+  * costs are priced separately. `record_source`
+  * (`$SPARK_GRAFT_BENCH_SOURCE`, default "end-of-round-leg"; the
+  * quiet-host rerun harness stamps "quiet-host") keeps a snapshot taken
+  * on a busy host from being misread as a regression against a
+  * quiet-host record (the artifact of record) — the two differ by
+  * 10–12% on host load alone. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt),
+      aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toBoolean)
 
-    // Codegen-fallback sentinel (VERDICT r18 #2): two r18 expression
-    // bridges generated Java that never compiled, and every value
-    // gate stayed green because Spark's fallback runs the interpreted
-    // eval — the one failure class that costs only speed and is
-    // therefore invisible to a correctness artifact. CodegenBridgeSpec
-    // compiles every bridge directly in the test suite; this counter
-    // is the BENCH-side twin: it counts compile-failure / fallback
-    // log events during the measured run itself (WholeStageCodegenExec
-    // logs "Whole-stage codegen disabled" at WARN on Janino failure;
-    // CodeGenerator logs "failed to compile"), lands in the artifact
-    // as `n_codegen_fallbacks`, and sinks `sentinel_clean` when
-    // nonzero — a record set with an interpreted hot path can no
-    // longer read as clean.
+    // Codegen-fallback sentinel: an expression whose generated Java
+    // does not compile still returns correct values, because Spark
+    // falls back to interpreted eval — a failure that costs only speed
+    // and is invisible to a correctness artifact. CodegenBridgeSpec
+    // compiles every bridge in the test suite; this counter is the
+    // bench-side twin: it counts compile-failure / fallback log events
+    // during the measured run (WholeStageCodegenExec logs "Whole-stage
+    // codegen disabled" at WARN on Janino failure; CodeGenerator logs
+    // "failed to compile") into `n_codegen_fallbacks`, and a nonzero
+    // count sinks `sentinel_clean`.
     val codegenFallbacks = new java.util.concurrent.atomic.AtomicLong(0)
-    // Fail-closed arming (ADVICE r19): if the appender install throws
-    // (different logging backend, cast failure), the old catch left the
-    // counter at 0 and the record could read sentinel-clean while the
-    // sentinel was never listening — the exact silent-green failure the
-    // counter exists to prevent. An unarmed run now stamps
+    // Fail-closed arming: if the appender install throws (different
+    // logging backend, cast failure), the run stamps
     // `codegen_sentinel_armed: false`, reports n_codegen_fallbacks -1,
-    // and CANNOT claim sentinel_clean.
+    // and cannot claim sentinel_clean — a sentinel that never listened
+    // must not read as a clean 0.
     var codegenSentinelArmed = false
     try {
       import org.apache.logging.log4j.{Level, LogManager}
@@ -152,13 +104,13 @@ object Bench {
       codegenSentinelArmed = true
     } catch { case _: Throwable => () } // sentinel must never sink the bench
 
-    // Window-WARN whitelist (VERDICT r19 #7): three documented
+    // Window-WARN whitelist: three documented
     // bounded-frame windows (TrainQueries sources-sized frames, the
     // q150 ≤100-row top-k frame) legitimately run unpartitioned, and
     // WindowExec WARNs once per execution — hundreds of identical
     // lines that bury the warnings the machine-read tail exists for
     // (the codegen-fallback counter proved those matter). Scoped to
-    // the bench runner only: a DENY filter on the CONSOLE appenders
+    // the bench runner only: a DENY filter on the console appenders
     // for exactly that message, COUNTED into the artifact as
     // `n_window_warns_suppressed` — suppressed from the tail, never
     // from the record. The counting sentinel appender above is
@@ -193,32 +145,12 @@ object Bench {
     // per-query failures scattered through the bench record.
     Tables.sentinel(spark, sfDir).foreach(d => System.err.println(s"[sentinel] $d"))
 
-    // warm-up: JVM + parquet reader + codegen + one shuffle + noop sink
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(1000).selectExpr("id % 7 k", "id v").groupBy("k").count()
-        .write.format("noop").mode("overwrite").save()
-      Tables.lineitem(spark, sfDir).select(count(lit(1))).count()
-      Tables.documents(spark, sfDir).select(count(lit(1))).count()
-    } catch { case _: Throwable => () }
+    Measure.warmUp(spark, sfDir)
 
-    /** Full-result materialization: the noop sink consumes every row
-      * and every column of the final plan but writes nothing. Drains
-      * [[PhaseTimer]] around the run so artifact-lifecycle queries
-      * report build/validate seconds separately from serve
-      * (VERDICT r19 #3). */
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String], Map[String, Double]) = {
-      PhaseTimer.drain() // discard anything a previous failure left behind
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, None, PhaseTimer.drain())
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          (-(System.nanoTime() - t0) / 1e9,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)), PhaseTimer.drain())
-      }
+    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Measure.Run = {
+      val r = Measure.once(spark, sfDir, fn)
+      r.err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
+      r
     }
 
     import scala.jdk.CollectionConverters._
@@ -226,9 +158,8 @@ object Bench {
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ > 0).sum
 
     // ------------------------------------------------------------- //
-    // Load sentinel (VERDICT r12 #2): r12's warm medians moved +51%
-    // with no plan changes — measurement-host load, provable only by
-    // forensics. Record the machine state IN the artifact so a
+    // Load sentinel: host load can move warm medians by half with no
+    // plan change. Record the machine state IN the artifact so a
     // polluted run is detectable by inspection: /proc/loadavg at
     // start and end, plus a FIXED-WORK calibration query (a pure
     // CPU-bound hash-aggregate over a generated range — no IO, no
@@ -244,33 +175,28 @@ object Bench {
     } catch { case _: Throwable => "" }
     def calibration(): Double = try {
       // One untimed execution first: the probe's own codegen + C2 JIT
-      // ramp otherwise lands entirely in the START measurement (r13/r14
-      // showed calib_start 3-8× calib_end on an IDLE host), burying the
-      // load signal the probe exists to expose. Warming the exact shape
-      // makes start and end measure the same steady state, so their
-      // ratio is load and only load.
-      spark.range(20000000L)
-        .selectExpr("(id * 2654435761) % 1000003 AS k")
-        .groupBy("k").count()
-        .write.format("noop").mode("overwrite").save()
+      // ramp otherwise lands entirely in the START measurement (3-8×
+      // the end reading on an idle host), burying the load signal the
+      // probe exists to expose. Warming the exact shape makes start and
+      // end measure the same steady state, so their ratio is load only.
+      def probe() = Measure.noop(spark.range(20000000L)
+        .selectExpr("(id * 2654435761) % 1000003 AS k").groupBy("k").count())
+      probe()
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(20000000L)
-          .selectExpr("(id * 2654435761) % 1000003 AS k")
-          .groupBy("k").count()
-          .write.format("noop").mode("overwrite").save()
+        probe()
         (System.nanoTime() - t0) / 1e9
       }.sorted
       runs(1) // median-of-3, same estimator as the queries
     } catch { case _: Throwable => -1.0 } // sentinel must never sink the bench
     val loadStart = loadavg()
     val calibStart = calibration()
-    // provenance stamp (VERDICT r17 #2): which measurement protocol
+    // provenance stamp: which measurement protocol
     // produced this record — the rerun harness stamps "quiet-host"
     val recordSource =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SOURCE", "end-of-round-leg")
 
-    // Cross-record reference (VERDICT r16 #2): per-query warm medians
+    // Cross-record reference: per-query warm medians
     // from the prior committed BENCH_FULL.json — read NOW, before this
     // run overwrites the file. Trusted only if the prior run stamped
     // itself sentinel-clean AND benched the same SF dir.
@@ -293,7 +219,7 @@ object Bench {
               .map(e => e.getKey -> e.getValue.path("warm").asDouble(-1.0))
               .filter(_._2 > 0).toMap
             // the record day's host speed, for calib-normalization of
-            // the cross-record check (VERDICT r19 #4)
+            // the cross-record check
             val calibs = Seq("calib_sec_start", "calib_sec_end", "calib_sec_retry")
               .map(k => node.path(k).asDouble(-1.0)).filter(_ > 0)
             (warms, calibs)
@@ -303,7 +229,7 @@ object Bench {
 
     /** Per-query record: cold, warm median, warm min/max (noise
       * band), cold-run GC ms, first error if any run failed, plus
-      * per-phase seconds (VERDICT r19 #3): `phasesCold` from the cold
+      * per-phase seconds: `phasesCold` from the cold
       * run (where build-if-absent pays the artifact build) and
       * `phasesWarm` as the PER-RUN average over the warm re-runs
       * (nonzero only if something rebuilt mid-suite — itself a
@@ -318,7 +244,7 @@ object Bench {
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gc0 = gcMillis()
-      val (cold, coldErr, phasesCold) = run(name, fn)
+      val Measure.Run(cold, coldErr, phasesCold) = run(name, fn)
       val gcCold = gcMillis() - gc0
       if (coldErr.isEmpty) {
         // warm = median of three re-runs; only SUCCESSFUL runs
@@ -327,15 +253,15 @@ object Bench {
         // errors/n_failed — intermittent re-execution flakiness must
         // not vanish from the artifact.
         val runs = Seq(run(name, fn), run(name, fn), run(name, fn))
-        val oks = runs.filter(_._2.isEmpty).map(_._1).sorted
-        val phasesWarm = mergePhases(runs.map(_._3))
+        val oks = runs.filter(_.err.isEmpty).map(_.sec).sorted
+        val phasesWarm = mergePhases(runs.map(_.phases))
           .map { case (k, v) => k -> v / runs.size }
         if (oks.nonEmpty)
           QRes(name, cold, oks(oks.size / 2), oks.head, oks.last, gcCold,
-            runs.flatMap(_._2).headOption.map("warm run: " + _),
+            runs.flatMap(_.err).headOption.map("warm run: " + _),
             phasesCold, phasesWarm)
-        else QRes(name, cold, runs.head._1, runs.head._1, runs.head._1, gcCold,
-          runs.head._2.map("warm run: " + _), phasesCold, phasesWarm)
+        else QRes(name, cold, runs.head.sec, runs.head.sec, runs.head.sec, gcCold,
+          runs.head.err.map("warm run: " + _), phasesCold, phasesWarm)
       } else QRes(name, cold, cold, cold, cold, gcCold, coldErr, phasesCold)
     }
     // full JSON string escape (backslash, quote, ALL control chars) —
@@ -353,8 +279,8 @@ object Bench {
     val calibEnd = calibration()
 
     // ------------------------------------------------------------- //
-    // Self-defending retry (VERDICT r14 #1, escalated r16 per VERDICT
-    // r15 #1 — one retry wasn't enough under SUSTAINED host load):
+    // Self-defending retry (one retry is not enough under sustained
+    // host load):
     //  * a query is FLAGGED when its LATEST measurement's warm spread
     //    (max/min) exceeds 3×, or its latest warm median exceeds its
     //    cold time ×1.5 — warm > cold is physically backwards on a
@@ -371,8 +297,7 @@ object Bench {
     //    recovered host produces two agreeing probes.
     // `sentinel_clean` then states whether the final record is free
     // of load signatures: some calibration pair agrees within 1.5×
-    // AND no query is still flagged on its latest attempt. The
-    // driver's BENCH_r{N}.json carries the verdict.
+    // AND no query is still flagged on its latest attempt.
     // ------------------------------------------------------------- //
     def ratio(a: Double, b: Double): Double =
       if (a > 0 && b > 0) math.max(a, b) / math.min(a, b) else Double.MaxValue
@@ -383,21 +308,18 @@ object Bench {
         m.warm > math.max(cold, 1e-9) * 1.5)
     var latest: Map[String, Meas] = results.map(r =>
       r.name -> Meas(r.warm, r.warmMin, r.warmMax)).toMap
-    // third signature (r17): >2.5× the prior committed clean warm —
+    // third signature: >2.5× the prior committed clean warm —
     // catches the uniform slowdown the within-run tests can't see.
     // SPARK_GRAFT_BENCH_ACCEPT names queries whose regression is
     // DELIBERATE (a plan change, attributed in BENCH_NOTES): they are
     // exempted individually so the cross-record check keeps guarding
-    // everything else (r17 ADVICE: the only escape used to be
-    // PRIOR=none, which dropped the sentinel wholesale).
+    // everything else (PRIOR=none would drop it wholesale).
     val accepted: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ACCEPT")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-    // Calib-normalization (VERDICT r19 #4): the r19 round's host ran
-    // 16–45% slower than the r18 record day (provable only by hand-
-    // reading the calibration fields), which would have flagged ~150
-    // false regressions at a raw 2.5× threshold had the drift been a
-    // little larger — while "host was slow" prose could equally hide a
-    // real one. The check now compares warm / calibScale against the
+    // Calib-normalization: a host 16–45% slower than the record day
+    // would flag false regressions at a raw 2.5× threshold, while
+    // "host was slow" prose could equally hide a real one. The check
+    // compares warm / calibScale against the
     // prior warm, where calibScale = today's fixed-work calibration
     // over the record day's (min of each run's probes — the least-
     // loaded moment approximates true host speed). Tolerance is
@@ -427,7 +349,7 @@ object Bench {
           val runs = Seq(run(r.name, SparkEntry.queries(r.name)),
                          run(r.name, SparkEntry.queries(r.name)),
                          run(r.name, SparkEntry.queries(r.name)))
-          val oks = runs.filter(_._2.isEmpty).map(_._1).sorted
+          val oks = runs.filter(_.err.isEmpty).map(_.sec).sorted
           if (oks.isEmpty) r // retry itself failed: keep the original record
           else {
             val m = oks(oks.size / 2)
@@ -454,8 +376,8 @@ object Bench {
     val stillFlagged = finalResults.count(isFlagged)
     val nPriorRegressed = finalResults
       .count(r => r.err.isEmpty && priorRegressed(r.name))
-    // -1 = the sentinel never armed (distinguishable from a clean 0 —
-    // ADVICE r19); an unarmed run can never stamp itself clean.
+    // -1 = the sentinel never armed (distinguishable from a clean 0);
+    // an unarmed run can never stamp itself clean.
     val nCodegenFallbacks = if (codegenSentinelArmed) codegenFallbacks.get() else -1L
     val sentinelClean =
       calibFinalRatio <= 1.5 && stillFlagged == 0 && nCodegenFallbacks == 0L
@@ -478,7 +400,7 @@ object Bench {
         ",\"warm\":" + jnum(r.warm) +
         ",\"warm_min\":" + jnum(r.warmMin) +
         ",\"warm_max\":" + jnum(r.warmMax) +
-        // phase split (VERDICT r19 #3): cold-run artifact build /
+        // phase split: cold-run artifact build /
         // validate seconds, and per-warm-run phase seconds when a
         // rebuild leaked into the warm runs (≥ 0.05 s filters timer
         // noise) — serve-path cost = warm − phases_warm
@@ -535,8 +457,8 @@ object Bench {
   }
 
   /** Host-speed scale between the prior record's day and today, from
-    * the fixed-work CPU calibration probes stamped in both artifacts
-    * (VERDICT r19 #4). `min` of each side's probes approximates the
+    * the fixed-work CPU calibration probes stamped in both artifacts.
+    * `min` of each side's probes approximates the
     * least-loaded moment ≈ true host speed. Tolerance, documented:
     *  - floor 1.0 — only a SLOWER host is forgiven; a faster one must
     *    not inflate normalized warms into false regressions (the
@@ -544,8 +466,8 @@ object Bench {
     *  - cap 3.0 — drift credit is bounded, so a regression larger
     *    than any plausible host slowdown still flags and cannot hide
     *    behind the calibration;
-    *  - missing/invalid probes on either side → 1.0 (the raw check,
-    *    exactly the pre-r20 behavior). */
+    *  - missing/invalid probes on either side → 1.0 (the raw,
+    *    unnormalized check). */
   private[graft] def calibScale(priorCalibs: Seq[Double], currentCalibs: Seq[Double]): Double = {
     val p = priorCalibs.filter(_ > 0)
     val c = currentCalibs.filter(_ > 0)

@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dir = "/root/testdata/sf0.01"
     for (name <- args) {
       println(s"===== $name =====")

@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for SentimentSpec's pinned fixture goldens. */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     import spark.implicits._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select($"doc_id", graft.queries.TextQueries.cleanText($"text").as("c"))

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Builder-side IVF geometry probe (TimeQueries' recall sibling):
+/** IVF geometry probe (TimeQueries' recall sibling):
   * sweep explicit `(k, nprobe)` settings over the q58 audit
   * ([[graft.queries.SimilarityQueries.ivfNnAudited]]) on a given
   * fixture and print recall@1 plus wall seconds per setting — the
@@ -17,14 +15,7 @@ import org.apache.spark.sql.SparkSession
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     for (spec <- args.drop(1)) {
       val Array(k, np) = spec.split(":")
       if (k == "auto") spark.conf.unset("spark.graft.ivf.k")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Degenerate-fixture recipes (round 18, VERDICT r17 #4): the ONE
+/** Degenerate-fixture recipes: the ONE
   * source of truth for the corpora the degenerate sweep runs on —
   * shared by the in-JVM `DegenerateCorpusSpec` (completion contract)
   * and the committed cross-engine gate (`scripts/degen_check.py` →
@@ -57,13 +57,7 @@ object MakeDegen {
   def main(args: Array[String]): Unit = {
     val in = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outBase = if (args.length > 1) args(1) else "/tmp/graft_degen"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(shufflePartitions = Some(8))
     recipes.keys.toSeq.sorted.foreach { r =>
       derive(spark, in, s"$outBase/$r", r)
       println(s"[makedegen] derived $r → $outBase/$r")

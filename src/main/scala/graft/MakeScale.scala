@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-/** sf1 fixture generator (round 18, VERDICT r17 next-round #1): the
+/** sf1 fixture generator: the
   * driver ships sf{0.001,0.01,0.1} only, so the "plans survive another
   * decade of data" claim stopped at sf0.1. This tool derives a
   * BENCH-ONLY sf1-equivalent (10× sf0.1) into a repo-local directory
@@ -13,10 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   * scaling bench measures the same statistical regime:
   *
   *  - `documents` (50k): fresh i.i.d. docs with a REALISTIC text
-  *    distribution (VERDICT r19 #1 — the r18/r19 fixture reused the
-  *    driver fixture's 30-word vocabulary, which degenerates every
-  *    df-based cost model: df ≈ n for all terms, so q191-class
-  *    scaling attributions could not be verified against it):
+  *    distribution (the shipped fixture's 30-word vocabulary
+  *    degenerates every df-based cost model: df ≈ n for all terms, so
+  *    q191-class scaling attributions cannot be verified against it):
   *      - ZIPFIAN vocabulary, 30,000 types: the fixture's own ~30
   *        corpus-scale tokens as the head ranks, 19,970 synthetic
   *        shared types behind them under Zipf(s = 1.07) — the
@@ -30,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   *        clipped to [8, 120] tokens — mean ~54 matches the driver
   *        fixture (54.1), with the heavy right tail uniform lengths
   *        lack; the clip keeps the char-length regime of the
-  *        oracle-tier q131 census comparable across rounds;
+  *        oracle-tier q131 census comparable across fixtures;
   *      - lang weights from the fixture (en .41 / zh .15 / es .15 /
   *        fr .15 / de .14), source uniform src0..src19, and the
   *        fixture's near-dup construction: 5% of docs are a COPY of
@@ -53,13 +52,13 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   *
   * Determinism: every value is a pure function of (SEED, row id) via
   * splitmix-style mixing — re-running reproduces the fixture bit-for-
-  * bit, so timings are comparable across sessions. The output passes
+  * bit, so timings are comparable across runs. The output passes
   * `Tables.sentinel` (asserted before exit).
   *
   * Usage: runMain graft.MakeScale [inDir] [outDir] [factor]
   *        runMain graft.MakeScale --vectors [inDir] [outDir] [nVec]
   *
-  * The `--vectors` recipe (VERDICT r19 #2) writes ONLY an
+  * The `--vectors` recipe writes ONLY an
   * `embeddings.parquet` of nVec vectors — the ≥262k-vector tier that
   * pushes auto IVF k = ceil(sqrt(n)) past the 512-cell trainer
   * handoff, so the distributed-MLlib-KMeans path can be benched where
@@ -132,14 +131,7 @@ object MakeScale extends Serializable {
     val out = if (rest.length > 1) rest(1) else (if (vectorsOnly) "data/sfvec" else "data/sf1")
     val factor = if (rest.length > 2) rest(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-make-scale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(shufflePartitions = Some(32))
     import spark.implicits._
 
     def write(df: DataFrame, t: String): Unit = {

@@ -1,17 +1,17 @@
 package graft
 
-/** Wall-clock phase attribution for artifact-lifecycle queries
-  * (VERDICT r19 #3): the stored-index rows (q92/q116/q144/q146–q148,
+/** Wall-clock phase attribution for artifact-lifecycle queries: the
+  * stored-index rows (q92/q116/q144/q146–q148,
   * the BM25/neardup/PCA/BPE artifact families) pay an EAGER artifact
   * build (`saveAsTable` inside the query function, build-if-absent)
   * on their first run of a session, then serve from the stored table
-  * on every later run — but the bench artifact priced both phases as
-  * one number, so the sf1 growth column overstated serve-path growth
-  * wherever a 10× corpus rebuild landed in-measurement.
+  * on every later run. Priced as one number, the sf1 growth column
+  * would overstate serve-path growth wherever a 10× corpus rebuild
+  * lands in-measurement.
   *
   * Builders wrap their eager build work in `timed("build")` (and the
-  * q92 live-pipeline comparison in `timed("validate")`); Bench and
-  * TimeQueries drain the accumulator around each measured run and
+  * q92 live-pipeline comparison in `timed("validate")`);
+  * [[Measure.once]] drains the accumulator around each measured run and
   * stamp per-phase seconds into BENCH_FULL.json / the sf1 scaling
   * column, so "build once" and "query many" are priced separately —
   * the split the 100 TB lifecycle design exists for.

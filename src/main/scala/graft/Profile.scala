@@ -1,140 +1,52 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** Consolidated profiling driver (one main, subcommands — VERDICT r10
-  * #5): measurement tooling, NOT part of the driver contract.
+/** Profiling main: measurement tooling, not one of the engine's
+  * entry points (SparkEntry, Verify, Bench).
   *
-  * Usage: `runMain graft.Profile <subcommand> [args]`
+  * Usage: `runMain graft.Profile <subcommand> <substr...>`
   *
-  *  - `med <substr...>` — median-of-7 warm timer over registered
-  *    queries matching any substring (round-9 noise control: identical
-  *    code varies ±20–50% per query at the 0.1–0.5 s scale, so
-  *    single-shot timings can't support any claim below ~1.5×).
-  *  - `stage` — labeled sub-plan decomposition of the historically
-  *    expensive shapes (minhash, within-label pairs, IVF, VADER,
-  *    distinct) so optimization targets the real cost, not a guess.
-  *  - `floor` — per-action scheduling/planning-floor probes (trivial
-  *    scan/union/sort shapes; the BENCH_NOTES floor attributions).
+  *  - `med <substr...>` — median-of-7 timer over the registered
+  *    queries matching any substring. Identical code varies ±20–50%
+  *    per query at the 0.1–0.5 s scale, so single-shot timings cannot
+  *    support any claim below ~1.5×.
+  *  - `jobs <substr...>` — per-query job accounting: how much of a
+  *    warm run is per-job/stage scheduling floor vs executor compute.
   *
-  * `SPARK_GRAFT_SF_DIR` selects the dataset (default sf0.1). The
-  * retired one-off round decompositions (ProfileR7/ProfileR9/
-  * ProfileIvf) live in git history; their conclusions are recorded as
-  * BENCH_NOTES.md attributions and, where they changed a plan, in the
-  * operator's own Scaladoc. */
+  * `SPARK_GRAFT_SF_DIR` selects the dataset (default sf0.1). */
 object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // shared warm-up: JIT/codegen + table footers
-    spark.range(1000).selectExpr("id % 7 k").groupBy("k").count()
-      .write.format("noop").mode("overwrite").save()
-    Tables.documents(spark, sfDir).select(count(lit(1))).count()
+    val spark = Session.local()
+    Measure.warmUp(spark, sfDir)
     try args.toList match {
       case "med" :: pats if pats.nonEmpty => med(spark, sfDir, pats)
-      case "stage" :: Nil => stage(spark, sfDir)
-      case "floor" :: Nil => floor(spark, sfDir)
-      case "r20" :: Nil => r20(spark, sfDir)
       case "jobs" :: pats if pats.nonEmpty => jobs(spark, sfDir, pats)
-      case "q122ab" :: Nil => q122ab(spark, sfDir)
-      case "loop" :: Nil => loopProbe(spark, sfDir)
       case other =>
         System.err.println(
           s"unknown profile subcommand '${other.mkString(" ")}'; " +
-            "usage: Profile med <substr...> | stage | floor | r20 | q122ab | loop")
+            "usage: Profile med <substr...> | jobs <substr...>")
         sys.exit(2)
     } finally spark.stop()
   }
 
-  private def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  private def matching(pats: Seq[String]): Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filter(n => pats.exists(n.contains))
 
-  /** Median-of-7 warm timings for registered queries by substring. */
-  private def med(spark: SparkSession, sfDir: String, pats: Seq[String]): Unit = {
-    Tables.events(spark, sfDir).select(count(lit(1))).count()
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => pats.exists(n.contains))
-    for (name <- names) {
-      val fn = SparkEntry.queries(name)
-      val ts = (1 to 7).map { _ =>
-        val t0 = System.nanoTime()
-        noop(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+  /** One measured run that fails the profile when the query throws. */
+  private def timed(spark: SparkSession, sfDir: String, name: String): Double =
+    Measure.once(spark, sfDir, SparkEntry.queries(name)).orFail(name).sec
+
+  /** Median-of-7 timings for registered queries by substring. */
+  private def med(spark: SparkSession, sfDir: String, pats: Seq[String]): Unit =
+    for (name <- matching(pats)) {
+      val ts = (1 to 7).map(_ => timed(spark, sfDir, name)).sorted
       println(f"[med] $name%-32s median ${ts(3)}%.3f  min ${ts.head}%.3f  max ${ts.last}%.3f")
     }
-  }
 
-  /** Labeled stage decomposition of the expensive query shapes. */
-  private def stage(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    def time(label: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      noop(df)
-      println(f"[profile] $label%-40s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-
-    import graft.functions.expressions._
-    import graft.queries.DedupQueries.shingles
-    val tokens = (c: org.apache.spark.sql.Column) => split(trim(c), "\\s+")
-
-    time("q43 full")(graft.queries.DedupQueries.minhashDedup(spark, sfDir))
-    time("docs scan only")(Tables.documents(spark, sfDir).select($"doc_id", $"text"))
-    time("tokenize")(Tables.documents(spark, sfDir).select($"doc_id", tokens($"text").as("t")))
-    time("shingles")(Tables.documents(spark, sfDir)
-      .select($"doc_id", shingles(tokens($"text"), 3).as("sh")))
-    time("fused sig n=3 k=128")(Tables.documents(spark, sfDir)
-      .select($"doc_id", minhash_signature(tokens($"text"), n = 3, k = 128, seed = 42).as("sig")))
-    time("q43 full again")(graft.queries.DedupQueries.minhashDedup(spark, sfDir))
-
-    val e = Tables.embeddings(spark, sfDir).select($"vec_id", $"label", $"embedding")
-    val a = e.select($"vec_id".as("id_a"), $"label", $"embedding".as("emb_a"))
-    val b = e.select($"vec_id".as("id_b"), $"label", $"embedding".as("emb_b"))
-    time("q45 pairs join only")(
-      a.join(b, Seq("label")).filter($"id_b" > $"id_a").select($"id_a", $"id_b"))
-    time("q45 pairs + cosine")(
-      a.join(b, Seq("label")).filter($"id_b" > $"id_a")
-        .select($"id_a", $"id_b", cosine_similarity($"emb_a", $"emb_b").as("c")))
-    time("q45 full")(graft.queries.DedupQueries.embeddingNearDups(spark, sfDir))
-    time("q47 full")(graft.queries.SimilarityQueries.nnWithinLabel(spark, sfDir))
-
-    // fixed-cost decomposition
-    time("floor: docs project only")(
-      Tables.documents(spark, sfDir).select($"doc_id", length($"text").as("l")))
-    time("floor + global orderBy")(
-      Tables.documents(spark, sfDir).select($"doc_id", length($"text").as("l"))
-        .orderBy($"doc_id"))
-    time("floor + repart1 sortWithin")(
-      Tables.documents(spark, sfDir).select($"doc_id", length($"text").as("l"))
-        .repartition(1).sortWithinPartitions($"doc_id"))
-    // IVF end-to-end (the sub-plan decomposition that diagnosed the
-    // broadcast-of-probe-side pathology is retired; the conclusion —
-    // shuffle-hash the cell join — is recorded in BENCH_NOTES.md and
-    // encoded in SimilarityQueries.ivfNn itself, so Profile measures
-    // only the real query and cannot drift from it)
-    time("ivf full")(graft.queries.SimilarityQueries.ivfNn(spark, sfDir))
-    val vaderUdf = udf((t: String) => graft.functions.Vader.score(t))
-    val vaderNoSort = Tables.documents(spark, sfDir)
-      .withColumn("v", vaderUdf(graft.queries.TextQueries.cleanText($"text")))
-      .select($"doc_id", $"v.compound".as("compound"))
-    time("q33 as-is")(graft.queries.SentimentQueries.vaderDocs(spark, sfDir))
-    time("q33-like no sort")(vaderNoSort)
-    time("q33-like repart1 sort")(vaderNoSort.repartition(1).sortWithinPartitions($"doc_id"))
-    time("q09 as-is")(graft.queries.Relational.distinctParts(spark, sfDir))
-    time("q33 again")(graft.queries.SentimentQueries.vaderDocs(spark, sfDir))
-    time("q09 again")(graft.queries.Relational.distinctParts(spark, sfDir))
-  }
-
-  /** Per-query JOB accounting (r20): how much of a warm run is
+  /** Per-query JOB accounting: how much of a warm run is
     * per-job/stage scheduling floor vs executor compute. Runs each
     * matching query once warm under a listener and reports job count,
     * stage count, task count, summed executor task time, and wall —
@@ -142,12 +54,8 @@ object Profile {
     * jobs, checkpoints, collects), not compute-dominated. */
   private def jobs(spark: SparkSession, sfDir: String, pats: Seq[String]): Unit = {
     import org.apache.spark.scheduler._
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => pats.exists(n.contains))
-    Tables.events(spark, sfDir).select(count(lit(1))).count()
-    for (name <- names) {
-      val fn = SparkEntry.queries(name)
-      noop(fn(spark, sfDir)) // warm
+    for (name <- matching(pats)) {
+      timed(spark, sfDir, name) // warm
       val nJobs = new java.util.concurrent.atomic.AtomicLong(0)
       val nStages = new java.util.concurrent.atomic.AtomicLong(0)
       val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
@@ -167,19 +75,16 @@ object Profile {
             .getOrElse(s.stageInfo.name.takeWhile(_ != '\n')).trim
           stageMs.put(s.stageInfo.stageId, (site, tm))
         }
-        // BOTH sums, labeled distinctly (ADVICE r20): taskInfo.duration
-        // is wall clock including scheduler delay; executorRunTime is
-        // what the per-stage rows below report — mixing them under one
-        // name made the two numbers incomparable
+        // BOTH sums, labeled distinctly: taskInfo.duration is wall
+        // clock including scheduler delay; executorRunTime is what the
+        // per-stage rows below report
         override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
           if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
           if (t.taskMetrics != null) runMs.addAndGet(t.taskMetrics.executorRunTime)
         }
       }
       spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      noop(fn(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = timed(spark, sfDir, name)
       Thread.sleep(300) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
       println(f"[jobs] $name%-34s wall ${wall}%6.2f  jobs ${nJobs.get()}%3d  " +
@@ -190,457 +95,5 @@ object Profile {
         if (ms > 200) println(f"[jobs]   stage $id%4d ${ms / 1e3}%6.2f s  $nm")
       }
     }
-  }
-
-  /** Round-20 optimization decompositions: where the warm seconds of
-    * the top bench rows actually go (q131/q145 candidate-vs-DP split,
-    * q191 stage split, the q66/q82/q157/q173 shared label loop). */
-  private def r20(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    def time(label: String)(df: => DataFrame): Unit = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); noop(df); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[r20] $label%-46s med ${ts(1)}%.3f  min ${ts.head}%.3f")
-    }
-
-    // ---- q131 decomposition (mirrors editDistanceNearDupsOver) ----
-    val docs = Tables.documents(spark, sfDir)
-    val alphabet = ('a' to 'z') ++ ('0' to '9') :+ ' '
-    def bagCols(prefix: String): Seq[org.apache.spark.sql.Column] =
-      alphabet.zipWithIndex.map { case (ch, i) =>
-        (length($"text") - length(translate($"text", ch.toString, "")))
-          .cast("int").as(s"$prefix$i")
-      }
-    val ascii = docs.filter(octet_length($"text") === length($"text"))
-    val maxLen: Long = ascii
-      .agg(coalesce(max(length($"text")), lit(0)).cast("long")).head().getLong(0)
-    val maxDist: Int = math.max(1L, maxLen / 10).toInt
-    val bandW: Long = math.max(64L, maxDist + 1L)
-    val d = ascii
-      .select(Seq($"doc_id", $"lang", $"text",
-        length($"text").cast("long").as("len"),
-        expr(s"length(text) div $bandW").as("band")) ++ bagCols("bag"): _*)
-      .repartition(spark.sparkContext.defaultParallelism)
-    val aBags = alphabet.indices.map(i => col(s"bag$i").as(s"a$i"))
-    val bBags = alphabet.indices.map(i => col(s"bag$i").as(s"b$i"))
-    val build = d.select(Seq($"doc_id".as("doc_a"), $"lang",
-      $"text".as("text_a"), $"len".as("len_a"), $"band".as("key")) ++ aBags: _*)
-    val probe = d.select(Seq($"doc_id".as("doc_b"), $"lang",
-      $"text".as("text_b"), $"len".as("len_b"),
-      explode(array($"band" - 1, $"band", $"band" + 1)).as("key")) ++ bBags: _*)
-    val l1 = alphabet.indices.map(i => abs(col(s"a$i") - col(s"b$i"))).reduce(_ + _)
-    val joined = build.join(probe, Seq("lang", "key"))
-      .filter($"doc_a" < $"doc_b" &&
-        abs($"len_a" - $"len_b") * 10 <= least($"len_a", $"len_b"))
-    val survivors = joined
-      .filter(l1 * 5 <= least($"len_a", $"len_b"))
-      .select($"doc_a", $"doc_b", $"text_a", $"text_b", $"len_a", $"len_b")
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_a"), col("doc_b"))
-    println("[r20] q131 raw block pairs  = " + joined.select($"doc_a").count())
-    println("[r20] q131 survivor pairs   = " + survivors.count())
-    time("q131 d projection")(d)
-    time("q131 join+len filter (no L1)")(
-      joined.select($"doc_a", $"doc_b", $"len_a", $"len_b"))
-    time("q131 join+L1 survivors (ids only)")(
-      survivors.select($"doc_a", $"doc_b"))
-    time("q131 survivors + texts")(survivors)
-    time("q131 + DP at corpus maxDist")(survivors
-      .withColumn("dist", levenshtein($"text_a", $"text_b", maxDist).cast("long"))
-      .filter($"dist" >= 0 && $"dist" * 10 <= least($"len_a", $"len_b")))
-    time("q131 + DP at per-pair band")(survivors
-      .withColumn("dist", expr("levenshtein(text_a, text_b, " +
-        "cast(greatest(1L, least(len_a, len_b) div 10) as int))").cast("long"))
-      .filter($"dist" >= 0 && $"dist" * 10 <= least($"len_a", $"len_b")))
-
-    // ---- q191 decomposition (mirrors retrievalEval, WITH the
-    // checkpoints — the earlier pruned-plan probes showed sub-second
-    // stages while the full query reads 4 s) ----
-    {
-      import graft.operators.Scale.CheckpointOps
-      def t(label: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime(); f
-        println(f"[r20] $label%-46s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      (1 to 2).foreach { pass =>
-        println(s"[r20] ---- q191 pass $pass ----")
-        var truth: DataFrame = null
-        t("q191 truth checkpoint") { truth =
-          graft.queries.TrainQueries.decontamPairsOver(docs).reliableCheckpoint() }
-        val train = docs.filter($"source" =!= "src0")
-        val toksD = train.select($"doc_id", split(trim($"text"), "\\s+").as("toks"))
-        val dfT = toksD
-          .select($"doc_id", explode(array_distinct($"toks")).as("term"))
-          .groupBy($"term").agg(count(lit(1)).as("df"))
-        var nDocs = 0L; var avgdl = 1.0
-        t("q191 dl stats head()") {
-          val mrow = toksD.select($"doc_id", size($"toks").cast("long").as("dl"))
-            .agg(count(lit(1)).as("n"), coalesce(sum($"dl"), lit(0L)).as("s")).head()
-          nDocs = mrow.getLong(0)
-          avgdl = if (nDocs == 0L) 1.0 else mrow.getLong(1).toDouble / nDocs
-        }
-        val evalToks = docs.filter($"source" === "src0")
-          .select($"doc_id".as("eval_id"),
-            explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
-        val wQ = Window.partitionBy($"eval_id").orderBy($"df".asc, $"term".asc)
-        var qterms: DataFrame = null
-        t("q191 qterms checkpoint") { qterms =
-          evalToks.join(dfT, "term")
-            .withColumn("rn", row_number().over(wQ)).filter($"rn" <= 8)
-            .select($"eval_id", $"term", $"df").reliableCheckpoint() }
-        val idf = (($"df" * lit(-1L) + lit(nDocs)) + lit(0.5)) / ($"df" + lit(0.5))
-        val tfn = ($"tf" * lit(2.2)) /
-          ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * ($"dl" / lit(avgdl))))
-        val qset = qterms.select($"term").distinct()
-        val tfQ = toksD
-          .select($"doc_id", size($"toks").cast("long").as("dl"),
-            explode($"toks").as("term"))
-          .join(broadcast(qset), "term")
-          .groupBy($"doc_id", $"term")
-          .agg(count(lit(1)).as("tf"), max($"dl").as("dl"))
-        var scored: DataFrame = null
-        t("q191 scored checkpoint") { scored =
-          qterms.join(tfQ, "term")
-            .select($"eval_id", $"doc_id",
-              org.apache.spark.sql.functions.floor(lit(1000000.0) * idf * tfn).cast("long").as("sc"))
-            .groupBy($"eval_id", $"doc_id").agg(sum($"sc").as("score"))
-            .reliableCheckpoint() }
-        val twinScore = truth.join(
-          scored.select($"eval_id", $"doc_id".as("train_id"), $"score".as("t_score")),
-          Seq("eval_id", "train_id"), "left")
-        val withScore = twinScore.filter($"t_score".isNotNull)
-          .select($"eval_id", $"train_id", $"t_score")
-        val better = scored.join(broadcast(withScore), Seq("eval_id"))
-          .filter($"score" > $"t_score" ||
-            ($"score" === $"t_score" && $"doc_id" < $"train_id"))
-          .groupBy($"eval_id", $"train_id").agg(count(lit(1)).as("n_better"))
-        val ranks = withScore.join(better, Seq("eval_id", "train_id"), "left")
-          .select($"eval_id", $"train_id",
-            (coalesce($"n_better", lit(0L)) + 1L).cast("int").as("twin_rank"))
-        val nCand = scored.groupBy($"eval_id").agg(count(lit(1)).as("n_candidates"))
-        t("q191 tail (better/ranks/nCand/sort noop)")(noop(truth
-          .join(ranks, Seq("eval_id", "train_id"), "left")
-          .join(nCand, Seq("eval_id"), "left")
-          .select($"eval_id", $"train_id", $"twin_rank",
-            coalesce($"n_candidates", lit(0L)).as("n_candidates"))
-          .orderBy($"eval_id", $"train_id")))
-      }
-    }
-    // repartition probe: is `scored` serialized by AQE byte-based
-    // coalescing (2.5M tiny rows → 1 partition)?
-    {
-      import graft.operators.Scale.CheckpointOps
-      val truth = graft.queries.TrainQueries.decontamPairsOver(docs).reliableCheckpoint()
-      val train = docs.filter($"source" =!= "src0")
-      val toksD = train.select($"doc_id", split(trim($"text"), "\\s+").as("toks"))
-      val dfT = toksD
-        .select($"doc_id", explode(array_distinct($"toks")).as("term"))
-        .groupBy($"term").agg(count(lit(1)).as("df"))
-      val mrow = toksD.select($"doc_id", size($"toks").cast("long").as("dl"))
-        .agg(count(lit(1)).as("n"), coalesce(sum($"dl"), lit(0L)).as("s")).head()
-      val nDocs = mrow.getLong(0)
-      val avgdl = if (nDocs == 0L) 1.0 else mrow.getLong(1).toDouble / nDocs
-      val evalToks = docs.filter($"source" === "src0")
-        .select($"doc_id".as("eval_id"),
-          explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
-      val wQ = Window.partitionBy($"eval_id").orderBy($"df".asc, $"term".asc)
-      val qterms = evalToks.join(dfT, "term")
-        .withColumn("rn", row_number().over(wQ)).filter($"rn" <= 8)
-        .select($"eval_id", $"term", $"df").reliableCheckpoint()
-      val idf = (($"df" * lit(-1L) + lit(nDocs)) + lit(0.5)) / ($"df" + lit(0.5))
-      val tfn = ($"tf" * lit(2.2)) /
-        ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * ($"dl" / lit(avgdl))))
-      val qset = qterms.select($"term").distinct()
-      def tfQ(repart: Boolean) = {
-        val base = toksD
-          .select($"doc_id", size($"toks").cast("long").as("dl"),
-            explode($"toks").as("term"))
-          .join(broadcast(qset), "term")
-        (if (repart) base.repartition(spark.sparkContext.defaultParallelism,
-          $"doc_id", $"term") else base)
-          .groupBy($"doc_id", $"term")
-          .agg(count(lit(1)).as("tf"), max($"dl").as("dl"))
-      }
-      def scored(repart: Boolean) = {
-        val base = qterms.join(tfQ(repart), "term")
-          .select($"eval_id", $"doc_id",
-            org.apache.spark.sql.functions.floor(lit(1000000.0) * idf * tfn)
-              .cast("long").as("sc"))
-        (if (repart) base.repartition(spark.sparkContext.defaultParallelism,
-          $"eval_id", $"doc_id") else base)
-          .groupBy($"eval_id", $"doc_id").agg(sum($"sc").as("score"))
-      }
-      time("q191 scored as-is (no ckpt)")(scored(false))
-      time("q191 scored repartitioned (no ckpt)")(scored(true))
-      // term-key skew probe: ~30 distinct terms make the qterms⋈tfQ
-      // exchange nearly single-key — broadcast the bounded qterms side
-      def scoredB(repartTfq: Boolean) = {
-        val base = tfQ(repartTfq).join(broadcast(qterms), "term")
-          .select($"eval_id", $"doc_id",
-            org.apache.spark.sql.functions.floor(lit(1000000.0) * idf * tfn)
-              .cast("long").as("sc"))
-        base.repartition(spark.sparkContext.defaultParallelism,
-          $"eval_id", $"doc_id")
-          .groupBy($"eval_id", $"doc_id").agg(sum($"sc").as("score"))
-      }
-      time("q191 scored bcast qterms + repart")(scoredB(true))
-      time("q191 scored bcast qterms, tfQ as-is")(scoredB(false))
-      println("[r20] scored rows = " + scored(true).count())
-    }
-    time("q191 full")(graft.queries.TextQueries.retrievalEval(spark, sfDir))
-
-    // ---- label-loop family ----
-    time("q42 raw pairs (edges)")(graft.queries.DedupQueries
-      .ngramJaccardPairsRaw(spark, sfDir).select($"id_a", $"id_b"))
-    time("q66 labels (component loop)")(
-      graft.queries.DedupQueries.clusterLabels(spark, sfDir))
-    println("[r20] q66 component rounds = " +
-      graft.queries.DedupQueries.lastComponentRounds)
-    // jump-count experiment: does a deeper per-round pointer chase cut
-    // rounds (each round is ~15 driver jobs of floor) enough to pay
-    // for its extra join?
-    def expComponents(jumps: Int): DataFrame = {
-      import graft.operators.Scale.CheckpointOps
-      val edges = graft.queries.DedupQueries
-        .ngramJaccardPairsRaw(spark, sfDir).select($"id_a", $"id_b")
-        .reliableCheckpoint()
-      val und = edges.unionByName(
-        edges.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-      val nbrMin = und.groupBy($"id_a").agg(min($"id_b").as("nb"))
-        .withColumnRenamed("id_a", "id")
-      val nodes = Tables.documents(spark, sfDir).select($"doc_id".as("id"))
-      var labels = nodes.select($"id")
-        .join(nbrMin, Seq("id"), "left")
-        .select($"id", least($"id", coalesce($"nb", $"id")).as("cluster_id"))
-        .reliableCheckpoint()
-      var prevSum = labels.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-      var changed = true
-      var rounds = 0
-      while (changed && rounds < 30) {
-        val viaEdges = und
-          .join(labels.withColumnRenamed("id", "id_a"), Seq("id_a"))
-          .select($"id_b".as("id"), $"cluster_id")
-        val viaJump = labels
-          .join(labels.select($"id".as("cluster_id"), $"cluster_id".as("jump")),
-            Seq("cluster_id"))
-          .select($"id", $"jump".as("cluster_id"))
-        var hop = labels.unionByName(viaEdges).unionByName(viaJump)
-          .groupBy($"id").agg(min($"cluster_id").as("cluster_id"))
-        for (j <- 2 to jumps) {
-          hop = hop
-            .join(hop.select($"id".as("cluster_id"), $"cluster_id".as(s"j$j")),
-              Seq("cluster_id"), "left")
-            .select($"id", coalesce(col(s"j$j"), $"cluster_id").as("cluster_id"))
-        }
-        val next = hop.reliableCheckpoint()
-        val nextSum = next.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-        changed = nextSum != prevSum
-        prevSum = nextSum
-        labels = next
-        rounds += 1
-      }
-      println(s"[r20] expComponents jumps=$jumps rounds=$rounds")
-      labels
-    }
-    for (j <- Seq(2, 3, 4)) time(s"q66-like labels, jumps=$j")(expComponents(j))
-
-    // checkpoint-every-2nd-round variant: compose two pointer-jump
-    // rounds into one materialization (AQE stage reuse dedups the
-    // duplicated inner-round exchanges), halving the per-round
-    // checkpoint+fixpoint-collect driver actions
-    def expComponents2(): DataFrame = {
-      import graft.operators.Scale.CheckpointOps
-      val edges = graft.queries.DedupQueries
-        .ngramJaccardPairsRaw(spark, sfDir).select($"id_a", $"id_b")
-        .reliableCheckpoint()
-      val und = edges.unionByName(
-        edges.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-      val nbrMin = und.groupBy($"id_a").agg(min($"id_b").as("nb"))
-        .withColumnRenamed("id_a", "id")
-      val nodes = Tables.documents(spark, sfDir).select($"doc_id".as("id"))
-      var labels = nodes.select($"id")
-        .join(nbrMin, Seq("id"), "left")
-        .select($"id", least($"id", coalesce($"nb", $"id")).as("cluster_id"))
-        .reliableCheckpoint()
-      var prevSum = labels.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-      var changed = true
-      var rounds = 0
-      def oneRound(l: DataFrame): DataFrame = {
-        val viaEdges = und
-          .join(l.withColumnRenamed("id", "id_a"), Seq("id_a"))
-          .select($"id_b".as("id"), $"cluster_id")
-        val viaJump = l
-          .join(l.select($"id".as("cluster_id"), $"cluster_id".as("jump")),
-            Seq("cluster_id"))
-          .select($"id", $"jump".as("cluster_id"))
-        val hop = l.unionByName(viaEdges).unionByName(viaJump)
-          .groupBy($"id").agg(min($"cluster_id").as("cluster_id"))
-        hop
-          .join(hop.select($"id".as("cluster_id"), $"cluster_id".as("jump2")),
-            Seq("cluster_id"), "left")
-          .select($"id", coalesce($"jump2", $"cluster_id").as("cluster_id"))
-      }
-      while (changed && rounds < 30) {
-        val next = oneRound(oneRound(labels)).reliableCheckpoint()
-        val nextSum = next.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-        changed = nextSum != prevSum
-        prevSum = nextSum
-        labels = next
-        rounds += 2
-      }
-      println(s"[r20] expComponents2 logical rounds=$rounds")
-      labels
-    }
-    time("q66-like labels, ckpt every 2nd round")(expComponents2())
-    time("q66 full")(graft.queries.DedupQueries.dedupClusters(spark, sfDir))
-    time("q173 full")(graft.queries.DedupQueries.canonicalKeepers(spark, sfDir))
-    time("q157 full")(graft.queries.TrainQueries.clusterSplit(spark, sfDir))
-  }
-
-  /** Per-action scheduling-floor probes (median-of-7). */
-  private def floor(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    def med7(label: String)(f: => Unit): Unit = {
-      val ts = (1 to 7).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[fp] $label%-46s median ${ts(3)}%.3f  min ${ts.head}%.3f")
-    }
-    println("[fp] events rows = " + Tables.events(spark, sfDir).count())
-    med7("events scan+filter errors (noop)") {
-      noop(Tables.events(spark, sfDir).filter($"event_type" === "error")
-        .select($"event_id", $"user_id", $"ts"))
-    }
-    med7("errors + clicks scans (noop, union)") {
-      val ev = Tables.events(spark, sfDir)
-      noop(ev.filter($"event_type" === "error")
-        .select($"event_id", $"user_id", unix_micros($"ts").as("t"))
-        .unionByName(ev.filter($"event_type" === "click")
-          .select($"event_id", $"user_id", unix_micros($"ts").as("t"))))
-    }
-    med7("errors sorted output only (sort floor)") {
-      noop(Tables.events(spark, sfDir).filter($"event_type" === "error")
-        .select($"event_id", $"user_id",
-          date_format($"ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"))
-        .orderBy($"event_id"))
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Round-21 sf1 probes (VERDICT r20 #3/#6). Point SPARK_GRAFT_SF_DIR
-  // at the MakeScale-derived fixture (scripts/bench_sf1.py generates
-  // data/sf1) — the questions only bind above the priced SFs.
-  // ------------------------------------------------------------------
-
-  /** The PRE-r20 q122 shape (dup-fp set + gram-stream join), verbatim
-    * from 9202c81~1 minus the trailing sort both shapes dropped —
-    * kept runnable so the sf1 keep/revert decision for the r20
-    * count-1-complement reshape stays reproducible. */
-  private def q122OldShape(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val g = graft.queries.TrainQueries.gramFps(docs.select($"doc_id", $"text"), 8)
-    val dupFps = g.groupBy($"fp").agg(count(lit(1)).as("nd"))
-      .filter($"nd" >= 2).select($"fp").withColumn("dup", lit(1))
-    val perDoc = g.join(dupFps, Seq("fp"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_grams"), count($"dup").as("n_dup"))
-    docs.select($"doc_id").join(perDoc, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"n_grams", lit(0L)).as("n_grams"),
-        coalesce($"n_dup", lit(0L)).as("n_dup"),
-        when(coalesce($"n_grams", lit(0L)) === 0, lit(0.0))
-          .otherwise(
-            expr("(20000 * coalesce(n_dup, 0) + n_grams) div (2 * n_grams)") / 10000.0)
-          .as("dup_frac"))
-  }
-
-  private def q122ab(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    def med5(label: String)(df: => DataFrame): Unit = {
-      val ts = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); noop(df); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[q122ab] $label%-36s med=${ts(2)}%.3f min=${ts.head}%.3f max=${ts.last}%.3f")
-    }
-    val docs = Tables.documents(spark, sfDir)
-    val newDf = graft.queries.TrainQueries.dupNgramFraction(spark, sfDir)
-    val oldDf = q122OldShape(docs)
-    val diff = newDf.as("n").join(oldDf.as("o"), Seq("doc_id"))
-      .filter($"n.n_grams" =!= $"o.n_grams" || $"n.n_dup" =!= $"o.n_dup" ||
-        $"n.dup_frac" =!= $"o.dup_frac").count()
-    println(s"[q122ab] shape mismatch rows: $diff (docs=${docs.count()})")
-    med5("NEW (count-1 complement)")(newDf)
-    med5("OLD (dup-set join)")(oldDf)
-    med5("NEW (2nd)")(newDf)
-    med5("OLD (2nd)")(oldDf)
-  }
-
-  /** Per-round wall + shuffle bytes of the q66 label loop (the sf1
-    * structural probe of VERDICT r20 #6). */
-  private def loopProbe(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    import graft.operators.Scale.CheckpointOps
-    val shufR = new java.util.concurrent.atomic.AtomicLong()
-    val shufW = new java.util.concurrent.atomic.AtomicLong()
-    val lst = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(lst)
-    def snap(label: String, t0: Long): Unit = {
-      Thread.sleep(300) // listener-bus drain (dev probe; good enough)
-      println(f"[loop] $label%-12s wall=${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-        f"shufRead=${shufR.getAndSet(0) / 1e6}%9.2f MB shufWrite=${shufW.getAndSet(0) / 1e6}%9.2f MB")
-    }
-    var t0 = System.nanoTime()
-    val edges = graft.queries.DedupQueries
-      .ngramJaccardPairsRaw(spark, sfDir).select($"id_a", $"id_b")
-      .reliableCheckpoint()
-    snap("edges", t0)
-    val und = edges.unionByName(
-      edges.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-    val nbrMin = und.groupBy($"id_a").agg(min($"id_b").as("nb"))
-      .withColumnRenamed("id_a", "id")
-    val nodes = Tables.documents(spark, sfDir).select($"doc_id".as("id"))
-    t0 = System.nanoTime()
-    var labels = graft.operators.Scale.checkpointedLazy(
-      nodes.select($"id")
-        .join(nbrMin, Seq("id"), "left")
-        .select($"id", least($"id", coalesce($"nb", $"id")).as("cluster_id")))
-    var prevSum = labels.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-    snap("seed", t0)
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < 30) {
-      t0 = System.nanoTime()
-      val viaEdges = und
-        .join(labels.withColumnRenamed("id", "id_a"), Seq("id_a"))
-        .select($"id_b".as("id"), $"cluster_id")
-      val viaJump = labels
-        .join(labels.select($"id".as("cluster_id"), $"cluster_id".as("jump")),
-          Seq("cluster_id"))
-        .select($"id", $"jump".as("cluster_id"))
-      val hop = labels.unionByName(viaEdges).unionByName(viaJump)
-        .groupBy($"id").agg(min($"cluster_id").as("cluster_id"))
-      val next = graft.operators.Scale.checkpointedLazy(hop
-        .join(hop.select($"id".as("cluster_id"), $"cluster_id".as("jump2")),
-          Seq("cluster_id"), "left")
-        .select($"id", coalesce($"jump2", $"cluster_id").as("cluster_id")))
-      val nextSum = next.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
-      changed = nextSum != prevSum
-      prevSum = nextSum
-      labels = next
-      rounds += 1
-      snap(s"round $rounds", t0)
-    }
-    println(s"[loop] rounds=$rounds nodes=${nodes.count()} edges=${edges.count()}")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.Pipeline
 
@@ -15,14 +14,8 @@ import graft.streaming.Pipeline
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.defaultCores
+    val spark = Session.local(cpus)
     import spark.implicits._
 
     val texts = Array(
@@ -52,8 +45,7 @@ object StreamBench {
     // named — e.g. a cluster operator ran with
     //   --packages org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2
     //   SPARK_GRAFT_KAFKA=host:9092 SPARK_GRAFT_KAFKA_TOPIC=graft-bench
-    // In this sandbox neither exists (jar sweep re-verified per
-    // round), so the leg reports "inactive" instead of failing —
+    // Without either, the leg reports "inactive" instead of failing —
     // the honest boundary between compile-only and runtime-verified.
     val kafkaJar =
       try { Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider"); true }

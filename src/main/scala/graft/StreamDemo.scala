@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.api.TweetApi
 import graft.streaming.Pipeline
@@ -14,11 +13,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(Files.createTempDirectory("graft-demo").toString)
     val in = s"$dir/in"; Files.createDirectories(Paths.get(in))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     def env(id: String, text: String, lang: String = "en") =
       s"""{"data": {"id": "$id", "text": "$text", "created_at": "2025-09-01T14:03:27.000Z", "author_id": "a$id", "lang": "$lang", "public_metrics": {"retweet_count": 3, "like_count": 17, "reply_count": 1, "quote_count": 0}}, "includes": {"users": [{"id": "a$id", "name": "User $id", "username": "u$id", "public_metrics": {"followers_count": ${id.toInt * 100}}}]}, "kafka_timestamp": 1756735407123}"""

@@ -1,29 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Builder-side micro-harness: time a NAMED SUBSET of the registered
-  * queries (cold + warm re-runs each, noop-sink materialization —
-  * the Bench measurement shape without the 191-query suite) so a plan
-  * change can be measured in seconds, not a full bench leg.
+/** Micro-harness: time a NAMED SUBSET of the registered queries
+  * (cold + warm re-runs each through [[Measure.once]] — the Bench
+  * measurement shape without the full suite) so a plan change can be
+  * measured in seconds, not a full bench leg. A query that throws
+  * fails the run.
   *
-  * With `SPARK_GRAFT_TIMEQ_JSON=<path>` set, additionally runs the
-  * Bench estimator shape (1 cold + median-of-3 warm) and writes a
-  * compact `{"name":{"cold":s,"warm":s},…}` map — the sf1 scaling
-  * column (`scripts/bench_sf1.py`) is assembled from this.
+  * With `SPARK_GRAFT_TIMEQ_JSON=<path>` set, runs the Bench estimator
+  * shape (1 cold + median-of-3 warm) and writes a compact
+  * `{"name":{"cold":s,"warm":s},…}` map — the sf1 scaling column
+  * (`scripts/bench_sf1.py`) is assembled from this.
   *
   * Usage: runMain graft.TimeQueries <sfDir> <name substrings...> */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    Measure.warmUp(spark, dir)
     val jsonPath = sys.env.get("SPARK_GRAFT_TIMEQ_JSON")
     val wanted = args.drop(1)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
@@ -32,12 +25,8 @@ object TimeQueries {
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if wanted.exists(name.contains)) {
       val nRuns = if (jsonPath.isDefined) 4 else 3
-      PhaseTimer.drain()
       val runs = (0 until nRuns).map { i =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val ph = PhaseTimer.drain()
+        val Measure.Run(sec, _, ph) = Measure.once(spark, dir, fn).orFail(s"[timeq] $name run$i")
         val phStr = if (ph.isEmpty) "" else
           ph.toSeq.sortBy(_._1).map { case (k, v) => f"$k=$v%.2f" }.mkString(" (", " ", ")")
         println(f"[timeq] $name run$i $sec%.2f s$phStr")
@@ -46,7 +35,7 @@ object TimeQueries {
       val times = runs.map(_._1)
       val warm = times.drop(1).sorted.apply((nRuns - 1) / 2)
       results(name) = (times.head, warm)
-      // phase attribution (VERDICT r19 #3): cold-run phases carry the
+      // phase attribution: cold-run phases carry the
       // artifact build; warm-run phases (per-run average) are nonzero
       // only if something rebuilt per call — serve = warm − Σ(warm phases)
       val warmPh = runs.drop(1).flatMap(_._2)

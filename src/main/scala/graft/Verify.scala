@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,12 @@ object Verify {
     // (builder-side iteration aid; the driver always passes two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Fixture-drift sentinel FIRST (one loud diagnostic per drifted
     // table; queries still run so unaffected families stay green).
     Tables.sentinel(spark, sfDir).foreach(d => System.err.println(s"[sentinel] $d"))
-    // Vacuous-witness ledger (ADVICE r19): several self-validating
+    // Vacuous-witness ledger: several self-validating
     // reports carry an `audit_nonempty` column whose FALSE means the
     // audit slice bound nothing and the sibling theorem columns
     // (has_pairs / serve_exact / recall floors) are vacuously true —
@@ -55,8 +47,8 @@ object Verify {
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in oracle SQL would otherwise make the checker's
+    // json.load fail and silently zero the correctness record.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

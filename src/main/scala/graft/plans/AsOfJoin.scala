@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** Native AS-OF join — the whole-operator tier (c) of the build
   * rules: a custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`
-  * registered through `spark.experimental.extraStrategies` (and
-  * usable from [[graft.GraftExtensions]]).
+  * installed on a session by [[graft.Session.install]].
   *
   * Semantics (backward as-of, the DuckDB/Pandas default): for every
   * left row, the single right row with equal join keys and the
@@ -49,8 +48,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoin]] as [[AsOfJoinExec]]. Stateless; register once
-  * per session via [[AsOfJoin.register]]. */
+/** Plans [[AsOfJoin]] as [[AsOfJoinExec]]. Stateless; installed once
+  * per session by [[graft.Session.install]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt, ae) =>
@@ -291,21 +290,6 @@ object PruneColumnsThroughAsOfJoin
 }
 
 object AsOfJoin {
-  /** Idempotently register the planning strategy + pushdown rules on
-    * this session. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    }
-    val opts = spark.experimental.extraOptimizations
-    val missing = Seq(PushFilterThroughAsOfJoin, PruneColumnsThroughAsOfJoin)
-      .filterNot(opts.contains)
-    if (missing.nonEmpty) {
-      spark.experimental.extraOptimizations = opts ++ missing
-    }
-  }
-
   /** Backward as-of join (left-outer): for each `left` row, the
     * `right` row whose `rightKeys` equal the row's `leftKeys` with
     * the largest `rightTimeCol` ≤ `leftTimeCol`. The output carries
@@ -313,7 +297,7 @@ object AsOfJoin {
     * across the two sides (alias the right side's key/payload
     * columns before calling — always possible, never ambiguous).
     *
-    * `tolerance` (round 15, pandas `merge_asof(tolerance=…)` parity):
+    * `tolerance` (pandas `merge_asof(tolerance=…)` parity):
     * when set, a match additionally requires
     * `rightTime ≥ leftTime − tolerance` — pass an interval column for
     * timestamp times (`expr("INTERVAL 600 SECONDS")`) or a numeric
@@ -324,7 +308,7 @@ object AsOfJoin {
     * nulling the right side is precisely the tolerance-constrained
     * semantics, and the merge scan's O(1) state is untouched.
     *
-    * `allowExact` (round 15, pandas `allow_exact_matches` parity):
+    * `allowExact` (pandas `allow_exact_matches` parity):
     * `false` requires `rightTime < leftTime` STRICTLY — a right row
     * at exactly the left time is skipped (but remains a candidate
     * for later left rows). Composes with `tolerance`: the kept match
@@ -338,7 +322,7 @@ object AsOfJoin {
     require(leftKeys.length == rightKeys.length,
       s"asofJoin key arity mismatch: $leftKeys vs $rightKeys")
     val spark = left.sparkSession
-    register(spark)
+    graft.Session.install(spark)
     val lPlan = GraftColumnBridge.analyzed(left)
     val rPlan = GraftColumnBridge.analyzed(right)
     def attr(plan: LogicalPlan, name: String): Attribute =
@@ -378,7 +362,7 @@ object AsOfJoin {
     }
   }
 
-  /** FORWARD as-of join (round 15 — pandas `direction="forward"`):
+  /** FORWARD as-of join (pandas `direction="forward"`):
     * for each left row, the right row with equal keys and the
     * SMALLEST `rightTimeCol` ≥ `leftTimeCol`. Reduced to the backward
     * merge scan by time negation — `max(−rt) ≤ −lt ⟺ min(rt) ≥ lt` —
@@ -427,7 +411,7 @@ object AsOfJoin {
     }
   }
 
-  /** NEAREST as-of join (round 15 — pandas `direction="nearest"`):
+  /** NEAREST as-of join (pandas `direction="nearest"`):
     * for each left row, whichever of the backward and forward matches
     * lies closer in time; ties go BACKWARD (pandas' rule). Composed
     * from the two merge passes — the backward join preserves exactly

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.HllSketch.hll_distinct
 
-/** HLL sketch aggregate: accuracy vs exact distinct, mergeability
-  * across partitions, and SQL availability via GraftExtensions. */
+/** Sketch aggregates (HLL, Bloom, count-min, frequent items, top-k):
+  * accuracy, mergeability across partitions and the theorems they
+  * promise. Their SQL surface is covered by SessionSpec. */
 class SketchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -207,77 +207,6 @@ class SketchSpec extends SparkSpec {
     assert(out(1).isNullAt(0))
   }
 
-  test("custom functions callable from SQL via GraftExtensions") {
-    // force a NEW session (same SparkContext) so withExtensions
-    // applies — getOrCreate would return the suite session; and never
-    // close() it (that would stop the shared context)
-    val prior = spark // materialize suite session first
-    try {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val s2 = SparkSession.builder().master("local[2]")
-        .appName("graft-ext-test")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val cos = s2.sql(
-        "SELECT cosine_similarity(array(1.0D, 2.0D), array(2.0D, 4.0D)) c").head().getDouble(0)
-      assert(math.abs(cos - 1.0) < 1e-12)
-      val hll = s2.sql(
-        "SELECT hll_distinct(id % 100) FROM range(10000)").head().getLong(0)
-      assert(math.abs(hll - 100.0) / 100.0 < 0.05)
-      val sim = s2.sql(
-        "SELECT simhash64(array('a','b','c')) = simhash64(array('a','b','c')) eq").head().getBoolean(0)
-      assert(sim)
-      // bloom_build(col, numBits, numHashes): the serialized filter is
-      // header (8 B) + numBits/8 payload, and the header carries k —
-      // a positional numBits/numHashes swap would fail both asserts
-      val bl = s2.sql(
-        "SELECT bloom_build(id, 4096, 4) b FROM range(10)").head().getAs[Array[Byte]](0)
-      assert(bl.length == 8 + 4096 / 8)
-      assert(graft.functions.BloomUtil.fromBytes(bl)._2 == 4)
-      // SQL arg order mirrors the Scala API: (tokens, shingle_n, k, seed)
-      val mh = s2.sql(
-        "SELECT size(minhash_signature(array('x','y'), 1, 32)) n").head().getInt(0)
-      assert(mh == 32)
-      // CMS: build in SQL, point-query in SQL — 10 distinct ids in a
-      // 512-wide depth-4 table are collision-free, so est is exact
-      val cms = s2.sql(
-        """SELECT cms_query(s.cms.table, '7', 512) est
-          |FROM (SELECT cms_sketch(CAST(id % 10 AS STRING), 512) cms
-          |      FROM range(1000)) s""".stripMargin).head().getLong(0)
-      assert(cms == 100, s"expected exact 100, got $cms")
-      // 3-arg sketch / 4-arg probe: depth rides through SQL too
-      val cmsD = s2.sql(
-        """SELECT cms_query(s.cms.table, '3', 256, 6) est
-          |FROM (SELECT cms_sketch(CAST(id % 10 AS STRING), 256, 6) cms
-          |      FROM range(1000)) s""".stripMargin).head().getLong(0)
-      assert(cmsD == 100, s"expected exact 100 at (256, 6), got $cmsD")
-      // top_k_by(ord, tie, k): best-first (ord DESC, tie ASC)
-      val tk = s2.sql(
-        """SELECT top_k_by(CAST(id % 7 AS DOUBLE), id, 3) t
-          |FROM range(100)""".stripMargin)
-        .selectExpr("transform(t, x -> x.tie) ties").head().getSeq[Long](0)
-      assert(tk == Seq(6L, 13L, 20L), s"expected ties (6,13,20), got $tk")
-      // round 15: the codegen'd analyzers from plain SQL — the
-      // reference's /analyze semantics as one SELECT
-      val an = s2.sql(
-        "SELECT analyze_sentiment('I love this, it is great').compound c").head().getDouble(0)
-      assert(an == graft.functions.Vader.score("I love this, it is great").compound)
-      val vs = s2.sql("SELECT vader_score('terrible awful').compound").head().getDouble(0)
-      assert(vs == graft.functions.Vader.score("terrible awful").compound && vs < 0)
-      val tb = s2.sql("SELECT textblob_score('I love this').polarity").head().getDouble(0)
-      assert(tb == graft.functions.TextBlobOps.score("I love this").polarity)
-      val li = s2.sql(
-        "SELECT lang_id('the quick brown fox jumps over the lazy dog and it is fine').lang")
-        .head().getString(0)
-      assert(li == "en")
-    } finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
-    }
-  }
   test("cms: overestimate theorem, exactness without collisions, mergeability") {
     import graft.functions.CountMin.{cms_sketch, cms_query}
     // 12 distinct items in a width-512 table: collision probability is

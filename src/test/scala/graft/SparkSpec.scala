@@ -8,14 +8,8 @@ import org.scalatest.BeforeAndAfterAll
   * `sbt test` fast; suites must not mutate global conf destructively). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Session.local(4)
+    s.sparkContext.setLogLevel("ERROR") // keep test output to failures
     s
   }
   val sf: String = "/root/testdata/sf0.001"
