@@ -9,8 +9,9 @@ package graft
   * would overstate serve-path growth wherever a 10× corpus rebuild
   * lands in-measurement.
   *
-  * Builders wrap their eager build work in `timed("build")` (and the
-  * q92 live-pipeline comparison in `timed("validate")`);
+  * [[Artifacts.ensure]] runs every artifact build under
+  * `timed("build")` (and q92 wraps its live-pipeline comparison in
+  * `timed("validate")`);
   * [[Measure.once]] drains the accumulator around each measured run and
   * stamp per-phase seconds into BENCH_FULL.json / the sf1 scaling
   * column, so "build once" and "query many" are priced separately —

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Skew- and shuffle-management utilities (the 100 TB toolbox the
@@ -172,10 +173,20 @@ object Scale {
     * scale-adaptive by construction, a no-op exactly where the
     * shuffle would cost something. Row-identical either way
     * (round-robin repartition reassigns rows, never changes them;
-    * sort-before-repartition keeps the assignment retry-safe). */
+    * sort-before-repartition keeps the assignment retry-safe).
+    *
+    * The partition count is read off `df`'s own physical plan — its
+    * output partitioning where the plan fixes one (an exchange, a
+    * bucketed scan), else its file scans' splits — so deciding builds
+    * no second plan, and spreading a spread frame is a no-op. */
   def spreadScan(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 >= target) df
+    val plan = df.queryExecution.sparkPlan
+    val partitions = plan.outputPartitioning.numPartitions match {
+      case 0 => plan.collect { case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions }.sum
+      case n => n
+    }
+    if (partitions * 2 >= target) df
     else df.repartition(target)
   }
 
@@ -203,13 +214,16 @@ object Scale {
     df
   }
 
-  /** Bucketed write: co-locates (and co-sorts) a table on its join
-    * key so repeated equi-joins/aggregations on that key plan with no
-    * Exchange. The write shuffles once; every subsequent join reads
-    * pre-partitioned data. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
+  /** Bucketed write: co-locates (and co-sorts, by `key` then
+    * `thenBy`) a table on its join key so repeated equi-joins /
+    * aggregations on that key plan with no Exchange. The write
+    * shuffles once; every subsequent join reads pre-partitioned data.
+    * An `append` with the same spec lands its files in the same
+    * logical buckets, so later reads see every generation. */
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
+      thenBy: Seq[String] = Nil, mode: String = "overwrite"): Unit =
+    df.write.mode(mode)
+      .bucketBy(buckets, key).sortBy(key, thenBy: _*)
       .format("parquet")
       .saveAsTable(table)
 

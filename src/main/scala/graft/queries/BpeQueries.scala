@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.Bpe
 
 import scala.collection.mutable.ArrayBuffer
@@ -25,7 +26,7 @@ import scala.collection.mutable.ArrayBuffer
   *  2. **Persisted merges artifact** ([[buildBpeTable]]): the
   *     q92/q93/q96 lifecycle — rank-ordered merges stamped with the
   *     documents-source fingerprint, rebuilt when absent OR stale,
-  *     verifying reads via the shared `requireFresh` gate.
+  *     verifying reads via [[graft.Artifacts.requireFresh]].
   *  3. **Expressions** ([[graft.functions.Bpe]]): codegen'd
   *     `bpe_token_count` / `bpe_encode` over any merge table.
   *
@@ -76,29 +77,18 @@ object BpeQueries {
       bpeMergesN(s), bpeDictSize(s), bpeMinFreq(s))
 
   /** Trainer over any (text) frame — injectable so constructed
-    * corpora with hand-computable merge sequences have a spec (the
-    * round-7 rule; the gate fixture's 31-word vocabulary can't pin
-    * specific merges).
+    * corpora with hand-computable merge sequences have a spec.
     *
-    * r21 reshape (guide §1.2/§5): ONE distributed corpus scan builds
-    * the capped word dictionary — the only data-scale work — then the
-    * argmax-merge fixpoint runs ON THE COLLECTED DICTIONARY in driver
-    * memory. The dictionary is bounded by `spark.graft.bpe.dict`
-    * (≤65536 rows of one word + one long — the same
-    * constant-bounded-collect class as [[loadBpeTable]] and the IVF
-    * trainer sample), so the loop is O(rounds × dict-chars) local
-    * compute with NO per-round Spark job. The previous shape ran each
-    * of the ≤64 argmax rounds as a distributed aggregate + collect
-    * over the ≤65536-row state (plus checkpoints every 8 rounds to
-    * cut the map lineage): 80+ driver jobs and ~16 s of the bench's
-    * cold leg spent scheduling sub-megabyte stages. At 100 TB the
-    * dictionary cap is IDENTICAL — corpus size only affects the scan
-    * that builds it — so the local loop is the scale shape, not a
-    * small-data shortcut. Merge-for-merge identical output: same
-    * overlapping pair counts (summed in Long), same (count desc,
-    * l asc, r asc) argmax tie-break (symbols are ASCII `\w` chars,
-    * where Java String ordering ≡ Spark's UTF8String binary
-    * ordering), same minFreq early-exit, same leftmost
+    * ONE distributed corpus scan builds the capped word dictionary —
+    * the only data-scale work — then the argmax-merge fixpoint runs on
+    * the collected dictionary in driver memory. The dictionary is
+    * bounded by `spark.graft.bpe.dict` (≤65536 rows of one word + one
+    * long), so the loop is O(rounds × dict-chars) local compute with
+    * no per-round Spark job; corpus size only affects the scan. Merge
+    * for merge the output equals the oracle's distributed trainer:
+    * same overlapping pair counts (summed in Long), same (count desc,
+    * l asc, r asc) argmax tie-break in UTF-8 byte order
+    * ([[symbolPairOrder]]), same minFreq early-exit, same leftmost
     * non-overlapping [[Bpe.mergePass]]. */
   private[graft] def trainBpeMergesFrom(docs: DataFrame, nMerges: Int,
       dictSize: Int, minFreq: Long): Seq[(String, String)] = {
@@ -111,6 +101,16 @@ object BpeQueries {
       .orderBy($"freq".desc, $"word".asc).limit(dictSize)
       .as[(String, Long)].collect()
     trainMergesLocal(dict, nMerges, minFreq)
+  }
+
+  /** Symbol pairs in UTF-8 byte order, l then r — the order of
+    * Spark's `UTF8String` that the distributed trainer and the
+    * oracle sort by. `String.compareTo` compares UTF-16 code units,
+    * which departs from it for symbols outside the BMP. */
+  private[graft] val symbolPairOrder: Ordering[(String, String)] = {
+    val utf8: Ordering[String] =
+      (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    Ordering.Tuple2(utf8, utf8)
   }
 
   /** The argmax-merge fixpoint over a collected (word, freq)
@@ -150,9 +150,7 @@ object BpeQueries {
         val e = it.next()
         val k = e.getKey
         val c = e.getValue
-        if (c > bestCnt || (c == bestCnt &&
-            (k._1.compareTo(best._1) < 0 ||
-              (k._1 == best._1 && k._2.compareTo(best._2) < 0)))) {
+        if (c > bestCnt || (c == bestCnt && symbolPairOrder.lt(k, best))) {
           best = k; bestCnt = c
         }
       }
@@ -173,22 +171,27 @@ object BpeQueries {
     out.toSeq
   }
 
-  /** Build side of the persisted-merges lifecycle: train, stamp with
-    * the documents-source fingerprint, store rank-ordered. Degenerate
-    * corpora (no pair ever reaches minFreq) persist an EMPTY table,
-    * which carries no stamp row — the q97 gate then retrains on every
-    * call (cheap: one argmax round) and `merges_full` reads false,
-    * surfacing the misconfiguration through the oracle row instead of
-    * hiding it. */
-  def buildBpeTable(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
+  /** Build side of the persisted-merges lifecycle: train, store
+    * rank-ordered, stamp with the documents-source fingerprint.
+    * Degenerate corpora (no pair ever reaches minFreq) persist an
+    * EMPTY table, stamped and reused like any other; `merges_full`
+    * reads false, surfacing the misconfiguration through the oracle
+    * row instead of hiding it. */
+  def buildBpeTable(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
-    val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
     trainBpeMerges(s, dir).zipWithIndex
       .map { case ((l, r), i) => (i + 1, l, r) }
       .toDF("rank", "left", "right")
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
       .write.mode("overwrite").format("parquet").saveAsTable(table)
+    Artifacts.stamp(s, table, Artifacts.documents(s, dir))
+  }
+
+  /** The q97 merges artifact shared by q97/q101–q103, built if absent
+    * or stale; returns its table name. */
+  private def storedMerges(s: SparkSession, dir: String): String = {
+    val tbl = Artifacts.name("bpe_q97", dir)
+    Artifacts.ensure(s, Seq(tbl), tbl, Artifacts.documents(s, dir))(buildBpeTable(s, dir, tbl))
+    tbl
   }
 
   /** Read a stored merges table into an encoder table. ≤
@@ -197,8 +200,8 @@ object BpeQueries {
     * read (fails loudly on a stale artifact); the raw form is for
     * callers that just established freshness. */
   def loadBpeTable(s: SparkSession, table: String, sourceDir: String): Bpe.BpeTable = {
-    SimilarityQueries.requireFresh(s, table,
-      SimilarityQueries.docsFingerprint(s, sourceDir), sourceDir, "BPE merges table")
+    Artifacts.requireFresh(s, table, Artifacts.documents(s, sourceDir), sourceDir,
+      "BPE merges table")
     loadBpeTable(s, table)
   }
 
@@ -227,11 +230,7 @@ object BpeQueries {
     * [[loadBpeTable]] once and pay one map-side expression. */
   def bpeStoredEncode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_bpe_q97_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(
-        s, SimilarityQueries.docsFingerprint(s, dir), tbl, tbl))
-      buildBpeTable(s, dir, tbl)
-    val trained = loadBpeTable(s, tbl)
+    val trained = loadBpeTable(s, storedMerges(s, dir))
     val pre = expr("regexp_extract_all(text, '\\\\w+|[^\\\\w\\\\s]', 0)")
     val words = expr("regexp_extract_all(text, '\\\\w+', 0)")
     val punct = expr("regexp_extract_all(text, '[^\\\\w\\\\s]', 0)")
@@ -286,11 +285,7 @@ object BpeQueries {
     * sides via the parameterized generator). */
   def bpeTrainedTokens(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_bpe_q97_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(
-        s, SimilarityQueries.docsFingerprint(s, dir), tbl, tbl))
-      buildBpeTable(s, dir, tbl)
-    val trained = loadBpeTable(s, tbl)
+    val trained = loadBpeTable(s, storedMerges(s, dir))
     val canonical = trained.merges.map { case (l, r) => s"$l $r" }.mkString(" ")
     Tables.documents(s, dir).filter($"doc_id" % 5 === 0)
       .agg(coalesce(sum(Bpe.bpe_token_count($"text", trained)), lit(0L))
@@ -420,11 +415,7 @@ object BpeQueries {
     * prefix sum — no new scale surface. */
   def bpeTrainedBudgetSelect(s: SparkSession, dir: String,
       budget: Long = 2000L): DataFrame = {
-    val tbl = s"graft_bpe_q97_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(
-        s, SimilarityQueries.docsFingerprint(s, dir), tbl, tbl))
-      buildBpeTable(s, dir, tbl)
-    val trained = loadBpeTable(s, tbl)
+    val trained = loadBpeTable(s, storedMerges(s, dir))
     TrainQueries.budgetSelectWith(s, dir, budget,
       Bpe.bpe_token_count(col("text"), trained))
   }
@@ -458,11 +449,7 @@ object BpeQueries {
     * q70/q99; only the costing currency changes. */
   def bpeTrainedPack(s: SparkSession, dir: String, budget: Long = 2048L,
       shardSize: Long = 1000L): DataFrame = {
-    val tbl = s"graft_bpe_q97_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(
-        s, SimilarityQueries.docsFingerprint(s, dir), tbl, tbl))
-      buildBpeTable(s, dir, tbl)
-    val trained = loadBpeTable(s, tbl)
+    val trained = loadBpeTable(s, storedMerges(s, dir))
     TrainQueries.tokenPackWith(s, dir, budget, shardSize,
       Bpe.bpe_token_count(col("text"), trained))
   }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Artifacts, Tables}
+import graft.operators.Scale
 import graft.operators.Scale.CheckpointOps
 import graft.functions.expressions._
 
@@ -1450,28 +1451,17 @@ object DedupQueries {
     * round-trip exactly. */
   def neardupIndexServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_ndi_q158_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_counts", s"${tbl}_meta")) graft.PhaseTimer.timed("build") {
+    val tbl = Artifacts.name("ndi_q158", dir)
+    TextQueries.ensureDocs(s, dir, tbl, "counts") {
       val hist = Tables.documents(s, dir)
         .filter($"source" =!= NdiBatchSource).select($"doc_id", $"text")
       val g = TrainQueries.gramFps(hist, n = 8)
       val dfs = g.groupBy($"fp").agg(count(lit(1)).as("df"))
-      g.join(dfs, Seq("fp")).select($"fp", $"df", $"doc_id")
-        .write.mode("overwrite")
-        .bucketBy(32, "fp").sortBy("fp", "doc_id")
-        .format("parquet").saveAsTable(tbl)
-      g.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
-        .write.mode("overwrite")
-        .bucketBy(32, "doc_id").sortBy("doc_id")
-        .format("parquet").saveAsTable(s"${tbl}_counts")
-      val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
-      s.table(tbl).agg(count(lit(1)).as("n_postings"),
-          count_distinct($"fp").as("n_grams"))
-        .withColumn("src_rows", lit(srcRows))
-        .withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
+      Scale.writeBucketed(g.join(dfs, Seq("fp")).select($"fp", $"df", $"doc_id"),
+        tbl, "fp", 32, Seq("doc_id"))
+      Scale.writeBucketed(g.groupBy($"doc_id").agg(count(lit(1)).as("n_grams")),
+        s"${tbl}_counts", "doc_id", 32)
+      TextQueries.writeMeta(s, tbl, Artifacts.documents(s, dir), "fp", "n_grams")
     }
     screenAgainstIndex(
       Tables.documents(s, dir)

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Artifacts, Tables}
+import graft.operators.Scale
 import graft.operators.Scale.CheckpointOps
 import graft.queries.Export._
 import graft.functions.expressions._
@@ -146,7 +147,7 @@ object SimilarityQueries {
     val conf = s.conf.getOption("spark.graft.lsh.bits").getOrElse("auto")
     val bits =
       if (conf == "auto") {
-        val n = sourceFingerprint(s, dir)._1
+        val n = Artifacts.embeddings(s, dir).rows
         if (n <= IvfAutoSmallCorpus) 8
         // clamp BEFORE the range check: the int bucket caps auto at
         // 30 planes (n > 2^33 would otherwise ask for more)
@@ -419,7 +420,7 @@ object SimilarityQueries {
     val conf = s.conf.getOption("spark.graft.ivf.k").getOrElse("auto")
     val k =
       if (conf == "auto") {
-        val n = sourceFingerprint(s, dir)._1
+        val n = Artifacts.embeddings(s, dir).rows
         if (n <= IvfAutoSmallCorpus) 16
         // ⌈√n⌉ UNCAPPED (r18 capped at 512; r19 removed it): past
         // [[IvfTrainerHandoff]] cells the trainer dispatch hands off
@@ -617,7 +618,7 @@ object SimilarityQueries {
     // results unchanged.
     // two-phase select: probe_cells materializes first, cell reads it
     // back — one cosine/sort evaluation per row (see cellFromProbe)
-    graft.operators.Scale.spreadScan(Tables.embeddings(s, dir))
+    Scale.spreadScan(Tables.embeddings(s, dir))
       .select($"vec_id", $"embedding",
         ivfProbeList(s, cent).as("probe_cells"))
       .select($"vec_id", $"embedding",
@@ -678,180 +679,82 @@ object SimilarityQueries {
   def ivfTopk(s: SparkSession, dir: String): DataFrame =
     ivfNnFrom(ivfAssigned(s, dir, trainCentroids(s, dir)))
 
-  /** PERSISTED index build (round 10): the Scaladoc above calls the
-    * checkpoint "the local-mode stand-in for that stored assignment" —
-    * this is the stored assignment for real. Train once, assign once,
-    * write the (vec_id, embedding, cell, probe_cells) index BUCKETED
-    * BY CELL (`Scale.writeBucketed` precedent), plus the centroids as
-    * a tiny sidecar table (what a new out-of-corpus query vector needs
-    * for its own cell assignment). Every later NN query reads the
-    * stored table: no re-training, no re-assignment, and the home-cell
-    * side of the probe join arrives PRE-PARTITIONED — only the
-    * exploded probe side shuffles (IvfIndexSpec pins exactly one
-    * exchange under the join). At 100 TB this is the build-once/
-    * query-many lifecycle every IVF system runs; the bucket count
-    * equals k so each cell is one bucket. */
-  def buildIvfIndex(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
+  /** PERSISTED index build: train once, assign once, write the
+    * (vec_id, embedding, cell, probe_cells) index BUCKETED BY CELL,
+    * plus the centroids as a sidecar table (what an out-of-corpus
+    * query vector needs for its own cell assignment), stamped through
+    * [[graft.Artifacts]]. Later NN queries read the stored table: no
+    * re-training, and the home-cell side of the probe join arrives
+    * PRE-PARTITIONED — only the exploded probe side shuffles
+    * (IvfIndexSpec pins it). */
+  def buildIvfIndex(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
     val cent = trainCentroids(s, dir)
     // same conditional pre-projection spread as ivfAssignment (r21):
     // the bucketed write shuffles by cell afterwards either way, but
     // the k-cosine assignment itself must not run on the scan's
     // (single row-group) partitioning
-    graft.operators.Scale.spreadScan(Tables.embeddings(s, dir))
+    val index = Scale.spreadScan(Tables.embeddings(s, dir))
       .select($"vec_id", $"embedding",
         ivfProbeList(s, cent).as("probe_cells"))
       .select($"vec_id", $"embedding",
         cellFromProbe($"probe_cells").as("cell"), $"probe_cells")
-      .write.mode("overwrite")
-      .bucketBy(ivfBucketCount(sourceFingerprint(s, dir)._1, cent.length), "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-    val (srcRows, srcMaxId) = sourceFingerprint(s, dir)
-    cent.zipWithIndex
-      .map { case (v, i) => (i + 1, v.toSeq) }.toSeq
+    writeIvfIndex(s, dir, index, table, cent)
+    writeIvfSidecars(s, dir, table, cent, None)
+  }
+
+  /** Write (or `append` to) a cell-bucketed IVF index table. */
+  private def writeIvfIndex(s: SparkSession, dir: String, rows: DataFrame, table: String,
+      cent: Array[Array[Double]], mode: String = "overwrite"): Unit =
+    Scale.writeBucketed(rows, table, "cell",
+      ivfBucketCount(Artifacts.embeddings(s, dir).rows, cent.length), mode = mode)
+
+  /** Write the coarse-centroid sidecar `(cell, centroid)` (and, for
+    * IVF-PQ, the codebook sidecar `(m, j, centroid)`), then stamp the
+    * centroid sidecar with the embeddings fingerprint and the current
+    * geometry — the last write of every IVF build. */
+  private def writeIvfSidecars(s: SparkSession, dir: String, table: String,
+      cent: Array[Array[Double]], cb: Option[Array[Array[Array[Double]]]]): Unit = {
+    import s.implicits._
+    cent.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
       .toDF("cell", "centroid")
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
       .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_centroids")
+    cb.foreach { cb =>
+      (for { m <- cb.indices; j <- cb(m).indices }
+        yield (m, j, cb(m)(j).toSeq)).toDF("m", "j", "centroid")
+        .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_pq")
+    }
+    Artifacts.stamp(s, s"${table}_centroids", Artifacts.embeddings(s, dir),
+      Some(ivfGeometry(s, dir)))
   }
 
-  /** Cheap source-snapshot fingerprint stamped into every persisted
-    * artifact at build time (VERDICT r11 #5): (row count, max vec_id)
-    * of the embeddings source — two long aggregates in one scan,
-    * constant driver state at any corpus scale. Catches the stale-
-    * artifact hazard of build-once/query-many: a dataset replaced
-    * under the same path no longer silently serves an index built
-    * from the OLD data. (Not a content hash — an in-place UPDATE that
-    * preserves both count and max id passes; at that point the
-    * dataset layer's own snapshot/version id is the right key.)
-    *
-    * Served from parquet FOOTER statistics + a modification-signature
-    * cache ([[graft.sources.FooterStats]]) — a metadata read, not a
-    * source scan (VERDICT r12 #3); the two-aggregate scan remains
-    * only as the fallback when footers lack usable integer stats. */
-  private def sourceFingerprint(s: SparkSession, dir: String): (Long, Long) =
-    graft.sources.FooterStats.fingerprint(s, s"$dir/embeddings.parquet", "vec_id")
-      .getOrElse {
-        import s.implicits._
-        val r = Tables.embeddings(s, dir)
-          .agg(count(lit(1)), max($"vec_id".cast("long"))).head()
-        (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
-
-  private def storedFingerprint(s: SparkSession, fpTable: String): Option[(Long, Long)] =
-    try {
-      val r = s.table(fpTable).select(col("src_rows"), col("src_max_id")).head()
-      Some((r.getLong(0), r.getLong(1)))
-    } catch {
-      // Only the cases that MEAN "no usable stamp": an absent table or a
-      // pre-stamp artifact missing the src_rows/src_max_id columns (both
-      // AnalysisException), or an empty stamp table (head() on zero rows).
-      // Anything else — transient FS/catalog failure mid-read — propagates
-      // instead of silently classifying the artifact stale and paying a
-      // full rebuild (ADVICE r12).
-      case _: org.apache.spark.sql.AnalysisException => None
-      case _: NoSuchElementException                 => None
-    }
-
-  /** Fail-loud freshness gate on the read side: the fingerprint
-    * stamped in `fpTable` must equal the source's CURRENT one (`now`,
-    * computed by the caller from whichever table the artifact
-    * sketches/indexes). A pre-fingerprint artifact (no stamp columns)
-    * is treated as unverifiable and rejected the same way. */
-  private[graft] def requireFresh(s: SparkSession, fpTable: String, now: (Long, Long),
-      dir: String, what: String): Unit = {
-    val stored = storedFingerprint(s, fpTable)
-    require(stored.contains(now),
-      s"$what '$fpTable' was built from a different source snapshot of $dir " +
-        s"(stored fingerprint ${stored.getOrElse("<absent>")}, source is now $now): " +
-        "rebuild the artifact, or query through the lifecycle entry point " +
-        "(ivfStoredNn / pcaStoredProjection / hllStoredUnion), which rebuilds " +
-        "stale artifacts itself.")
-  }
-
-  /** Build-if-absent-or-STALE gate: rebuild when the catalog lacks
-    * any of `tables` (needsBuild) OR the stamped source fingerprint in
-    * `fpTable` no longer matches the caller-computed current one. */
-  private[graft] def needsBuildOrStale(s: SparkSession, now: => (Long, Long), fpTable: String,
-      tables: String*): Boolean =
-    needsBuild(s, tables: _*) || {
-      val stale = !storedFingerprint(s, fpTable).contains(now)
-      if (stale) tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      stale
-    }
-
-  /** Storage bucket count for a cell-keyed persisted artifact:
-    * one bucket per cell once cells carry enough rows to amortize a
-    * file and a scan task (~2k rows), PACKED below that — r18: under
-    * auto-√n sizing a 20k-row fixture stored 142 one-file buckets
-    * and every serve-path scan became 142 near-empty tasks (~2×
-    * serve warm, np-independent — measured by pinning np=4 at
-    * k=142). The cell equi-join eliminates the index-side exchange
-    * at ANY bucket count (hash co-partitioning on the join key), so
-    * packing cells into fewer buckets trades nothing; at production
-    * row counts the rule is one bucket per cell again. Floor 16 keeps
-    * every priced fixture bit-identical to the committed layout. */
+  /** Storage bucket count for a cell-keyed persisted artifact: one
+    * bucket per cell once cells carry ~2k rows, PACKED below that (one
+    * near-empty file and scan task per cell doubled serve time at
+    * 142 cells over 20k rows). The cell equi-join needs no index-side
+    * exchange at any bucket count, so packing trades nothing. Floor
+    * 16 keeps every priced fixture's layout unchanged. */
   private[graft] def ivfBucketCount(nRows: Long, cells: Int): Int =
     math.max(1L, math.min(cells.toLong, math.max(16L, nRows / 2000L))).toInt
 
-  /** Geometry staleness for a PERSISTED IVF artifact (r18, the
-    * auto-sizing corollary): the source fingerprint catches data
-    * drift but not CONF drift — with `spark.graft.ivf.k = auto` (or
-    * any explicit re-tune) an index built at one geometry must not
-    * silently serve another, because the stored `cell` assignments
-    * AND the stored `probe_cells` lists bake in (k, nprobe) at build
-    * time. Compares the sidecar's cell count against what the
-    * current conf resolves to (min(k, n): sub-k corpora train fewer
-    * cells) and one stored row's probe width against the resolved
-    * nprobe at that cell count; on mismatch drops the artifact
-    * generation so the caller's build path recreates it. Two
-    * metadata-scale lookups, same cost class as the fingerprint
-    * check. */
-  /** Positive geometry checks, keyed on (table, source fingerprint,
-    * resolved geometry): the verification itself costs two small
-    * Spark jobs, which a serve query must not re-pay per CALL — the
-    * r18 bench leg showed the whole serve family +0.7–1.1 s warm from
-    * exactly that. A key can only go stale through a conf change or a
-    * data change, both of which change the key itself; only OK
-    * results are cached, so a mismatch is always re-verified on the
-    * next call after its rebuild. */
-  private val geometryOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, (Long, Long), Long, Long)]()
-
-  private[graft] def ivfGeometryStale(s: SparkSession, dir: String, fpTable: String,
-      indexTable: String, tables: Seq[String]): Boolean = {
-    import s.implicits._
-    val fp = sourceFingerprint(s, dir)
-    val n = fp._1
-    val expectCellsPre = math.min(ivfK(s, dir).toLong, math.max(1L, n))
-    val expectProbe = math.min(ivfNprobe(s, expectCellsPre.toInt).toLong, expectCellsPre)
-    val key = (fpTable, fp, expectCellsPre, expectProbe)
-    if (geometryOk.contains(key)) return false
-    val stale = try {
-      val expectCells = expectCellsPre
-      val cells = s.table(fpTable).count()
-      val probeOk = !s.catalog.tableExists(indexTable) || {
-        val t = s.table(indexTable)
-        // PQ code tables carry no probe lists (probes are resolved at
-        // serve time from the sidecar) — only check where stored
-        !t.columns.contains("probe_cells") || {
-          val w = t.select(size($"probe_cells")).limit(1).as[Int].collect()
-          w.isEmpty || w.head ==
-            math.min(ivfNprobe(s, cells.toInt).toLong, expectCells)
-        }
-      }
-      cells != expectCells || !probeOk
-    } catch { case _: Exception => true }
-    if (stale) {
-      // the caller rebuilds at the CURRENT geometry — every cached OK
-      // for this artifact (e.g. the one the previous geometry earned)
-      // is now about a generation that no longer exists
-      geometryOk.removeIf(_._1 == fpTable)
-      tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-    } else geometryOk.add(key)
-    stale
+  /** The IVF geometry the current conf resolves to for `dir`: cells =
+    * min(k, n) (sub-k corpora train fewer cells) and the probe width
+    * at that cell count. The source fingerprint catches data drift,
+    * not conf drift (`spark.graft.ivf.k = auto` or any re-tune), so
+    * IVF artifacts are stamped with this too and rebuilt when it
+    * moves. */
+  private[graft] def ivfGeometry(s: SparkSession, dir: String): Artifacts.Geometry = {
+    val cells = math.min(ivfK(s, dir).toLong, math.max(1L, Artifacts.embeddings(s, dir).rows))
+    Artifacts.Geometry(cells, math.min(ivfNprobe(s, cells.toInt).toLong, cells))
   }
+
+  /** Build-if-absent-or-stale gate of an IVF artifact: the index
+    * table `tbl` plus its `<tbl>_<sidecar>` tables, stamped on the
+    * centroid sidecar with the embeddings fingerprint and geometry. */
+  private def ensureIvf(s: SparkSession, dir: String, tbl: String,
+      sidecars: String*)(build: => Unit): Unit =
+    Artifacts.ensure(s, tbl +: sidecars.map(x => s"${tbl}_$x"), s"${tbl}_centroids",
+      Artifacts.embeddings(s, dir), Some(ivfGeometry(s, dir)))(build)
 
   /** NN query over a PERSISTED index — the read side of
     * [[buildIvfIndex]]; identical semantics to [[ivfTopk]] but no
@@ -862,7 +765,7 @@ object SimilarityQueries {
     * callers that just established freshness (the q92 gate) or
     * explicitly accept the stored snapshot. */
   def ivfNnFromIndex(s: SparkSession, table: String, sourceDir: String): DataFrame = {
-    requireFresh(s, s"${table}_centroids", sourceFingerprint(s, sourceDir),
+    Artifacts.requireFresh(s, s"${table}_centroids", Artifacts.embeddings(s, sourceDir),
       sourceDir, "IVF index")
     ivfNnFrom(s.table(table))
   }
@@ -870,58 +773,11 @@ object SimilarityQueries {
   def ivfNnFromIndex(s: SparkSession, table: String): DataFrame =
     ivfNnFrom(s.table(table))
 
-  /** Catalog-safe table suffix for a per-dataset artifact name. The
-    * slug alone is lossy ("/data/a-b" and "/data/a_b" both slug to
-    * "data_a_b", so one dataset's artifact could shadow another's
-    * within a session); a short hash of the RAW dir string makes the
-    * suffix collision-resistant while keeping it human-readable. */
-  private[graft] def tableSuffix(dir: String): String = {
-    val slug = dir.replaceAll("[^a-zA-Z0-9]+", "_").replaceAll("^_+|_+$", "")
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
-    s"${slug}_$h"
-  }
-
-  /** Build-if-absent gate for a persisted artifact. The session
-    * catalog is in-memory, so a PREVIOUS JVM may have left the managed
-    * table's warehouse directory behind while this catalog has never
-    * heard of the table — CTAS then refuses with
-    * LOCATION_ALREADY_EXISTS. When the catalog lacks the table, clear
-    * any stale location before rebuilding (the build is deterministic,
-    * so rebuild-per-session is correct; within a session the catalog
-    * hit makes every later call reuse the artifact). */
-  private def needsBuild(s: SparkSession, tables: String*): Boolean = {
-    val missing = tables.filterNot(s.catalog.tableExists(_))
-    if (missing.nonEmpty) {
-      tables.foreach { t =>
-        // A catalog-KNOWN table's real location (wherever it is) is
-        // removed by DROP TABLE itself; only catalog-unknown leftovers
-        // need the manual sweep, at the managed location under the
-        // CURRENT database — resolved from the catalog, not assumed
-        // to be the warehouse root (default's location IS the root,
-        // db X's is <warehouse>/x.db unless relocated).
-        val known = s.catalog.tableExists(t)
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        if (!known) {
-          val dbLoc = new org.apache.hadoop.fs.Path(
-            s.catalog.getDatabase(s.catalog.currentDatabase).locationUri)
-          val loc = new org.apache.hadoop.fs.Path(dbLoc, t.toLowerCase)
-          val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(loc)) fs.delete(loc, true)
-        }
-      }
-    }
-    missing.nonEmpty
-  }
-
-  /** q92: the PERSISTED-INDEX LIFECYCLE as a driver-verified row
-    * (VERDICT r10 #1) — build [[buildIvfIndex]] once per dataset
-    * (build-if-absent-OR-STALE: warm re-runs and later queries in the
-    * same session reuse the stored table, and a source dataset
-    * replaced under the same path is detected by the stamped
-    * fingerprint and triggers a rebuild — ArtifactFreshnessSpec;
-    * exactly the build-once/query-many shape a 100 TB operator runs),
-    * answer NN
-    * through [[ivfNnFromIndex]], and pin in the emitted row itself:
+  /** q92: the PERSISTED-INDEX LIFECYCLE as a driver-verified row —
+    * [[buildIvfIndex]] once per dataset through the
+    * [[graft.Artifacts.ensure]] gate (reused while fresh, rebuilt when
+    * the source or the geometry moves), NN through [[ivfNnFromIndex]],
+    * and pinned in the emitted row:
     *  - `n_points`: every vector got an answer (DuckDB reproduces the
     *    count independently);
     *  - `stored_equals_live`: the stored-index answers EQUAL the live
@@ -936,12 +792,8 @@ object SimilarityQueries {
     * only to verify; production consumers call ivfNnFromIndex alone). */
   def ivfStoredNn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_ivf_q92_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids")))
-      buildIvfIndex(s, dir, tbl)
+    val tbl = Artifacts.name("ivf_q92", dir)
+    ensureIvf(s, dir, tbl, "centroids")(buildIvfIndex(s, dir, tbl))
     val stored = ivfNnFromIndex(s, tbl)
     // ONE count settles AQE for the plan pin AND supplies n_points —
     // the former shape ran the stored NN join a third time under the
@@ -1003,18 +855,10 @@ object SimilarityQueries {
     *  - `audit_nonempty`: the audit actually audited something. */
   def ivfServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_ivf_q92_${tableSuffix(dir)}" // share q92's artifact
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids")))
-      buildIvfIndex(s, dir, tbl)
+    val tbl = Artifacts.name("ivf_q92", dir) // share q92's artifact
+    ensureIvf(s, dir, tbl, "centroids")(buildIvfIndex(s, dir, tbl))
     // centroids from the SIDECAR only — all a serving tier has
-    val cent: Array[Array[Double]] = s.table(s"${tbl}_centroids")
-      .select($"cell", $"centroid").collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    val (_, probeCol) = ivfCells(s, cent)
+    val (_, probeCol) = ivfCells(s, loadCentroids(s, tbl))
     val queries = Tables.embeddings(s, dir)
       .filter($"vec_id" % 7 === 3)
       .select(($"vec_id" + 1000000L).as("q_id"), $"vec_id".as("src_id"),
@@ -1474,21 +1318,18 @@ object SimilarityQueries {
     (pairs, samplePairs)
   }
 
-  /** PCA model persistence — the train/store/apply lifecycle for the
-    * embedding-compression stage (the IVF-index precedent): fit once,
-    * store (mean, components) as a one-row table, and project any
-    * embedding frame through the STORED model without refitting.
-    * Doubles round-trip parquet exactly, so stored-model projections
-    * are bit-identical to fresh-fit ones (PcaModelSpec pins it). */
-  def buildPcaModel(s: SparkSession, dir: String, table: String, k: Int = 8): Unit =
-      graft.PhaseTimer.timed("build") {
+  /** PCA model persistence: fit once, store (mean, components) as a
+    * stamped one-row table, and project any embedding frame through
+    * the STORED model without refitting. Doubles round-trip parquet
+    * exactly, so stored-model projections are bit-identical to
+    * fresh-fit ones (PcaModelSpec pins it). */
+  def buildPcaModel(s: SparkSession, dir: String, table: String, k: Int = 8): Unit = {
     import s.implicits._
     val (mean, comps) = fitPca(
       Tables.embeddings(s, dir).select($"embedding").na.drop(), k)
-    val (srcRows, srcMaxId) = sourceFingerprint(s, dir)
     Seq((mean.toSeq, comps.map(_.toSeq).toSeq)).toDF("mean", "components")
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
       .write.mode("overwrite").format("parquet").saveAsTable(table)
+    Artifacts.stamp(s, table, Artifacts.embeddings(s, dir))
   }
 
   private[graft] def loadPcaModel(s: SparkSession,
@@ -1514,16 +1355,15 @@ object SimilarityQueries {
     * as the verifying [[ivfNnFromIndex]]). */
   def pcaProjected(s: SparkSession, modelTable: String, emb: DataFrame,
       sourceDir: String): DataFrame = {
-    requireFresh(s, modelTable, sourceFingerprint(s, sourceDir),
+    Artifacts.requireFresh(s, modelTable, Artifacts.embeddings(s, sourceDir),
       sourceDir, "PCA model")
     pcaProjected(s, modelTable, emb)
   }
 
   /** q93: the PERSISTED-MODEL LIFECYCLE as a driver-verified row
-    * (VERDICT r10 #1, q92's PCA sibling) — [[buildPcaModel]] once per
-    * dataset (build-if-absent-or-stale, the q92 gate), project the
-    * corpus through the STORED
-    * model via [[pcaProjected]], and pin in the emitted row:
+    * (q92's PCA sibling) — [[buildPcaModel]] once per dataset through
+    * the q92 gate, project the corpus through the STORED model via
+    * [[pcaProjected]], and pin in the emitted row:
     *  - `n_vectors` / `k` / `dim`: DuckDB-reproducible shape counts
     *    (the q89 pattern);
     *  - `stored_matches_fresh`: stored-model projections are
@@ -1537,9 +1377,9 @@ object SimilarityQueries {
   def pcaStoredProjection(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val k = 8
-    val tbl = s"graft_pca_q93_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), tbl, tbl))
-      buildPcaModel(s, dir, tbl, k)
+    val tbl = Artifacts.name("pca_q93", dir)
+    Artifacts.ensure(s, Seq(tbl), tbl, Artifacts.embeddings(s, dir))(
+      buildPcaModel(s, dir, tbl, k))
     // select-then-drop: only the columns the projection needs decide
     // null-exclusion (and label never reaches the scan)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")).na.drop()
@@ -1575,18 +1415,6 @@ object SimilarityQueries {
       |FROM embeddings
       |WHERE vec_id IS NOT NULL AND embedding IS NOT NULL""".stripMargin
 
-  /** Fingerprint of the DOCUMENTS source — the q96/q97 sketch/merges
-    * base; same (row count, max id) shape as [[sourceFingerprint]],
-    * same footer-stats fast path + scan fallback. */
-  private[graft] def docsFingerprint(s: SparkSession, dir: String): (Long, Long) =
-    graft.sources.FooterStats.fingerprint(s, s"$dir/documents.parquet", "doc_id")
-      .getOrElse {
-        import s.implicits._
-        val r = Tables.documents(s, dir)
-          .agg(count(lit(1)), max($"doc_id".cast("long"))).head()
-        (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
-
   /** Build side of the PERSISTED SKETCH lifecycle: one HLL register
     * array per source over distinct text fingerprints, stored with the
     * source-snapshot stamp (the q92/q93 discipline). At 100 TB these
@@ -1594,25 +1422,23 @@ object SimilarityQueries {
     * "how many distinct documents across sources X, Y, any date range"
     * is answered by merging kilobyte register arrays — never by
     * re-scanning raw data. */
-  def buildDocSketches(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
+  def buildDocSketches(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
-    val (srcRows, srcMaxId) = docsFingerprint(s, dir)
     Tables.documents(s, dir)
       .groupBy($"source")
       .agg(graft.functions.HllSketch.hll_sketch(
         TextQueries.fingerprint($"text")).as("sketch"))
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
       .write.mode("overwrite").format("parquet").saveAsTable(table)
+    Artifacts.stamp(s, table, Artifacts.documents(s, dir))
   }
 
   /** Query side: distinct-document estimate from STORED sketches
-    * alone. The `sourceDir` form verifies the stamped fingerprint
-    * first (the verifying-read contract of ivfNnFromIndex /
-    * pcaProjected); the raw form is for callers that just established
-    * freshness. */
+    * alone. The `sourceDir` form is the verifying read
+    * ([[graft.Artifacts.requireFresh]]); the raw form is for callers
+    * that just established freshness. */
   def docDistinctFromSketches(s: SparkSession, table: String, sourceDir: String): DataFrame = {
-    requireFresh(s, table, docsFingerprint(s, sourceDir), sourceDir, "HLL sketch table")
+    Artifacts.requireFresh(s, table, Artifacts.documents(s, sourceDir), sourceDir,
+      "HLL sketch table")
     docDistinctFromSketches(s, table)
   }
 
@@ -1642,9 +1468,9 @@ object SimilarityQueries {
     * n_sources × 2 KB register arrays). */
   def hllStoredUnion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_hll_q96_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, docsFingerprint(s, dir), tbl, tbl))
-      buildDocSketches(s, dir, tbl)
+    val tbl = Artifacts.name("hll_q96", dir)
+    Artifacts.ensure(s, Seq(tbl), tbl, Artifacts.documents(s, dir))(
+      buildDocSketches(s, dir, tbl))
     val fp = TextQueries.fingerprint($"text")
     val stored = s.table(tbl).agg(
       graft.functions.HllSketch.hll_union_distinct($"sketch").as("est_stored"),
@@ -1926,12 +1752,12 @@ object SimilarityQueries {
 
   // ---- q144: IVF-PQ composed index (IVFADC serving) ----------------
 
-  /** Build the COMPOSED index artifact (VERDICT r15 #5): ONE bucketed
-    * table `(vec_id, cell, code0..code{M-1})` — the PQ codes stored
-    * INSIDE the IVF layout (the Jégou/Douze/Schmid IVFADC), bucketed
-    * by home cell like q92's index — plus TWO sidecars, the coarse
-    * centroids (q92's exact layout) and the PQ codebooks
-    * `(m, j, centroid)`, each stamped with the source fingerprint.
+  /** Build the COMPOSED index artifact: ONE bucketed table
+    * `(vec_id, cell, code0..code{M-1})` — the PQ codes stored INSIDE
+    * the IVF layout (the Jégou/Douze/Schmid IVFADC), bucketed by home
+    * cell like q92's index — plus TWO sidecars, the coarse centroids
+    * (q92's layout, carrying the stamp) and the PQ codebooks
+    * `(m, j, centroid)`.
     * The index table carries NO raw vectors: key + cell + M 1-byte
     * codes per vector instead of 4·dim floats — the RAM-residency
     * win that motivates PQ; only the exact re-rank reads raw vectors
@@ -1939,27 +1765,14 @@ object SimilarityQueries {
     * the cell residual (FAISS `by_residual=false`): codes stay
     * cell-independent (one codebook serves every probe cell) and on
     * the near-isotropic fixture residual coding buys little. */
-  def buildIvfPqIndex(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
+  def buildIvfPqIndex(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
     val cent = trainCentroids(s, dir)
     val cb = pqCodebooks(s, dir)
-    ivfPqCodeRows(Tables.embeddings(s, dir).select($"vec_id", $"embedding"),
-        cent, cb)
-      .write.mode("overwrite")
-      .bucketBy(ivfBucketCount(sourceFingerprint(s, dir)._1, cent.length), "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-    val (srcRows, srcMaxId) = sourceFingerprint(s, dir)
-    cent.zipWithIndex
-      .map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_centroids")
-    (for { m <- cb.indices; j <- cb(m).indices }
-      yield (m, j, cb(m)(j).toSeq)).toDF("m", "j", "centroid")
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_pq")
+    writeIvfIndex(s, dir,
+      ivfPqCodeRows(Tables.embeddings(s, dir).select($"vec_id", $"embedding"), cent, cb),
+      table, cent)
+    writeIvfSidecars(s, dir, table, cent, Some(cb))
   }
 
   /** q144: SERVE the composed IVF-PQ index from the STORED TABLES
@@ -2011,12 +1824,8 @@ object SimilarityQueries {
     * pqStats pattern, so specs pin exact counts and the recall
     * floor's margin is measurable. */
   private[graft] def ivfPqStats(s: SparkSession, dir: String): (Long, Long, Long, Long) = {
-    val tbl = s"graft_ivfpq_q144_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids", s"${tbl}_pq")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids", s"${tbl}_pq")))
-      buildIvfPqIndex(s, dir, tbl)
+    val tbl = Artifacts.name("ivfpq_q144", dir)
+    ensureIvf(s, dir, tbl, "centroids", "pq")(buildIvfPqIndex(s, dir, tbl))
     val st = ivfPqServeStats(s, dir, tbl, tombstones = None)
     (st._1, st._2, st._3, st._4)
   }
@@ -2028,16 +1837,17 @@ object SimilarityQueries {
     * ([[graft.streaming.Pipeline.upsertVectorsBatch]]). */
   private[graft] def loadIvfPqSidecars(s: SparkSession, tbl: String)
   : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    import s.implicits._
-    val cent: Array[Array[Double]] = s.table(s"${tbl}_centroids")
-      .select($"cell", $"centroid").collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     val cb: Array[Array[Array[Double]]] = s.table(s"${tbl}_pq")
-      .select($"m", $"j", $"centroid").collect()
+      .select(col("m"), col("j"), col("centroid")).collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
-    (cent, cb)
+    (loadCentroids(s, tbl), cb)
   }
+
+  /** The `<tbl>_centroids` sidecar, in cell order (k driver-held rows). */
+  private def loadCentroids(s: SparkSession, tbl: String): Array[Array[Double]] =
+    s.table(s"${tbl}_centroids").select(col("cell"), col("centroid")).collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** The (vec_id, cell, code0..code{M-1}) encode projection over an
     * embedding frame, given sidecar state — ONE definition shared by
@@ -2160,12 +1970,9 @@ object SimilarityQueries {
     * [[ivfPqCodeRows]] projection under the SIDECARS' state (a
     * production upsert never retrains; new vectors quantize under
     * the frozen codebooks, the standard IVFADC maintenance rule).
-    * Spark's datasource bucketing tags every file with its bucket
-    * id, so the appended generation lands in the same logical cells
-    * and the serve-time scan reads both transparently. The sidecar
-    * stamp carries the POST-append fingerprint, so the lifecycle
-    * gate reuses the upserted artifact and rebuilds only on source
-    * drift.
+    * The appended generation lands in the same logical cells
+    * ([[Scale.writeBucketed]]); the stamp is the whole corpus's
+    * fingerprint, so the gate reuses the upserted artifact.
     *
     * The report adds `n_indexed` — the stored table's row count,
     * which DuckDB reproduces as the FULL corpus count: a lost or
@@ -2174,34 +1981,18 @@ object SimilarityQueries {
     * theorems running over the two-generation artifact. */
   def ivfPqUpsertServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_ivfpq_q146_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids", s"${tbl}_pq")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids", s"${tbl}_pq"))) graft.PhaseTimer.timed("build") {
+    val tbl = Artifacts.name("ivfpq_q146", dir)
+    ensureIvf(s, dir, tbl, "centroids", "pq") {
       val cent = trainCentroids(s, dir)
       val cb = pqCodebooks(s, dir)
       val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
-      ivfPqCodeRows(emb.filter($"vec_id" % 10 =!= 7), cent, cb)
-        .write.mode("overwrite")
-        .bucketBy(ivfBucketCount(sourceFingerprint(s, dir)._1, cent.length), "cell").sortBy("cell")
-        .format("parquet").saveAsTable(tbl)
+      writeIvfIndex(s, dir, ivfPqCodeRows(emb.filter($"vec_id" % 10 =!= 7), cent, cb), tbl, cent)
       // sidecars BEFORE the append: the append generation must encode
       // from the STORED state, as a nightly job would
-      val (srcRows, srcMaxId) = sourceFingerprint(s, dir)
-      cent.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_centroids")
-      (for { m <- cb.indices; j <- cb(m).indices }
-        yield (m, j, cb(m)(j).toSeq)).toDF("m", "j", "centroid")
-        .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_pq")
+      writeIvfSidecars(s, dir, tbl, cent, Some(cb))
       val (storedCent, storedCb) = loadIvfPqSidecars(s, tbl)
-      ivfPqCodeRows(emb.filter($"vec_id" % 10 === 7), storedCent, storedCb)
-        .write.mode("append")
-        .bucketBy(ivfBucketCount(sourceFingerprint(s, dir)._1, storedCent.length), "cell").sortBy("cell")
-        .format("parquet").saveAsTable(tbl)
+      writeIvfIndex(s, dir, ivfPqCodeRows(emb.filter($"vec_id" % 10 === 7), storedCent, storedCb),
+        tbl, storedCent, "append")
     }
     val nIndexed = s.table(tbl).count()
     val (nQ, nServed, nAudited, nHit, _) =
@@ -2232,12 +2023,8 @@ object SimilarityQueries {
     * reproduces the deletion-set size independently. */
   def ivfPqTombstoneServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_ivfpq_q144_${tableSuffix(dir)}" // share q144's artifact
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids", s"${tbl}_pq")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids", s"${tbl}_pq")))
-      buildIvfPqIndex(s, dir, tbl)
+    val tbl = Artifacts.name("ivfpq_q144", dir) // share q144's artifact
+    ensureIvf(s, dir, tbl, "centroids", "pq")(buildIvfPqIndex(s, dir, tbl))
     val tombstones = Tables.embeddings(s, dir)
       .filter($"vec_id" % 9 === 4).select($"vec_id")
     val nTomb = tombstones.count()
@@ -2264,36 +2051,19 @@ object SimilarityQueries {
     * anti-join scheduled off the request path. */
   def ivfPqCompactServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"graft_ivfpq_q144_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${base}_centroids",
-        base, s"${base}_centroids", s"${base}_pq")
-        || ivfGeometryStale(s, dir, s"${base}_centroids", base,
-          Seq(base, s"${base}_centroids", s"${base}_pq")))
-      buildIvfPqIndex(s, dir, base)
-    val tbl = s"graft_ivfpq_q148_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, sourceFingerprint(s, dir), s"${tbl}_centroids",
-        tbl, s"${tbl}_centroids", s"${tbl}_pq")
-        || ivfGeometryStale(s, dir, s"${tbl}_centroids", tbl,
-          Seq(tbl, s"${tbl}_centroids", s"${tbl}_pq"))) graft.PhaseTimer.timed("build") {
+    val base = Artifacts.name("ivfpq_q144", dir)
+    ensureIvf(s, dir, base, "centroids", "pq")(buildIvfPqIndex(s, dir, base))
+    val tbl = Artifacts.name("ivfpq_q148", dir)
+    ensureIvf(s, dir, tbl, "centroids", "pq") {
       val tombstones = Tables.embeddings(s, dir)
         .filter($"vec_id" % 9 === 4).select($"vec_id")
       // sidecars first: the compacted generation keeps the BASE
       // geometry (compaction never retrains), so its bucket count is
       // the stored cell count, not a re-resolved k
       val (cent, cb) = loadIvfPqSidecars(s, base)
-      s.table(base).join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite")
-        .bucketBy(ivfBucketCount(sourceFingerprint(s, dir)._1, cent.length), "cell").sortBy("cell")
-        .format("parquet").saveAsTable(tbl)
-      val (srcRows, srcMaxId) = sourceFingerprint(s, dir)
-      cent.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_centroids")
-      (for { m <- cb.indices; j <- cb(m).indices }
-        yield (m, j, cb(m)(j).toSeq)).toDF("m", "j", "centroid")
-        .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_pq")
+      writeIvfIndex(s, dir,
+        s.table(base).join(broadcast(tombstones), Seq("vec_id"), "left_anti"), tbl, cent)
+      writeIvfSidecars(s, dir, tbl, cent, Some(cb))
     }
     val nLive = s.table(tbl).count()
     val (nQ, nServed, nAudited, nHit, _) =
@@ -2325,17 +2095,15 @@ object SimilarityQueries {
     * insertion is duplicate-insensitive, so no distinct pass is
     * needed before the aggregate: ONE corpus scan, constant state
     * per source. */
-  private[graft] def buildVocabSketches(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
+  private[graft] def buildVocabSketches(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
-    val (srcRows, srcMaxId) = docsFingerprint(s, dir)
     Tables.documents(s, dir)
       .select($"source", explode(split(trim($"text"), "\\s+")).as("tok"))
       .select($"source", TextQueries.fingerprint($"tok").as("fp"))
       .groupBy($"source")
       .agg(graft.functions.HllSketch.hll_sketch($"fp").as("sketch"))
-      .withColumn("src_rows", lit(srcRows)).withColumn("src_max_id", lit(srcMaxId))
       .write.mode("overwrite").format("parquet").saveAsTable(table)
+    Artifacts.stamp(s, table, Artifacts.documents(s, dir))
   }
 
   /** q141: SKETCHED VOCABULARY-OVERLAP MATRIX — q83's exact
@@ -2361,9 +2129,9 @@ object SimilarityQueries {
     * audit tier, not the product. */
   def vocabSketchOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_hll_q141_${tableSuffix(dir)}"
-    if (needsBuildOrStale(s, docsFingerprint(s, dir), tbl, tbl))
-      buildVocabSketches(s, dir, tbl)
+    val tbl = Artifacts.name("hll_q141", dir)
+    Artifacts.ensure(s, Seq(tbl), tbl, Artifacts.documents(s, dir))(
+      buildVocabSketches(s, dir, tbl))
     val sk = s.table(tbl).select($"source", $"sketch")
     val singles = sk.groupBy($"source")
       .agg(graft.functions.HllSketch.hll_union_distinct($"sketch").as("est"))
@@ -2542,7 +2310,7 @@ object SimilarityQueries {
     // the (label × split × dim)-bounded sum frame feeds both split
     // branches — checkpoint it so the corpus-scanning lineage runs
     // once (the q79 materialize-once rule)
-    val agg = graft.operators.Scale.checkpointed(Tables.embeddings(s, dir)
+    val agg = Scale.checkpointed(Tables.embeddings(s, dir)
       .select($"vec_id", $"label", posexplode($"embedding").as(Seq("dim", "v")))
       .withColumn("split",
         when(TrainQueries.sampleKey($"vec_id") < 980L, "train").otherwise("heldout"))
@@ -2709,7 +2477,7 @@ object SimilarityQueries {
     * re-read parquet-local bytes, not re-derive lineage. */
   def kcenterCoreset(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
     import s.implicits._
-    val g = graft.operators.Scale.checkpointed(
+    val g = Scale.checkpointed(
       Tables.embeddings(s, dir).select($"vec_id",
         expr("transform(embedding, x -> round(CAST(x AS DOUBLE) * 10000, 0))").as("gv")))
     // seed at min(vec_id) — NOT a hard-coded id 0, which would throw

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Artifacts, Tables}
+import graft.operators.Scale
 import graft.operators.Scale.CheckpointOps
 import graft.queries.Export._
 
@@ -686,27 +687,39 @@ object TextQueries {
     docs.select(col("doc_id"),
       explode(array_distinct(split(trim(col("text")), "\\s+"))).as("term"))
 
-  private[graft] def buildInvertedIndex(s: SparkSession, dir: String, table: String): Unit =
-      graft.PhaseTimer.timed("build") {
-    import s.implicits._
-    val postings = postingsOf(Tables.documents(s, dir))
-    postings.write.mode("overwrite")
-      .bucketBy(32, "term").sortBy("term", "doc_id")
-      .format("parquet").saveAsTable(table)
-    val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
-    postings.agg(count(lit(1)).as("n_postings"),
-        count_distinct($"term").as("n_terms"))
-      .withColumn("src_rows", lit(srcRows))
-      .withColumn("src_max_id", lit(srcMaxId))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_meta")
+  private[graft] def buildInvertedIndex(s: SparkSession, dir: String, table: String): Unit = {
+    writePostings(postingsOf(Tables.documents(s, dir)), table)
+    writeMeta(s, table, Artifacts.documents(s, dir))
   }
 
+  /** Write (or `append` to) a postings artifact: 32 buckets on term,
+    * sorted by (term, doc_id), the layout every postings family and
+    * its streaming maintenance share. */
+  private[graft] def writePostings(postings: DataFrame, table: String,
+      mode: String = "overwrite"): Unit =
+    Scale.writeBucketed(postings, table, "term", 32, Seq("doc_id"), mode)
+
+  /** Write the `<table>_meta` sidecar of a postings artifact — the
+    * stored table's posting count and distinct-`key` count — and
+    * stamp it with `now`: the last write of every build. */
+  private[graft] def writeMeta(s: SparkSession, table: String, now: Artifacts.Stamp,
+      key: String = "term", keyCount: String = "n_terms"): Unit = {
+    s.table(table).agg(count(lit(1)).as("n_postings"), count_distinct(col(key)).as(keyCount))
+      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_meta")
+    Artifacts.stamp(s, s"${table}_meta", now)
+  }
+
+  /** Build-if-absent-or-stale gate of a documents-derived artifact:
+    * `tbl`, its `<tbl>_<sidecar>` tables and the `<tbl>_meta` sidecar
+    * that carries the stamp. */
+  private[graft] def ensureDocs(s: SparkSession, dir: String, tbl: String,
+      sidecars: String*)(build: => Unit): Unit =
+    Artifacts.ensure(s, tbl +: (sidecars :+ "meta").map(x => s"${tbl}_$x"), s"${tbl}_meta",
+      Artifacts.documents(s, dir))(build)
+
   private def invIndexTable(s: SparkSession, dir: String): String = {
-    val tbl = s"graft_inv_q134_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_meta"))
-      buildInvertedIndex(s, dir, tbl)
+    val tbl = Artifacts.name("inv_q134", dir)
+    ensureDocs(s, dir, tbl)(buildInvertedIndex(s, dir, tbl))
     tbl
   }
 
@@ -803,24 +816,15 @@ object TextQueries {
     * tombstone set stays broadcast-sized. */
   def invertedIndexCompactServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_inv_q149_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_meta")) graft.PhaseTimer.timed("build") {
+    val tbl = Artifacts.name("inv_q149", dir)
+    ensureDocs(s, dir, tbl) {
       val base = invIndexTable(s, dir) // ensure the live artifact is fresh
       val tombstones = Tables.documents(s, dir)
         .filter($"doc_id" % 10 === 3).select($"doc_id")
       val compacted = s.table(base)
         .join(broadcast(tombstones), Seq("doc_id"), "left_anti")
-      compacted.write.mode("overwrite")
-        .bucketBy(32, "term").sortBy("term", "doc_id")
-        .format("parquet").saveAsTable(tbl)
-      val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
-      s.table(tbl).agg(count(lit(1)).as("n_postings"),
-          count_distinct($"term").as("n_terms"))
-        .withColumn("src_rows", lit(srcRows))
-        .withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
+      writePostings(compacted, tbl)
+      writeMeta(s, tbl, Artifacts.documents(s, dir))
     }
     serveBoolean(s, tbl) // no anti-join: the deletions are physical now
       .select($"doc_id", $"n_hits").orderBy($"doc_id")
@@ -842,23 +846,12 @@ object TextQueries {
     * result set. */
   def invertedIndexUpsertServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_inv_q137_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_meta")) graft.PhaseTimer.timed("build") {
+    val tbl = Artifacts.name("inv_q137", dir)
+    ensureDocs(s, dir, tbl) {
       val docs = Tables.documents(s, dir)
-      postingsOf(docs.filter($"doc_id" % 10 =!= 7)).write.mode("overwrite")
-        .bucketBy(32, "term").sortBy("term", "doc_id")
-        .format("parquet").saveAsTable(tbl)
-      postingsOf(docs.filter($"doc_id" % 10 === 7)).write.mode("append")
-        .bucketBy(32, "term").sortBy("term", "doc_id")
-        .format("parquet").saveAsTable(tbl)
-      val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
-      s.table(tbl).agg(count(lit(1)).as("n_postings"),
-          count_distinct($"term").as("n_terms"))
-        .withColumn("src_rows", lit(srcRows))
-        .withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
+      writePostings(postingsOf(docs.filter($"doc_id" % 10 =!= 7)), tbl)
+      writePostings(postingsOf(docs.filter($"doc_id" % 10 === 7)), tbl, "append")
+      writeMeta(s, tbl, Artifacts.documents(s, dir))
     }
     serveBoolean(s, tbl)
       .select($"doc_id", $"n_hits").orderBy($"doc_id")
@@ -967,34 +960,24 @@ object TextQueries {
     * end to end. */
   def bm25TopkServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_bm25_q150_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_vocab", s"${tbl}_meta")) graft.PhaseTimer.timed("build") {
+    val tbl = Artifacts.name("bm25_q150", dir)
+    ensureDocs(s, dir, tbl, "vocab") {
       val toks = Tables.documents(s, dir)
         .select($"doc_id", explode(split(trim($"text"), "\\s+")).as("term"))
       val tf = toks.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
       // per-doc token total rides along as a window-free rollup: sum
       // of tf within doc (vocabulary-per-doc-bounded aggregate)
       val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-      tf.join(dl, "doc_id")
-        .select($"term", $"doc_id", $"tf", $"dl")
-        .write.mode("overwrite")
-        .bucketBy(32, "term").sortBy("term", "doc_id")
-        .format("parquet").saveAsTable(tbl)
+      writePostings(tf.join(dl, "doc_id").select($"term", $"doc_id", $"tf", $"dl"), tbl)
       // lexicon: postings are one row per (term, doc) ⇒ count IS df
-      s.table(tbl).groupBy($"term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .bucketBy(32, "term").sortBy("term")
-        .format("parquet").saveAsTable(s"${tbl}_vocab")
-      val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
+      Scale.writeBucketed(s.table(tbl).groupBy($"term").agg(count(lit(1)).as("df")),
+        s"${tbl}_vocab", "term", 32)
       // coalesce: sum over an EMPTY corpus slice is NULL and would
       // poison the stored meta (r17 degenerate sweep)
       dl.agg(count(lit(1)).as("n_docs"),
           coalesce(sum($"dl"), lit(0L)).as("sum_dl"))
-        .withColumn("src_rows", lit(srcRows))
-        .withColumn("src_max_id", lit(srcMaxId))
         .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
+      Artifacts.stamp(s, s"${tbl}_meta", Artifacts.documents(s, dir))
     }
     // corpus stats from the 1-row meta sidecar (bounded collect);
     // sum_dl/n_docs are exact integers < 2^53 so the double division
@@ -1072,22 +1055,12 @@ object TextQueries {
     * exactly (an off-by-one in pos shows up as zero matches). */
   def phraseIndexServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_pos_q151_${SimilarityQueries.tableSuffix(dir)}"
-    if (SimilarityQueries.needsBuildOrStale(s,
-        SimilarityQueries.docsFingerprint(s, dir), s"${tbl}_meta",
-        tbl, s"${tbl}_meta")) graft.PhaseTimer.timed("build") {
-      Tables.documents(s, dir)
+    val tbl = Artifacts.name("pos_q151", dir)
+    ensureDocs(s, dir, tbl) {
+      writePostings(Tables.documents(s, dir)
         .select($"doc_id", posexplode(split(trim($"text"), "\\s+")))
-        .select($"doc_id", $"col".as("term"), ($"pos" + 1).cast("long").as("pos"))
-        .write.mode("overwrite")
-        .bucketBy(32, "term").sortBy("term", "doc_id")
-        .format("parquet").saveAsTable(tbl)
-      val (srcRows, srcMaxId) = SimilarityQueries.docsFingerprint(s, dir)
-      s.table(tbl).agg(count(lit(1)).as("n_postings"),
-          count_distinct($"term").as("n_terms"))
-        .withColumn("src_rows", lit(srcRows))
-        .withColumn("src_max_id", lit(srcMaxId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
+        .select($"doc_id", $"col".as("term"), ($"pos" + 1).cast("long").as("pos")), tbl)
+      writeMeta(s, tbl, Artifacts.documents(s, dir))
     }
     val p = s.table(tbl)
     // anchor on the first term; each later term joins on

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.Scale.CheckpointOps
 
 /** Training-data pipeline ASSEMBLY operators — the steps between a
@@ -1632,33 +1632,24 @@ object TrainQueries {
     * table (source fingerprint from parquet footer stats), and the
     * held-out OOV report is served FROM THE STORE — the nightly
     * coverage report that must not re-scan and re-rank the training
-    * corpus it already summarized. Build-if-absent-or-stale; the
-    * read side re-verifies freshness and fails loudly on a snapshot
-    * mismatch (the q92 gate). `vocab_k` counts the stored rows the
-    * serve actually read — the oracle recomputes it from raw data,
+    * corpus it already summarized. Build-if-absent-or-stale through
+    * [[graft.Artifacts.ensure]] (the q92 gate). `vocab_k` counts the
+    * stored rows the serve actually read — the oracle recomputes it from raw data,
     * so a serve that bypassed or truncated the artifact cannot
     * match. Output otherwise ≡ q183 by construction: store +
     * round-trip must be lossless. */
   def vocabStoredOov(s: SparkSession, dir: String, k: Int = 200): DataFrame = {
     import s.implicits._
-    val tbl = s"graft_vocab_q189_${SimilarityQueries.tableSuffix(dir)}"
-    val now = SimilarityQueries.docsFingerprint(s, dir)
-    if (SimilarityQueries.needsBuildOrStale(s, now, tbl, tbl)) graft.PhaseTimer.timed("build") {
-      // a 0-row vocabulary (empty corpus, or a corpus whose train
-      // split is empty) has no row to carry the freshness stamp, so
-      // requireFresh would reject its own just-built artifact as
-      // <absent> (r18 degenerate-sweep find — masked until the sweep's
-      // refusal filter was tightened). A tok=NULL stamp row rides
-      // along unconditionally; every reader filters it out (explode
-      // over split() can never produce a NULL real token).
+    val tbl = Artifacts.name("vocab_q189", dir)
+    val now = Artifacts.documents(s, dir)
+    Artifacts.ensure(s, Seq(tbl), tbl, now) {
+      // a 0-row vocabulary (empty corpus, or an empty train split) is
+      // stamped like any other and reused
       trainVocab(Tables.documents(s, dir), k)
-        .unionByName(Seq(Option.empty[String]).toDF("tok"))
-        .withColumn("src_rows", lit(now._1))
-        .withColumn("src_max_id", lit(now._2))
         .write.mode("overwrite").format("parquet").saveAsTable(tbl)
+      Artifacts.stamp(s, tbl, now)
     }
-    SimilarityQueries.requireFresh(s, tbl, now, dir, "vocab table")
-    val vocab = s.table(tbl).select($"tok").filter($"tok".isNotNull)
+    val vocab = s.table(tbl).select($"tok")
     val evalToks = Tables.documents(s, dir).withColumn("split", splitCol)
       .filter($"split" =!= "train")
       .select($"split", $"lang", explode(split(trim($"text"), "\\s+")).as("tok"))
@@ -2215,7 +2206,7 @@ object TrainQueries {
   def paddingWaste(s: SparkSession, dir: String, batch: Int = 32): DataFrame = {
     import s.implicits._
     val shards = shuffleShards(s)
-    val (_, maxId) = SimilarityQueries.docsFingerprint(s, dir)
+    val maxId = Artifacts.documents(s, dir).maxId
     val step = (maxId + shards.toLong) / shards.toLong // ceil((maxId+1)/shards)
     val base = Tables.documents(s, dir)
       .select($"doc_id", TextQueries.tokenCount($"text").as("n_tokens"))

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+import graft.Artifacts
 import graft.functions.Ensemble
+import graft.operators.Scale
 import graft.queries.TextQueries
 
 /** The tweet stream pipeline (SURVEY §3.1) as ONE Structured Streaming
@@ -318,14 +320,13 @@ object Pipeline {
     * 100 TB the doc-membership side would be q84's standing
     * fingerprint index rather than a postings scan.
     *
-    * Meta re-stamp: src_rows/src_max_id are the INDEXED-doc count
-    * and max id recomputed from the artifact, so after a full corpus
-    * replay the stamp equals the batch build's source fingerprint —
-    * the q94/q97 stamp discipline that makes stream ≡ batch parity
-    * checkable on the sidecar, not just the postings. The
-    * count_distinct(term) leg is bucket-local (the artifact is
-    * term-bucketed — no exchange); the doc-side legs shuffle only
-    * posting keys. */
+    * Meta re-stamp: the stamp is the INDEXED-doc count and max id
+    * recomputed from the artifact, so after a full corpus replay it
+    * equals the batch build's source fingerprint — the stamp
+    * discipline that makes stream ≡ batch parity checkable on the
+    * sidecar, not just the postings. The count_distinct(term) leg is
+    * bucket-local (the artifact is term-bucketed — no exchange); the
+    * doc-side legs shuffle only posting keys. */
   def upsertPostingsBatch(batch: DataFrame, table: String): Unit = {
     val s = batch.sparkSession
     import s.implicits._
@@ -334,17 +335,16 @@ object Pipeline {
         batch.join(s.table(table).select($"doc_id").distinct(),
           Seq("doc_id"), "left_anti")
       else batch
-    TextQueries.postingsOf(docs).write.mode("append")
-      .bucketBy(32, "term").sortBy("term", "doc_id")
-      .format("parquet").saveAsTable(table)
-    val m = s.table(table).agg(
-      count(lit(1)).as("n_postings"),
-      count_distinct($"term").as("n_terms"),
-      count_distinct($"doc_id").as("src_rows"),
-      max($"doc_id").as("src_max_id")).head()
-    Seq((m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3)))
-      .toDF("n_postings", "n_terms", "src_rows", "src_max_id")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_meta")
+    TextQueries.writePostings(TextQueries.postingsOf(docs), table, "append")
+    TextQueries.writeMeta(s, table, indexedStamp(s.table(table), "doc_id"))
+  }
+
+  /** The stamp a streamed artifact carries: its indexed-key count and
+    * max key, which after a full replay equal the batch build's source
+    * fingerprint. */
+  private def indexedStamp(artifact: DataFrame, key: String): Artifacts.Stamp = {
+    val m = artifact.agg(count_distinct(col(key)), max(col(key))).head()
+    Artifacts.Stamp(m.getLong(0), m.getLong(1))
   }
 
   /** The streaming writer over [[upsertPostingsBatch]]: documents
@@ -386,21 +386,11 @@ object Pipeline {
     val (cent, cb) = SimilarityQueries.loadIvfPqSidecars(s, table)
     val fresh = batch.join(s.table(table).select($"vec_id"),
       Seq("vec_id"), "left_anti")
-    SimilarityQueries.ivfPqCodeRows(
-        fresh.select($"vec_id", $"embedding"), cent, cb)
-      .write.mode("append")
-      .bucketBy(cent.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-    // re-stamp the sidecar: same centroid rows, post-append
-    // fingerprint (the centroid payload is k driver-held rows)
-    val m = s.table(table)
-      .agg(count_distinct($"vec_id").as("n"), max($"vec_id").as("mx")).head()
-    cent.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .withColumn("src_rows", lit(m.getLong(0)))
-      .withColumn("src_max_id", lit(m.getLong(1)))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
+    Scale.writeBucketed(SimilarityQueries.ivfPqCodeRows(
+      fresh.select($"vec_id", $"embedding"), cent, cb), table, "cell", cent.length, mode = "append")
+    // re-stamp the sidecar with the post-append fingerprint; its
+    // geometry is unchanged (no retraining)
+    Artifacts.stamp(s, s"${table}_centroids", indexedStamp(s.table(table), "vec_id"))
   }
 
   /** The streaming writer over [[upsertVectorsBatch]]: embedding

@@ -12,16 +12,6 @@ import graft.queries.SimilarityQueries
 class ArtifactFreshnessSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Swap-in a new embeddings snapshot at `$dir/embeddings.parquet`
-    * (write-to-temp + move: Spark cannot overwrite its own input). */
-  private def writeSnapshot(df: DataFrame, dir: String): Unit = {
-    val dst = new File(dir, "embeddings.parquet")
-    val tmp = new File(dir, "embeddings.tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    FileUtils.deleteQuietly(dst)
-    FileUtils.moveDirectory(tmp, dst)
-  }
-
   test("stale persisted artifacts are rejected on read and rebuilt by the lifecycle entries") {
     val src = java.nio.file.Files.createTempDirectory("graft-stale").toString
     val orig = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -29,7 +19,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
     val ivfTbl = s"graft_fresh_ivf_${System.nanoTime()}"
     val pcaTbl = s"graft_fresh_pca_${System.nanoTime()}"
     try {
-      writeSnapshot(orig, src)
+      replaceSnapshot(orig, src, "embeddings")
       SimilarityQueries.buildIvfIndex(spark, src, ivfTbl)
       SimilarityQueries.buildPcaModel(spark, src, pcaTbl)
       // q144's lifecycle artifact, built from the ORIGINAL snapshot
@@ -40,7 +30,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
       assert(SimilarityQueries.pcaProjected(spark, pcaTbl, emb, src).limit(1).count() == 1)
 
       // the dataset is REPLACED under the same path (one row dropped)
-      writeSnapshot(orig.filter($"vec_id" =!= maxId), src)
+      replaceSnapshot(orig.filter($"vec_id" =!= maxId), src, "embeddings")
       val e1 = intercept[IllegalArgumentException] {
         SimilarityQueries.ivfNnFromIndex(spark, ivfTbl, src)
       }
@@ -69,13 +59,9 @@ class ArtifactFreshnessSpec extends SparkSpec {
       assert(q144.getAs[Boolean]("all_answered") &&
         q144.getAs[Boolean]("restricted_recall_ok"), s"q144 after rebuild: $q144")
     } finally {
-      Seq(ivfTbl, s"${ivfTbl}_centroids", pcaTbl,
-        s"graft_ivf_q92_${SimilarityQueries.tableSuffix(src)}",
-        s"graft_ivf_q92_${SimilarityQueries.tableSuffix(src)}_centroids",
-        s"graft_pca_q93_${SimilarityQueries.tableSuffix(src)}",
-        s"graft_ivfpq_q144_${SimilarityQueries.tableSuffix(src)}",
-        s"graft_ivfpq_q144_${SimilarityQueries.tableSuffix(src)}_centroids",
-        s"graft_ivfpq_q144_${SimilarityQueries.tableSuffix(src)}_pq")
+      val (ivf, pq) = (Artifacts.name("ivf_q92", src), Artifacts.name("ivfpq_q144", src))
+      Seq(ivfTbl, s"${ivfTbl}_centroids", pcaTbl, ivf, s"${ivf}_centroids",
+        Artifacts.name("pca_q93", src), pq, s"${pq}_centroids", s"${pq}_pq")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       FileUtils.deleteDirectory(new File(src))
     }
@@ -86,19 +72,12 @@ class ArtifactFreshnessSpec extends SparkSpec {
     val orig = spark.read.parquet(s"$sf/documents.parquet")
     val maxId = orig.agg(org.apache.spark.sql.functions.max($"doc_id")).head().getLong(0)
     val tbl = s"graft_fresh_hll_${System.nanoTime()}"
-    def snapshot(df: DataFrame): Unit = {
-      val dst = new File(src, "documents.parquet")
-      val tmp = new File(src, "documents.tmp")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      FileUtils.deleteQuietly(dst)
-      FileUtils.moveDirectory(tmp, dst)
-    }
     try {
-      snapshot(orig)
+      replaceSnapshot(orig, src, "documents")
       SimilarityQueries.buildDocSketches(spark, src, tbl)
       assert(SimilarityQueries.docDistinctFromSketches(spark, tbl, src)
         .head().getLong(0) > 0L)
-      snapshot(orig.filter($"doc_id" =!= maxId))
+      replaceSnapshot(orig.filter($"doc_id" =!= maxId), src, "documents")
       val e = intercept[IllegalArgumentException] {
         SimilarityQueries.docDistinctFromSketches(spark, tbl, src)
       }
@@ -108,7 +87,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
       assert(q96.getAs[Boolean]("merge_exact"), s"q96 after rebuild: $q96")
       assert(q96.getAs[Boolean]("err_bounded"), s"q96 after rebuild: $q96")
     } finally {
-      Seq(tbl, s"graft_hll_q96_${SimilarityQueries.tableSuffix(src)}")
+      Seq(tbl, Artifacts.name("hll_q96", src))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       FileUtils.deleteDirectory(new File(src))
     }
@@ -185,16 +164,9 @@ class ArtifactFreshnessSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("graft-stale-vocab").toString
     val orig = spark.read.parquet(s"$sf/documents.parquet")
     val maxId = orig.agg(org.apache.spark.sql.functions.max($"doc_id")).head().getLong(0)
-    def snapshot(df: DataFrame): Unit = {
-      val dst = new File(src, "documents.parquet")
-      val tmp = new File(src, "documents.tmp")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      FileUtils.deleteQuietly(dst)
-      FileUtils.moveDirectory(tmp, dst)
-    }
-    val tbl = s"graft_vocab_q189_${SimilarityQueries.tableSuffix(src)}"
+    val tbl = Artifacts.name("vocab_q189", src)
     try {
-      snapshot(orig)
+      replaceSnapshot(orig, src, "documents")
       val first = graft.queries.TrainQueries.vocabStoredOov(spark, src).collect()
       val kWant = graft.queries.TrainQueries
         .trainVocab(Tables.documents(spark, src), 200).count()
@@ -205,7 +177,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
       assert(first.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq ==
         inline.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq)
       // shrink the corpus: the standing table is stale; the entry rebuilds
-      snapshot(orig.filter($"doc_id" =!= maxId))
+      replaceSnapshot(orig.filter($"doc_id" =!= maxId), src, "documents")
       val rebuilt = graft.queries.TrainQueries.vocabStoredOov(spark, src).collect()
       assert(rebuilt.nonEmpty, "q189 must rebuild and answer after snapshot change")
     } finally {

@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Bpe
 import graft.queries.BpeQueries
@@ -140,6 +139,20 @@ class BpeSpec extends SparkSpec {
     assert(merges.isEmpty)
   }
 
+  test("argmax ties break in UTF-8 byte order, where String.compareTo disagrees") {
+    // U+1F600 is UTF-16 D83D DE00 but UTF-8 F0…; U+FF21 is UTF-16 FF21
+    // but UTF-8 EF…: only UTF-8 bytes (Spark's order) put U+FF21 first
+    val emoji = "😀"
+    val wide = "Ａ"
+    assert(emoji.compareTo(wide) < 0, "the two orders must disagree on this pair")
+    assert(Seq(emoji, wide).toDF("s").orderBy($"s").as[String].collect().head == wide,
+      "Spark orders the fullwidth letter first")
+    // round 1 fuses the surrogate halves (15); round 2 ties 5-5
+    val dict = Array(emoji -> 10L, s"${emoji}b" -> 5L, s"${wide}b" -> 5L)
+    val merges = BpeQueries.trainMergesLocal(dict, nMerges = 2, minFreq = 1L)
+    assert(merges == Seq("\uD83D" -> "\uDE00", wide -> "b"))
+  }
+
   test("dictionary cap keeps the fixpoint bounded and deterministic") {
     // cap to the 1 most frequent word: only its internal pairs train
     val docs = (Seq.fill(9)("abab") ++ Seq.fill(3)("zzzz")).toDF("text")
@@ -148,27 +161,19 @@ class BpeSpec extends SparkSpec {
     assert(merges == Seq("a" -> "b", "ab" -> "ab"))
   }
 
-  private def writeDocs(df: DataFrame, dir: String): Unit = {
-    val dst = new File(dir, "documents.parquet")
-    val tmp = new File(dir, "documents.tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    FileUtils.deleteQuietly(dst)
-    FileUtils.moveDirectory(tmp, dst)
-  }
-
   test("stored merges table: verifying read rejects a stale artifact; q97 gate rebuilds") {
     val src = java.nio.file.Files.createTempDirectory("graft-bpe-stale").toString
     val tbl = s"graft_bpe_fresh_${System.nanoTime()}"
     val orig = spark.read.parquet(s"$sf/documents.parquet")
     try {
-      writeDocs(orig, src)
+      replaceSnapshot(orig, src, "documents")
       BpeQueries.buildBpeTable(spark, src, tbl)
       // fresh: verifying read answers with a rank-ordered table
       val t = BpeQueries.loadBpeTable(spark, tbl, src)
       assert(t.size > 0)
       // the corpus is REPLACED under the same path (one doc dropped)
       val maxId = orig.agg(max($"doc_id")).head().getLong(0)
-      writeDocs(orig.filter($"doc_id" =!= maxId), src)
+      replaceSnapshot(orig.filter($"doc_id" =!= maxId), src, "documents")
       val e = intercept[IllegalArgumentException] {
         BpeQueries.loadBpeTable(spark, tbl, src)
       }
@@ -179,7 +184,7 @@ class BpeSpec extends SparkSpec {
       assert(row.getAs[Boolean]("trained_bounds_ok"))
       // the TRAINED artifact drives the budget operator end-to-end:
       // same operator the pinned-table q98 registers, different table
-      val rebuilt = s"graft_bpe_q97_${graft.queries.SimilarityQueries.tableSuffix(src)}"
+      val rebuilt = Artifacts.name("bpe_q97", src)
       val trained = BpeQueries.loadBpeTable(spark, rebuilt, src)
       val sel = graft.queries.TrainQueries.budgetSelectWith(spark, src, 300L,
         graft.functions.Bpe.bpe_token_count(col("text"), trained))
@@ -189,8 +194,7 @@ class BpeSpec extends SparkSpec {
       assert(sel.agg(max($"cum_tokens")).head().getLong(0) <= 300L)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      spark.sql(s"DROP TABLE IF EXISTS graft_bpe_q97_${
-        graft.queries.SimilarityQueries.tableSuffix(src)}")
+      spark.sql(s"DROP TABLE IF EXISTS ${Artifacts.name("bpe_q97", src)}")
       FileUtils.deleteQuietly(new File(src))
     }
   }

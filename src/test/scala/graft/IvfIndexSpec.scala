@@ -53,15 +53,15 @@ class IvfIndexSpec extends SparkSpec {
     // first call may build the shared q92 artifact; the second must
     // reuse it (the build-once/serve-many contract) — detected by the
     // centroids table's object identity surviving (no DROP+recreate:
-    // the stamped fingerprint still matches, so needsBuildOrStale is
-    // false and the table is untouched between the calls)
+    // the stamped fingerprint still matches, so Artifacts.ensure
+    // leaves the table untouched between the calls)
     val r1 = SimilarityQueries.ivfServe(spark, sf).collect()
     assert(r1.length == 1)
     val row = r1.head
     assert(row.getBoolean(1), "all_answered must hold")
     assert(row.getBoolean(2), "serve_exact must hold")
     assert(row.getBoolean(3), "audit_nonempty must hold")
-    val tbl = s"graft_ivf_q92_${SimilarityQueries.tableSuffix(sf)}"
+    val tbl = Artifacts.name("ivf_q92", sf)
     val createdAt1 = spark.sql(s"DESCRIBE TABLE EXTENDED $tbl")
       .filter($"col_name" === "Created Time").select($"data_type").head().getString(0)
     val r2 = SimilarityQueries.ivfServe(spark, sf).collect()
@@ -82,7 +82,7 @@ class IvfIndexSpec extends SparkSpec {
     spark.conf.set("spark.graft.ivf.k", "8")
     try {
       SimilarityQueries.ivfStoredNn(spark, sf).collect() // build at k=8
-      val tbl = s"graft_ivf_q92_${SimilarityQueries.tableSuffix(sf)}"
+      val tbl = Artifacts.name("ivf_q92", sf)
       assert(spark.table(s"${tbl}_centroids").count() == 8L)
       spark.conf.unset("spark.graft.ivf.k") // auto resolves to 16 here
       val r = SimilarityQueries.ivfStoredNn(spark, sf).head()
@@ -93,7 +93,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("q144: composed IVF-PQ index — codes-only artifact, sidecar-served, audit-exact, reused") {
-    val tbl = s"graft_ivfpq_q144_${SimilarityQueries.tableSuffix(sf)}"
+    val tbl = Artifacts.name("ivfpq_q144", sf)
     try {
       val r = SimilarityQueries.ivfPqServe(spark, sf).head()
       assert(r.getBoolean(1), "all_answered must hold")
@@ -133,8 +133,8 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("q146/q147: append generation serves whole corpus; tombstoned vectors never served") {
-    val tbl146 = s"graft_ivfpq_q146_${SimilarityQueries.tableSuffix(sf)}"
-    val tbl144 = s"graft_ivfpq_q144_${SimilarityQueries.tableSuffix(sf)}"
+    val tbl146 = Artifacts.name("ivfpq_q146", sf)
+    val tbl144 = Artifacts.name("ivfpq_q144", sf)
     try {
       val r146 = SimilarityQueries.ivfPqUpsertServe(spark, sf).head()
       val nEmb = Tables.embeddings(spark, sf).count()
@@ -169,7 +169,7 @@ class IvfIndexSpec extends SparkSpec {
       // WITHOUT an anti-join produces the same audit profile as
       // mask-serving the base artifact
       val r148 = SimilarityQueries.ivfPqCompactServe(spark, sf).head()
-      val tbl148 = s"graft_ivfpq_q148_${SimilarityQueries.tableSuffix(sf)}"
+      val tbl148 = Artifacts.name("ivfpq_q148", sf)
       val nEmb2 = Tables.embeddings(spark, sf).count()
       assert(r148.getAs[Long]("n_live") == nEmb2 - tomb.count(),
         s"compacted row count: $r148")
@@ -181,9 +181,9 @@ class IvfIndexSpec extends SparkSpec {
         s"compact-serve ≡ mask-serve: compacted=$compacted masked=$purged")
     } finally {
       Seq(tbl146, s"${tbl146}_centroids", s"${tbl146}_pq",
-        s"graft_ivfpq_q148_${SimilarityQueries.tableSuffix(sf)}",
-        s"graft_ivfpq_q148_${SimilarityQueries.tableSuffix(sf)}_centroids",
-        s"graft_ivfpq_q148_${SimilarityQueries.tableSuffix(sf)}_pq")
+        Artifacts.name("ivfpq_q148", sf),
+        s"${Artifacts.name("ivfpq_q148", sf)}_centroids",
+        s"${Artifacts.name("ivfpq_q148", sf)}_pq")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
@@ -275,11 +275,11 @@ class IvfIndexSpec extends SparkSpec {
   test("tableSuffix: distinct dataset dirs never collide (ADVICE r11)") {
     // the slug alone collapses these to the same name — one dataset's
     // persisted index would shadow the other's within a session
-    val a = SimilarityQueries.tableSuffix("/data/a-b")
-    val b = SimilarityQueries.tableSuffix("/data/a_b")
+    val a = Artifacts.tableSuffix("/data/a-b")
+    val b = Artifacts.tableSuffix("/data/a_b")
     assert(a != b, s"suffix collision: both dirs map to $a")
     // deterministic across calls (the artifact must be findable again)
-    assert(a == SimilarityQueries.tableSuffix("/data/a-b"))
+    assert(a == Artifacts.tableSuffix("/data/a-b"))
     // still catalog-safe: identifier characters only
     assert(a.matches("[a-zA-Z0-9_]+"), s"unsafe suffix: $a")
   }

@@ -381,27 +381,72 @@ class PlanSpec extends SparkSpec {
     // allocation frames, the q150 top-k frame) — this pin is what
     // keeps that suppression honest: a NEW unpartitioned window over
     // corpus-sized input must fail HERE, not vanish into the filter.
-    // Bounded-input witness: an Aggregate with a nonempty grouping
-    // below the window compacts its input to group-cardinality rows
-    // (sources / shards / distinct tokens of a capped vocabulary), or
-    // a Limit bounds it outright.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, Window => LWindow}
-    val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      fn(spark, sf).queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty =>
-          val bounded = w.child.collect {
-            case a: Aggregate if a.groupingExpressions.nonEmpty => true
-            case _: GlobalLimit => true
-            case _: LocalLimit => true
-          }.contains(true)
-          (name, bounded, w.windowExpressions.map(_.sql).mkString(", ").take(120))
-      }
+    // Bounded-input witness: see [[boundedInput]].
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      unboundedWindows(fn(spark, sf)).map(w => s"$name: $w")
     }
-    val offenders = hits.filterNot(_._2)
     assert(offenders.isEmpty,
       "unpartitioned window(s) over NON-compacted input — partition the window " +
         "or compact below it (the q70/q85 two-level pattern):\n" +
-        offenders.map { case (n, _, e) => s"$n: $e" }.mkString("\n"))
+        offenders.mkString("\n"))
+  }
+
+  test("lint negative case: a corpus-sized join whose OTHER branch is grouped is flagged") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, sf)
+    val perSource = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
+    val overJoin = docs.join(perSource, Seq("source"))
+      .withColumn("rn", row_number().over(Window.orderBy(col("doc_id"))))
+    assert(unboundedWindows(overJoin).nonEmpty,
+      "a grouped branch beside a corpus-sized one must not witness the join output")
+    // control: the same window over the grouped branch alone is bounded
+    val overGroups = perSource.withColumn("rn", row_number().over(Window.orderBy(col("source"))))
+    assert(unboundedWindows(overGroups).isEmpty)
+  }
+
+  /** Whether `p`'s output is bounded: an Aggregate (group-cardinality
+    * rows — sources, shards, distinct tokens of a capped vocabulary —
+    * or one row) or a Limit DOMINATES it, i.e. every row of `p` passes
+    * through one. Unary operators pass the bound through; a semi/anti
+    * join is bounded by its left side; any other join or n-ary node
+    * needs every child bounded — a small grouped side does not bound
+    * a join with a corpus-sized one. */
+  private def boundedInput(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    p match {
+      case _: Aggregate | _: GlobalLimit | _: LocalLimit | _: LocalRelation => true
+      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti => boundedInput(j.left)
+      case u: UnaryNode => boundedInput(u.child)
+      case _: LeafNode => false
+      case other => other.children.forall(boundedInput)
+    }
+  }
+
+  /** Unpartitioned windows in `df`'s optimized plan whose input is not
+    * [[boundedInput]]. */
+  private def unboundedWindows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    df.queryExecution.optimizedPlan.collect {
+      case w: LWindow if w.partitionSpec.isEmpty && !boundedInput(w.child) =>
+        w.windowExpressions.map(_.sql).mkString(", ").take(120)
+    }
+  }
+
+  test("spreadScan is a no-op on an already-spread scan") {
+    import graft.operators.Scale
+    val target = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    try {
+      spark.range(0, 1000, 1, target).write.parquet(s"$dir/spread")
+      val spread = spark.read.parquet(s"$dir/spread")
+      assert(Scale.spreadScan(spread) eq spread, "an already-spread scan is returned as is")
+      spark.range(0, 1000, 1, 1).write.parquet(s"$dir/one")
+      val once = Scale.spreadScan(spark.read.parquet(s"$dir/one"))
+      assert(once.rdd.getNumPartitions == target, "a one-partition scan is spread")
+      assert(Scale.spreadScan(once) eq once, "spreading a spread frame is a no-op")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("q191: exactly one window (rarest-term pick) — the candidate rank is counted, never sorted (r17)") {

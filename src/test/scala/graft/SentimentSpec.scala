@@ -87,8 +87,8 @@ class SentimentSpec extends AnyFunSuite {
     // coverage (VERDICT r02 #5 asked for ≥200 fixture goldens): the
     // per-doc compounds/polarities over ALL sf0.001 docs are folded
     // into deterministic aggregates — any lexicon or rule drift moves
-    // at least one of them. Regenerate via graft.GoldenGen only for a
-    // deliberate analyzer change.
+    // at least one of them. The aggregates are pinned: change them only
+    // for a deliberate analyzer change.
     val spark = TestSpark.spark
     import spark.implicits._
     val all = Tables.documents(spark, TestSpark.sf)
@@ -141,9 +141,10 @@ class SentimentSpec extends AnyFunSuite {
   test("60 pinned fixture goldens regression-lock q33/q34/q35 analyzer outputs") {
     // (doc_id, vader compound/pos/neg/neu, textblob polarity/subjectivity)
     // over the first 60 sf0.001 documents, scored through the exact
-    // q33/q34 path (cleanText → analyzer). Regenerate via graft.GoldenGen
-    // ONLY for a deliberate analyzer change — any unexplained diff here
-    // is a regression in lexicon, rules, or cleaning.
+    // q33/q34 path (cleanText → analyzer). The goldens are pinned:
+    // change them ONLY for a deliberate analyzer change — any
+    // unexplained diff here is a regression in lexicon, rules, or
+    // cleaning.
     val pinned = Seq(
       (0L, 0.2960, 0.091, 0.000, 0.909, -0.0250, 0.5000),
       (1L, 0.6808, 0.169, 0.096, 0.735, -0.0369, 0.4656),

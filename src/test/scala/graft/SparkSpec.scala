@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -18,6 +20,16 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** Swap in a new snapshot of `$dir/$table.parquet` (write to a temp
+    * dir, then move: Spark cannot overwrite its own input). */
+  def replaceSnapshot(df: DataFrame, dir: String, table: String): Unit = {
+    val dst = new File(dir, s"$table.parquet")
+    val tmp = new File(dir, s"$table.tmp")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    FileUtils.deleteQuietly(dst)
+    FileUtils.moveDirectory(tmp, dst)
+  }
 
   /** Reference model of the codepoint rolling hash — the ONE
     * test-side copy (suites must not each re-implement it; the main

@@ -506,11 +506,10 @@ class StreamingPipelineSpec extends SparkSpec {
       // meta stamp parity — after full replay the streamed sidecar
       // carries the batch build's source fingerprint (q94/q97 stamp
       // discipline), so the q134/q137 freshness gate accepts it
-      val sm = spark.table(s"${streamTbl}_meta")
-        .select("n_postings", "n_terms", "src_rows", "src_max_id").head()
-      val bm = spark.table(s"${batchTbl}_meta")
-        .select("n_postings", "n_terms", "src_rows", "src_max_id").head()
-      assert(sm == bm, s"meta stamp drift: stream=$sm batch=$bm")
+      def meta(t: String) = (spark.table(s"${t}_meta").select("n_postings", "n_terms").head(),
+        Artifacts.stamped(spark, s"${t}_meta"))
+      val (sm, bm) = (meta(streamTbl), meta(batchTbl))
+      assert(sm._2.isDefined && sm == bm, s"meta stamp drift: stream=$sm batch=$bm")
 
       // replay hardening: re-upserting an already-indexed batch (the
       // at-least-once case) must change nothing
@@ -567,11 +566,9 @@ class StreamingPipelineSpec extends SparkSpec {
       val bi = spark.table(tblFull)
       assert(si.exceptAll(bi).isEmpty && bi.exceptAll(si).isEmpty,
         "streamed code rows must equal the batch build's")
-      val incStamp = spark.table(s"${tblInc}_centroids")
-        .select("src_rows", "src_max_id").distinct().head()
-      val fullStamp = spark.table(s"${tblFull}_centroids")
-        .select("src_rows", "src_max_id").distinct().head()
-      assert(incStamp == fullStamp,
+      val incStamp = Artifacts.stamped(spark, s"${tblInc}_centroids")
+      val fullStamp = Artifacts.stamped(spark, s"${tblFull}_centroids")
+      assert(incStamp.isDefined && incStamp == fullStamp,
         s"post-replay stamp drift: inc=$incStamp full=$fullStamp")
 
       // replay hardening: re-upserting an indexed batch is a no-op
@@ -628,7 +625,7 @@ class StreamingPipelineSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val reportTbl = s"graft_ndi_report_${System.nanoTime()}"
     val ckpt = Files.createTempDirectory("graft-ndi-ckpt").toString
-    val indexTbl = s"graft_ndi_q158_${graft.queries.SimilarityQueries.tableSuffix(sf)}"
+    val indexTbl = Artifacts.name("ndi_q158", sf)
     try {
       val want = graft.queries.DedupQueries.neardupIndexServe(spark, sf)
         .collect() // also guarantees the standing index is built

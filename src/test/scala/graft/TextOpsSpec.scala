@@ -378,7 +378,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("q149: compaction physically removes the q136 tombstones; serve equals mask-serve") {
-    val tbl = s"graft_inv_q149_${graft.queries.SimilarityQueries.tableSuffix(sf)}"
+    val tbl = Artifacts.name("inv_q149", sf)
     try {
       val compactRows = graft.queries.TextQueries
         .invertedIndexCompactServe(spark, sf)
@@ -392,7 +392,7 @@ class TextOpsSpec extends SparkSpec {
       assert(survivors == 0, s"$survivors tombstoned postings survived compaction")
       // and the compacted artifact is genuinely smaller
       val base = spark.table(
-        s"graft_inv_q134_${graft.queries.SimilarityQueries.tableSuffix(sf)}").count()
+        Artifacts.name("inv_q134", sf)).count()
       assert(spark.table(tbl).count() < base, "compaction must shrink the index")
     } finally {
       Seq(tbl, s"${tbl}_meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -467,11 +467,11 @@ class TextOpsSpec extends SparkSpec {
   // ---- q134/q136 stored inverted index -----------------------------
 
   test("q134/q136: postings artifact reused across serves; tombstone-serve = serve minus tombstones") {
-    import graft.queries.{SimilarityQueries, TextQueries}
+    import graft.queries.TextQueries
     val r1 = TextQueries.invertedIndexServe(spark, sf)
       .as[(Long, Long)].collect().toSeq
     assert(r1.nonEmpty, "the pinned boolean query must match docs at sf0.001")
-    val tbl = s"graft_inv_q134_${SimilarityQueries.tableSuffix(sf)}"
+    val tbl = Artifacts.name("inv_q134", sf)
     def createdAt() = spark.sql(s"DESCRIBE TABLE EXTENDED $tbl")
       .filter($"col_name" === "Created Time").select($"data_type").head().getString(0)
     val t1 = createdAt()
@@ -487,14 +487,14 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("q137: appended generation is served; term predicate reaches the scan; batch docs present") {
-    import graft.queries.{SimilarityQueries, TextQueries}
+    import graft.queries.TextQueries
     val r = TextQueries.invertedIndexUpsertServe(spark, sf)
     val rows = r.as[(Long, Long)].collect().toSeq
     // the upserted index must answer identically to the single-build
     // q134 index over the same corpus — including batch-slice docs
     val plain = TextQueries.invertedIndexServe(spark, sf).as[(Long, Long)].collect().toSeq
     assert(rows == plain, "upsert-serve must equal single-build serve")
-    val tbl = s"graft_inv_q137_${SimilarityQueries.tableSuffix(sf)}"
+    val tbl = Artifacts.name("inv_q137", sf)
     // both write generations landed (base overwrite + batch append)
     val nBatch = spark.table(tbl).filter($"doc_id" % 10 === 7).count()
     assert(nBatch > 0, "appended batch postings must be present in the table")
