@@ -7,7 +7,7 @@ small fixture.
 Derives a vectors-only 300k-embedding tier (auto k = ceil(sqrt(300000))
 = 548 > 512 => `ivfTrainer` resolves to "mllib"; every priced fixture
 stays on the bit-pinned sample trainer), runs the IVF build+serve
-family through graft.TimeQueries (which stamps per-phase build/serve
+family through graft.Bench <names> (which stamps per-phase build/serve
 seconds via PhaseTimer), reads the capped-audit recall at the default
 auto geometry via graft.IvfProbe, and writes BENCH_IVF_MLLIB.json.
 
@@ -18,7 +18,7 @@ import json, os, re, subprocess, sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
-from make_artifacts import OPENS
+from make_artifacts import OPENS, bench_queries
 
 CP = f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*"
 VDIR = os.path.join(REPO, "data", "sfvec300k")
@@ -44,13 +44,7 @@ def main():
         sh(f"java {OPENS} -Xmx24g -cp '{CP}' graft.MakeScale --vectors "
            f"/root/testdata/sf0.1 {VDIR} {N_VEC}")
 
-    tq_json = "/tmp/timeq_mllib.json"
-    if os.path.exists(tq_json):
-        os.remove(tq_json)
-    env = dict(os.environ, SPARK_GRAFT_TIMEQ_JSON=tq_json, SPARK_GRAFT_CPUS="32")
-    sh(f"java {OPENS} -Xmx24g -cp '{CP}' graft.TimeQueries {VDIR} "
-       + " ".join(QUERIES), env=env)
-    times = json.load(open(tq_json))
+    times = bench_queries(VDIR, QUERIES, "/tmp/bench_mllib.json")
 
     # capped-audit recall at the DEFAULT auto geometry (k=auto resolves
     # to ceil(sqrt(300000)) = 548, nprobe auto = ceil(548/8) = 69,
@@ -71,8 +65,9 @@ def main():
                  "> the 512-cell handoff, so ivfTrainer resolves to "
                  "DISTRIBUTED MLlib KMeans by default — the path that "
                  "carries the 100 TB claim, previously spec-pinned only at "
-                 "a forced k=520 on 10k vectors. Times via graft.TimeQueries "
-                 "(1 cold + median-of-3 warm, noop sink); phases_* are "
+                 "a forced k=520 on 10k vectors. Times via graft.Bench <names> "
+                 "(1 cold + upper median of every successful warm run, "
+                 "noop sink); phases_* are "
                  "PhaseTimer build/validate seconds (cold run pays the "
                  "artifact build; serve = warm - phases_warm). Recall via "
                  "graft.IvfProbe at the default auto geometry over the "

@@ -15,7 +15,7 @@ import json, os, subprocess, sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
-from make_artifacts import OPENS
+from make_artifacts import OPENS, bench_queries
 
 CP = f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*"
 SF1 = os.path.join(REPO, "data", "sf1")
@@ -58,20 +58,14 @@ def main():
     names = sorted(HEAVY)
     print(f"[sf1] timing {len(names)} queries: {names}")
 
-    tq_json = "/tmp/timeq_sf1.json"
-    if os.path.exists(tq_json):
-        os.remove(tq_json)
-    env = dict(os.environ, SPARK_GRAFT_TIMEQ_JSON=tq_json, SPARK_GRAFT_CPUS="32")
-    sh(f"java {OPENS} -Xmx24g -cp '{CP}' graft.TimeQueries {SF1} "
-       + " ".join(names), env=env)
-    sf1 = json.load(open(tq_json))
+    sf1 = bench_queries(SF1, names, "/tmp/bench_sf1.json")
 
     scaling_path = os.path.join(REPO, "BENCH_SCALING.json")
     art = json.load(open(scaling_path))
     w01 = art["sf0.1"]["warm"]
     growth = {q: round(sf1[q]["warm"] / w01[q], 2)
               for q in sf1 if q in w01 and w01[q] > 0}
-    # Phase split (VERDICT r19 #3): TimeQueries stamps per-run build/
+    # Phase split (VERDICT r19 #3): Bench stamps per-run build/
     # validate seconds for the artifact-lifecycle queries; serve-only
     # warm = warm - per-run eager phases, which is what the 100 TB
     # build-once/query-many design should be priced on. Growth of the
@@ -107,8 +101,9 @@ def main():
     art["sf1"] = {
         "_meta": "BENCH-ONLY derived fixture (graft.MakeScale: 10× sf0.1, "
                  "distribution-matched — see MakeScale.scala scaladoc); "
-                 "heavy tier + medium tier, 1 cold + median-of-3 warm via "
-                 "graft.TimeQueries; growth_vs_sf0.1 = warm(sf1)/warm(sf0.1 "
+                 "heavy tier + medium tier, 1 cold + upper median of every "
+                 "successful warm run (3, plus 3 per re-measure round) via "
+                 "graft.Bench <names>; growth_vs_sf0.1 = warm(sf1)/warm(sf0.1 "
                  "committed record) for 10× data. Geometry: DEFAULT auto "
                  "confs (r19 — IVF k=⌈√n⌉ above 10k vectors, nprobe ⌈k/8⌉, "
                  "trainer auto-dispatch; the r18 column was taken under the "

@@ -21,6 +21,28 @@ OPENS = " ".join(f"--add-opens java.base/{p}=ALL-UNNAMED" for p in [
     "sun.security.action", "sun.util.calendar"])
 
 
+def bench_queries(sf_dir, names, full_path):
+    """Time the registered queries matching `names` (name substrings)
+    with graft.Bench on `sf_dir` and return its record's `queries`
+    object (per query: cold, warm, warm_min/max, warm_runs, phases_*).
+    The cross-record check is off, since the committed record is of a
+    different fixture. Fails when Bench or any query failed."""
+    if os.path.exists(full_path):
+        os.remove(full_path)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
+               SPARK_GRAFT_BENCH_FULL=full_path, SPARK_GRAFT_BENCH_PRIOR="none")
+    cp = f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*"
+    cmd = f"java {OPENS} -Xmx24g -cp '{cp}' graft.Bench " + " ".join(names)
+    res = subprocess.run(cmd, shell=True, env=env, text=True)
+    if res.returncode != 0 or not os.path.exists(full_path):
+        raise SystemExit(f"command failed (rc={res.returncode}): {cmd}")
+    record = json.load(open(full_path))
+    if record["n_failed"] > 0:
+        errors = {q: v["error"] for q, v in record["queries"].items() if "error" in v}
+        raise SystemExit(f"{record['n_failed']} queries failed: {errors}")
+    return record["queries"]
+
+
 def duck_baseline(oracle_path):
     oracle = json.load(open(oracle_path))
     out = {}
@@ -81,7 +103,7 @@ def assemble(runs):
         counts = {sf: len(k) for sf, k in keysets.items()}
         raise SystemExit(f"leg query sets disagree (stale /tmp leg?): {counts}")
     art = {"_meta": {
-        "harness": "graft.Bench — noop-sink full materialization; per-query cold (first run, incl. Catalyst planning + Janino codegen compile) and warm (median of 3 re-runs, codegen cache hot) seconds; local[32], AQE on, shuffle.partitions=32",
+        "harness": "graft.Bench — noop-sink full materialization; per-query cold (first run, incl. Catalyst planning + Janino codegen compile) and warm (upper median of every successful warm run: 3 re-runs, plus 3 per re-measure round for a load-flagged query; codegen cache hot) seconds; local[32], AQE on, shuffle.partitions=32",
         "duckdb_baseline": "BASELINE_DUCK.json — best-of-2 seconds per oracle statement on the same parquet",
         "n_queries_bench": len(runs["sf0.1"]["queries"])}}
     # the sf1 column is produced by a DIFFERENT harness

@@ -1,65 +1,62 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: times every registered query on
-  * `$SPARK_GRAFT_SF_DIR` (default sf0.1) through [[Measure.once]] and
-  * prints ONE JSON line. [[Measure.warmUp]] runs first so JVM,
-  * classloader and codegen start-up is not billed to the first query
-  * (the steady-state figure is what scales to a cluster; cold start
-  * is a fixed cost paid once per application). A query that throws is
-  * reported with a NEGATIVE elapsed time and an `"error"` entry, so a
-  * failure is distinguishable from a fast query.
+/** The suite timer: times the registered queries on
+  * `$SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line.
   *
-  * Every query runs four times: `value` is the COLD run (first
-  * execution, including Catalyst planning and Janino whole-stage
-  * codegen compilation — the conservative number) and `value_warm`
-  * the MEDIAN of three immediate re-runs. Identical code varies
-  * ±20–50% per query at the 0.1–0.5 s scale; the median is robust to
-  * a one-off GC/safepoint stall in either direction, and the recorded
-  * warm min/max spread makes a regression claim checkable against the
-  * noise band. Compile cost (~0.3–0.5 s per query at tiny SF) is a
-  * fixed per-query-shape cost that amortizes at scale, so both numbers
-  * are reported: cold bounds the worst case, warm approximates the
-  * steady-state marginal cost.
+  * Usage: `runMain graft.Bench [substr...]` — with no arguments every
+  * registered query runs; otherwise only the queries whose names
+  * contain one of the substrings, and the record names its
+  * `patterns`.
   *
-  * Output contract: a consumer may retain only a few KB of process
-  * output, so stdout carries ONLY compact totals plus the five slowest
-  * queries (≈400 bytes); the full per-query detail (cold, warm median,
-  * warm min/max, GC ms, phases, errors) goes to `BENCH_FULL.json`
-  * (`$SPARK_GRAFT_BENCH_FULL`).
+  * Estimator: [[Measure.warmUp]] runs first, then every query goes
+  * through [[Measure.sample]] — one cold run (`cold`: first execution,
+  * Catalyst planning and Janino codegen included) and three warm
+  * re-runs. `warm` is the upper median of every successful warm run
+  * the query made, `warm_min` / `warm_max` their range, and
+  * `warm_runs` lists them all in run order. A run that throws is
+  * recorded with a negative time and an `error`, so a failure never
+  * reads as a fast query.
   *
-  * Load sentinels, summarized by `sentinel_clean`:
-  *  - within-run: a query whose warm spread exceeds 3× or whose warm
-  *    median exceeds cold ×1.5 (both load signatures) is re-measured;
-  *  - cross-record: within-run tests cannot see a UNIFORM slowdown, so
-  *    the prior committed `BENCH_FULL.json` (read before this run
-  *    overwrites it; `$SPARK_GRAFT_BENCH_PRIOR`, `none` disables) flags
-  *    any query whose warm median, normalized by [[Bench.calibScale]]
-  *    (stamped as `calib_scale_vs_prior`), exceeds 2.5× its last clean
-  *    warm; one that never clears is counted in `n_prior_regressed`
-  *    and sinks `sentinel_clean`, since host load cannot fake the
-  *    prior record. Only a prior stamped
-  *    `sentinel_clean: true` on the same SF is trusted, and queries new
-  *    since then are exempt. A deliberate regression also trips it;
-  *    `$SPARK_GRAFT_BENCH_ACCEPT=q101,q157` exempts the named queries
-  *    (stamped in the artifact) without dropping the check for the rest;
-  *  - codegen fallback: compile-failure / fallback log events during
-  *    the run are counted into `n_codegen_fallbacks`; fail-closed, so
-  *    a run whose log appender never armed reports -1 and can never
-  *    stamp `sentinel_clean`.
+  * Load flags decide only whether a query is re-measured and how its
+  * row is marked; they never choose a number. A query is flagged when
+  * its latest round of runs, judged on its own, shows a warm spread
+  * above 3×, when its reported `warm` is above 1.5× cold, or when its
+  * reported `warm` normalized by [[calibScale]] (stamped
+  * `calib_scale_vs_prior`) exceeds 2.5× the prior record's warm
+  * ([[regressedVsPrior]]; counted in `n_prior_regressed`). A flagged
+  * query gets up to three more rounds of three runs; every run joins
+  * its pool. Rows re-measured carry `retried`; `n_still_flagged`
+  * counts the queries still flagged after the last round.
   *
-  * Artifact-lifecycle queries stamp per-phase seconds (`phases_cold` /
-  * `phases_warm`, via [[PhaseTimer]]) so build-once and query-many
-  * costs are priced separately. `record_source`
-  * (`$SPARK_GRAFT_BENCH_SOURCE`, default "end-of-round-leg"; the
-  * quiet-host rerun harness stamps "quiet-host") keeps a snapshot taken
-  * on a busy host from being misread as a regression against a
-  * quiet-host record (the artifact of record) — the two differ by
-  * 10–12% on host load alone. */
+  * `sentinel_clean` states that the record is free of load signatures:
+  * some pair of fixed-work calibration probes (suite start, end, after
+  * each retry round) agrees within 1.5×, no query is still flagged, and
+  * the codegen-fallback sentinel armed and counted 0
+  * (`n_codegen_fallbacks` is -1 when it never armed).
+  *
+  * Inputs: `$SPARK_GRAFT_CPUS` (cores), `$SPARK_GRAFT_SHUFFLE`,
+  * `$SPARK_GRAFT_AQE`; `$SPARK_GRAFT_BENCH_PRIOR` names the prior
+  * record (default the committed `BENCH_FULL.json`, `none` disables;
+  * trusted only when it is a full record stamped `sentinel_clean` on
+  * the same SF, and queries it lacks are exempt);
+  * `$SPARK_GRAFT_BENCH_ACCEPT=q101,q157` exempts deliberate
+  * regressions (stamped); `$SPARK_GRAFT_BENCH_SOURCE`
+  * stamps `record_source` (default "end-of-round-leg"; the quiet-host
+  * rerun harness stamps "quiet-host", since the two differ by 10–12%
+  * on host load alone).
+  *
+  * Output: stdout carries only the totals and the five slowest queries
+  * (≈400 bytes, whole in a small retained tail); the per-query record
+  * (cold, warm, range, runs, the cold run's GC ms, [[PhaseTimer]]
+  * phases, flags, errors) goes to `$SPARK_GRAFT_BENCH_FULL` (default
+  * `BENCH_FULL.json`). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val patterns = args.toSeq
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => patterns.isEmpty || patterns.exists(name.contains) }
+    require(selected.nonEmpty, s"no registered query matches ${patterns.mkString(" ")}")
     val spark = Session.local(
       shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt),
       aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toBoolean)
@@ -147,15 +144,8 @@ object Bench {
 
     Measure.warmUp(spark, sfDir)
 
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Measure.Run = {
-      val r = Measure.once(spark, sfDir, fn)
-      r.err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
-      r
-    }
-
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ > 0).sum
+    def report(name: String, runs: Seq[Measure.Run]): Unit =
+      runs.flatMap(_.err).foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
 
     // ------------------------------------------------------------- //
     // Load sentinel: host load can move warm medians by half with no
@@ -208,108 +198,21 @@ object Bench {
     val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_FULL.json")
     val (priorWarm: Map[String, Double], priorCalibs: Seq[Double]) =
       if (priorPath == "none") (Map.empty[String, Double], Seq.empty[Double])
-      else try {
-        val f = new java.io.File(priorPath)
-        if (!f.exists()) (Map.empty[String, Double], Seq.empty[Double])
-        else {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-          if (node.path("sentinel_clean").asBoolean(false) &&
-              node.path("sf").asText("") == sfDir) {
-            val warms = node.path("queries").properties().asScala
-              .map(e => e.getKey -> e.getValue.path("warm").asDouble(-1.0))
-              .filter(_._2 > 0).toMap
-            // the record day's host speed, for calib-normalization of
-            // the cross-record check
-            val calibs = Seq("calib_sec_start", "calib_sec_end", "calib_sec_retry")
-              .map(k => node.path(k).asDouble(-1.0)).filter(_ > 0)
-            (warms, calibs)
-          } else (Map.empty[String, Double], Seq.empty[Double])
-        }
-      } catch { case _: Throwable => (Map.empty[String, Double], Seq.empty[Double]) } // unreadable prior: no reference
+      else Bench.priorReference(new java.io.File(priorPath), sfDir)
 
-    /** Per-query record: cold, warm median, warm min/max (noise
-      * band), cold-run GC ms, first error if any run failed, plus
-      * per-phase seconds: `phasesCold` from the cold
-      * run (where build-if-absent pays the artifact build) and
-      * `phasesWarm` as the PER-RUN average over the warm re-runs
-      * (nonzero only if something rebuilt mid-suite — itself a
-      * finding worth seeing in the artifact). */
-    case class QRes(name: String, cold: Double, warm: Double, warmMin: Double,
-                    warmMax: Double, gcMs: Long, err: Option[String],
-                    phasesCold: Map[String, Double] = Map.empty,
-                    phasesWarm: Map[String, Double] = Map.empty)
-
-    def mergePhases(ms: Seq[Map[String, Double]]): Map[String, Double] =
-      ms.flatten.groupMapReduce(_._1)(_._2)(_ + _)
-
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val gc0 = gcMillis()
-      val Measure.Run(cold, coldErr, phasesCold) = run(name, fn)
-      val gcCold = gcMillis() - gc0
-      if (coldErr.isEmpty) {
-        // warm = median of three re-runs; only SUCCESSFUL runs
-        // compete (a failed run's negative sentinel must not enter
-        // the median), but ANY re-run failure still surfaces in
-        // errors/n_failed — intermittent re-execution flakiness must
-        // not vanish from the artifact.
-        val runs = Seq(run(name, fn), run(name, fn), run(name, fn))
-        val oks = runs.filter(_.err.isEmpty).map(_.sec).sorted
-        val phasesWarm = mergePhases(runs.map(_.phases))
-          .map { case (k, v) => k -> v / runs.size }
-        if (oks.nonEmpty)
-          QRes(name, cold, oks(oks.size / 2), oks.head, oks.last, gcCold,
-            runs.flatMap(_.err).headOption.map("warm run: " + _),
-            phasesCold, phasesWarm)
-        else QRes(name, cold, runs.head.sec, runs.head.sec, runs.head.sec, gcCold,
-          runs.head.err.map("warm run: " + _), phasesCold, phasesWarm)
-      } else QRes(name, cold, cold, cold, cold, gcCold, coldErr, phasesCold)
+    val firstPass = selected.map { case (name, fn) =>
+      val s = Measure.sample(spark, sfDir, fn, warm = 3)
+      report(name, s.cold +: s.warm)
+      Bench.Row(name, s, s)
     }
-    // full JSON string escape (backslash, quote, ALL control chars) —
-    // Spark exception messages can carry arbitrary bytes, and one bad
-    // char would invalidate the driver's json.load of this line.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def jnum(v: Double): String = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    // post-suite sentinel readings (before serializing the artifact)
+    // post-suite sentinel readings (before any retry round)
     val loadEnd = loadavg()
     val calibEnd = calibration()
 
-    // ------------------------------------------------------------- //
-    // Self-defending retry (one retry is not enough under sustained
-    // host load):
-    //  * a query is FLAGGED when its LATEST measurement's warm spread
-    //    (max/min) exceeds 3×, or its latest warm median exceeds its
-    //    cold time ×1.5 — warm > cold is physically backwards on a
-    //    clean host and is the signature of mid-suite load;
-    //  * flagged queries get a fresh median-of-3 re-measurement per
-    //    retry ROUND, up to 3 rounds, until every load signature
-    //    clears; the BEST median wins and the artifact stamps WHICH
-    //    attempt won (`attempt`: 0 = first pass). Re-flagging judges
-    //    each attempt on its OWN spread — the reported warm_min/
-    //    warm_max still merge all attempts so the noise band stays
-    //    honest, but a one-time pollution spike must not condemn a
-    //    query forever;
-    //  * the calibration probe re-runs after every retry round — a
-    //    recovered host produces two agreeing probes.
-    // `sentinel_clean` then states whether the final record is free
-    // of load signatures: some calibration pair agrees within 1.5×
-    // AND no query is still flagged on its latest attempt.
-    // ------------------------------------------------------------- //
     def ratio(a: Double, b: Double): Double =
       if (a > 0 && b > 0) math.max(a, b) / math.min(a, b) else Double.MaxValue
-    // latest-attempt measurement per query: (median, min, max)
-    case class Meas(warm: Double, warmMin: Double, warmMax: Double)
-    def flaggedMeas(cold: Double, m: Meas): Boolean = m.warmMin > 0 &&
-      (m.warmMax / math.max(m.warmMin, 1e-9) > 3.0 ||
-        m.warm > math.max(cold, 1e-9) * 1.5)
-    var latest: Map[String, Meas] = results.map(r =>
-      r.name -> Meas(r.warm, r.warmMin, r.warmMax)).toMap
-    // third signature: >2.5× the prior committed clean warm —
-    // catches the uniform slowdown the within-run tests can't see.
+    // Cross-record flag: >2.5× the prior committed clean warm —
+    // catches the uniform slowdown the within-run flags can't see.
     // SPARK_GRAFT_BENCH_ACCEPT names queries whose regression is
     // DELIBERATE (a plan change, attributed in BENCH_NOTES): they are
     // exempted individually so the cross-record check keeps guarding
@@ -329,36 +232,28 @@ object Bench {
     // (cap 3.0 — a regression larger than any plausible host drift
     // still flags, so it cannot hide behind the calibration either).
     val scaleVsPrior = Bench.calibScale(priorCalibs, Seq(calibStart, calibEnd))
-    def priorRegressed(name: String): Boolean =
-      !accepted.contains(name) &&
-        priorWarm.get(name).exists(p =>
-          Bench.regressedVsPrior(latest(name).warm, p, scaleVsPrior))
-    def isFlagged(r: QRes): Boolean =
-      r.err.isEmpty && (flaggedMeas(r.cold, latest(r.name)) || priorRegressed(r.name))
-    var finalResults = results
-    var attemptWon: Map[String, Int] = Map.empty
-    val everFlagged = scala.collection.mutable.Set.empty[String]
+    def priorRegressed(r: Bench.Row): Boolean =
+      !accepted.contains(r.name) && r.regressedVsPrior(priorWarm.get(r.name), scaleVsPrior)
+    def isFlagged(r: Bench.Row): Boolean =
+      r.pool.err.isEmpty && (r.loadFlagged || priorRegressed(r))
+
+    // Re-measure rounds: each flagged query runs three more times and
+    // the runs join its pool ([[Bench.Row.remeasured]]). The calibration
+    // probe re-runs after every round, so a recovered host shows two
+    // agreeing probes.
+    var rows = firstPass
+    val retried = scala.collection.mutable.Set.empty[String]
     val retryCalibs = scala.collection.mutable.ListBuffer.empty[Double]
-    var attempt = 0
-    while (attempt < 3 && finalResults.exists(isFlagged)) {
-      attempt += 1
-      finalResults = finalResults.map { r =>
+    var rounds = 0
+    while (rounds < 3 && rows.exists(isFlagged)) {
+      rounds += 1
+      rows = rows.map { r =>
         if (!isFlagged(r)) r
         else {
-          everFlagged += r.name
-          val runs = Seq(run(r.name, SparkEntry.queries(r.name)),
-                         run(r.name, SparkEntry.queries(r.name)),
-                         run(r.name, SparkEntry.queries(r.name)))
-          val oks = runs.filter(_.err.isEmpty).map(_.sec).sorted
-          if (oks.isEmpty) r // retry itself failed: keep the original record
-          else {
-            val m = oks(oks.size / 2)
-            latest += r.name -> Meas(m, oks.head, oks.last)
-            if (m < r.warm) attemptWon += r.name -> attempt
-            r.copy(warm = math.min(r.warm, m),
-                   warmMin = math.min(r.warmMin, oks.head),
-                   warmMax = math.max(r.warmMax, oks.last))
-          }
+          retried += r.name
+          val more = Seq.fill(3)(Measure.once(spark, sfDir, SparkEntry.queries(r.name)))
+          report(r.name, more)
+          r.remeasured(more)
         }
       }
       retryCalibs += calibration()
@@ -372,10 +267,8 @@ object Bench {
     val calibFinalRatio =
       if (allCalibs.size < 2) Double.MaxValue
       else allCalibs.combinations(2).map(p => ratio(p(0), p(1))).min
-    val flaggedNames: Set[String] = everFlagged.toSet
-    val stillFlagged = finalResults.count(isFlagged)
-    val nPriorRegressed = finalResults
-      .count(r => r.err.isEmpty && priorRegressed(r.name))
+    val stillFlagged = rows.count(isFlagged)
+    val nPriorRegressed = rows.count(r => r.pool.err.isEmpty && priorRegressed(r))
     // -1 = the sentinel never armed (distinguishable from a clean 0);
     // an unarmed run can never stamp itself clean.
     val nCodegenFallbacks = if (codegenSentinelArmed) codegenFallbacks.get() else -1L
@@ -385,43 +278,43 @@ object Bench {
     // totals sum successful queries only; a failed query cannot fabricate
     // a time, so failure is surfaced loudly instead: n_failed at top
     // level, a negative per-query entry, and an errors message.
-    val nFailed = finalResults.count(_.err.isDefined)
-    val total = finalResults.map(r => math.max(r.cold, 0.0)).sum
-    val totalWarm = finalResults.map(r => math.max(r.warm, 0.0)).sum
+    val nFailed = rows.count(_.pool.err.isDefined)
+    val total = rows.map(r => math.max(r.pool.cold.sec, 0.0)).sum
+    val totalWarm = rows.map(r => math.max(r.pool.median, 0.0)).sum
 
-    // Full per-query detail → BENCH_FULL.json (committed per round);
-    // the stdout line stays tiny so the driver's retained output tail
-    // always contains it whole.
+    def jnum(v: Double): String = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
     def jphases(m: Map[String, Double]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + jnum(v) }
+      m.toSeq.sortBy(_._1).map { case (k, v) => Json.str(k) + ":" + jnum(v) }
         .mkString("{", ",", "}")
-    val full = finalResults.map { r =>
-      "  " + jstr(r.name) + ":{\"cold\":" + jnum(r.cold) +
-        ",\"warm\":" + jnum(r.warm) +
-        ",\"warm_min\":" + jnum(r.warmMin) +
-        ",\"warm_max\":" + jnum(r.warmMax) +
-        // phase split: cold-run artifact build /
-        // validate seconds, and per-warm-run phase seconds when a
-        // rebuild leaked into the warm runs (≥ 0.05 s filters timer
-        // noise) — serve-path cost = warm − phases_warm
-        (if (r.phasesCold.exists(_._2 >= 0.05))
-          ",\"phases_cold\":" + jphases(r.phasesCold.filter(_._2 >= 0.05)) else "") +
-        (if (r.phasesWarm.exists(_._2 >= 0.05))
-          ",\"phases_warm\":" + jphases(r.phasesWarm.filter(_._2 >= 0.05)) else "") +
-        (if (r.gcMs > 0) ",\"gc_ms\":" + r.gcMs else "") +
-        (if (flaggedNames.contains(r.name)) ",\"retried\":true" +
-          ",\"attempt_won\":" + attemptWon.getOrElse(r.name, 0) else "") +
-        (if (r.err.isEmpty && priorRegressed(r.name))
+    val full = rows.map { r =>
+      val s = r.pool
+      // phase seconds ≥ 0.05 s (below is timer noise): the cold run's
+      // artifact build/validate, and the per-warm-run average when a
+      // rebuild leaked into the warm runs — serve cost = warm − phases_warm
+      val phasesCold = s.cold.phases.filter(_._2 >= 0.05)
+      val phasesWarm = s.phasesWarm.filter(_._2 >= 0.05)
+      "  " + Json.str(r.name) + ":{\"cold\":" + jnum(s.cold.sec) +
+        ",\"warm\":" + jnum(s.median) +
+        ",\"warm_min\":" + jnum(s.min) +
+        ",\"warm_max\":" + jnum(s.max) +
+        ",\"warm_runs\":" + s.warm.filter(_.err.isEmpty).map(w => jnum(w.sec)).mkString("[", ",", "]") +
+        (if (phasesCold.nonEmpty) ",\"phases_cold\":" + jphases(phasesCold) else "") +
+        (if (phasesWarm.nonEmpty) ",\"phases_warm\":" + jphases(phasesWarm) else "") +
+        (if (s.cold.gcMs > 0) ",\"gc_ms\":" + s.cold.gcMs else "") +
+        (if (retried.contains(r.name)) ",\"retried\":true" else "") +
+        (if (s.err.isEmpty && priorRegressed(r))
           ",\"prior_warm\":" + jnum(priorWarm(r.name)) +
             ",\"regressed_vs_prior\":true" else "") +
-        r.err.map(m => ",\"error\":" + jstr(m.take(300))).getOrElse("") + "}"
+        s.err.map(m => ",\"error\":" + Json.str(m.take(300))).getOrElse("") + "}"
     }.mkString(
       "{\n\"metric\":\"total\",\"value\":" + jnum(total) +
         ",\"unit\":\"sec\",\"value_warm\":" + jnum(totalWarm) +
-        ",\"n_failed\":" + nFailed + ",\"sf\":" + jstr(sfDir) +
-        ",\"warm_estimator\":\"median-of-3\"" +
-        ",\"loadavg_start\":" + jstr(loadStart) +
-        ",\"loadavg_end\":" + jstr(loadEnd) +
+        ",\"n_failed\":" + nFailed + ",\"sf\":" + Json.str(sfDir) +
+        (if (patterns.nonEmpty)
+          ",\"patterns\":" + patterns.map(Json.str).mkString("[", ",", "]") else "") +
+        ",\"warm_estimator\":\"upper-median-of-all-warm-runs\"" +
+        ",\"loadavg_start\":" + Json.str(loadStart) +
+        ",\"loadavg_end\":" + Json.str(loadEnd) +
         ",\"calib_sec_start\":" + jnum(calibStart) +
         ",\"calib_sec_end\":" + jnum(calibEnd) +
         (if (calibRetry > 0) ",\"calib_sec_retry\":" + jnum(calibRetry) else "") +
@@ -431,15 +324,15 @@ object Bench {
         ",\"n_window_warns_suppressed\":" + windowWarns.get() +
         (if (priorWarm.nonEmpty)
           ",\"calib_scale_vs_prior\":" + jnum(scaleVsPrior) else "") +
-        ",\"n_retried\":" + flaggedNames.size +
-        ",\"n_retry_rounds\":" + attempt +
+        ",\"n_retried\":" + retried.size +
+        ",\"n_retry_rounds\":" + rounds +
         ",\"n_still_flagged\":" + stillFlagged +
         ",\"n_prior_regressed\":" + nPriorRegressed +
         ",\"prior_ref_queries\":" + priorWarm.size +
-        ",\"record_source\":" + jstr(recordSource) +
+        ",\"record_source\":" + Json.str(recordSource) +
         (if (accepted.nonEmpty)
           ",\"accepted_regressions\":" +
-            accepted.toSeq.sorted.map(jstr).mkString("[", ",", "]") else "") +
+            accepted.toSeq.sorted.map(Json.str).mkString("[", ",", "]") else "") +
         ",\"queries\":{\n",
       ",\n", "\n}\n}\n")
     val outPath = java.nio.file.Paths.get(benchFullPath)
@@ -447,14 +340,64 @@ object Bench {
 
     // stdout: totals + the five slowest (warm) queries only — ≈400
     // bytes, parseable even from a small retained tail.
-    val slowest = finalResults.filter(_.err.isEmpty).sortBy(-_.warm).take(5)
-      .map(r => jstr(r.name) + ":" + jnum(r.warm)).mkString("{", ",", "}")
+    val slowest = rows.filter(_.pool.err.isEmpty).sortBy(-_.pool.median).take(5)
+      .map(r => Json.str(r.name) + ":" + jnum(r.pool.median)).mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","value_warm":${jnum(totalWarm)},""" +
-      s""""n_failed":$nFailed,"sentinel_clean":$sentinelClean,"n_retried":${flaggedNames.size},""" +
-      s""""record_source":${jstr(recordSource)},""" +
-      s""""queries":$slowest,"sf":${jstr(sfDir)},"full":${jstr(outPath.toString)}}""")
+      s""""n_failed":$nFailed,"sentinel_clean":$sentinelClean,"n_retried":${retried.size},""" +
+      s""""record_source":${Json.str(recordSource)},""" +
+      s""""queries":$slowest,"sf":${Json.str(sfDir)},"full":${Json.str(outPath.toString)}}""")
     spark.stop()
   }
+
+  /** A query's row: `pool` holds every run it made, and every number
+    * the row reports comes from it; `latest` is its most recent round
+    * of runs, judged on its own for spread only. */
+  private[graft] case class Row(name: String, pool: Measure.Sample, latest: Measure.Sample) {
+    /** The within-run load flag: the latest round's warm spread
+      * (max/min) exceeds 3×, or the reported warm median exceeds the
+      * cold time ×1.5 — warm slower than cold is backwards on a quiet
+      * host and is the signature of mid-suite load. Runs that all
+      * failed are never flagged (their error is reported). */
+    def loadFlagged: Boolean =
+      (latest.min > 0 && latest.max / latest.min > 3.0) ||
+        (pool.min > 0 && pool.median > math.max(pool.cold.sec, 1e-9) * 1.5)
+
+    /** [[Bench.regressedVsPrior]] on the reported warm median; false
+      * when the prior record lacks the query. */
+    def regressedVsPrior(prior: Option[Double], scale: Double): Boolean =
+      prior.exists(p => Bench.regressedVsPrior(pool.median, p, scale))
+
+    /** This row after a re-measure round: the runs join the pool and
+      * become the latest round (a round with no successful run cannot
+      * be judged and leaves the previous one standing). */
+    def remeasured(more: Seq[Measure.Run]): Row = {
+      val round = Measure.Sample(pool.cold, more)
+      copy(pool = pool.copy(warm = pool.warm ++ more),
+        latest = if (round.oks.nonEmpty) round else latest)
+    }
+  }
+
+  /** The prior record's per-query warm medians and calibration probes,
+    * or nothing when the file is missing or unreadable, is not stamped
+    * `sentinel_clean`, benched another SF dir, or is a subset record
+    * (it names `patterns`: a subset run covers too few queries to
+    * guard a full one). */
+  private[graft] def priorReference(f: java.io.File, sfDir: String): (Map[String, Double], Seq[Double]) =
+    try {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      if (node.path("sentinel_clean").asBoolean(false) && !node.has("patterns") &&
+          node.path("sf").asText("") == sfDir) {
+        import scala.jdk.CollectionConverters._
+        val warms = node.path("queries").properties().asScala
+          .map(e => e.getKey -> e.getValue.path("warm").asDouble(-1.0))
+          .filter(_._2 > 0).toMap
+        // the record day's host speed, for calib-normalization of
+        // the cross-record check
+        val calibs = Seq("calib_sec_start", "calib_sec_end", "calib_sec_retry")
+          .map(k => node.path(k).asDouble(-1.0)).filter(_ > 0)
+        (warms, calibs)
+      } else (Map.empty, Seq.empty)
+    } catch { case _: Throwable => (Map.empty, Seq.empty) } // missing or unreadable prior: no reference
 
   /** Host-speed scale between the prior record's day and today, from
     * the fixed-work CPU calibration probes stamped in both artifacts.

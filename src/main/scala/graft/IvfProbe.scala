@@ -1,6 +1,6 @@
 package graft
 
-/** IVF geometry probe (TimeQueries' recall sibling):
+/** IVF geometry probe (the recall sibling of a Bench subset run):
   * sweep explicit `(k, nprobe)` settings over the q58 audit
   * ([[graft.queries.SimilarityQueries.ivfNnAudited]]) on a given
   * fixture and print recall@1 plus wall seconds per setting — the

@@ -7,10 +7,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `runMain graft.Profile <subcommand> <substr...>`
   *
-  *  - `med <substr...>` — median-of-7 timer over the registered
-  *    queries matching any substring. Identical code varies ±20–50%
-  *    per query at the 0.1–0.5 s scale, so single-shot timings cannot
-  *    support any claim below ~1.5×.
+  *  - `med <substr...>` — one cold run, then the median-of-7 warm
+  *    timer ([[Measure.sample]]) over the registered queries matching
+  *    any substring. Identical code varies ±20–50% per query at the
+  *    0.1–0.5 s scale, so single-shot timings cannot support any claim
+  *    below ~1.5×.
   *  - `jobs <substr...>` — per-query job accounting: how much of a
   *    warm run is per-job/stage scheduling floor vs executor compute.
   *
@@ -39,11 +40,14 @@ object Profile {
   private def timed(spark: SparkSession, sfDir: String, name: String): Double =
     Measure.once(spark, sfDir, SparkEntry.queries(name)).orFail(name).sec
 
-  /** Median-of-7 timings for registered queries by substring. */
+  /** Cold run plus median-of-7 warm timings for registered queries by
+    * substring, through the shared [[Measure.sample]] estimator. */
   private def med(spark: SparkSession, sfDir: String, pats: Seq[String]): Unit =
     for (name <- matching(pats)) {
-      val ts = (1 to 7).map(_ => timed(spark, sfDir, name)).sorted
-      println(f"[med] $name%-32s median ${ts(3)}%.3f  min ${ts.head}%.3f  max ${ts.last}%.3f")
+      val s = Measure.sample(spark, sfDir, SparkEntry.queries(name), warm = 7)
+      s.err.foreach(e => throw new IllegalStateException(s"$name failed: $e"))
+      println(f"[med] $name%-32s median ${s.median}%.3f  min ${s.min}%.3f  " +
+        f"max ${s.max}%.3f  cold ${s.cold.sec}%.3f")
     }
 
   /** Per-query JOB accounting: how much of a warm run is

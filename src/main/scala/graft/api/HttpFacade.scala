@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Json
 import graft.streaming.Pipeline
 
 /** A REAL port-bound HTTP façade over [[TweetApi]] — closing VERDICT
@@ -78,16 +79,6 @@ object HttpFacade {
     def stop(): Unit = { server.stop(0); executor.shutdown() }
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Rows → JSON array via Spark's own per-row JSON encoder (types,
     * timestamps, and nulls serialize exactly as the engine defines). */
   private def rowsJson(df: DataFrame): (Seq[String], Int) = {
@@ -114,7 +105,7 @@ object HttpFacade {
     try os.write(bytes) finally os.close()
   }
 
-  private def errorJson(msg: String): String = s"""{"error": ${jstr(msg)}}"""
+  private def errorJson(msg: String): String = s"""{"error": ${Json.str(msg)}}"""
 
   private def handle(ex: HttpExchange, method: String)(f: => Unit): Unit =
     try {
@@ -159,7 +150,7 @@ object HttpFacade {
       else {
         val r = TweetApi.analyze(text)
         respond(ex, 200,
-          s"""{"sentiment": ${jstr(r.sentiment)}, "confidence": ${r.confidence},
+          s"""{"sentiment": ${Json.str(r.sentiment)}, "confidence": ${r.confidence},
              | "scores": {"compound": ${r.compound}, "positive": ${r.positive},
              | "negative": ${r.negative}, "neutral": ${r.neutral},
              | "polarity": ${r.polarity}, "subjectivity": ${r.subjectivity}}}"""
@@ -205,7 +196,7 @@ object HttpFacade {
       val limit = p.get("limit").flatMap(_.toIntOption).getOrElse(50)
       val sentiment = p.get("sentiment")
       val (rows, n) = rowsJson(TweetApi.recentTweets(tweets(), limit, sentiment))
-      val filt = sentiment.map(jstr).getOrElse("null")
+      val filt = sentiment.map(Json.str).getOrElse("null")
       respond(ex, 200,
         s"""{"tweets": [${rows.mkString(",")}], "count": $n, "sentiment_filter": $filt}""")
     })
@@ -279,7 +270,7 @@ object HttpFacade {
     server.createContext("/health", ex => handle(ex, "GET") {
       val h = TweetApi.health(tweets()).toJSON.collect().headOption.getOrElse("{}")
       respond(ex, 200,
-        s"""{"status": "healthy", "timestamp": ${jstr(java.time.Instant.now.toString)},
+        s"""{"status": "healthy", "timestamp": ${Json.str(java.time.Instant.now.toString)},
            | "database": "spark-parquet", "table": $h}"""
           .stripMargin.replaceAll("\n", ""))
     })

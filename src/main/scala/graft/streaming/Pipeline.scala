@@ -255,6 +255,19 @@ object Pipeline {
       .select(col("date_hour.start").as("date_hour"), col("final_sentiment").as("sentiment"),
         col("tweet_count"), col("avg_confidence"), col("total_likes"), col("total_retweets"))
 
+  /** A `foreachBatch` streaming writer in append mode: `body` runs on
+    * every micro-batch with its batch id, under `checkpoint` and
+    * `trigger`. [[writer]]'s sink uses it, and so does every streamed
+    * `*Batch` artifact upsert and report screen below. */
+  def batchWriter(df: DataFrame, checkpoint: String,
+      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+
   /** K2+K3 sinks via one transactional foreachBatch (replacing the
     * fire-and-forget thread fan-out): parquet `tweets` table
     * (idempotent per-batch dedup = INSERT OR IGNORE) + the *intended*
@@ -268,35 +281,30 @@ object Pipeline {
     * idempotent write upgrades it). Read back via [[readTweets]]. */
   def writer(enriched: DataFrame, tweetsPath: String, jsonPath: String,
              checkpoint: String, trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] = {
-    enriched.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // partitionOverwriteMode is scoped PER WRITE via the writer
-        // option (not session conf — a session-global set would race
-        // concurrent queries on the shared SparkSession and leak past
-        // this batch).
-        val b = dedupBatch(batch)
-          .withColumn("date_hour", date_format(col("processed_at"), "yyyyMMdd_HH"))
-          .persist()
-        try {
-          b.drop("date_hour").withColumn("_batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id").parquet(tweetsPath)
-          // json sink replay-idempotent too: dynamic overwrite of this
-          // batch's (date_hour, _batch_id) partitions only
-          b.withColumn("_batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date_hour", "_batch_id").json(jsonPath)
-        } finally {
-          b.unpersist()
-        }
+  : DataStreamWriter[Row] =
+    batchWriter(enriched, checkpoint, trigger) { (batch, batchId) =>
+      // partitionOverwriteMode is scoped PER WRITE via the writer
+      // option (not session conf — a session-global set would race
+      // concurrent queries on the shared SparkSession and leak past
+      // this batch).
+      val b = dedupBatch(batch)
+        .withColumn("date_hour", date_format(col("processed_at"), "yyyyMMdd_HH"))
+        .persist()
+      try {
+        b.drop("date_hour").withColumn("_batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("_batch_id").parquet(tweetsPath)
+        // json sink replay-idempotent too: dynamic overwrite of this
+        // batch's (date_hour, _batch_id) partitions only
+        b.withColumn("_batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("date_hour", "_batch_id").json(jsonPath)
+      } finally {
+        b.unpersist()
       }
-  }
+    }
 
   /** Read the streamed tweets table (hides the `_batch_id` sink
     * bookkeeping partition). */
@@ -347,20 +355,6 @@ object Pipeline {
     Artifacts.Stamp(m.getLong(0), m.getLong(1))
   }
 
-  /** The streaming writer over [[upsertPostingsBatch]]: documents
-    * stream in, the postings artifact and its stamp stay current —
-    * the nightly q137 append running continuously. */
-  def postingsWriter(docs: DataFrame, table: String, checkpoint: String,
-                     trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertPostingsBatch(batch, table)
-      }
-
   /** STREAMING IVF-PQ INDEX MAINTENANCE — the vector sibling of
     * [[upsertPostingsBatch]], completing the streaming side of the
     * ANN lifecycle (build q144 / upsert q146 / delete q147): one
@@ -377,8 +371,9 @@ object Pipeline {
     * artifact's id column). After each batch the centroid sidecar is
     * re-stamped with the artifact-derived fingerprint (indexed-vector
     * count + max id), so a full corpus replay reproduces the batch
-    * build's stamp — the q94/q97 discipline, postings-writer shaped:
-    * the lifecycle gate accepts the streamed artifact as fresh. */
+    * build's stamp — the q94/q97 discipline, as in
+    * [[upsertPostingsBatch]]: the lifecycle gate accepts the streamed
+    * artifact as fresh. */
   def upsertVectorsBatch(batch: DataFrame, table: String): Unit = {
     val s = batch.sparkSession
     import s.implicits._
@@ -393,60 +388,35 @@ object Pipeline {
     Artifacts.stamp(s, s"${table}_centroids", indexedStamp(s.table(table), "vec_id"))
   }
 
-  /** The streaming writer over [[upsertVectorsBatch]]: embedding
-    * vectors stream in, the code table and its stamp stay current —
-    * q146's nightly append running continuously. */
-  def vectorsWriter(vectors: DataFrame, table: String, checkpoint: String,
-                    trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertVectorsBatch(batch, table)
-      }
+  /** Append `rows` to the report `table`, less the rows whose `keys`
+    * it already holds: foreachBatch is at-least-once, and this makes a
+    * replayed batch add nothing. */
+  private def appendNew(rows: DataFrame, table: String, keys: Seq[String]): Unit = {
+    val s = rows.sparkSession
+    val fresh =
+      if (s.catalog.tableExists(table))
+        rows.join(s.table(table).select(keys.map(col): _*), keys, "left_anti")
+      else rows
+    fresh.write.mode("append").format("parquet").saveAsTable(table)
+  }
 
   /** STREAMING NEAR-DUP SCREENING — q158's ingest-time guard running
     * continuously: each micro-batch of (doc_id, text) documents is
     * screened against the STANDING gram index through the ONE shared
     * serve chain ([[graft.queries.DedupQueries.screenAgainstIndex]] —
     * stream ≡ batch screening is structural), and flagged pairs
-    * append to a report table. Effectively-once: the report is
-    * anti-joined on the (batch_id, hist_id) pair key before the
-    * append, so an at-least-once replay cannot double-report (the
-    * upsertPostingsBatch rule). The index itself is NOT mutated —
+    * append to a report table, effectively once ([[appendNew]] on the
+    * (batch_id, hist_id) pair key). The index itself is NOT mutated —
     * screening is a read-side guard; admission/indexing of survivors
-    * is the separate postingsWriter/upsert path. */
+    * is the separate [[upsertPostingsBatch]] path. */
   def screenNeardupBatch(batch: DataFrame, indexTable: String,
       reportTable: String): Unit = {
     val s = batch.sparkSession
-    import s.implicits._
     val hits = graft.queries.DedupQueries.screenAgainstIndex(
       batch.select(col("doc_id"), col("text")),
       s.table(indexTable), s.table(s"${indexTable}_counts"))
-    val fresh =
-      if (s.catalog.tableExists(reportTable))
-        hits.join(s.table(reportTable).select($"batch_id", $"hist_id"),
-          Seq("batch_id", "hist_id"), "left_anti")
-      else hits
-    fresh.write.mode("append").format("parquet").saveAsTable(reportTable)
+    appendNew(hits, reportTable, Seq("batch_id", "hist_id"))
   }
-
-  /** The streaming writer over [[screenNeardupBatch]]: documents
-    * stream in, near-dup flags against the standing corpus append to
-    * the report — the q158 screen as a continuous ingest guard. */
-  def neardupScreenWriter(docs: DataFrame, indexTable: String,
-      reportTable: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        screenNeardupBatch(batch, indexTable, reportTable)
-      }
 
   /** STREAMING EXACT-DECONTAMINATION GUARD — q182 running at ingest
     * time: each micro-batch of (doc_id, text) training documents is
@@ -456,38 +426,13 @@ object Pipeline {
     * a report table. The automaton is compiled once from the held-out
     * benchmark (bounded by construction) and closed over by every
     * batch — no per-batch rebuild, no corpus-side state. Effectively
-    * once: the report anti-joins on the (eval_id, train_id) pair key
-    * before the append, so an at-least-once replay cannot
-    * double-report (the screenNeardupBatch rule). */
+    * once: [[appendNew]] on the (eval_id, train_id) pair key. */
   def screenDecontamBatch(batch: DataFrame,
       ac: graft.functions.AhoCorasick.Automaton, reportTable: String): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
     val hits = graft.queries.TrainQueries.decontamHits(
       batch.select(col("doc_id"), col("text")), ac)
-    val fresh =
-      if (s.catalog.tableExists(reportTable))
-        hits.join(s.table(reportTable).select($"eval_id", $"train_id"),
-          Seq("eval_id", "train_id"), "left_anti")
-      else hits
-    fresh.write.mode("append").format("parquet").saveAsTable(reportTable)
+    appendNew(hits, reportTable, Seq("eval_id", "train_id"))
   }
-
-  /** The streaming writer over [[screenDecontamBatch]]: documents
-    * stream in, verbatim eval-set leaks append to the report — the
-    * q182 decontamination check as a continuous ingest guard. */
-  def decontamScreenWriter(docs: DataFrame,
-      ac: graft.functions.AhoCorasick.Automaton, reportTable: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        screenDecontamBatch(batch, ac, reportTable)
-      }
 
   /** STREAMING SPAN-EVIDENCE GUARD (VERDICT r19 #8) — q197's
     * pair-level core running at ingest time: each micro-batch of
@@ -501,39 +446,14 @@ object Pipeline {
     * the accumulated report, not per-batch state. The eval side is
     * bounded (the benchmark being protected — q182's sidecar class),
     * so its per-batch gram pass is eval-sized and broadcasts; batch
-    * grams never shuffle. Effectively-once: the report anti-joins on
-    * the (eval_id, train_id) pair key before the append, so an
-    * at-least-once replay cannot double-report (the
-    * screenNeardupBatch rule). */
+    * grams never shuffle. Effectively-once: [[appendNew]] on the
+    * (eval_id, train_id) pair key. */
   def screenSpanBatch(batch: DataFrame, evalDocs: DataFrame,
       reportTable: String, n: Int = 8): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
     val hits = graft.queries.TextQueries.spanPairsOver(
       evalDocs, batch.select(col("doc_id"), col("text")), n)
-    val fresh =
-      if (s.catalog.tableExists(reportTable))
-        hits.join(s.table(reportTable).select($"eval_id", $"train_id"),
-          Seq("eval_id", "train_id"), "left_anti")
-      else hits
-    fresh.write.mode("append").format("parquet").saveAsTable(reportTable)
+    appendNew(hits, reportTable, Seq("eval_id", "train_id"))
   }
-
-  /** The streaming writer over [[screenSpanBatch]]: training documents
-    * stream in, span-evidence rows against the standing eval set
-    * append to the report — q197's decontamination triage feed as a
-    * continuous ingest guard. */
-  def spanScreenWriter(docs: DataFrame, evalDocs: DataFrame,
-      reportTable: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        screenSpanBatch(batch, evalDocs, reportTable)
-      }
 
   /** STREAMING VOCAB-DRIFT GUARD — q183 running at ingest time: each
     * micro-batch of (doc_id, lang, text) documents is tokenized and
@@ -544,37 +464,17 @@ object Pipeline {
     * oov_rate) row per language per batch. A rising per-batch OOV
     * rate is the earliest signal that incoming data has drifted away
     * from the tokenizer/vocab the pipeline trained — the guard that
-    * pages before a retrain, not after. Effectively-once: replays of
-    * a batch id anti-join away before the append. */
+    * pages before a retrain, not after. Effectively-once:
+    * [[appendNew]] on the batch id. */
   def screenOovBatch(batch: DataFrame, batchId: Long, vocabTable: String,
       reportTable: String): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
     val toks = batch.select(col("lang"),
       explode(split(trim(col("text")), "\\s+")).as("tok"))
     val report = graft.queries.TrainQueries
-      .oovRollup(toks, s.table(vocabTable), $"lang")
+      .oovRollup(toks, batch.sparkSession.table(vocabTable), col("lang"))
       .withColumn("batch_id", lit(batchId))
-    val fresh =
-      if (s.catalog.tableExists(reportTable))
-        report.join(s.table(reportTable).select($"batch_id").distinct(),
-          Seq("batch_id"), "left_anti")
-      else report
-    fresh.write.mode("append").format("parquet").saveAsTable(reportTable)
+    appendNew(report, reportTable, Seq("batch_id"))
   }
-
-  /** The streaming writer over [[screenOovBatch]]. */
-  def oovScreenWriter(docs: DataFrame, vocabTable: String,
-      reportTable: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        screenOovBatch(batch, id, vocabTable, reportTable)
-      }
 
   /** Compaction: rewrite the streaming sink's per-batch layout into
     * the analytical hour-partitioned table (K2's intended layout).

@@ -479,7 +479,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("streaming postings maintenance ≡ the q134 batch build on full fixture replay") {
     // VERDICT r15 #6: the inverted-index lifecycle's streaming
     // sibling — replay the whole documents fixture in three
-    // micro-batches through postingsWriter and require the artifact
+    // micro-batches through upsertPostingsBatch and require the artifact
     // (postings AND meta stamp) to equal the q134 batch build's,
     // then prove replay idempotence.
     implicit val sqlCtx = spark.sqlContext
@@ -490,9 +490,9 @@ class StreamingPipelineSpec extends SparkSpec {
       val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
         .as[(Long, String)].collect().toSeq
       val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.Pipeline.postingsWriter(
-        mem.toDF().toDF("doc_id", "text"), streamTbl, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("doc_id", "text"), ckpt,
+        Trigger.ProcessingTime("1 second"))((b, _) => Pipeline.upsertPostingsBatch(b, streamTbl))
+        .start()
       try {
         val third = math.max(1, docs.size / 3)
         docs.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -528,7 +528,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // The ANN sibling of the postings-maintenance parity: a full
     // q144 build is the reference; the incremental table starts from
     // the base slice (vec_id % 10 ≠ 7) plus COPIED sidecars, then the
-    // held-out slice streams through vectorsWriter in three
+    // held-out slice streams through upsertVectorsBatch in three
     // micro-batches. Codes quantize under frozen codebooks, so
     // stream-appended rows must equal the batch build's bit-for-bit;
     // the re-stamped sidecar must carry the batch build's source
@@ -554,9 +554,9 @@ class StreamingPipelineSpec extends SparkSpec {
         .as[(Long, Array[Float])].collect().toSeq
       assert(rest.nonEmpty, "held-out slice must exist")
       val mem = MemoryStream[(Long, Array[Float])]
-      val q = graft.streaming.Pipeline.vectorsWriter(
-        mem.toDF().toDF("vec_id", "embedding"), tblInc, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("vec_id", "embedding"), ckpt,
+        Trigger.ProcessingTime("1 second"))((b, _) => Pipeline.upsertVectorsBatch(b, tblInc))
+        .start()
       try {
         val third = math.max(1, rest.size / 3)
         rest.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -618,7 +618,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("streaming near-dup screen ≡ the q158 batch screen; replay cannot double-report") {
     // q158's ingest guard running continuously: the batch slice
-    // streams through neardupScreenWriter in three micro-batches
+    // streams through screenNeardupBatch in three micro-batches
     // against the standing index; the appended report must equal the
     // registered batch query's rows (shared serve chain — structural
     // parity), and re-screening a seen batch must add nothing.
@@ -633,9 +633,9 @@ class StreamingPipelineSpec extends SparkSpec {
         .filter($"source" === graft.queries.DedupQueries.NdiBatchSource)
         .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
       val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.Pipeline.neardupScreenWriter(
-        mem.toDF().toDF("doc_id", "text"), indexTbl, reportTbl, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("doc_id", "text"), ckpt,
+        Trigger.ProcessingTime("1 second"))(
+        (b, _) => Pipeline.screenNeardupBatch(b, indexTbl, reportTbl)).start()
       try {
         val third = math.max(1, batchDocs.size / 3)
         batchDocs.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -656,7 +656,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("streaming decontam guard ≡ the q182 batch sweep; replay cannot double-report") {
     // q182's exact-substring guard running continuously: train docs
-    // stream through decontamScreenWriter in three micro-batches
+    // stream through screenDecontamBatch in three micro-batches
     // against the standing eval-probe automaton; the appended report
     // must equal the registered batch query's pair rows (shared scan
     // chain — structural parity), and re-screening adds nothing.
@@ -672,9 +672,9 @@ class StreamingPipelineSpec extends SparkSpec {
       val trainDocs = docs.filter($"source" =!= "src0")
         .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
       val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.Pipeline.decontamScreenWriter(
-        mem.toDF().toDF("doc_id", "text"), ac, reportTbl, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("doc_id", "text"), ckpt,
+        Trigger.ProcessingTime("1 second"))(
+        (b, _) => Pipeline.screenDecontamBatch(b, ac, reportTbl)).start()
       try {
         val third = math.max(1, trainDocs.size / 3)
         trainDocs.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -693,7 +693,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("streaming span-evidence guard ≡ the q197 pair chain; replay cannot double-report") {
     // q197's pair-level core running continuously: train docs stream
-    // through spanScreenWriter in three micro-batches against the
+    // through screenSpanBatch in three micro-batches against the
     // standing eval set; the appended report must equal the
     // whole-corpus pair sweep (shared spanPairsOver chain — per-pair
     // rows carry no cross-train state, so batch boundaries cannot
@@ -711,9 +711,9 @@ class StreamingPipelineSpec extends SparkSpec {
       val trainDocs = docs.filter($"source" =!= "src0")
         .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
       val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.Pipeline.spanScreenWriter(
-        mem.toDF().toDF("doc_id", "text"), evalDocs, reportTbl, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("doc_id", "text"), ckpt,
+        Trigger.ProcessingTime("1 second"))(
+        (b, _) => Pipeline.screenSpanBatch(b, evalDocs, reportTbl)).start()
       try {
         val third = math.max(1, trainDocs.size / 3)
         trainDocs.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -748,9 +748,9 @@ class StreamingPipelineSpec extends SparkSpec {
         .select($"doc_id", $"lang", $"text")
         .as[(Long, String, String)].collect().toSeq
       val mem = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.Pipeline.oovScreenWriter(
-        mem.toDF().toDF("doc_id", "lang", "text"), vocabTbl, reportTbl, ckpt,
-        Trigger.ProcessingTime("1 second")).start()
+      val q = Pipeline.batchWriter(mem.toDF().toDF("doc_id", "lang", "text"), ckpt,
+        Trigger.ProcessingTime("1 second"))(
+        (b, id) => Pipeline.screenOovBatch(b, id, vocabTbl, reportTbl)).start()
       try {
         val third = math.max(1, evalDocs.size / 3)
         evalDocs.grouped(third).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
