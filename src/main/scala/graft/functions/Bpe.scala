@@ -45,7 +45,7 @@ import scala.collection.mutable.ArrayBuffer
   * shuffle); the merge table rides along as one small referenced
   * object (≤ a few hundred rows) — the classic pair-indexed priority
   * queue would be faster per word but the table here is bounded by
-  * `spark.graft.bpe.merges`, keeping the O(ranks × word_len) loop
+  * `BpeQueries.MergesN`, keeping the O(ranks × word_len) loop
   * cache-resident.
   */
 object Bpe {

@@ -151,25 +151,15 @@ case class CountMinQuery(left: Expression, right: Expression, width: Int,
 }
 
 object CountMin {
-  /** ε ≈ e/1024 ≈ 0.27% of stream length per estimate. */
+  /** ε ≈ e/1024 ≈ 0.27% of stream length per estimate (error per
+    * estimate ~ e·n/width). */
   val DefaultWidth = 1024
-  /** δ ≈ e^-4 ≈ 1.8% failure probability per estimate. */
+  /** δ ≈ e^-4 ≈ 1.8% failure probability per estimate. Rows are
+    * seeded by index, so a depth-d table's rows are a prefix of a
+    * depth-d′>d table's, and estimates are monotone nonincreasing in
+    * depth (SketchSpec pins this as a theorem). */
   val DefaultDepth = 4
   private val Seed = 0x5eed
-
-  /** The ε knob (error per estimate ~ e·n/width): more width, less
-    * colliding mass. Read at query-construction time by q88 and any
-    * caller that wants cluster-tuned sketches without code changes. */
-  def confWidth(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.cms.width").map(_.toInt).getOrElse(DefaultWidth)
-
-  /** The δ knob (failure probability ~ e^-depth): more rows, more
-    * independent chances for a collision-free bucket. Rows are seeded
-    * by index, so a depth-d table's rows are a PREFIX of a depth-d′>d
-    * table's — estimates are monotone nonincreasing in depth
-    * (SketchSpec pins this as a theorem). */
-  def confDepth(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.cms.depth").map(_.toInt).getOrElse(DefaultDepth)
 
   val schema: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),

@@ -70,7 +70,7 @@ object Scale {
     * reliable `checkpoint()`s — files survive executor loss and the
     * driver can re-read them. One conf, no call-site changes; the
     * checkpoint dir is applied to the SparkContext on first use.
-    * Eagerness matches the sites' prior semantics (all eager). */
+    * Both forms are eager. */
   def checkpointed(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpoint.dir").filter(_.nonEmpty) match {
@@ -129,36 +129,6 @@ object Scale {
   /** (conf value we applied, qualified dir the context returned for it). */
   private val appliedCheckpointDir =
     new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
-
-  /** [[checkpointed]] with LAZY materialization (r21, guide §1/§5):
-    * marks the frame for a local checkpoint but lets the CALLER'S
-    * NEXT ACTION materialize it, instead of paying a dedicated
-    * driver job per checkpoint. For a loop that checkpoints its
-    * state and then runs a tiny fixpoint aggregate every round (the
-    * q66/q82/q106/q157/q173 label-propagation family), this halves
-    * the per-round driver-action count: the aggregate's job computes
-    * every partition of the marked RDD, which localCheckpoint caches
-    * and truncates at job end — one job does both.
-    *
-    * Only the LOCAL branch is lazy: a non-eager reliable
-    * `checkpoint()` recomputes the whole lineage in a second job to
-    * write its files (Spark materializes reliable checkpoints by
-    * re-running the RDD unless it is separately persisted), which
-    * would double cluster work to save one driver round-trip — so
-    * with `spark.graft.checkpoint.dir` set this falls back to the
-    * eager reliable form, same semantics as [[checkpointed]].
-    *
-    * CONTRACT: the caller must run an action that computes EVERY
-    * partition of the returned frame (a global aggregate does)
-    * before reusing it fan-out style; otherwise the first consumer
-    * pays the materialization, same as eager. */
-  def checkpointedLazy(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption("spark.graft.checkpoint.dir").filter(_.nonEmpty) match {
-      case Some(_) => checkpointed(df)
-      case None => df.localCheckpoint(eager = false)
-    }
-  }
 
   /** Spread an under-partitioned scan before a heavy per-row
     * projection (r21): small fixtures arrive as one parquet row-group

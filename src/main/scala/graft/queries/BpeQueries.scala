@@ -15,7 +15,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  1. **Distributed merge training** ([[trainBpeMerges]]): ONE
   *     corpus scan builds the word-frequency dictionary (capped at
-  *     `spark.graft.bpe.dict` — rare tail words contribute nothing
+  *     [[DictSize]] — rare tail words contribute nothing
   *     to pair counts worth their shuffle weight), then a bounded
   *     argmax-merge fixpoint in the q66/q82 discipline: each round is
   *     one distributed pair-count aggregate + a 1-row argmax collect
@@ -46,35 +46,24 @@ object BpeQueries {
     * sequence, weighted by corpus frequency. */
   final case class WordSyms(syms: ArrayBuffer[String], freq: Long)
 
-  /** `spark.graft.bpe.merges` (default 64): learned merge count —
-    * vocabulary size minus the base alphabet. */
-  private[graft] def bpeMergesN(s: SparkSession): Int = {
-    val n = s.conf.getOption("spark.graft.bpe.merges").map(_.toInt).getOrElse(64)
-    require(n >= 1, s"spark.graft.bpe.merges must be >= 1, got $n")
-    n
-  }
+  /** Learned merge count: vocabulary size minus the base alphabet. */
+  private[graft] val MergesN = 64
 
-  /** `spark.graft.bpe.dict` (default 65536): word-dictionary cap.
-    * Training cost is O(rounds × dict), independent of corpus size
-    * after the one dictionary-building scan. */
-  private[graft] def bpeDictSize(s: SparkSession): Int = {
-    val n = s.conf.getOption("spark.graft.bpe.dict").map(_.toInt).getOrElse(65536)
-    require(n >= 1, s"spark.graft.bpe.dict must be >= 1, got $n")
-    n
-  }
+  /** Word-dictionary cap. Training cost is O(rounds × dict),
+    * independent of corpus size after the one dictionary scan. */
+  private[graft] val DictSize = 65536
 
-  /** `spark.graft.bpe.minFreq` (default 2): early-exit floor — a pair
-    * seen once is noise, not structure (Sennrich's own default). */
-  private[graft] def bpeMinFreq(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.bpe.minFreq").map(_.toLong).getOrElse(2L)
+  /** Early-exit floor: a pair seen once is noise, not structure
+    * (Sennrich's own default). */
+  private[graft] val MinFreq = 2L
 
   /** Train a rank-ordered BPE merge list from the documents corpus.
     * Deterministic: dictionary cap breaks ties (freq desc, word asc),
     * argmax breaks ties (count desc, l asc, r asc) — same corpus,
-    * same confs ⇒ same table, under any partitioning/AQE/retry. */
+    * same table, under any partitioning/AQE/retry. */
   def trainBpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
     trainBpeMergesFrom(Tables.documents(s, dir).select(col("text")),
-      bpeMergesN(s), bpeDictSize(s), bpeMinFreq(s))
+      MergesN, DictSize, MinFreq)
 
   /** Trainer over any (text) frame — injectable so constructed
     * corpora with hand-computable merge sequences have a spec.
@@ -82,8 +71,8 @@ object BpeQueries {
     * ONE distributed corpus scan builds the capped word dictionary —
     * the only data-scale work — then the argmax-merge fixpoint runs on
     * the collected dictionary in driver memory. The dictionary is
-    * bounded by `spark.graft.bpe.dict` (≤65536 rows of one word + one
-    * long), so the loop is O(rounds × dict-chars) local compute with
+    * bounded by `dictSize` ([[DictSize]] rows of one word + one long),
+    * so the loop is O(rounds × dict-chars) local compute with
     * no per-round Spark job; corpus size only affects the scan. Merge
     * for merge the output equals the oracle's distributed trainer:
     * same overlapping pair counts (summed in Long), same (count desc,
@@ -195,7 +184,7 @@ object BpeQueries {
   }
 
   /** Read a stored merges table into an encoder table. ≤
-    * `spark.graft.bpe.merges` rows — constant-bounded collect (the
+    * [[MergesN]] rows — constant-bounded collect (the
     * IVF-trainer-sample rule). The `sourceDir` form is the verifying
     * read (fails loudly on a stale artifact); the raw form is for
     * callers that just established freshness. */
@@ -224,7 +213,7 @@ object BpeQueries {
     *    tokens ≤ pre-token characters — every word compressed into
     *    [1, len] tokens by the stored artifact;
     *  - `merges_full`: the stored table carries exactly
-    *    `spark.graft.bpe.merges` rows (training never early-exited
+    *    [[MergesN]] rows (training never early-exited
     *    at gate scale).
     * Validation-priced like q92/q93/q96: production consumers call
     * [[loadBpeTable]] once and pay one map-side expression. */
@@ -252,7 +241,7 @@ object BpeQueries {
         coalesce(min($"rt"), lit(true)).as("roundtrip_ok"),
         coalesce(min($"nw" + $"np" <= $"tt" && $"tt" <= $"nc"), lit(true))
           .as("trained_bounds_ok"))
-      .withColumn("merges_full", lit(trained.size == bpeMergesN(s)))
+      .withColumn("merges_full", lit(trained.size == MergesN))
   }
 
   lazy val bpeStoredEncodeSql: String =
@@ -279,10 +268,7 @@ object BpeQueries {
     * sample through ITS OWN merges — so training, storage, and encode
     * must all agree for the row to hash-match. Upgrades the trained
     * artifact from q97's boolean pins to full cross-engine identity.
-    *
-    * The oracle is generated at the DEFAULT confs (the q81 rule: a
-    * non-default `spark.graft.bpe.*` setting must flow to BOTH
-    * sides via the parameterized generator). */
+    * Both sides train at [[MergesN]], [[DictSize]] and [[MinFreq]]. */
   def bpeTrainedTokens(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val trained = loadBpeTable(s, storedMerges(s, dir))
@@ -304,14 +290,14 @@ object BpeQueries {
     * HAVING, the trainer's exact tie-break), `dict_i` applies it with
     * the shared merge-all fold (LEFT JOIN ON true so an early-exited
     * level is a no-op, not an empty dict), `merges_i` accumulates. */
-  private def bpeTrainingChainSql(nMerges: Int, dictSize: Int, minFreq: Long): String = {
-    val levels = (1 to nMerges).map { i =>
+  private def bpeTrainingChainSql: String = {
+    val levels = (1 to MergesN).map { i =>
       s"""best_$i AS MATERIALIZED (
          |  SELECT z[1] AS l, z[2] AS r FROM (
          |    SELECT unnest(list_zip(s, s[2:])) AS z, freq FROM (
          |      SELECT string_split(syms, ' ') AS s, freq FROM dict_${i - 1}))
          |  WHERE z[2] IS NOT NULL
-         |  GROUP BY z[1], z[2] HAVING CAST(sum(freq) AS BIGINT) >= $minFreq
+         |  GROUP BY z[1], z[2] HAVING CAST(sum(freq) AS BIGINT) >= $MinFreq
          |  ORDER BY CAST(sum(freq) AS BIGINT) DESC, z[1], z[2] LIMIT 1),
          |dict_$i AS MATERIALIZED (
          |  SELECT CASE WHEN b.l IS NULL THEN d.syms ELSE
@@ -327,20 +313,19 @@ object BpeQueries {
        |  SELECT array_to_string(string_split(word, ''), ' ') AS syms, freq FROM (
        |    SELECT word, CAST(count(*) AS BIGINT) AS freq
        |    FROM (SELECT unnest(regexp_extract_all(text, '\\w+')) AS word FROM documents)
-       |    GROUP BY word ORDER BY freq DESC, word LIMIT $dictSize)),
+       |    GROUP BY word ORDER BY freq DESC, word LIMIT $DictSize)),
        |merges_0 AS (SELECT CAST(NULL AS BIGINT) AS rank, CAST(NULL AS VARCHAR) AS l,
        |  CAST(NULL AS VARCHAR) AS r WHERE false),
        |$levels""".stripMargin
   }
 
-  def bpeTrainedTokensSql(nMerges: Int = 64, dictSize: Int = 65536,
-      minFreq: Long = 2L): String =
-    s"""WITH ${bpeTrainingChainSql(nMerges, dictSize, minFreq)},
+  def bpeTrainedTokensSql: String =
+    s"""WITH $bpeTrainingChainSql,
        |mlrow AS MATERIALIZED (
        |  SELECT COALESCE(list(l || ' ' || r ORDER BY rank), []) AS ms,
        |    COALESCE(array_to_string(list(l || ' ' || r ORDER BY rank), ' '), '') AS canon,
        |    CAST(count(*) AS BIGINT) AS n_merges
-       |  FROM merges_$nMerges)
+       |  FROM merges_$MergesN)
        |SELECT m.n_merges AS n_merges,
        |  ${TextQueries.fingerprintSql("m.canon")} AS merges_fp,
        |  CAST(COALESCE(sum(${Bpe.tokenCountSqlWith("s.text", "m.ms")}), 0) AS BIGINT)
@@ -420,12 +405,11 @@ object BpeQueries {
       Bpe.bpe_token_count(col("text"), trained))
   }
 
-  def bpeTrainedBudgetSelectSql(budget: Long = 2000L, nMerges: Int = 64,
-      dictSize: Int = 65536, minFreq: Long = 2L): String =
-    s"""WITH ${bpeTrainingChainSql(nMerges, dictSize, minFreq)},
+  def bpeTrainedBudgetSelectSql(budget: Long = 2000L): String =
+    s"""WITH $bpeTrainingChainSql,
        |mlrow AS MATERIALIZED (
        |  SELECT COALESCE(list(l || ' ' || r ORDER BY rank), []) AS ms
-       |  FROM merges_$nMerges),
+       |  FROM merges_$MergesN),
        |q AS MATERIALIZED (
        |  SELECT d.source, d.doc_id,
        |    CAST(${Bpe.tokenCountSqlWith("d.text", "m.ms")} AS BIGINT) AS n_tokens,
@@ -454,12 +438,11 @@ object BpeQueries {
       Bpe.bpe_token_count(col("text"), trained))
   }
 
-  def bpeTrainedPackSql(budget: Long = 2048L, nMerges: Int = 64,
-      dictSize: Int = 65536, minFreq: Long = 2L): String =
-    s"""WITH ${bpeTrainingChainSql(nMerges, dictSize, minFreq)},
+  def bpeTrainedPackSql(budget: Long = 2048L): String =
+    s"""WITH $bpeTrainingChainSql,
        |mlrow AS MATERIALIZED (
        |  SELECT COALESCE(list(l || ' ' || r ORDER BY rank), []) AS ms
-       |  FROM merges_$nMerges),
+       |  FROM merges_$MergesN),
        |toks AS MATERIALIZED (
        |  SELECT d.source, d.doc_id,
        |    CAST(${Bpe.tokenCountSqlWith("d.text", "m.ms")} AS BIGINT) AS n_tokens
@@ -568,7 +551,7 @@ object BpeQueries {
   lazy val oracles: Map[String, String] = Map(
     "q125_bpe_fertility" -> bpeFertilitySql,
     "q100_bpe_compression" -> bpeCompressionSql,
-    "q101_bpe_trained_tokens" -> bpeTrainedTokensSql(),
+    "q101_bpe_trained_tokens" -> bpeTrainedTokensSql,
     "q97_bpe_stored_encode" -> bpeStoredEncodeSql,
     "q98_bpe_budget_select" -> bpeBudgetSelectSql(),
     "q99_bpe_pack" -> bpePackSql(),

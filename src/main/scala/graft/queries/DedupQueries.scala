@@ -673,16 +673,10 @@ object DedupQueries {
     // neighborhood min only ever propagates along real edges.
     val nbrMin = und.groupBy($"id_a").agg(min($"id_b").as("nb"))
       .withColumnRenamed("id_a", "id")
-    // LAZY checkpoint + fixpoint aggregate share ONE driver action per
-    // round (r21, guide §1/§5): the sum's job computes every labels
-    // partition, which the lazy localCheckpoint caches and truncates
-    // at job end — the former eager checkpoint paid a dedicated job
-    // first and the sum a second one, doubling the loop's driver-floor
-    // cost (2 actions × rounds × 5 queries sharing this core).
-    var labels = graft.operators.Scale.checkpointedLazy(
-      nodes.select($"id")
-        .join(nbrMin, Seq("id"), "left")
-        .select($"id", least($"id", coalesce($"nb", $"id")).as("cluster_id")))
+    var labels = nodes.select($"id")
+      .join(nbrMin, Seq("id"), "left")
+      .select($"id", least($"id", coalesce($"nb", $"id")).as("cluster_id"))
+      .reliableCheckpoint()
     // labels are monotonically non-increasing, so the label SUM
     // strictly decreases on any change — fixpoint detection is one
     // tiny aggregate over the checkpointed frame, no compare join
@@ -707,12 +701,11 @@ object DedupQueries {
       // extra tiny join trades against the per-job floor). LEFT join +
       // coalesce: every label IS a node id, but the guard keeps a row
       // with an unmatched label from being dropped rather than kept.
-      val next = graft.operators.Scale.checkpointedLazy(hop
+      val next = hop
         .join(hop.select($"id".as("cluster_id"), $"cluster_id".as("jump2")),
           Seq("cluster_id"), "left")
-        .select($"id", coalesce($"jump2", $"cluster_id").as("cluster_id")))
-      // materializes the lazy checkpoint AND reads the fixpoint sum in
-      // the same job (see the seed comment above)
+        .select($"id", coalesce($"jump2", $"cluster_id").as("cluster_id"))
+        .reliableCheckpoint()
       val nextSum = next.agg(coalesce(sum($"cluster_id"), lit(0L))).head().getLong(0)
       changed = nextSum != prevSum
       prevSum = nextSum
@@ -1171,11 +1164,13 @@ object DedupQueries {
     * slices of the 64-bit char-4-gram SimHash. Any pair within
     * Hamming ≤ nBands−1 shares an identical band (pigeonhole), so
     * recall rises with nBands while candidate volume rises with
-    * band-value collisions (64/nBands bits per value). Default 4×16:
-    * 65536 values per band keeps buckets hash-dispersed at corpus
-    * scale; `spark.graft.editlsh.bands` retunes per deployment. */
-  private def editLshBands(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.editlsh.bands").map(_.toInt).getOrElse(4)
+    * band-value collisions (64/nBands bits per value). 4×16: 65536
+    * values per band keeps buckets hash-dispersed at corpus scale. */
+  private val EditLshBands = 4
+
+  /** Oracle-pinned percentage of q145's audit pairs (the exact q131
+    * set on the capped slice) the LSH tier must find. */
+  private val EditLshRecallFloor = 60
 
   /** q145: CHAR-LEVEL NEAR-DUP AT SCALE — the recall-bounded LSH tier
     * in front of q131's exact rule (VERDICT r15 #2, option (a); q131
@@ -1204,11 +1199,11 @@ object DedupQueries {
     * the exact q131 blocking on an absolutely-capped audit slice
     * (doc_id even and < 4000 → ≤ 2000 docs at ANY corpus size, so
     * the complete-blocking reference stays bounded), pinned ≥
-    * `spark.graft.editlsh.recallFloor` (default 60%). Measured
-    * full-corpus recall vs the exact q131 set: 100% at sf0.01 (6/6
-    * pairs), 92.4% at sf0.1 (73/79) — the misses are pairs near the
-    * 10% edit boundary, exactly the documented loss channel; raise
-    * `editlsh.bands` to buy recall with candidate volume. */
+    * [[EditLshRecallFloor]]%. Measured full-corpus recall vs the exact
+    * q131 set: 100% at sf0.01 (6/6 pairs), 92.4% at sf0.1 (73/79) —
+    * the misses are pairs near the 10% edit boundary, exactly the
+    * documented loss channel; more bands buy recall with candidate
+    * volume. */
   def editDistanceNearDupsLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -1223,14 +1218,12 @@ object DedupQueries {
     val slice = docs.filter($"doc_id" % 2 === 0 && $"doc_id" < 4000)
     val exact = editDistanceNearDupsOver(slice)
       .select($"doc_a", $"doc_b")
-    val floor = s.conf.getOption("spark.graft.editlsh.recallFloor")
-      .map(_.toInt).getOrElse(60)
     val audit = exact
       .join(pairs.select($"doc_a", $"doc_b", lit(1).as("hit")),
         Seq("doc_a", "doc_b"), "left_outer")
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce($"hit", lit(0))).as("n_hit"))
-      .select(($"n_exact" > 0 && $"n_hit" * 100L >= $"n_exact" * floor)
+      .select(($"n_exact" > 0 && $"n_hit" * 100L >= $"n_exact" * EditLshRecallFloor)
           .as("audit_recall_ok"),
         ($"n_exact" > 0).as("audit_nonempty"))
     // has_pairs binds exactly where the exact-blocking audit binds
@@ -1250,9 +1243,7 @@ object DedupQueries {
   private[graft] def editDistanceNearDupsLshRaw(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val nBands = editLshBands(s)
-    require(64 % nBands == 0, s"editlsh.bands=$nBands must divide 64")
-    val bandBits = 64 / nBands
+    val bandBits = 64 / EditLshBands
     val mask = (1L << bandBits) - 1
     val ascii = docs.filter(octet_length($"text") === length($"text"))
     val maxLen: Long = ascii
@@ -1281,7 +1272,7 @@ object DedupQueries {
         // fused one-pass bag (r20) — see editDistanceNearDupsOver
         graft.functions.expressions.char_bag($"text").as("bag"))
       .reliableCheckpoint()
-    val simBands = array((0 until nBands).map(b =>
+    val simBands = array((0 until EditLshBands).map(b =>
       struct(lit(b).as("sbi"),
         shiftrightunsigned($"fp", b * bandBits).bitwiseAND(lit(mask)).as("sbv"))): _*)
     // LATE TEXT MATERIALIZATION: the explode → join → distinct chain
@@ -1309,7 +1300,7 @@ object DedupQueries {
       .filter($"doc_a" < $"doc_b" &&
         abs($"len_a" - $"len_b") * 10 <= least($"len_a", $"len_b"))
       .filter(l1 * 5 <= least($"len_a", $"len_b"))
-      // a pair can collide in up to nBands band indexes — dedup the
+      // a pair can collide in up to EditLshBands band indexes — dedup the
       // candidate PAIRS (8-byte id pairs + lengths), then rebalance
       // for the DP like q131 (bytes are the wrong cost model for the
       // DP stage)

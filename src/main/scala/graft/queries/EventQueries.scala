@@ -743,19 +743,17 @@ object EventQueries {
   def cmsFrequency(s: SparkSession, dir: String): DataFrame =
     cmsFrequencyOver(Tables.events(s, dir))
 
-  /** The q88 pipeline over any (event_type, user_id) frame —
-    * injectable so the all-NULL-user-ids branch (anchor join +
-    * vacuous-truth booleans), unreachable on the fixture, has a real
-    * spec (the round-7 vacuous-test rule). */
-  private[graft] def cmsFrequencyOver(ev: DataFrame): DataFrame = {
+  /** The q88 pipeline over any (event_type, user_id) frame at any
+    * sketch geometry — injectable so the all-NULL-user-ids branch
+    * (anchor join + vacuous-truth booleans), unreachable on the
+    * fixture, and off-default width/depth have real specs. Build and
+    * probe share `width`/`depth` by construction, so a width mismatch
+    * between them cannot occur. */
+  private[graft] def cmsFrequencyOver(ev: DataFrame,
+      width: Int = graft.functions.CountMin.DefaultWidth,
+      depth: Int = graft.functions.CountMin.DefaultDepth): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
-    // spark.graft.cms.{width,depth}: the ε/δ knobs an operator tunes
-    // at cluster scale (defaults 1024/4 keep the q88 gate row
-    // byte-identical); build and probe share the values by
-    // construction so the q88 width-mismatch failure mode can't occur
-    val width = graft.functions.CountMin.confWidth(s)
-    val depth = graft.functions.CountMin.confDepth(s)
     // checkpoint: one row per event_type; feeds the probe join once
     // instead of re-running the sketch aggregation per consumer
     val sk = ev.groupBy($"event_type")

@@ -124,39 +124,24 @@ object SimilarityQueries {
       .domainOrdered($"query_id", $"rank")
   }
 
-  /** `spark.graft.lsh.bits` (default `auto`): hyperplane count for
-    * the single-band sign-LSH bucket every embedding candidate
-    * generator shares (q48/q54/q55-sibling/q106/q156/q160). `auto`
-    * keeps the VALIDATED 8 planes (256 buckets) for corpora ≤
-    * [[IvfAutoSmallCorpus]] vectors — every priced SF and degenerate
-    * recipe, so the plane literals baked into [[bucketSql]] stay
-    * bit-identical to what the engine computes — and switches to
-    * ⌈log₂(n/8)⌉ above it: expected bucket size pins at the ~8
-    * vectors the priced regime was measured at, so same-bucket
-    * candidate volume stays O(8·n) LINEAR in the corpus instead of
-    * the O(n²/256) a pinned plane count degrades to (the r18 sf1
-    * measurement: q106 16.9× warm growth for 10× data). The
-    * trade-off is explicit: more planes → lower per-pair recall
-    * (sign-LSH collision probability is (1−θ/π)^bits); the recovery
-    * dial at scale is MULTI-BAND composition — exactly what the
-    * banded operators (q91 PCA-sign bands, q43 MinHash bands, q145
-    * LSH tier) implement — while these single-band operators keep
-    * the candidates-from-my-own-bucket contract their Scaladocs and
-    * oracles define. Capped at 30 (the bucket is an int). */
+  /** Hyperplane count for the single-band sign-LSH bucket every
+    * embedding candidate generator shares (q48/q54/q55-sibling/q106/
+    * q156/q160). Corpora of at most [[IvfAutoSmallCorpus]] vectors get
+    * 8 planes (256 buckets), so the plane literals baked into
+    * [[bucketSql]] are bit-identical to what the engine computes.
+    * Above that it is ⌈log₂(n/8)⌉: the expected bucket holds ~8
+    * vectors, so same-bucket candidate volume stays O(8·n), linear in
+    * the corpus, instead of the O(n²/256) of a fixed plane count. More
+    * planes lower per-pair recall (sign-LSH collision probability is
+    * (1−θ/π)^bits); the recovery at scale is multi-band composition,
+    * which the banded operators (q91, q43, q145) implement, while these
+    * single-band operators keep the candidates-from-my-own-bucket
+    * contract their oracles define. Capped at 30 (the bucket is an
+    * int). */
   private[graft] def lshBits(s: SparkSession, dir: String): Int = {
-    val conf = s.conf.getOption("spark.graft.lsh.bits").getOrElse("auto")
-    val bits =
-      if (conf == "auto") {
-        val n = Artifacts.embeddings(s, dir).rows
-        if (n <= IvfAutoSmallCorpus) 8
-        // clamp BEFORE the range check: the int bucket caps auto at
-        // 30 planes (n > 2^33 would otherwise ask for more)
-        else math.min(30,
-          math.max(8, math.ceil(math.log(n / 8.0) / math.log(2.0)).toInt))
-      } else conf.toInt
-    require(bits >= 1 && bits <= 30,
-      s"spark.graft.lsh.bits must be in [1, 30], got $conf")
-    bits
+    val n = Artifacts.embeddings(s, dir).rows
+    if (n <= IvfAutoSmallCorpus) 8
+    else math.min(30, math.max(8, math.ceil(math.log(n / 8.0) / math.log(2.0)).toInt))
   }
 
   /** The shared single-band bucket column at the resolved plane
@@ -337,9 +322,9 @@ object SimilarityQueries {
     * stand-in): spherical k-means (k=16, 5 Lloyd iterations) trained
     * on a DETERMINISTIC bounded sample (vec_id < 256, seeded by data
     * order, driver-side — index TRAINING is the one legitimately
-    * driver-bounded step; `spark.graft.ivf.trainer = mllib` swaps in
-    * distributed MLlib KMeans over the corpus with everything
-    * downstream identical — see [[trainCentroids]]). Every vector
+    * driver-bounded step; above [[IvfTrainerHandoff]] cells
+    * distributed MLlib KMeans over the corpus takes over with
+    * everything downstream identical — see [[ivfTrainer]]). Every vector
     * is assigned to its max-cosine centroid via composed
     * [[graft.functions.CosineSimilarity]] calls against literal
     * centroid arrays — no broadcast state, fully codegen'd — queries
@@ -354,38 +339,26 @@ object SimilarityQueries {
     * This block documents the whole IVF family below: centroid
     * training, cell/probe assignment, the NN query, and the
     * validated form. */
-  /** Trainer dispatch: `spark.graft.ivf.trainer = mllib` swaps the
-    * driver-side bounded-sample Lloyd loop for DISTRIBUTED MLlib
-    * KMeans over the whole corpus — the swap the Scaladoc above
-    * promises for real scale, now an actual code path. Inputs are
-    * L2-normalized first (Euclidean k-means on the unit sphere is
-    * spherical k-means: argmin ‖x−c‖ == argmax cos on unit vectors),
-    * seed fixed, and everything downstream (cell assignment, probe
-    * list, re-rank, validation theorems) is identical — only where
-    * the centroids come from changes. Default stays the deterministic
-    * sample trainer so the q58 oracle pins don't depend on MLlib
-    * implementation details. */
+  /** Centroid trainer dispatch on [[ivfTrainer]]. Both run spherical
+    * k-means (MLlib on L2-normalized inputs with a fixed seed, the
+    * sample trainer in vec_id order), and everything downstream (cell
+    * assignment, probe list, re-rank, validation theorems) is the
+    * same; only where the centroids come from changes. */
   private def trainCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
     if (ivfTrainer(s, dir) == "mllib") trainCentroidsMllib(s, dir)
     else trainCentroidsSample(s, dir)
 
-  /** Which trainer the geometry RESOLVES to (spec-pinned): an explicit
-    * `spark.graft.ivf.trainer` (`mllib` | `sample`) wins; otherwise
-    * the driver-bounded sample trainer up to [[IvfTrainerHandoff]]
-    * cells and the distributed MLlib trainer above it — the handoff
-    * the r18 auto-√n sizing comment promised. Past ~512 cells the
-    * sample trainer's premises break, not its code: a 32·k-row
-    * driver sample thins to fewer and fewer points per centroid while
-    * the driver Lloyd loop is O(32k·k·dim) serial work; distributed
-    * KMeans over the corpus is the right mechanism there, and the
-    * probe/serve paths are k-agnostic so nothing downstream changes.
-    * With the cap gone, `auto` k stays ⌈√n⌉ at any corpus size —
-    * √n hits 512 at ~262k vectors, so every priced fixture still
-    * resolves to the sample trainer and keeps its bit-identical
-    * oracle pins. */
+  /** The trainer the resolved cell count [[ivfK]] selects: the
+    * driver-bounded sample trainer up to [[IvfTrainerHandoff]] cells,
+    * distributed MLlib KMeans over the corpus above it. Past ~512
+    * cells a 32·k-row driver sample thins to fewer points per centroid
+    * while the driver Lloyd loop is O(32k·k·dim) serial work. √n
+    * reaches 512 at ~262k vectors, so every priced fixture trains on
+    * the sample and keeps its bit-identical oracle pins. k is part of
+    * the IVF stamp, so the trainer never changes under a fresh
+    * artifact. */
   private[graft] def ivfTrainer(s: SparkSession, dir: String): String =
-    s.conf.getOption("spark.graft.ivf.trainer").getOrElse(
-      if (ivfK(s, dir) > IvfTrainerHandoff) "mllib" else "sample")
+    if (ivfK(s, dir) > IvfTrainerHandoff) "mllib" else "sample"
 
   /** Cell count above which auto trainer dispatch hands off to
     * distributed MLlib KMeans (≈ the √n of a 262k-vector corpus). */
@@ -398,38 +371,27 @@ object SimilarityQueries {
     * rule takes over. 10k sits one decade above sf0.1's 5k vectors. */
   private val IvfAutoSmallCorpus = 10000L
 
-  /** `spark.graft.ivf.k` (default `auto`): cell count — the knob that
-    * trades index selectivity (candidates per probe ~ n/k) against
-    * training cost and per-row assignment work (k literal cosines).
-    * `auto` resolves to the validated fixed 16 for corpora ≤
-    * [[IvfAutoSmallCorpus]] vectors, and to ⌈√n⌉ above it — the
-    * standard IVF sizing (FAISS guideline k ∈ [√n, 16√n]) that keeps
-    * the all-NN candidate volume O(nprobe·n^1.5) instead of the
-    * O(nprobe·n²/16) a pinned cell count degrades to; the r18 sf1
-    * measurement (50k vectors, q58 24.7 s at k=16 vs 7.5–8.5 s at
-    * k=64) is exactly that degradation. n comes from the same
-    * footer-stats fingerprint the staleness checks read — no extra
-    * scan. An explicit integer pins the geometry (q58 validation
-    * theorems re-assert at a second setting in ExpressionsSpec);
-    * both trainers and the assignment projection resolve here so one
-    * conf retunes the whole family. An explicit
-    * `spark.graft.ivf.nprobe` is validated against the resolved k
-    * here — at RESOLUTION time, so nprobe > k refuses loudly before
-    * any training work runs. */
+  /** `spark.graft.ivf.k` (default `auto`): cell count. It trades
+    * index selectivity (candidates per probe ~ n/k) against training
+    * cost and per-row assignment work (k literal cosines). `auto` is
+    * the validated 16 for corpora of at most [[IvfAutoSmallCorpus]]
+    * vectors and ⌈√n⌉ above it, the standard IVF sizing (FAISS: k ∈
+    * [√n, 16√n]) that keeps all-NN candidate volume O(nprobe·n^1.5)
+    * instead of the O(nprobe·n²/16) of a fixed cell count. n comes
+    * from the footer-stats fingerprint, with no extra scan. An integer
+    * pins the geometry; both trainers and the assignment projection
+    * resolve here. An explicit `spark.graft.ivf.nprobe` is checked
+    * against the resolved k here, so nprobe > k fails before any
+    * training runs. */
   private[graft] def ivfK(s: SparkSession, dir: String): Int = {
     val conf = s.conf.getOption("spark.graft.ivf.k").getOrElse("auto")
     val k =
       if (conf == "auto") {
         val n = Artifacts.embeddings(s, dir).rows
         if (n <= IvfAutoSmallCorpus) 16
-        // ⌈√n⌉ UNCAPPED (r18 capped at 512; r19 removed it): past
-        // [[IvfTrainerHandoff]] cells the trainer dispatch hands off
-        // to distributed MLlib KMeans automatically ([[ivfTrainer]]),
-        // so the √n sizing that keeps candidate volume O(nprobe·n^1.5)
-        // holds at any corpus size instead of silently degrading to
-        // O(n²/512). The per-row assignment stays the one fused
-        // [[graft.functions.IvfProbeCellsExpr]] pass — O(k·dim)
-        // multiply-adds per row, linear in k, no plan-size growth.
+        // uncapped: [[ivfTrainer]] hands large k to MLlib, and the
+        // per-row assignment is one fused IvfProbeCellsExpr pass,
+        // O(k·dim) per row with no plan-size growth
         else math.ceil(math.sqrt(n.toDouble)).toInt
       } else conf.toInt
     require(k >= 2, s"spark.graft.ivf.k must be >= 2, got $conf")
@@ -440,28 +402,18 @@ object SimilarityQueries {
     k
   }
 
-  /** `spark.graft.ivf.nprobe` (default `auto`): probed cells per query
-    * — THE recall/cost dial (recall rises and candidate count rises
-    * ~linearly with nprobe; nprobe = k degenerates to brute force).
-    * `auto` probes 4 cells in the validated fixed-k regime and
-    * ⌈k/8⌉ above it — a constant 1/8 of the cell partition. The rule
-    * is MEASURED, not guessed (graft.IvfProbe on the 20k-vector sf1
-    * fixture): at the same 1/4 fraction the √n geometry recalls
-    * 0.780 vs pinned-16's 0.568 at 3.8× less wall; at 1/8 it reads
-    * recall 0.616 — still above the q58 floor WITH margin — at
-    * 9.7 s vs 122.9 s (12.7×). Finer cells target better at equal
-    * candidate volume, and the floor holds even on this fixture's
-    * worst case (10 Gaussians ⇒ no sub-label structure for cells to
-    * exploit; real embedding corpora cluster at every scale, which
-    * is where operators can push nprobe toward a constant and the
-    * candidate volume toward Θ(n^1.5)). `k` here is
-    * the geometry actually in hand (trained or sidecar-loaded cell
-    * count), so a serving tier resolves its probe list from the
-    * stored index alone; the result is clamped to it (slice-lenient
-    * on degenerate sub-k corpora, where fewer cells exist than the
-    * configured k would train). Explicit-conf range validation
-    * against the CONFIGURED k happens in [[ivfK]] at resolution
-    * time. */
+  /** `spark.graft.ivf.nprobe` (default `auto`): probed cells per
+    * query, the recall/cost dial (recall and candidate count both rise
+    * with nprobe; nprobe = k is brute force). `auto` probes 4 cells in
+    * the validated fixed-k regime and ⌈k/8⌉ above it, a constant 1/8
+    * of the cell partition. Measured with graft.IvfProbe on the
+    * 20k-vector sf1 fixture: at 1/8 the √n geometry recalls 0.616,
+    * above the q58 floor, in 9.7 s against fixed-16's 122.9 s. `k` is
+    * the geometry in hand (trained or sidecar-loaded cell count), so a
+    * serving tier resolves its probe list from the stored index alone;
+    * the result is clamped to it, since a degenerate sub-k corpus
+    * trains fewer cells. An explicit value is range-checked against
+    * the configured k in [[ivfK]]. */
   private[graft] def ivfNprobe(s: SparkSession, k: Int): Int = {
     val np = s.conf.getOption("spark.graft.ivf.nprobe") match {
       case Some(v) => v.toInt
@@ -1196,11 +1148,10 @@ object SimilarityQueries {
     * recall back from single-band bit sampling; at corpus scale the
     * knobs grow with n (more bits per band → smaller buckets, more
     * bands → recall), which is exactly how production MinHash/SimHash
-    * banding is tuned (q43/q44 document the same tradeoff). Round 11:
-    * the geometry is conf-driven — `spark.graft.pcaann.{bands,bits}`
-    * ([[pcaAnnGeometry]]) with a prefix-stable band sequence
-    * ([[bandCoordSets]]) so recall is provably non-decreasing in
-    * `bands` at fixed `bits` (the CMS width/depth precedent).
+    * banding is tuned (q43/q44 document the same tradeoff). The
+    * geometry is [[PcaAnnBands]] × [[PcaAnnBits]] over a prefix-stable
+    * band sequence ([[bandCoordSets]]), so recall is provably
+    * non-decreasing in `bands` at fixed `bits`.
     *
     * Plan shape: one corpus pass computes both band keys as literal
     * column arithmetic (no broadcast state), candidates come from two
@@ -1228,20 +1179,12 @@ object SimilarityQueries {
   def pcaAnnPairs(s: SparkSession, dir: String): DataFrame =
     pcaAnnPairsOver(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
 
-  /** `spark.graft.pcaann.{bands,bits}` (defaults 4, 4): the q91 band
-    * geometry — `bands` is THE recall dial (candidates only grow as
+  /** q91 band geometry: 4 bands of 4 sign bits over the 8 principal
+    * coordinates. `bands` is the recall side (candidates only grow as
     * bands are appended; see [[bandCoordSets]]), `bits` the
-    * selectivity dial (buckets per band = 2^bits; more bits → smaller
-    * buckets → fewer candidates per band). */
-  private[graft] def pcaAnnGeometry(s: SparkSession): (Int, Int) = {
-    val bands = s.conf.getOption("spark.graft.pcaann.bands").map(_.toInt).getOrElse(4)
-    val bits = s.conf.getOption("spark.graft.pcaann.bits").map(_.toInt).getOrElse(4)
-    require(bands >= 1 && bands <= 64,
-      s"spark.graft.pcaann.bands must be in [1, 64], got $bands")
-    require(bits >= 1 && bits <= 8,
-      s"spark.graft.pcaann.bits must be in [1, k=8] (8 principal coords), got $bits")
-    (bands, bits)
-  }
+    * selectivity side (2^bits buckets per band). */
+  private[graft] val PcaAnnBands = 4
+  private[graft] val PcaAnnBits = 4
 
   /** The first `bands` entries of a FIXED infinite band sequence over
     * k coordinates: the floor(k/bits) disjoint chunks first, then for
@@ -1250,9 +1193,7 @@ object SimilarityQueries {
     * PREFIX-STABLE: bandCoordSets(k, B+1, b) extends
     * bandCoordSets(k, B, b), so the q91 candidate set (union over
     * bands of bucket mates) is monotone non-decreasing in `bands` —
-    * recall can only rise, the theorem the geometry fuzz pins. At
-    * (k=8, bands=4, bits=4) this reproduces the round-10 hardcoded
-    * geometry exactly, keeping the q91 row unchanged at defaults.
+    * recall can only rise, the theorem the geometry fuzz pins.
     * Strides with gcd(stride, k) > 1 can repeat a coordinate inside a
     * deep band (effective bits shrink — a weaker, never incorrect
     * band); the re-rank keeps every emitted pair exact regardless. */
@@ -1267,16 +1208,16 @@ object SimilarityQueries {
   /** q91 internals: (candidate-generated near-dup pairs, exhaustive
     * full-dimension sample ground truth) — split out so specs can
     * measure recall directly (the number the report folds into its
-    * boolean). */
-  private[graft] def pcaAnnInternals(embIn: DataFrame): (DataFrame, DataFrame) = {
+    * boolean) and at other band geometries. */
+  private[graft] def pcaAnnInternals(embIn: DataFrame, nBands: Int = PcaAnnBands,
+      nBits: Int = PcaAnnBits): (DataFrame, DataFrame) = {
     val s = embIn.sparkSession
     import s.implicits._
     val k = 8
     val emb = embIn.na.drop()
     val (mean, comps) = fitPca(emb.select($"embedding"), k)
     val signBits = pcaCoords(s, mean, comps).map(z => when(z >= 0, 1).otherwise(0))
-    // bands × bits sign-bit bands over the 8 principal coordinates
-    // (conf-driven, defaults 4 × 4 — the round-10 geometry exactly):
+    // bands × bits sign-bit bands over the 8 principal coordinates:
     // disjoint chunks first, then strided interleaves. Interleaved
     // bands reuse bits, so they are correlated with the disjoint ones
     // — weaker than independent bands but strictly more recall per
@@ -1285,7 +1226,6 @@ object SimilarityQueries {
     // candidate set only grows with `bands` — the monotonicity
     // theorem ExpressionsSpec fuzzes). "Spend more bands" is the
     // documented production answer at a hostile cosine boundary.
-    val (nBands, nBits) = pcaAnnGeometry(s)
     val bandCoords = bandCoordSets(k, nBands, nBits)
     def bandKey(b: Int): Column =
       bandCoords(b).zipWithIndex
@@ -1541,27 +1481,21 @@ object SimilarityQueries {
 
   // ---- q140: product quantization (PQ) ANN ------------------------
 
-  /** PQ geometry (conf-tunable): M subspaces × K' centroids each.
-    * Defaults: 64-dim fixture embeddings → 8 subspaces of 8 dims, 16
-    * codes per subspace — a vector compresses to 8 bytes (32× over
-    * float32), the Jégou/Douze/Schmid "Product Quantization for
-    * Nearest Neighbor Search" layout. Measured on the fixture's
-    * near-isotropic random embeddings (PQ's worst case) at sf0.1:
-    * m=4 → 66% audit recall at rerank 256; m=8 → 90%; m=16 → 95% at
-    * rerank 128 but ~3× the encode cost — m=8 is the default. */
-  private def pqM(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pq.m").map(_.toInt).getOrElse(8)
-  private def pqK(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pq.k").map(_.toInt).getOrElse(16)
-  /** ADC keeps this many candidates per query for the exact re-rank —
-    * THE recall dial (FAISS's `k_factor`): on near-isotropic data the
-    * short code is a coarse sieve, so re-rank depth must grow with
-    * how concentrated the distance distribution is. Measured at
-    * sf0.1 with the default m=8 geometry: depth 64 → 57.5% top-1
-    * audit recall, 128 → 73.8%, 256 → 90.0%;
-    * `spark.graft.pq.rerank` retunes it per deployment. */
-  private def pqRerank(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pq.rerank").map(_.toInt).getOrElse(256)
+  /** PQ geometry: M subspaces × K' centroids each. The 64-dim fixture
+    * embeddings split into 8 subspaces of 8 dims with 16 codes each,
+    * so a vector compresses to 8 bytes (32× over float32), the
+    * Jégou/Douze/Schmid "Product Quantization for Nearest Neighbor
+    * Search" layout. Measured on the fixture's near-isotropic random
+    * embeddings (PQ's worst case) at sf0.1: m=4 → 66% audit recall at
+    * rerank 256; m=8 → 90%; m=16 → 95% at rerank 128 but ~3× the
+    * encode cost. */
+  private val PqM = 8
+  private val PqK = 16
+  /** ADC keeps this many candidates per query for the exact re-rank,
+    * the recall side (FAISS's `k_factor`): on near-isotropic data the
+    * short code is a coarse sieve. Measured at sf0.1 with m=8: depth
+    * 64 → 57.5% top-1 audit recall, 128 → 73.8%, 256 → 90.0%. */
+  private val PqRerank = 256
 
   /** Driver-side per-subspace L2 k-means over the bounded trainer
     * sample (the q58 discipline: ≤256 vectors, deterministic init =
@@ -1573,23 +1507,22 @@ object SimilarityQueries {
     val sample: Array[Array[Float]] = Tables.embeddings(s, dir)
       .filter($"vec_id" < 256).orderBy($"vec_id")
       .select($"embedding").as[Array[Float]].collect()
-    val (mSub, kp0) = (pqM(s), pqK(s))
     require(sample.nonEmpty,
       "cannot train PQ codebooks on an empty embeddings corpus")
     // DEGRADE, don't refuse (r17 degenerate sweep): a sub-K' corpus
     // trains min(K', n) codewords per subspace — codes simply range
     // over fewer values; every real SF has n >= 256 so kp == K'
     // wherever an oracle prices this
-    val kp = math.min(kp0, sample.length)
+    val kp = math.min(PqK, sample.length)
     val dim = sample.head.length
-    require(dim % mSub == 0, s"embedding dim $dim not divisible by M=$mSub")
-    val sub = dim / mSub
+    require(dim % PqM == 0, s"embedding dim $dim not divisible by M=$PqM")
+    val sub = dim / PqM
     def sq(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
       acc
     }
-    Array.tabulate(mSub) { m =>
+    Array.tabulate(PqM) { m =>
       val pts = sample.map(v => Array.tabulate(sub)(i => v(m * sub + i).toDouble))
       var cent = pts.take(kp).map(_.clone)
       for (_ <- 0 until 5) {
@@ -1659,7 +1592,6 @@ object SimilarityQueries {
     * (n_queries, n_served, n_audited, n_audit_hits, codes_ok). */
   private[graft] def pqStats(s: SparkSession, dir: String): (Long, Long, Long, Long, Boolean) = {
     import s.implicits._
-    val PqRerank = pqRerank(s)
     val cb = pqCodebooks(s, dir)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     // materialize once: the encode feeds BOTH the ADC scan and the
@@ -1803,8 +1735,8 @@ object SimilarityQueries {
     *    served answer equals the PROBE-RESTRICTED brute force (exact
     *    L2 over every indexed vector in the probed cells, computed
     *    through a different plan: all-pairs + array_contains instead
-    *    of the cell equi-join) for ≥ the configured floor
-    *    (`spark.graft.ivfpq.recallFloor`, default 80%). Where the
+    *    of the cell equi-join) for ≥ [[IvfPqRecallFloor]]% of the
+    *    audited queries. Where the
     *    ADC sieve keeps fewer candidates than the probed cells hold,
     *    equality is exact (the sf0.01 regime); past that the sieve
     *    is the only loss channel, and the floor prices it;
@@ -1812,9 +1744,8 @@ object SimilarityQueries {
   def ivfPqServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (nQueries, nServed, nAudited, nHit) = ivfPqStats(s, dir)
-    val floor = ivfPqRecallFloor(s)
     Seq((nQueries, nServed == nQueries,
-        nAudited > 0 && nHit * 100L >= nAudited * floor, nAudited > 0))
+        nAudited > 0 && nHit * 100L >= nAudited * IvfPqRecallFloor, nAudited > 0))
       .toDF("n_queries", "all_answered", "restricted_recall_ok",
         "audit_nonempty")
   }
@@ -1912,7 +1843,7 @@ object SimilarityQueries {
           .reduce(_ + _))
       .groupBy($"q_id")
       .agg(graft.functions.TopKBy.top_k_by(-$"approx", $"vec_id",
-        pqRerank(s)).as("top"))
+        PqRerank).as("top"))
       .select($"q_id", explode($"top.tie").as("vec_id"))
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     val served = adc
@@ -1958,8 +1889,9 @@ object SimilarityQueries {
       |  true AS all_answered, $ivfAuditNonemptySql AS restricted_recall_ok,
       |  $ivfAuditNonemptySql AS audit_nonempty""".stripMargin
 
-  private def ivfPqRecallFloor(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.ivfpq.recallFloor").map(_.toInt).getOrElse(80)
+  /** Oracle-pinned percentage of audited IVF-PQ queries whose served
+    * answer must equal the probe-restricted brute force. */
+  private val IvfPqRecallFloor = 80
 
   /** q146: IVF-PQ INCREMENTAL UPSERT — the append side of the ANN
     * index lifecycle (build q144 / serve / APPEND here / delete
@@ -1997,9 +1929,8 @@ object SimilarityQueries {
     val nIndexed = s.table(tbl).count()
     val (nQ, nServed, nAudited, nHit, _) =
       ivfPqServeStats(s, dir, tbl, tombstones = None)
-    val floor = ivfPqRecallFloor(s)
     Seq((nQ, nIndexed, nServed == nQ,
-        nAudited > 0 && nHit * 100L >= nAudited * floor, nAudited > 0))
+        nAudited > 0 && nHit * 100L >= nAudited * IvfPqRecallFloor, nAudited > 0))
       .toDF("n_queries", "n_indexed", "all_answered",
         "restricted_recall_ok", "audit_nonempty")
   }
@@ -2030,9 +1961,8 @@ object SimilarityQueries {
     val nTomb = tombstones.count()
     val (nQ, nServed, nAudited, nHit, allLive) =
       ivfPqServeStats(s, dir, tbl, Some(tombstones))
-    val floor = ivfPqRecallFloor(s)
     Seq((nQ, nTomb, nServed == nQ, allLive,
-        nAudited > 0 && nHit * 100L >= nAudited * floor, nAudited > 0))
+        nAudited > 0 && nHit * 100L >= nAudited * IvfPqRecallFloor, nAudited > 0))
       .toDF("n_queries", "n_tombstoned", "all_answered",
         "no_tombstone_served", "restricted_recall_ok", "audit_nonempty")
   }
@@ -2068,9 +1998,8 @@ object SimilarityQueries {
     val nLive = s.table(tbl).count()
     val (nQ, nServed, nAudited, nHit, _) =
       ivfPqServeStats(s, dir, tbl, tombstones = None)
-    val floor = ivfPqRecallFloor(s)
     Seq((nQ, nLive, nServed == nQ,
-        nAudited > 0 && nHit * 100L >= nAudited * floor, nAudited > 0))
+        nAudited > 0 && nHit * 100L >= nAudited * IvfPqRecallFloor, nAudited > 0))
       .toDF("n_queries", "n_live", "all_answered",
         "restricted_recall_ok", "audit_nonempty")
   }

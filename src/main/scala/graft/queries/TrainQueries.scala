@@ -2479,14 +2479,14 @@ object TrainQueries {
     * `row_number() OVER (ORDER BY key)` funnels the corpus through
     * ONE task. This is the two-level construction instead (the
     * q67/q70/q85 pattern): (1) per-shard rank over
-    * `spark.graft.shuffle.shards` key-RANGE shards (shard = key div
+    * [[shuffleShards]] key-RANGE shards (shard = key div
     * ⌈p/shards⌉ — range, not hash, so shard order IS key order), (2)
     * shard row-counts → running offsets via a triangle join over the
     * ≤shards-row aggregate, (3) broadcast offsets back; ordinal =
     * offset + local rank − 1. Identical to the oracle's single
     * window at ANY shard count (the two-level construction is
-    * shard-count invariant — pinned by TrainOpsSpec across
-    * {1, 7, 64, 256}); tune the conf to the cluster's parallelism. */
+    * shard-count invariant — pinned by TrainOpsSpec across shuffle-
+    * partition counts {1, 7, 256}). */
   def shuffleOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     shuffleOrderOver(Tables.documents(s, dir).select($"doc_id"))
@@ -2601,20 +2601,19 @@ object TrainQueries {
        |    AS cum_tokens
        |FROM binned ORDER BY bin""".stripMargin
 
+  /** Second-level shard count for the global-ordinal constructions
+    * (q95, q105, q117, q119, q154): the session's
+    * `spark.sql.shuffle.partitions`, so the per-shard rank stage runs
+    * one task per configured slot. Any count yields identical
+    * ordinals, since range shards compose order (TrainOpsSpec sweeps
+    * the shuffle-partition count). */
+  private[graft] def shuffleShards(s: SparkSession): Int =
+    s.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** The q95 pipeline over any (doc_id) frame — injectable so the
     * permutation theorem (ordinals are exactly 0..n−1; keys collide
     * never below p) has a spec on a corpus big enough to populate
-    * every shard (round-7 rule). */
-  /** `spark.graft.shuffle.shards` (default 64): second-level shard
-    * count for the global-ordinal construction — the parallelism of
-    * the per-shard rank stage. Any value yields IDENTICAL ordinals
-    * (range shards compose order); pick ≈ the cluster's task slots. */
-  private[graft] def shuffleShards(s: SparkSession): Int = {
-    val n = s.conf.getOption("spark.graft.shuffle.shards").map(_.toInt).getOrElse(64)
-    require(n >= 1, s"spark.graft.shuffle.shards must be >= 1, got $n")
-    n
-  }
-
+    * every shard. */
   private[graft] def shuffleOrderOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -2681,8 +2680,8 @@ object TrainQueries {
     * offsets from an exclusive prefix sum over the compacted
     * ≤ bins·shards-row aggregate in one deliberate task, broadcast
     * back. No corpus-wide window, no single-task sort, and the same
-    * shard-count invariance as q95 (any `spark.graft.shuffle.shards`
-    * yields identical positions — range shards compose order). */
+    * shard-count invariance as q95 (any [[shuffleShards]] yields
+    * identical positions — range shards compose order). */
   def curriculumOrder(s: SparkSession, dir: String, binWidth: Long = 8L): DataFrame = {
     import s.implicits._
     val p = 1000003L

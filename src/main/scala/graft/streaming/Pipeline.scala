@@ -269,10 +269,14 @@ object Pipeline {
       .foreachBatch(body)
 
   /** K2+K3 sinks via one transactional foreachBatch (replacing the
-    * fire-and-forget thread fan-out): parquet `tweets` table
-    * (idempotent per-batch dedup = INSERT OR IGNORE) + the *intended*
-    * hourly-bucketed files (C12 "yyyyMMdd_HH" — fixing the %h
-    * month-name bug at twitter_streamer.py:205).
+    * fire-and-forget thread fan-out): parquet `tweets` table + the
+    * *intended* hourly-bucketed files (C12 "yyyyMMdd_HH" — fixing the
+    * %h month-name bug at twitter_streamer.py:205).
+    *
+    * Precondition: `enriched` holds each `tweet_id` at most once per
+    * micro-batch, as [[dedup]]'s `dropDuplicatesWithinWatermark`
+    * output does; the body writes each batch as it comes, with no
+    * per-batch dedup of its own.
     *
     * Effectively-once: the parquet sink partitions by `_batch_id` and
     * dynamically OVERWRITES that one partition, so a batch replayed
@@ -287,7 +291,7 @@ object Pipeline {
       // option (not session conf — a session-global set would race
       // concurrent queries on the shared SparkSession and leak past
       // this batch).
-      val b = dedupBatch(batch)
+      val b = batch
         .withColumn("date_hour", date_format(col("processed_at"), "yyyyMMdd_HH"))
         .persist()
       try {
@@ -511,20 +515,12 @@ object Pipeline {
     out.write.mode("overwrite").option("header", "true").csv(path)
   }
 
-  /** End-to-end streaming job: source → enrich → dedup → sinks.
-    * K5 console/progress reporting comes free from the streaming UI /
-    * StreamingQueryListener. */
-  def run(source: DataFrame, tweetsPath: String, jsonPath: String,
-          checkpoint: String, trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-  : StreamingQuery = {
-    val enriched = dedup(enrich(project(fromJsonLines(source))))
-    writer(enriched, tweetsPath, jsonPath, checkpoint, trigger).start()
-  }
-
-  /** [[run]] plus a quarantine sink: malformed/id-less lines stream to
+  /** End-to-end streaming job: source → enrich → [[dedup]] → sinks,
+    * plus a quarantine sink: malformed/id-less lines stream to
     * `quarantinePath` as raw text for inspection (its own checkpoint —
     * the two queries progress independently over the same source).
-    * Returns (main, quarantine) queries. */
+    * K5 console/progress reporting comes free from the streaming UI /
+    * StreamingQueryListener. Returns (main, quarantine) queries. */
   def runWithQuarantine(source: DataFrame, tweetsPath: String,
                         jsonPath: String, quarantinePath: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime("60 seconds"))

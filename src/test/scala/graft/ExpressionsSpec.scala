@@ -187,22 +187,6 @@ class ExpressionsSpec extends SparkSpec {
       assert(cosines.sameElements(cosines.sortBy(-(_: Double))), "ranks must follow cosine desc")
     }
   }
-  test("IVF mllib trainer (spark.graft.ivf.trainer=mllib) keeps every index theorem green") {
-    // the distributed-KMeans swap promised for 100 TB: identical
-    // downstream pipeline, only the centroid source changes. The q58
-    // validated form folds the theorems (all points answered, rerank
-    // exactness within probed cells, recall floor vs brute force)
-    // into booleans — they must hold for EITHER trainer.
-    spark.conf.set("spark.graft.ivf.trainer", "mllib")
-    try {
-      val r = SimilarityQueries.ivfNnValidated(spark, sf).head()
-      val names = r.schema.fieldNames.zipWithIndex.toMap
-      assert(r.getLong(names("n_points")) > 0)
-      Seq("all_answered", "rerank_exact", "recall_ok").foreach { f =>
-        assert(r.getBoolean(names(f)), s"$f must hold under the mllib trainer")
-      }
-    } finally spark.conf.unset("spark.graft.ivf.trainer")
-  }
   test("IVF k/nprobe confs: theorem suite holds at a second (k, nprobe) setting") {
     // spark.graft.ivf.{k,nprobe} are the knobs an operator actually
     // turns at 100 TB; the q58 theorems (all answered, rerank exact
@@ -446,8 +430,8 @@ class ExpressionsSpec extends SparkSpec {
 
   test("PCA-ANN band geometry: prefix-stable sequence, defaults pinned") {
     import SimilarityQueries.bandCoordSets
-    // the round-10 hardcoded geometry IS the default — the q91 row
-    // cannot move when nothing is configured
+    // the q91 geometry (PcaAnnBands x PcaAnnBits) is pinned
+    assert((SimilarityQueries.PcaAnnBands, SimilarityQueries.PcaAnnBits) == ((4, 4)))
     assert(bandCoordSets(8, 4, 4) ==
       Seq(Seq(0, 1, 2, 3), Seq(4, 5, 6, 7), Seq(0, 2, 4, 6), Seq(1, 3, 5, 7)))
     // prefix stability is the monotonicity theorem's whole substance:
@@ -462,12 +446,12 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("PCA-ANN (q91): recall non-decreasing in bands at fixed bits (conf fuzz)") {
-    // the q88 CMS precedent: the conf knob ships with its theorem. A
+    // the geometry is passed as arguments to pcaAnnInternals. A
     // seeded near-dup corpus (noisy copies, not exact ones, so bands
     // genuinely disagree) is indexed at growing band counts; the
     // candidate-pair set — and hence recall — must only grow. Only
     // the bands axis carries a theorem; bits is exercised at two
-    // settings per the verdict's >=2-geometries bar.
+    // settings.
     val rnd = new scala.util.Random(23)
     val base = (0 until 60).map(i => (i * 5L, Array.fill(16)(rnd.nextGaussian().toFloat)))
     val noisy = base.map { case (id, v) =>
@@ -475,20 +459,16 @@ class ExpressionsSpec extends SparkSpec {
     }
     val df = (base ++ noisy).toDF("vec_id", "embedding")
     for (bits <- Seq(2, 4)) {
-      spark.conf.set("spark.graft.pcaann.bits", bits.toString)
       var prev = Set.empty[(Long, Long)]
       for (bands <- Seq(1, 2, 4, 8)) {
-        spark.conf.set("spark.graft.pcaann.bands", bands.toString)
-        val (pairs, _) = SimilarityQueries.pcaAnnInternals(df)
+        val (pairs, _) = SimilarityQueries.pcaAnnInternals(df, bands, bits)
         val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(prev.subsetOf(got),
           s"bits=$bits: candidates must not shrink going to bands=$bands " +
             s"(lost ${(prev -- got).take(3)})")
         prev = got
       }
-      spark.conf.unset("spark.graft.pcaann.bands")
     }
-    spark.conf.unset("spark.graft.pcaann.bits")
   }
 
   test("sentiment/langid expressions codegen for real (no silent interpreted fallback)") {

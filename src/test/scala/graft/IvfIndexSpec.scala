@@ -244,10 +244,6 @@ class IvfIndexSpec extends SparkSpec {
     // priced fixtures resolve to the sample trainer (oracle pins stay
     // bit-identical) …
     assert(ivfTrainer(spark, sf) == "sample")
-    // … and an explicit conf always wins the dispatch
-    spark.conf.set("spark.graft.ivf.trainer", "mllib")
-    try assert(ivfTrainer(spark, sf) == "mllib")
-    finally spark.conf.unset("spark.graft.ivf.trainer")
     // 8 tight one-hot clusters, 10,368 vectors (the ExpressionsSpec
     // auto-k fixture shape) — big enough to serve k=520 sensibly
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_handoff").toString
@@ -262,7 +258,7 @@ class IvfIndexSpec extends SparkSpec {
     try {
       assert(ivfK(spark, dir) == 520)
       assert(ivfTrainer(spark, dir) == "mllib",
-        "k>512 with no explicit trainer must dispatch to the distributed trainer")
+        "k>512 must dispatch to the distributed trainer")
       val r = ivfNnValidated(spark, dir).head()
       val names = r.schema.fieldNames.zipWithIndex.toMap
       assert(r.getLong(names("n_points")) == 10368L)

@@ -241,27 +241,19 @@ class SketchSpec extends SparkSpec {
       .select(cms_query($"cms.table", lit(null).cast("string"), 512)).head()
     assert(nullProbe.isNullAt(0), "null probe must estimate NULL")
   }
-  test("cms q88 report honors spark.graft.cms.{width,depth} (booleans hold off-default)") {
-    import org.apache.spark.sql.functions._
+  test("cms q88 report at an off-default width/depth (booleans hold at 256 x 2)") {
     val ev = spark.range(2000).selectExpr(
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS event_type",
       "id % 40 AS user_id")
-    def report() = graft.queries.EventQueries.cmsFrequencyOver(ev)
+    def report(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => r.getString(0) ->
         (r.getLong(2), r.getBoolean(3), r.getBoolean(4))).toMap
-    val atDefault = report()
-    try {
-      spark.conf.set("spark.graft.cms.width", "256")
-      spark.conf.set("spark.graft.cms.depth", "2")
-      val tuned = report()
-      assert(tuned == atDefault,
-        s"collision-free at both settings -> identical reports: $tuned vs $atDefault")
-      // each type owns one id-parity -> 20 distinct users per type
-      assert(tuned.values.forall { case (n, over, within) => n == 20L && over && within })
-    } finally {
-      spark.conf.unset("spark.graft.cms.width")
-      spark.conf.unset("spark.graft.cms.depth")
-    }
+    val atDefault = report(graft.queries.EventQueries.cmsFrequencyOver(ev))
+    val tuned = report(graft.queries.EventQueries.cmsFrequencyOver(ev, width = 256, depth = 2))
+    assert(tuned == atDefault,
+      s"collision-free at both settings -> identical reports: $tuned vs $atDefault")
+    // each type owns one id-parity -> 20 distinct users per type
+    assert(tuned.values.forall { case (n, over, within) => n == 20L && over && within })
   }
 
   test("cms q88 report keeps an all-NULL-user group (vacuous-truth row, not a drop)") {
@@ -346,7 +338,7 @@ class SketchSpec extends SparkSpec {
       math.floor(math.pow(rnd.nextDouble(), 3) * 600).toInt.toString)
     val exact = stream.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     // ε (width): total overestimate mass must shrink as width grows —
-    // the tradeoff the spark.graft.cms.width conf buys
+    // the tradeoff the sketch width buys
     val errByWidth = Seq(64, 256, 1024).map { w =>
       w -> cmsEstimates(stream, w, 4).map { case (k, e) => e - exact(k) }.sum
     }

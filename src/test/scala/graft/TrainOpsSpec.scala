@@ -11,6 +11,15 @@ import graft.queries.{TrainQueries, TextQueries}
 class TrainOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` (the shard count
+    * of the global-ordinal constructions) at `n`, then restores it. */
+  private def withShufflePartitions(n: Int)(body: => Unit): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prior)
+  }
+
   // ---- q69 stratified sampling ----
 
   test("stratified sample is deterministic and a subset of the input") {
@@ -337,24 +346,19 @@ class TrainOpsSpec extends SparkSpec {
     }
   }
 
-  test("q95 ordinal assignment is shard-count INVARIANT (conf wired, {1,7,64,256})") {
+  test("q95 ordinal assignment is shard-count INVARIANT (shuffle partitions {1,7,256})") {
     // the two-level construction composes key-range shards in key
-    // order, so the global ordinal cannot depend on the shard count —
-    // the theorem that makes spark.graft.shuffle.shards a pure
-    // parallelism knob (VERDICT r12 #4)
+    // order, so the global ordinal cannot depend on the shard count,
+    // which follows spark.sql.shuffle.partitions
     val docs = spark.range(5000L).select(($"id" * 7L).as("doc_id"))
     def ordinals(): Map[Long, Long] =
       TrainQueries.shuffleOrderOver(docs).as[(Long, Long, Long)]
         .collect().map(o => o._1 -> o._3).toMap
-    val confKey = "spark.graft.shuffle.shards"
-    val base = ordinals() // default 64
-    try {
-      for (n <- Seq(1, 7, 256)) {
-        spark.conf.set(confKey, n.toString)
-        assert(TrainQueries.shuffleShards(spark) == n)
-        assert(ordinals() == base, s"ordinals must not depend on shards=$n")
-      }
-    } finally spark.conf.unset(confKey)
+    val base = ordinals() // the test session's 4 partitions
+    for (n <- Seq(1, 7, 256)) withShufflePartitions(n) {
+      assert(TrainQueries.shuffleShards(spark) == n)
+      assert(ordinals() == base, s"ordinals must not depend on shards=$n")
+    }
     // and the run output carries every doc exactly once
     assert(base.size == 5000)
   }
@@ -502,13 +506,12 @@ class TrainOpsSpec extends SparkSpec {
       "cum must be the exact prefix sum of new_tokens")
     assert(cums.last == vocab)
     // shard-count invariance rides on q95's construction: a different
-    // shard conf must not move any bin boundary
-    spark.conf.set("spark.graft.shuffle.shards", "7")
-    try {
+    // shuffle-partition count must not move any bin boundary
+    withShufflePartitions(7) {
       val again = TrainQueries.vocabGrowth(spark, sf)
         .as[(Long, Long, Long)].collect().toSeq
       assert(again == out, "bin curve must be shard-count invariant")
-    } finally spark.conf.unset("spark.graft.shuffle.shards")
+    }
   }
 
   test("q105 curriculum order: exhaustive 0..n-1 positions, bins descend, shard-invariant") {
@@ -526,16 +529,11 @@ class TrainOpsSpec extends SparkSpec {
     case _ => ()
     }
     // identical positions at any shard count (range shards compose order)
-    val conf = "spark.graft.shuffle.shards"
-    val prior = spark.conf.getOption(conf)
-    try {
-      for (shards <- Seq("1", "7")) {
-        spark.conf.set(conf, shards)
-        val again = TrainQueries.curriculumOrder(spark, sf)
-          .select($"doc_id", $"curriculum_pos").as[(Long, Long)].collect().toMap
-        assert(again == rows.map(r => (r._4, r._1)).toMap, s"shards=$shards must not change positions")
-      }
-    } finally { prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _)) }
+    for (shards <- Seq(1, 7)) withShufflePartitions(shards) {
+      val again = TrainQueries.curriculumOrder(spark, sf)
+        .select($"doc_id", $"curriculum_pos").as[(Long, Long)].collect().toMap
+      assert(again == rows.map(r => (r._4, r._1)).toMap, s"shards=$shards must not change positions")
+    }
   }
 
   test("q108 chunk dedup: one keeper per fingerprint, keeper is the group minimum, non-vacuous") {
