@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
 /** Byte-pair-encoding (BPE) subword tokenization — the token-budget
-  * currency a real training pipeline ships (VERDICT r12 #1). The
+  * currency a real training pipeline ships. The
   * reference has no tokenizer at all (its Python services count
   * nothing below whitespace words), so the semantics here are the
   * classic published BPE (Sennrich et al. 2016, "Neural Machine
@@ -107,10 +107,10 @@ object Bpe {
     out
   }
 
-  /** The encode loop over CUT POINTS instead of string buffers (r21,
-    * guide §1.2 per-task work): a word's token sequence is always a
-    * partition of the word into contiguous substrings, so the whole
-    * state is the ascending cut-position array — token i is
+  /** The encode loop over CUT POINTS instead of string buffers: a
+    * word's token sequence is always a partition of the word into
+    * contiguous substrings, so the whole state is the ascending
+    * cut-position array — token i is
     * word[cuts(i), cuts(i+1)). One merge pass compares each token to
     * (l, r) via regionMatches and drops the cut between a matching
     * adjacent pair, left to right — EXACTLY [[mergePass]] on the
@@ -164,7 +164,7 @@ object Bpe {
     * iff its FIRST char is an ASCII word char (the alternation
     * guarantees all-word-chars or a single non-word char) — the same
     * predicate the former full `\w+` re-match decided, without a
-    * second regex pass per pre-token (r21). */
+    * second regex pass per pre-token. */
   @inline private def isWordToken(p: String): Boolean = {
     val c = p.charAt(0)
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||

@@ -19,7 +19,7 @@ import scala.util.hashing.MurmurHash3
   * sketches are mergeable across partitions/days/tables, so daily
   * per-key sketches can be stored and re-aggregated without
   * re-scanning raw data (the map-side combine IS a sketch merge).
-  * [[HllSketchBytes]] / [[HllUnionDistinct]] (round 12) realize the
+  * [[HllSketchBytes]] / [[HllUnionDistinct]] realize the
   * store/merge halves of that lifecycle as SQL-callable aggregates;
   * the register representation is shared, so union-of-stored equals
   * one-pass-direct BIT-exactly (register max is associative,
@@ -149,7 +149,7 @@ case class HllUnionDistinct(
 object HllSketch {
 
   /** Hash native representations — no per-row toString boxing in the
-    * hot aggregate path (VERDICT r01 minor #6). fmix64 is a bijective
+    * hot aggregate path. fmix64 is a bijective
     * avalanche, standard for integer-keyed HLL; byte strings get the
     * two-seed murmur combination. */
   private def hashOf(v: Any): Long = v match {

@@ -11,10 +11,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The text analyzers (C7 VADER, C8 TextBlob, C9 composite, plus the
-  * LangId heuristic) as native CODEGEN'D Catalyst expressions
-  * (VERDICT r14 #4 — these were CodegenFallback / row UDFs before
-  * round 15, which broke the whole-stage-codegen span around every
-  * per-doc scoring query).
+  * LangId heuristic) as native CODEGEN'D Catalyst expressions (a
+  * CodegenFallback / row UDF would break the whole-stage-codegen span
+  * around every per-doc scoring query).
   *
   * The generated Java is ONE static call into [[SentimentCodegen]] —
   * the analyzer loops live in compiled Scala either way, so codegen

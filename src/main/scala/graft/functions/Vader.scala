@@ -81,7 +81,7 @@ object Vader extends Serializable {
     "cry" -> -2.2, "crying" -> -2.2, "fear" -> -2.2, "afraid" -> -2.0,
     "worried" -> -1.6, "worry" -> -1.9, "risk" -> -1.1, "danger" -> -2.4,
     "dead" -> -3.3, "death" -> -2.9, "kill" -> -3.7, "war" -> -2.9,
-    // --- round-2 coverage expansion (VERDICT r01 "What's missing" #3):
+    // --- coverage expansion:
     // the next few hundred most frequent social-media sentiment words,
     // valences on the same −4..+4 scale, magnitudes consistent with
     // the published lexicon's neighborhoods. Entries above are kept

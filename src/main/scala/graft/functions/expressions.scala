@@ -5,22 +5,40 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.hashing.MurmurHash3
 
-/** Custom Catalyst expressions for the similarity/dedup operators the
-  * built-in function set can't express efficiently (SURVEY §7 north
-  * star; preference tier (b) of the build rules: native Expression
-  * over UDF).
+/** Custom Catalyst expressions for the similarity, dedup and text
+  * operators the built-in function set cannot express efficiently
+  * (native Expression over UDF).
   *
-  * All three are fully codegen'd (`doGenCode`) — they stay inside
-  * WholeStageCodegen with no boxing and no per-row virtual-call
-  * fallback (verified under spark.sql.codegen.factoryMode=CODEGEN_ONLY).
+  * Each expression has ONE kernel: a JVM-static function in its
+  * companion object (or in [[MinHashUtil]]). The interpreted path
+  * (`nullSafeEval`/`eval`) and the generated code (`doGenCode`) both
+  * call it, so the generated Java is a single static call and stays
+  * inside whole-stage codegen. A kernel's name must not collide with an
+  * inherited `Expression` member such as `eval`: scalac emits no static
+  * forwarder for a colliding name and the generated call would not
+  * compile. `CodegenBridgeSpec` compiles every expression through
+  * `GenerateUnsafeProjection` and matches compiled output to
+  * interpreted output; `CodegenLintSpec` keeps hand-written Java loops
+  * (`ctx.freshName` locals) out of `src/main`.
   */
+
+/** Generated Java for a kernel that returns its result boxed, `null`
+  * meaning SQL NULL: one call, then the unbox into `ev`. */
+private[functions] object BoxedResult {
+  def assign(ev: ExprCode, box: String, call: String): String = {
+    val r = s"${ev.value}Boxed"
+    s"""$box $r = $call;
+       |${ev.isNull} = $r == null;
+       |if (!${ev.isNull}) ${ev.value} = $r;""".stripMargin
+  }
+}
 
 /** cosine(a, b) over two array<float|double> columns (mixed widths
   * allowed), accumulated in double, evaluated left-to-right.
@@ -31,7 +49,8 @@ import scala.util.hashing.MurmurHash3
   * dominated the q45/q47 pair loops at sf0.1). Numerically identical
   * to the DuckDB oracle's list_cosine_similarity on ::DOUBLE[] casts
   * (both are sequential double sums; verified to 1e-6 by the q45
-  * oracle). Null or zero-norm input → null. */
+  * oracle). Null input, a null element, a length mismatch or a zero
+  * norm → null. */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -54,74 +73,44 @@ case class CosineSimilarity(left: Expression, right: Expression)
   @transient private lazy val rightIsFloat =
     right.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // length mismatch or null elements → null (DuckDB errors on the
-    // former and propagates NULL on the latter; null is our safe
-    // common denominator — never a silently-truncated similarity)
-    if (x.numElements() != y.numElements()) return null
+  override def nullSafeEval(a: Any, b: Any): Any = CosineSimilarity.cosine(
+    a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftIsFloat, rightIsFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => BoxedResult.assign(ev, "Double",
+      s"graft.functions.CosineSimilarity.cosine($x, $y, $leftIsFloat, $rightIsFloat)"))
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+  /** The kernel; `null` is SQL NULL. A length mismatch or a null
+    * element is null (DuckDB errors on the former and propagates NULL
+    * on the latter; null is the safe common denominator, never a
+    * silently-truncated similarity). */
+  def cosine(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): java.lang.Double = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = if (leftIsFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rightIsFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      val xi = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yi = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xi * yi; nx += xi * xi; ny += yi * yi
       i += 1
     }
     if (nx == 0.0 || ny == 0.0) null
     else java.lang.Double.valueOf(dot / (math.sqrt(nx) * math.sqrt(ny)))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getX = if (leftIsFloat) "getFloat" else "getDouble"
-    val getY = if (rightIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $x.numElements();
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $n && !$anyNull; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $anyNull = true; }
-         |    else {
-         |      double $xi = (double) $x.$getX($i);
-         |      double $yi = (double) $y.$getY($i);
-         |      $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |    }
-         |  }
-         |  if ($anyNull || $nx == 0.0 || $ny == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (Math.sqrt($nx) * Math.sqrt($ny));
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Squared Euclidean distance between two float/double arrays —
   * [[CosineSimilarity]]'s L2 sibling (same float-native reads, same
-  * sequential double accumulation, same null/length rules). Added for
-  * the q140 PQ audit/re-rank path: the zip_with+aggregate HOF form
-  * evaluates interpreted per element, which dominated the O(audit·n)
-  * brute-force stage. */
+  * sequential double accumulation, same null/length rules). Used by
+  * the q140 PQ audit/re-rank path, where the zip_with+aggregate HOF
+  * form evaluated interpreted per element. */
 case class SquaredL2(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -144,59 +133,37 @@ case class SquaredL2(left: Expression, right: Expression)
   @transient private lazy val rightIsFloat =
     right.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = if (leftIsFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rightIsFloat) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xi - yi
-      acc += d * d
-      i += 1
-    }
-    java.lang.Double.valueOf(acc)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any = SquaredL2.squaredL2(
+    a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftIsFloat, rightIsFloat)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getX = if (leftIsFloat) "getFloat" else "getDouble"
-    val getY = if (rightIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $x.numElements();
-         |  double $acc = 0.0;
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $n && !$anyNull; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $anyNull = true; }
-         |    else {
-         |      double $d = (double) $x.$getX($i) - (double) $y.$getY($i);
-         |      $acc += $d * $d;
-         |    }
-         |  }
-         |  if ($anyNull) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => BoxedResult.assign(ev, "Double",
+      s"graft.functions.SquaredL2.squaredL2($x, $y, $leftIsFloat, $rightIsFloat)"))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-/** JVM-static hashing helpers shared by the interpreted and
+object SquaredL2 {
+  /** The kernel; `null` (a length mismatch or a null element) is SQL
+    * NULL. */
+  def squaredL2(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val d = (if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)) -
+        (if (yFloat) y.getFloat(i).toDouble else y.getDouble(i))
+      acc += d * d
+      i += 1
+    }
+    java.lang.Double.valueOf(acc)
+  }
+}
+
+/** JVM-static hashing kernels and helpers shared by the interpreted and
   * generated-code paths (Scala object methods surface as Java static
   * forwarders, callable from Janino-compiled codegen). */
 object MinHashUtil {
@@ -245,6 +212,39 @@ object MinHashUtil {
     (h1 << 32) | h2
   }
 
+  /** SimHash's per-hash step: each of the 64 bits of `h` votes ±1. */
+  private def vote(votes: Array[Int], h: Long): Unit = {
+    var b = 0
+    while (b < 64) {
+      if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+      b += 1
+    }
+  }
+
+  /** The fingerprint of a vote vector: bit b set iff its vote is > 0. */
+  private def signOf(votes: Array[Int]): Long = {
+    var fp = 0L
+    var b = 0
+    while (b < 64) {
+      if (votes(b) > 0) fp |= (1L << b)
+      b += 1
+    }
+    fp
+  }
+
+  /** [[SimHash64]]'s kernel: every non-null token's [[tokenHash64]]
+    * votes; null tokens are skipped. */
+  def simhashTokens(arr: ArrayData, seed: Int): Long = {
+    val votes = new Array[Int](64)
+    val n = arr.numElements()
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) vote(votes, tokenHash64(arr.getUTF8String(i), seed))
+      i += 1
+    }
+    signOf(votes)
+  }
+
   /** [[SimHashCharGrams]]'s kernel: the 64-bit SimHash over character
     * 4-grams of `s`, computed in one pass with zero per-gram
     * allocation. Value-identical (fuzz-pinned) to
@@ -275,21 +275,10 @@ object MinHashUtil {
     val nG = nChars - 3
     var g = 0
     while (g < nG) {
-      val h = rangeHash64(s, offs(g), offs(g + 4) - offs(g), seed)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
+      vote(votes, rangeHash64(s, offs(g), offs(g + 4) - offs(g), seed))
       g += 1
     }
-    var fp = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) fp |= (1L << b)
-      b += 1
-    }
-    fp
+    signOf(votes)
   }
 
   /** (a_i, b_i) interleaved, derived deterministically from the seed. */
@@ -317,6 +306,51 @@ object MinHashUtil {
     v ^= v >>> 33
     v
   }
+
+  /** [[MinHashSignature]]'s kernel: the k = `coefs.length / 2` minima
+    * over the document's `n`-token shingles. A shingle containing a
+    * NULL token is SKIPPED, not hashed with a sentinel: a sentinel
+    * would make any two documents sharing a null-bearing window look
+    * identical in that shingle and deflate their MinHash distance.
+    * Unreachable from split()-derived tokens (containsNull = false);
+    * it keeps the contract on nullable arrays. */
+  def signature(arr: ArrayData, n: Int, seed: Int, coefs: Array[Long]): ArrayData = {
+    val k = coefs.length / 2
+    val nTok = arr.numElements()
+    val mins = Array.fill(k)(Long.MaxValue)
+    // token hashes, one murmur pass per token
+    val th = new Array[Long](nTok)
+    val nullT = new Array[Boolean](nTok)
+    var i = 0
+    while (i < nTok) {
+      if (arr.isNullAt(i)) nullT(i) = true else th(i) = tokenHash(arr.getUTF8String(i), seed)
+      i += 1
+    }
+    val width = if (nTok < n) nTok else n
+    val nShingles = if (nTok == 0) 0 else nTok - width + 1
+    var s = 0
+    while (s < nShingles) {
+      var acc = 0L
+      var hasNull = false
+      var w = 0
+      while (w < width) {
+        if (nullT(s + w)) hasNull = true
+        acc = acc * 0x100000001b3L ^ th(s + w)
+        w += 1
+      }
+      if (!hasNull) {
+        val x = fmix64(acc) & 0xffffffffL
+        var j = 0
+        while (j < k) {
+          val v = (coefs(2 * j) * x + coefs(2 * j + 1)) % Prime
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
+      }
+      s += 1
+    }
+    new GenericArrayData(mins)
+  }
 }
 
 /** MinHash signature with FUSED shingling: array<string> tokens →
@@ -336,9 +370,7 @@ object MinHashUtil {
   *
   * Shorter-than-n documents hash as one whole-document shingle (same
   * semantics as the string-shingling they replace). Empty input →
-  * signature of Long.MaxValue. Fully codegen'd (`doGenCode`) — the
-  * signature projection ahead of the LSH shuffle stays in
-  * WholeStageCodegen. */
+  * signature of Long.MaxValue. Kernel: [[MinHashUtil.signature]]. */
 case class MinHashSignature(child: Expression, n: Int, k: Int, seed: Int)
     extends UnaryExpression {
   require(n >= 1 && k >= 1, "shingle width and signature size must be positive")
@@ -353,89 +385,13 @@ case class MinHashSignature(child: Expression, n: Int, k: Int, seed: Int)
 
   @transient private lazy val coefs: Array[Long] = MinHashUtil.coefficients(k, seed)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val nTok = arr.numElements()
-    val mins = Array.fill(k)(Long.MaxValue)
-    // token hashes, one murmur pass per token; shingles containing a
-    // NULL token are SKIPPED (not hashed with a sentinel — a sentinel
-    // would make any two documents sharing a null-bearing window look
-    // identical in that shingle and deflate their MinHash distance).
-    // Unreachable from split()-derived tokens (containsNull = false);
-    // this preserves the expression's public contract on nullable
-    // arrays.
-    val th = new Array[Long](nTok)
-    val nullT = new Array[Boolean](nTok)
-    var i = 0
-    while (i < nTok) {
-      val t = arr.getUTF8String(i)
-      if (t == null) nullT(i) = true else th(i) = MinHashUtil.tokenHash(t, seed)
-      i += 1
-    }
-    val width = if (nTok < n) nTok else n
-    val nShingles = if (nTok == 0) 0 else nTok - width + 1
-    var s = 0
-    while (s < nShingles) {
-      var acc = 0L
-      var hasNull = false
-      var w = 0
-      while (w < width) {
-        if (nullT(s + w)) hasNull = true
-        acc = acc * 0x100000001b3L ^ th(s + w)
-        w += 1
-      }
-      if (!hasNull) {
-        val x = MinHashUtil.fmix64(acc) & 0xffffffffL
-        var j = 0
-        while (j < k) {
-          val v = (coefs(2 * j) * x + coefs(2 * j + 1)) % MinHashUtil.Prime
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      s += 1
-    }
-    new GenericArrayData(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashUtil.signature(input.asInstanceOf[ArrayData], n, seed, coefs)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val coefsRef = ctx.addReferenceObj("coefs", coefs, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val nTok = ctx.freshName("nTok"); val mins = ctx.freshName("mins")
-      val th = ctx.freshName("th"); val width = ctx.freshName("width")
-      val nSh = ctx.freshName("nSh"); val sIdx = ctx.freshName("s")
-      val acc = ctx.freshName("acc"); val w = ctx.freshName("w")
-      val x = ctx.freshName("x"); val v = ctx.freshName("v")
-      s"""
-         |int $nTok = $arr.numElements();
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |long[] $th = new long[$nTok];
-         |boolean[] ${th}_null = new boolean[$nTok];
-         |for (int $i = 0; $i < $nTok; $i++) {
-         |  if ($arr.isNullAt($i)) { ${th}_null[$i] = true; }
-         |  else { $th[$i] = graft.functions.MinHashUtil.tokenHash($arr.getUTF8String($i), $seed); }
-         |}
-         |int $width = $nTok < $n ? $nTok : $n;
-         |int $nSh = $nTok == 0 ? 0 : $nTok - $width + 1;
-         |for (int $sIdx = 0; $sIdx < $nSh; $sIdx++) {
-         |  long $acc = 0L;
-         |  boolean ${acc}_skip = false;
-         |  for (int $w = 0; $w < $width; $w++) {
-         |    if (${th}_null[$sIdx + $w]) ${acc}_skip = true;
-         |    $acc = $acc * 0x100000001b3L ^ $th[$sIdx + $w];
-         |  }
-         |  if (${acc}_skip) continue;
-         |  long $x = graft.functions.MinHashUtil.fmix64($acc) & 0xffffffffL;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = ($coefsRef[2 * $j] * $x + $coefsRef[2 * $j + 1]) % ${MinHashUtil.Prime}L;
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.MinHashUtil.signature($c, $n, $seed, $coefsRef)")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -443,8 +399,8 @@ case class MinHashSignature(child: Expression, n: Int, k: Int, seed: Int)
 
 /** 64-bit SimHash (Charikar 2002) over array<string> tokens: each
   * token hashes to 64 bits; bit positions vote ±1; the sign vector is
-  * the fingerprint. Near-dups have small Hamming distance. Fully
-  * codegen'd like [[MinHashSignature]]. */
+  * the fingerprint. Near-dups have small Hamming distance. Kernel:
+  * [[MinHashUtil.simhashTokens]]. */
 case class SimHash64(child: Expression, seed: Int)
     extends UnaryExpression {
 
@@ -456,71 +412,25 @@ case class SimHash64(child: Expression, seed: Int)
       s"simhash64 requires array<string> tokens, got ${other.sql}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val t = arr.getUTF8String(i)
-      if (t != null) {
-        val h = MinHashUtil.tokenHash64(t, seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) fp |= (1L << b)
-      b += 1
-    }
-    java.lang.Long.valueOf(fp)
-  }
+  override def nullSafeEval(input: Any): Any =
+    java.lang.Long.valueOf(MinHashUtil.simhashTokens(input.asInstanceOf[ArrayData], seed))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i"); val b = ctx.freshName("b")
-      val n = ctx.freshName("n"); val votes = ctx.freshName("votes")
-      val h = ctx.freshName("h"); val fp = ctx.freshName("fp")
-      s"""
-         |int $n = $arr.numElements();
-         |int[] $votes = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    long $h = graft.functions.MinHashUtil.tokenHash64($arr.getUTF8String($i), $seed);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      if ((($h >>> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-         |    }
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($votes[$b] > 0) $fp |= (1L << $b);
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashUtil.simhashTokens($c, $seed)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** 64-bit SimHash over CHARACTER 4-GRAMS of a string, fused into one
-  * codegen'd pass (r21, guide §4): replaces the q145 composition
+/** 64-bit SimHash over CHARACTER 4-GRAMS of a string in one pass:
+  * replaces the q145 composition
   * `simhash64(transform(sequence(1, greatest(length(text) - 3, 0)),
   * i -> substring(text, i, 4)))`, whose higher-order transform runs an
   * INTERPRETED lambda that materializes a length(text)-element array
-  * of 4-char strings per row before the fused SimHash ever sees it —
-  * the dominant per-row cost of the q145 shingle projection (builder
-  * attribution: ~2.7 s taskSum at sf0.1). Value-identical for any
-  * input, including the <4-char descending-sequence edge; see
-  * [[MinHashUtil.simhashCharGrams]]. Null input → null, like the
-  * composition (every layer is null-intolerant). */
+  * of 4-char strings per row before the SimHash ever sees it.
+  * Value-identical for any input, including the <4-char
+  * descending-sequence edge; see [[MinHashUtil.simhashCharGrams]].
+  * Null input → null, like the composition (every layer is
+  * null-intolerant). */
 case class SimHashCharGrams(child: Expression, seed: Int)
     extends UnaryExpression {
 
@@ -537,8 +447,7 @@ case class SimHashCharGrams(child: Expression, seed: Int)
       MinHashUtil.simhashCharGrams(input.asInstanceOf[UTF8String], seed))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashUtil.simhashCharGrams($c, $seed);")
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashUtil.simhashCharGrams($c, $seed)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -547,15 +456,13 @@ case class SimHashCharGrams(child: Expression, seed: Int)
   * in ONE byte pass — the fused form of the q131/q145 bag columns,
   * which evaluated `length(text) − length(translate(text, ch, ""))`
   * 37 times per row: 37 full string scans and 37 string allocations
-  * where one scan and one int[37] suffice (r20; measured 2.2 s per
-  * evaluation site at sf0.1, the dominant cost of both edit-distance
-  * operators). Value-identical to the translate composition for ANY
-  * input, not just the ASCII-pinned rows the operators feed it: the
-  * targets are ASCII code points, and in UTF-8 an ASCII byte value
-  * occurs only as a standalone ASCII character (continuation bytes
-  * are ≥ 0x80), so counting target BYTES equals counting target
-  * CHARACTERS on arbitrary UTF-8 text. Null input → null; elements
-  * never null. */
+  * where one scan and one int[37] suffice. Value-identical to the
+  * translate composition for ANY input, not just the ASCII-pinned rows
+  * the operators feed it: the targets are ASCII code points, and in
+  * UTF-8 an ASCII byte value occurs only as a standalone ASCII
+  * character (continuation bytes are ≥ 0x80), so counting target
+  * BYTES equals counting target CHARACTERS on arbitrary UTF-8 text.
+  * Null input → null; elements never null. */
 case class CharBagCounts(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -566,8 +473,18 @@ case class CharBagCounts(child: Expression) extends UnaryExpression {
       s"char_bag requires a string argument, got ${other.sql}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  override def nullSafeEval(input: Any): Any =
+    CharBagCounts.counts(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.CharBagCounts.counts($c)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object CharBagCounts {
+  /** The kernel: one pass over the UTF-8 bytes. */
+  def counts(s: UTF8String): ArrayData = {
     val n = s.numBytes()
     val cnt = new Array[Int](37)
     var i = 0
@@ -580,35 +497,15 @@ case class CharBagCounts(child: Expression) extends UnaryExpression {
     }
     new GenericArrayData(cnt)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, s => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val b = ctx.freshName("b"); val cnt = ctx.freshName("cnt")
-      s"""
-         |int $n = $s.numBytes();
-         |int[] $cnt = new int[37];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  byte $b = $s.getByte($i);
-         |  if ($b >= 'a' && $b <= 'z') $cnt[$b - 'a']++;
-         |  else if ($b >= '0' && $b <= '9') $cnt[26 + $b - '0']++;
-         |  else if ($b == ' ') $cnt[36]++;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($cnt);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** L1 distance between two int arrays (long result) — the fused form
   * of the q131/q145 37-term `abs(a0−b0) + …` filter chain over the
-  * [[CharBagCounts]] bags. Arrays of unequal length → null (the
-  * operators always compare 37-slot bags, so this never fires there);
-  * null input → null. Accumulates in long: bag counts are bounded by
-  * text length, so the int sum could only overflow on ≥2^31-char
-  * texts — long is exact either way. */
+  * [[CharBagCounts]] bags. Arrays of unequal length or a null element
+  * → null (the operators always compare 37-slot bags, so this never
+  * fires there); null input → null. Accumulates in long: bag counts
+  * are bounded by text length, so the int sum could only overflow on
+  * ≥2^31-char texts — long is exact either way. */
 case class IntArrayL1(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -626,11 +523,23 @@ case class IntArrayL1(left: Expression, right: Expression)
         s"got ${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntArrayL1.l1(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      BoxedResult.assign(ev, "Long", s"graft.functions.IntArrayL1.l1($x, $y)"))
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object IntArrayL1 {
+  /** The kernel; `null` (a length mismatch or a null element) is SQL
+    * NULL. */
+  def l1(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var s = 0L
     var i = 0
     while (i < n) {
@@ -641,40 +550,12 @@ case class IntArrayL1(left: Expression, right: Expression)
     }
     java.lang.Long.valueOf(s)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $x.numElements();
-         |  long $s = 0L;
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $n && !$anyNull; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $anyNull = true; }
-         |    else {
-         |      long $d = (long) ($x.getInt($i) - $y.getInt($i));
-         |      $s += ($d < 0L) ? -$d : $d;
-         |    }
-         |  }
-         |  if ($anyNull) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
-/** Fused PCA projection (r20): the k coordinates
+/** Fused PCA projection: the k coordinates
   * z_j = Σ_i (x_i − mean_i)·w_j_i — and optionally the centered
-  * squared norm Σ_i (x_i − mean_i)² as element 1 — in ONE codegen'd
-  * pass over the embedding. Replaces the per-coordinate
+  * squared norm Σ_i (x_i − mean_i)² as element 1 — in ONE pass over
+  * the embedding. Replaces the per-coordinate
   * `aggregate(zip_with(transform(x − mean), w, ·*·), 0.0, +)`
   * composition, whose higher-order lambdas are interpreted and
   * re-walk the array once per coordinate (8 × per row in q89/q91/q93
@@ -685,7 +566,9 @@ case class IntArrayL1(left: Expression, right: Expression)
   *  - doubles accumulate per coordinate in ascending element order —
   *    the same IEEE sequence the zip_with/aggregate fold performs;
   *  - a null INPUT yields the composition's array-of-nulls (the outer
-  *    `array(...)` of null aggregates), not a null array;
+  *    `array(...)` of null aggregates), not a null array — so the
+  *    expression is non-nullable and its kernel takes the possibly-null
+  *    child value;
   *  - any null ELEMENT nulls every slot (null poisons both folds);
   *  - length mismatch: coords are null unless len(x) == dim (zip_with
   *    pads the shorter side with null), normSq tolerates len(x) < dim
@@ -702,11 +585,11 @@ case class PcaProjectExpr(child: Expression, mean: Array[Double],
   require(comps.forall(_.length == mean.length),
     "every component must have the mean's dimensionality")
 
-  // Content-based equality over the model arrays (ADVICE r20): the
-  // case-class default compares Array references, so two instances
-  // built from separately loaded but identical models would never
-  // semanticEquals — defeating subexpression elimination and
-  // plan-fragment dedup across columns.
+  // Content-based equality over the model arrays: the case-class
+  // default compares Array references, so two instances built from
+  // separately loaded but identical models would never semanticEquals
+  // — defeating subexpression elimination and plan-fragment dedup
+  // across columns.
   override def equals(o: Any): Boolean = o match {
     case p: PcaProjectExpr =>
       p.child == child && p.withNormSq == withNormSq &&
@@ -735,28 +618,42 @@ case class PcaProjectExpr(child: Expression, mean: Array[Double],
   @transient private lazy val childIsFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  private def k: Int = comps.length
-  private def outLen: Int = if (withNormSq) k + 1 else k
+  override def eval(input: InternalRow): Any = PcaProjectExpr.project(
+    child.eval(input).asInstanceOf[ArrayData], mean, comps, withNormSq, childIsFloat)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val out = new Array[Any](outLen)
-    if (v != null) {
-      val x = v.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val meanRef = ctx.addReferenceObj("pcaMean", mean, "double[]")
+    val compsRef = ctx.addReferenceObj("pcaComps", comps, "double[][]")
+    val c = child.genCode(ctx)
+    val call = s"graft.functions.PcaProjectExpr.project(${c.isNull} ? null : ${c.value}, " +
+      s"$meanRef, $compsRef, $withNormSq, $childIsFloat)"
+    ev.copy(isNull = FalseLiteral, code = c.code +
+      code"final org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $call;")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object PcaProjectExpr {
+  /** The kernel: `x` may be null (→ an array of nulls); always returns
+    * an array of `comps.length` (+1 with the norm) slots. */
+  def project(x: ArrayData, mean: Array[Double], comps: Array[Array[Double]],
+      withNormSq: Boolean, isFloat: Boolean): ArrayData = {
+    val k = comps.length
+    val out = new Array[Any](if (withNormSq) k + 1 else k)
+    if (x != null) {
       val n = x.numElements()
-      val dim = mean.length
       var anyNull = false
       var i = 0
       while (i < n && !anyNull) { if (x.isNullAt(i)) anyNull = true; i += 1 }
-      val coordsOk = !anyNull && n == dim
-      val normOk = !anyNull && n <= dim
+      val coordsOk = !anyNull && n == mean.length
+      val normOk = !anyNull && n <= mean.length
       if (coordsOk || normOk) {
         var norm = 0.0
         val acc = new Array[Double](k)
         i = 0
         while (i < n) {
-          val xi = if (childIsFloat) x.getFloat(i).toDouble else x.getDouble(i)
-          val c = xi - mean(i)
+          val c = (if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)) - mean(i)
           if (normOk) norm += c * c
           if (coordsOk) {
             var j = 0
@@ -776,53 +673,6 @@ case class PcaProjectExpr(child: Expression, mean: Array[Double],
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val meanRef = ctx.addReferenceObj("pcaMean", mean, "double[]")
-    val compsRef = ctx.addReferenceObj("pcaComps", comps, "double[][]")
-    val childGen = child.genCode(ctx)
-    val get = if (childIsFloat) "getFloat" else "getDouble"
-    val x = childGen.value
-    val out = ctx.freshName("out"); val n = ctx.freshName("n")
-    val i = ctx.freshName("i"); val j = ctx.freshName("j")
-    val anyNull = ctx.freshName("anyNull"); val coordsOk = ctx.freshName("coordsOk")
-    val normOk = ctx.freshName("normOk"); val norm = ctx.freshName("norm")
-    val acc = ctx.freshName("acc"); val c = ctx.freshName("c")
-    val body =
-      s"""
-         |Object[] $out = new Object[$outLen];
-         |if (!${childGen.isNull}) {
-         |  int $n = $x.numElements();
-         |  boolean $anyNull = false;
-         |  for (int $i = 0; $i < $n && !$anyNull; $i++) {
-         |    if ($x.isNullAt($i)) $anyNull = true;
-         |  }
-         |  boolean $coordsOk = !$anyNull && $n == ${mean.length};
-         |  boolean $normOk = !$anyNull && $n <= ${mean.length};
-         |  if ($coordsOk || $normOk) {
-         |    double $norm = 0.0;
-         |    double[] $acc = new double[$k];
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $c = (double) $x.$get($i) - $meanRef[$i];
-         |      if ($normOk) $norm += $c * $c;
-         |      if ($coordsOk) {
-         |        for (int $j = 0; $j < $k; $j++) $acc[$j] += $c * $compsRef[$j][$i];
-         |      }
-         |    }
-         |    ${if (withNormSq) s"if ($normOk) $out[0] = Double.valueOf($norm);" else ""}
-         |    if ($coordsOk) {
-         |      for (int $j = 0; $j < $k; $j++)
-         |        $out[${if (withNormSq) s"$j + 1" else j}] = Double.valueOf($acc[$j]);
-         |    }
-         |  }
-         |}
-         |final org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    ev.copy(code = childGen.code + code"$body", isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Deterministic random-hyperplane LSH bucket (Charikar 2002 sign-
@@ -840,7 +690,8 @@ case class PcaProjectExpr(child: Expression, mean: Array[Double],
   * products are sequential double sums in both engines → identical
   * signs → identical buckets). No broadcast state: every executor
   * recomputes the 8×dim matrix from two integer constants.
-  * Accepts array<float|double>; null input → null. */
+  * Accepts array<float|double>; a null element counts as 0.0; null
+  * input → null. */
 case class HyperplaneBucket(child: Expression, planes: Int, seed: Int)
     extends UnaryExpression {
   require(planes >= 1 && planes <= 30, "planes must be in [1, 30]")
@@ -856,53 +707,12 @@ case class HyperplaneBucket(child: Expression, planes: Int, seed: Int)
   @transient private lazy val isFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(input: Any): Any = {
-    val e = input.asInstanceOf[ArrayData]
-    val n = e.numElements()
-    val dots = new Array[Double](planes)
-    var j = 0
-    while (j < n) {
-      val x = if (e.isNullAt(j)) 0.0
-        else if (isFloat) e.getFloat(j).toDouble else e.getDouble(j)
-      var p = 0
-      while (p < planes) {
-        dots(p) += x * HyperplaneBucket.component(p, j, seed)
-        p += 1
-      }
-      j += 1
-    }
-    var bucket = 0
-    var p = 0
-    while (p < planes) {
-      if (dots(p) > 0.0) bucket |= 1 << p
-      p += 1
-    }
-    java.lang.Integer.valueOf(bucket)
-  }
+  override def nullSafeEval(input: Any): Any = java.lang.Integer.valueOf(
+    HyperplaneBucket.bucket(input.asInstanceOf[ArrayData], planes, seed, isFloat))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, e => {
-      val j = ctx.freshName("j"); val p = ctx.freshName("p")
-      val n = ctx.freshName("n"); val dots = ctx.freshName("dots")
-      val x = ctx.freshName("x"); val bucket = ctx.freshName("bucket")
-      s"""
-         |int $n = $e.numElements();
-         |double[] $dots = new double[$planes];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = $e.isNullAt($j) ? 0.0 : (double) $e.$get($j);
-         |  for (int $p = 0; $p < $planes; $p++) {
-         |    $dots[$p] += $x * graft.functions.HyperplaneBucket.component($p, $j, $seed);
-         |  }
-         |}
-         |int $bucket = 0;
-         |for (int $p = 0; $p < $planes; $p++) {
-         |  if ($dots[$p] > 0.0) $bucket |= 1 << $p;
-         |}
-         |${ev.value} = $bucket;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.HyperplaneBucket.bucket($c, $planes, $seed, $isFloat)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -916,6 +726,31 @@ object HyperplaneBucket {
     raw.toDouble / 500001.5 - 1.0
   }
 
+  /** The kernel: bit p of the bucket is set iff the dot product with
+    * plane p is > 0. */
+  def bucket(e: ArrayData, planes: Int, seed: Int, isFloat: Boolean): Int = {
+    val n = e.numElements()
+    val dots = new Array[Double](planes)
+    var j = 0
+    while (j < n) {
+      val x = if (e.isNullAt(j)) 0.0
+        else if (isFloat) e.getFloat(j).toDouble else e.getDouble(j)
+      var p = 0
+      while (p < planes) {
+        dots(p) += x * component(p, j, seed)
+        p += 1
+      }
+      j += 1
+    }
+    var bucket = 0
+    var p = 0
+    while (p < planes) {
+      if (dots(p) > 0.0) bucket |= 1 << p
+      p += 1
+    }
+    bucket
+  }
+
   /** The same matrix as a DuckDB double-literal array (for oracle
     * SQL): `[c0, c1, …]::DOUBLE[]` for plane p at dimension dim.
     * Double.toString round-trips exactly, so both engines see
@@ -925,7 +760,7 @@ object HyperplaneBucket {
       .mkString("[", ",", "]::DOUBLE[]")
 }
 
-/** IVF probe-cell assignment fused into ONE codegen'd pass (r18; the
+/** IVF probe-cell assignment fused into ONE codegen'd pass (the
   * [[GramFps]] discipline applied to the index build): replaces the
   * k-literal-cosine array + interpreted higher-order `array_sort` +
   * `slice`/`transform` composition, which evaluated OUTSIDE
@@ -975,17 +810,7 @@ case class IvfProbeCellsExpr(child: Expression, cents: Array[Array[Double]], np:
 }
 
 object IvfProbeCellsExpr {
-  /** JVM-static so generated code calls straight into it. Named
-    * `probeCells`, NOT `eval`: the case class inherits
-    * `Expression.eval(InternalRow)`, and scalac refuses to emit a
-    * static forwarder for a companion method whose name collides with
-    * a class member — so generated Java calling
-    * `GramFps.eval(...)`-style statics compiles against `evalAll`
-    * (no collision) but NOT against `eval`, and Janino's
-    * CompileException silently dropped every stage using this
-    * expression to interpreted execution (round-18 verdict finding).
-    * CodegenBridgeSpec now compiles every custom bridge directly, so
-    * a recurrence fails the suite instead of only costing speed. */
+  /** The kernel. */
   def probeCells(e: ArrayData, cents: Array[Array[Double]], np: Int,
       isFloat: Boolean): ArrayData = {
     val k = cents.length
@@ -1019,9 +844,10 @@ object IvfProbeCellsExpr {
   private def sqlGt(a: Double, b: Double): Boolean =
     if (a == b) false else java.lang.Double.compare(a, b) > 0
 
-  /** Bit-identical to [[CosineSimilarity.nullSafeEval]] against a
-    * double[] literal, with the composition's NULL outcomes mapped to
-    * −∞ (see the class Scaladoc for why that preserves ordering). */
+  /** Bit-identical to [[CosineSimilarity.cosine]] against a double[]
+    * literal, with the composition's NULL outcomes mapped to −∞ (see
+    * the class Scaladoc for why that preserves ordering). Kept apart
+    * from that kernel so neither loop branches on its caller. */
   private def cosineWith(x: ArrayData, c: Array[Double], isFloat: Boolean): Double = {
     if (x.numElements() != c.length) return Double.NegativeInfinity
     var dot = 0.0; var nx = 0.0; var ny = 0.0
@@ -1052,11 +878,9 @@ object IvfProbeCellsExpr {
   * `element_at` terms unrolled into one projection (≈1k for the
   * default 8×16×8 geometry) blow Janino's 64 KB method limit inside
   * whole-stage codegen, so every PQ encode stage (q140/q144/
-  * q146–q148) silently fell back to interpreted execution — the same
-  * defect class as the round-18 GramFps/IvfProbeCells bridges, found
-  * by the CodegenBridgeSpec discipline. Here the generated Java is
-  * one static call; the M·K' centroid norms are precomputed once at
-  * plan time and ride as a reference object.
+  * q146–q148) would fall back to interpreted execution. Here the
+  * generated Java is one static call; the M·K' centroid norms are
+  * precomputed once at plan time and ride as a reference object.
   *
   * Null/short-vector semantics are `try_element_at`'s (the tolerant
   * rules; ANSI `element_at` — the Spark 4 default the old
@@ -1121,43 +945,54 @@ object PqEncodeExpr {
       ss
     })
 
-  /** JVM-static (callable from codegen; name must not collide with an
-    * inherited Expression member — the round-18 forwarder lesson). */
+  /** Subspace m's scores against each of its centroids,
+    * −2·x_m·c_mj + ||c_mj||², into `out(0 until cents.length)`. The
+    * window [base, base + sub) is valid iff it lies fully inside `e`
+    * with no null element (the composition's element_at NULL rules,
+    * all-or-none per m); an invalid window leaves `out` untouched and
+    * returns false. */
+  private[functions] def subspaceScores(e: ArrayData, base: Int,
+      cents: Array[Array[Double]], norms: Array[Double], isFloat: Boolean,
+      out: Array[Double]): Boolean = {
+    val sub = cents(0).length
+    if (base + sub > e.numElements()) return false
+    var v = 0
+    while (v < sub) { if (e.isNullAt(base + v)) return false; v += 1 }
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      var dot = 0.0
+      var i = 0
+      while (i < sub) {
+        val xi = if (isFloat) e.getFloat(base + i).toDouble else e.getDouble(base + i)
+        dot += xi * c(i)
+        i += 1
+      }
+      out(j) = -2.0 * dot + norms(j)
+      j += 1
+    }
+    true
+  }
+
+  /** The kernel: per subspace, the first `sqlLt` minimum's 1-based
+    * index, or null for an invalid window. */
   def codes(e: ArrayData, cb: Array[Array[Array[Double]]],
       norms: Array[Array[Double]], isFloat: Boolean): ArrayData = {
-    val mSub = cb.length
-    val out = new Array[Any](mSub)
-    val n = e.numElements()
+    val out = new Array[Any](cb.length)
+    var kMax = 0
     var m = 0
+    while (m < cb.length) { kMax = math.max(kMax, cb(m).length); m += 1 }
+    val scores = new Array[Double](kMax)
     var base = 0
-    while (m < mSub) {
-      val cents = cb(m)
-      val sub = cents(0).length
-      // subspace window valid iff fully in range with no null element
-      // (the composition's element_at NULL rules, all-or-none per m)
-      var valid = base + sub <= n
-      var v = 0
-      while (valid && v < sub) { if (e.isNullAt(base + v)) valid = false; v += 1 }
-      if (!valid) out(m) = null
-      else {
-        var bestJ = -1; var bestS = 0.0
-        var j = 0
-        while (j < cents.length) {
-          val c = cents(j)
-          var dot = 0.0
-          var i = 0
-          while (i < sub) {
-            val xi = if (isFloat) e.getFloat(base + i).toDouble else e.getDouble(base + i)
-            dot += xi * c(i)
-            i += 1
-          }
-          val s = -2.0 * dot + norms(m)(j)
-          if (bestJ == -1 || sqlLt(s, bestS)) { bestJ = j; bestS = s }
-          j += 1
-        }
-        out(m) = bestJ + 1
+    m = 0
+    while (m < cb.length) {
+      if (subspaceScores(e, base, cb(m), norms(m), isFloat, scores)) {
+        var best = 0
+        var j = 1
+        while (j < cb(m).length) { if (sqlLt(scores(j), scores(best))) best = j; j += 1 }
+        out(m) = best + 1
       }
-      base += sub
+      base += cb(m)(0).length
       m += 1
     }
     new GenericArrayData(out)
@@ -1211,38 +1046,23 @@ case class PqAdcTableExpr(child: Expression, cb: Array[Array[Array[Double]]])
 }
 
 object PqAdcTableExpr {
-  /** JVM-static (callable from codegen). */
+  /** The kernel: every subspace's score row, all-null for an invalid
+    * window (the composition's NULL-score shape). */
   def table(e: ArrayData, cb: Array[Array[Array[Double]]],
       norms: Array[Array[Double]], isFloat: Boolean): ArrayData = {
-    val mSub = cb.length
-    val out = new Array[Any](mSub)
-    val n = e.numElements()
-    var m = 0
+    val out = new Array[Any](cb.length)
     var base = 0
-    while (m < mSub) {
+    var m = 0
+    while (m < cb.length) {
       val cents = cb(m)
-      val sub = cents(0).length
+      val scores = new Array[Double](cents.length)
       val row = new Array[Any](cents.length)
-      var valid = base + sub <= n
-      var v = 0
-      while (valid && v < sub) { if (e.isNullAt(base + v)) valid = false; v += 1 }
-      if (valid) {
+      if (PqEncodeExpr.subspaceScores(e, base, cents, norms(m), isFloat, scores)) {
         var j = 0
-        while (j < cents.length) {
-          val c = cents(j)
-          var dot = 0.0
-          var i = 0
-          while (i < sub) {
-            val xi = if (isFloat) e.getFloat(base + i).toDouble else e.getDouble(base + i)
-            dot += xi * c(i)
-            i += 1
-          }
-          row(j) = -2.0 * dot + norms(m)(j)
-          j += 1
-        }
-      } // else: row stays all-null — the composition's NULL-score shape
+        while (j < cents.length) { row(j) = scores(j); j += 1 }
+      }
       out(m) = new GenericArrayData(row)
-      base += sub
+      base += cents(0).length
       m += 1
     }
     new GenericArrayData(out)
@@ -1676,14 +1496,8 @@ object GramFps {
   }
 
   /** JVM-static DISTINCT gram-fingerprint fold (callable from
-    * codegen). Named `evalDistinct`, NOT `eval`: the case class
-    * inherits `Expression.eval(InternalRow)` and scalac emits no
-    * static forwarder for a colliding companion-method name — a
-    * bare `GramFps.eval` in generated Java threw Janino
-    * CompileException and dropped the whole dup-gram family to
-    * interpreted execution (round-18 verdict finding; `evalAll`
-    * below never collided, which is why GramFpsSeq always compiled).
-    * CodegenBridgeSpec compiles every bridge to keep this pinned. */
+    * codegen). Named `evalDistinct`, not `eval`, which would collide
+    * with the case class's inherited `Expression.eval`. */
   def evalDistinct(arr: ArrayData, n: Int): ArrayData = {
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Long])

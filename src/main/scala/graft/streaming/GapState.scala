@@ -51,38 +51,19 @@ object GapState {
   : Iterator[GapRec] = {
     val (userId, eventType) = key
     val prev = state.getOption.getOrElse(GapBuf(hasAnchor = false, 0L, 0L, Nil))
-    // exact integer micros (the q110/q169 rule — getTime alone is
-    // ms-truncated and would floor boundary gaps into the wrong band)
-    val incoming = events
-      .map(e => (e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L, e.event_id))
-      .toSeq
-    val wmMs = state.getCurrentWatermarkMs()
-    val wmUs = wmMs * 1000L
-    val all = (prev.pending ++ incoming).sorted
-    // an event strictly below the watermark can gain no new
-    // predecessor — its position in the key's order is final
-    val (safe, pending) = all.span { case (us, _) => us < wmUs }
     val out = Seq.newBuilder[GapRec]
     var hasAnchor = prev.hasAnchor
     var anchorUs = prev.anchorUs
     var anchorId = prev.anchorId
-    safe.foreach { case (us, id) =>
-      if (hasAnchor) {
-        val gapS = (us - anchorUs) / 1000000L // both sides exact integer micros
-        out += GapRec(userId, eventType, gapS, bandOf(gapS))
-      }
-      hasAnchor = true; anchorUs = us; anchorId = id
-    }
-    if (pending.nonEmpty) {
-      state.update(GapBuf(hasAnchor, anchorUs, anchorId, pending))
-      // re-fire once the watermark can free the earliest pending event
-      state.setTimeoutTimestamp(math.max(pending.head._1 / 1000L, wmMs + 1L))
-    } else if (hasAnchor && wmMs < anchorUs / 1000L + idleTtlMs) {
-      state.update(GapBuf(hasAnchor, anchorUs, anchorId, Nil))
-      state.setTimeoutTimestamp(math.max(anchorUs / 1000L + idleTtlMs, wmMs + 1L))
-    } else {
-      state.remove() // idle past TTL (or never anchored): purge
-    }
+    OrderedRelease(state, prev.pending,
+      events.map(e => (OrderedRelease.micros(e.ts), e.event_id)), idleTtlMs)(_._1) {
+      case (us, id) =>
+        if (hasAnchor) {
+          val gapS = (us - anchorUs) / 1000000L // both sides exact integer micros
+          out += GapRec(userId, eventType, gapS, bandOf(gapS))
+        }
+        hasAnchor = true; anchorUs = us; anchorId = id
+    }(Option.when(hasAnchor)(anchorUs), GapBuf(hasAnchor, anchorUs, anchorId, _))
     out.result().iterator
   }
 

@@ -37,34 +37,20 @@ object TouchState {
       userId: Long, events: Iterator[Ev], state: GroupState[TouchBuf])
   : Iterator[Attribution] = {
     val prev = state.getOption.getOrElse(TouchBuf(hasTouch = false, 0L, "", Nil))
-    val incoming = events.map(e =>
-      (e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
-        e.event_id, e.event_type, e.cents)).toSeq
-    val wmMs = state.getCurrentWatermarkMs()
-    val wmUs = wmMs * 1000L
-    val all = (prev.pending ++ incoming).sorted
-    val (safe, pending) = all.span { case (us, _, _, _) => us < wmUs }
     val out = Seq.newBuilder[Attribution]
     var hasTouch = prev.hasTouch
     var touchUs = prev.touchUs
     var touchType = prev.touchType
-    safe.foreach { case (us, id, tpe, cents) =>
-      if (tpe == "purchase") {
-        val attributed =
-          if (hasTouch && (us - touchUs) / 1000000L <= windowS) touchType
-          else "direct"
-        out += Attribution(userId, id, attributed, cents)
-      } else { hasTouch = true; touchUs = us; touchType = tpe }
-    }
-    if (pending.nonEmpty) {
-      state.update(TouchBuf(hasTouch, touchUs, touchType, pending))
-      state.setTimeoutTimestamp(math.max(pending.head._1 / 1000L, wmMs + 1L))
-    } else if (hasTouch && wmMs < touchUs / 1000L + idleTtlMs) {
-      state.update(TouchBuf(hasTouch, touchUs, touchType, Nil))
-      state.setTimeoutTimestamp(math.max(touchUs / 1000L + idleTtlMs, wmMs + 1L))
-    } else {
-      state.remove()
-    }
+    OrderedRelease(state, prev.pending, events.map(e =>
+      (OrderedRelease.micros(e.ts), e.event_id, e.event_type, e.cents)), idleTtlMs)(_._1) {
+      case (us, id, tpe, cents) =>
+        if (tpe == "purchase") {
+          val attributed =
+            if (hasTouch && (us - touchUs) / 1000000L <= windowS) touchType
+            else "direct"
+          out += Attribution(userId, id, attributed, cents)
+        } else { hasTouch = true; touchUs = us; touchType = tpe }
+    }(Option.when(hasTouch)(touchUs), TouchBuf(hasTouch, touchUs, touchType, _))
     out.result().iterator
   }
 

@@ -9,23 +9,21 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions._
 
-/** THE codegen-compiles gate (round-18 verdict item #2): every custom
-  * expression's generated Java is COMPILED here, directly, via
-  * `GenerateUnsafeProjection.generate` — the one check value-parity
-  * fuzz and plan-text pins provably cannot perform. Two round-18
-  * bridges (GramFps, IvfProbeCellsExpr) generated Java calling a
-  * static forwarder scalac never emitted (companion-method name
-  * collided with the inherited `Expression.eval`); Janino threw per
-  * stage and Spark silently fell back to interpreted execution —
-  * answers identical, 190/192 stayed green, flagship fusion never ran
-  * compiled. Value tests pass on the fallback path and plan-text pins
-  * don't execute the Java, so ONLY a direct compile catches the
-  * class. This suite fails red if any bridge regresses: `generate`
-  * throws on Janino failure instead of falling back, and the compiled
-  * projection's output is then compared to the interpreted `eval` on
-  * non-trivial inputs (null included) so a bridge that compiles but
-  * diverges also fails. No SparkSession needed — the generator runs
-  * against default SQLConf, exactly as executor-side codegen does. */
+/** The codegen compile gate: every custom expression's generated Java
+  * is COMPILED here, directly, via `GenerateUnsafeProjection.generate`
+  * — the one check value-parity fuzz and plan-text pins cannot
+  * perform. Spark falls back to interpreted execution when Janino
+  * rejects a stage's Java (for example a call to a kernel whose
+  * companion-method name collides with the inherited `Expression.eval`,
+  * so scalac emits no static forwarder); answers stay identical, so
+  * only a direct compile sees it. `generate` throws instead of falling
+  * back, and the compiled projection's output is then compared to the
+  * interpreted `eval` on non-trivial inputs (null included), so a
+  * bridge that compiles but diverges also fails. Since both paths call
+  * one kernel, rows whose outcome is a kernel rule (a NULL result, a
+  * skipped shingle) also pin the expected value. No SparkSession
+  * needed — the generator runs against default SQLConf, exactly as
+  * executor-side codegen does. */
 class CodegenBridgeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def str(s: String): UTF8String = UTF8String.fromString(s)
@@ -36,23 +34,29 @@ class CodegenBridgeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   /** Compile the bridge (hard-fails on Janino error — the silent
     * interpreted fallback made loud) and pin compiled == interpreted
-    * on every sample row. */
-  private def assertBridge(name: String, expr: Expression, inputs: Seq[Array[Any]]): Unit = {
+    * on every sample row; each `pinned` row (input -> expected output,
+    * in Scala form) must also produce its expected value. */
+  private def assertBridge(name: String, expr: Expression, inputs: Seq[Array[Any]],
+      pinned: (Array[Any], Any)*): Unit = {
     val compiled =
       try GenerateUnsafeProjection.generate(Seq(expr))
       catch {
         case e: Throwable => fail(
           s"$name: generated Java FAILED TO COMPILE — at runtime this stage would " +
-          s"silently fall back to interpreted execution (the round-18 defect class): " +
+          s"silently fall back to interpreted execution: " +
           e.getMessage.linesIterator.take(4).mkString(" | "))
       }
     val conv = CatalystTypeConverters.createToScalaConverter(expr.dataType)
-    inputs.zipWithIndex.foreach { case (vals, i) =>
+    (inputs ++ pinned.map(_._1)).zipWithIndex.foreach { case (vals, i) =>
       val row = new GenericInternalRow(vals)
       val fromCompiled = conv(compiled.apply(row).get(0, expr.dataType))
       val fromInterp = conv(expr.eval(row))
       assert(fromCompiled == fromInterp,
         s"$name input #$i: compiled $fromCompiled != interpreted $fromInterp")
+      if (i >= inputs.length) {
+        val want = pinned(i - inputs.length)._2
+        assert(fromCompiled == want, s"$name input #$i: got $fromCompiled, want $want")
+      }
     }
   }
 
@@ -72,25 +76,31 @@ class CodegenBridgeSpec extends org.scalatest.funsuite.AnyFunSuite {
     Array[Any](null))
 
   test("vector bridges: cosine_similarity / squared_l2 (double + float reads)") {
+    val withNull = new GenericArrayData(Array[Any](1.0, null, 3.0))
     assertBridge("CosineSimilarity[double]",
       CosineSimilarity(vecDRef, BoundReference(1, ArrayType(DoubleType), nullable = true)),
       Seq(Array[Any](vecD(1, 2, 3), vecD(4, 5, 6)),
           Array[Any](vecD(0, 0), vecD(1, 1)),        // zero norm → null
           Array[Any](vecD(1, 2), vecD(1, 2, 3)),     // length mismatch → null
-          Array[Any](null, vecD(1.0))))
+          Array[Any](null, vecD(1.0))),
+      Array[Any](vecD(1, 2, 3), withNull) -> null)  // null element → null
     assertBridge("CosineSimilarity[float]",
       CosineSimilarity(vecFRef, BoundReference(1, ArrayType(FloatType), nullable = true)),
       Seq(Array[Any](vecF(1, 2, 3), vecF(4, 5, 6)), Array[Any](null, null)))
     assertBridge("SquaredL2[double]",
       SquaredL2(vecDRef, BoundReference(1, ArrayType(DoubleType), nullable = true)),
-      Seq(Array[Any](vecD(1, 2, 3), vecD(4, 6, 3)), Array[Any](null, vecD(1.0))))
+      Seq(Array[Any](vecD(1, 2, 3), vecD(4, 6, 3)), Array[Any](null, vecD(1.0))),
+      Array[Any](vecD(1, 2), vecD(1, 2, 3)) -> null,  // length mismatch → null
+      Array[Any](vecD(1, 2, 3), withNull) -> null)    // null element → null
     assertBridge("SquaredL2[float]",
       SquaredL2(vecFRef, BoundReference(1, ArrayType(FloatType), nullable = true)),
       Seq(Array[Any](vecF(1, 2), vecF(0, -1)), Array[Any](vecF(), vecF())))
   }
 
   test("hashing bridges: minhash_signature / simhash64 / hyperplane_bucket / rolling hash") {
-    assertBridge("MinHashSignature", MinHashSignature(tokRef, n = 2, k = 8, seed = 42), tokRows)
+    assertBridge("MinHashSignature", MinHashSignature(tokRef, n = 2, k = 8, seed = 42), tokRows,
+      // both 2-token windows hold the null token: both skipped, no minimum moves
+      Array[Any](toks("a", null, "b")) -> Seq.fill(8)(Long.MaxValue))
     assertBridge("SimHash64", SimHash64(tokRef, seed = 42), tokRows)
     assertBridge("SimHashCharGrams", SimHashCharGrams(strRef, seed = 42), strRows)
     assertBridge("HyperplaneBucket[double]", HyperplaneBucket(vecDRef, planes = 8, seed = 0),
