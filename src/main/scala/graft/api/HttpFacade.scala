@@ -8,12 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Json
 import graft.streaming.Pipeline
 
-/** A REAL port-bound HTTP façade over [[TweetApi]] — closing VERDICT
-  * r13 "missing" #2 (`sentiment_analysis.py:575-715` serves Flask
-  * routes; until round 14 `TweetApi` was method calls with nothing
-  * listening). Built on the JDK's own `com.sun.net.httpserver` (no
-  * new dependency — the build's no-extra-libraries rule holds) with
-  * JSON via json4s, which Spark itself ships.
+/** A REAL port-bound HTTP façade over [[TweetApi]], serving the
+  * reference's Flask routes (`sentiment_analysis.py:575-715`). Built on
+  * the JDK's own `com.sun.net.httpserver` (no new dependency — the
+  * build's no-extra-libraries rule holds) with JSON via json4s, which
+  * Spark itself ships.
   *
   * Route-for-route parity with the reference (same paths, query
   * params, response keys, and status codes):
@@ -34,9 +33,9 @@ import graft.streaming.Pipeline
   * Driver-side `.collect()` is used ONLY where the response is bounded
   * by construction (summary ≤ |labels|+1 rows, /tweets by `limit`),
   * after the heavy lifting (filter/agg/top-k) ran distributed. /export
-  * — the one route bounded only by a time predicate — STREAMS instead
-  * (round 15): CSV via a distributed K4-sink write file-copied to the
-  * socket, JSON via `toLocalIterator` into a chunked response, so
+  * — the one route bounded only by a time predicate — STREAMS instead:
+  * CSV via a distributed K4-sink write file-copied to the socket,
+  * JSON via `toLocalIterator` into a chunked response, so
   * driver memory stays partition-bounded at any window size. The
   * façade is an engine BOUNDARY: results leave Spark exactly once,
   * shaped.
@@ -71,9 +70,8 @@ object HttpFacade {
 
   /** Running server handle: the bound port (0 in `start` picks an
     * ephemeral one — tests use this) and a clean stop that also shuts
-    * down the request executor (round 15: stop() used to leave the
-    * cached thread pool alive, leaking threads across start/stop
-    * cycles). */
+    * down the request executor, so no request thread outlives a
+    * start/stop cycle. */
   final case class Handle(server: HttpServer, port: Int,
       executor: java.util.concurrent.ExecutorService) {
     def stop(): Unit = { server.stop(0); executor.shutdown() }
@@ -173,8 +171,8 @@ object HttpFacade {
       val hours = queryParams(ex).get("hours").flatMap(_.toIntOption).getOrElse(24)
       // rollup: groups + grand total in ONE pass; the "ALL" row becomes
       // the response's total_tweets instead of a server-side re-sum.
-      // Rows are parsed STRUCTURALLY (round 15) — the old substring +
-      // regex probe coupled this route to toJSON's field ordering.
+      // Rows are parsed STRUCTURALLY, so this route does not depend on
+      // toJSON's field ordering.
       val rows = TweetApi.summaryWithTotal(tweets(), hours).toJSON.collect().toSeq
         .map(r => r -> JsonMethods.parse(r))
       val (totalRows, groupRows) = rows.partition {
@@ -202,13 +200,11 @@ object HttpFacade {
     })
 
     server.createContext("/export", ex => handle(ex, "GET") {
-      // BOUNDED export (round 15, VERDICT r14 "wrong" #1): the old
-      // route collected the whole time window on the driver
-      // (`toJSON.collect()`), a driver OOM at 100× — /export is the
-      // one read route bounded only by a time predicate, not a row
-      // limit. Both formats now stream: the response is produced
-      // incrementally and driver memory stays O(one partition / one
-      // copy buffer) regardless of window size.
+      // BOUNDED export: /export is the one read route bounded only by
+      // a time predicate, not a row limit, so it never collects the
+      // window on the driver. Both formats stream: the response is
+      // produced incrementally and driver memory stays O(one
+      // partition / one copy buffer) regardless of window size.
       val p = queryParams(ex)
       val hours = p.get("hours").flatMap(_.toIntOption).getOrElse(24)
       val format = p.getOrElse("format", "csv").toLowerCase

@@ -83,9 +83,7 @@ object TweetApi {
     * W2 recency sort (unbounded). CSV shaping is the caller's
     * concern (df.write.option("header",true).csv or toLocalIterator). */
   def `export`(tweets: DataFrame, hours: Int = 24): DataFrame = // backticks: Scala 3 keyword
-    tweets
-      .filter(col("processed_at") >= current_timestamp() - expr(s"INTERVAL $hours HOURS"))
-      .orderBy(desc("processed_at"))
+    inWindow(tweets, hours).orderBy(desc("processed_at"))
 
   /** GET /health analog: table-level liveness stats. */
   def health(tweets: DataFrame): DataFrame =

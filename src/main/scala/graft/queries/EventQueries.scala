@@ -346,29 +346,31 @@ object EventQueries {
       |SELECT day, daily_users, rolling_users, true AS hll_within_5pct
       |FROM daily JOIN roll USING (day) ORDER BY day""".stripMargin
 
+  /** The 30-minute session gap of q28, q107 and the streaming
+    * sessionizers, as a `session_window` duration. `session_window`
+    * merges an event whose distance from the session's last event is
+    * at most the gap, so this splits iff consecutive events are more
+    * than 1800000000 µs apart — the oracle's `> 1800000000` rule. */
+  val SessionGap: String = "1800000000 microseconds"
+
   /** Sessionization: gap-based user sessions (30-minute inactivity
-    * closes a session) via the lag → gap-flag → running-sum pattern —
-    * the batch form of streaming session windows. One shuffle on
-    * user_id; both window functions reuse the same partitioning.
+    * closes a session) via `session_window` with [[SessionGap]] — the
+    * operator and gap the streaming `SessionState` uses, so batch and
+    * stream sessions agree by construction. One shuffle on user_id.
     * Realizes SURVEY §2.9's session concept the reference never had. */
   def sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Round 15 (VERDICT #8): the lag + running-sum window pair is
-    // SEQUENTIALLY dependent (the sum consumes the lag output), so
-    // Catalyst can never fuse those two WindowExecs — the fix is the
-    // operator Spark built for exactly this: batch `session_window`
-    // aggregation, ONE sort-based pass that assigns and aggregates
-    // sessions in-stream (no per-event window nodes at all). The only
-    // remaining WindowExec is the per-user session NUMBERING, which
-    // runs over the aggregated one-row-per-session frame (tiny) and
-    // reuses the user_id partitioning — PlanSpec pins exactly one
-    // window node and one exchange up to the export sort.
+    // A lag + running-sum window pair would be SEQUENTIALLY dependent
+    // (the sum consumes the lag output), so Catalyst could never fuse
+    // the two WindowExecs; batch `session_window` aggregation is ONE
+    // sort-based pass that assigns and aggregates sessions in-stream.
+    // The only WindowExec is the per-user session NUMBERING, which runs
+    // over the aggregated one-row-per-session frame (tiny) and reuses
+    // the user_id partitioning — PlanSpec pins exactly one window node
+    // and one exchange up to the export sort.
     //
-    // Boundary fidelity: the old rule keeps a gap of EXACTLY 1800 s in
-    // the same session (`diff > 1800000000 µs` starts a new one);
-    // session_window starts a new session when `diff >= gap`. Setting
-    // gap = 1800000001 µs makes `>= gap` ⟺ `> 1800 s` at the data's
-    // microsecond resolution — semantics preserved, oracle unchanged.
+    // Boundary fidelity: [[SessionGap]] splits exactly where the
+    // oracle's `diff > 1800000000 µs` rule does.
     //
     // All time arithmetic in integer MICROS so Spark and the oracle
     // truncate identically (unix_timestamp would floor each operand
@@ -386,7 +388,7 @@ object EventQueries {
   private[graft] def sessionizeRaw(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sessions = Tables.events(s, dir)
-      .groupBy($"user_id", session_window($"ts", "1800000001 microseconds"))
+      .groupBy($"user_id", session_window($"ts", SessionGap))
       .agg(count(lit(1)).as("n_events"),
         expr("(unix_micros(max(ts)) - unix_micros(min(ts))) div 1000000").as("duration_s"),
         date_format(min($"ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -438,8 +440,9 @@ object EventQueries {
 
   /** q90's per-session step frame — (user_id, session_idx, session
     * bounds, event count, strict-order step times in epoch MICROS) —
-    * exposed so the STREAMING funnel (`streaming.FunnelState`) can
-    * assert batch↔stream parity per session, not just on the rollup. */
+    * exposed so FunnelStateSpec can check the streaming funnel
+    * (`streaming.FunnelState`, a `session_window` aggregation) against
+    * it per session, not just on the rollup. */
   private[graft] def sessionSteps(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
@@ -529,11 +532,11 @@ object EventQueries {
   def sessionCopresence(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // session membership via the same native session_window pass as
-    // q28 (gap = 1800000001 µs ⟺ the oracle's `> 1800 s` rule at
-    // microsecond resolution); co-presence needs no session NUMBERS,
-    // so no window node exists anywhere in this plan
+    // q28 (gap = SessionGap: split iff `diff > 1800 s`, the oracle's
+    // rule); co-presence needs no session NUMBERS, so no window node
+    // exists anywhere in this plan
     val sessions = Tables.events(s, dir)
-      .groupBy($"user_id", session_window($"ts", "1800000001 microseconds"))
+      .groupBy($"user_id", session_window($"ts", SessionGap))
       .agg(array_sort(collect_set($"event_type")).as("types"))
     val nullT = lit(null).cast("string")
     val entries = concat(
@@ -2181,10 +2184,9 @@ object EventQueries {
     * within q28's 30-minute-gap sessions (process mining / "what do
     * users actually do" path analysis), the ORDERED sibling of
     * q107's unordered co-presence. Each session's events collapse to
-    * one ordered type list (the per-session `collect_list` state is
-    * SESSION-BOUNDED — the same bound the streaming SessionState
-    * carries; a gap closes the session, so state never grows with
-    * history), trigrams explode out, and the count aggregate
+    * one ordered type list (the per-session `collect_list` is
+    * SESSION-BOUNDED — a gap closes the session, so it never grows
+    * with history), trigrams explode out, and the count aggregate
     * exchanges at most |types|³ distinct sequences regardless of
     * corpus size. Ordering inside a session is (t, event_id) — the
     * q28/q90 tiebreak — so both engines assemble identical lists. */

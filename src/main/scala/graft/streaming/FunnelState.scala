@@ -1,194 +1,55 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions._
+import graft.queries.EventQueries.SessionGap
 
 /** STREAMING sibling of the q90 sessionized funnel (reference intent:
   * the continuously-maintained `sentiment_summary` rollup,
-  * sentiment_analysis.py:196-209, applied to the newest stateful
-  * operator — q28's batch↔stream parity discipline): per 30-minute-gap
-  * session, did the user progress view → click → purchase in STRICT
-  * time order? Sessions close once the event-time watermark passes
-  * their merge window and emit one row with the three step times, so a
-  * downstream aggregation over the closed-session stream reproduces
+  * sentiment_analysis.py:196-209): per session, did the user progress
+  * view → click → purchase in STRICT time order? Sessions are Spark's
+  * `session_window` with q28's [[SessionGap]], so they split exactly
+  * where the batch step frame (`EventQueries.sessionSteps`) splits, and
+  * a downstream aggregation over the closed-session stream reproduces
   * q90's conversion rollup incrementally — no rescan of history.
   *
-  * Strict-order step semantics are IDENTICAL to the batch query
-  * (EventQueries.sessionSteps, pinned by the parity spec), on integer
+  * Strict-order step semantics are the batch query's, on integer
   * MICROS: t_view = min view time; t_click = min click time > t_view;
-  * t_purchase = min purchase time > t_click.
+  * t_purchase = min purchase time > t_click. Out-of-order arrival
+  * within the watermark needs no special case: a late view can lower
+  * t_view and so qualify an earlier click, and the steps are computed
+  * only when the watermark closes the session.
   *
-  * Parity under out-of-order arrival: batch sessionization depends
-  * only on the MULTISET of event times (sort, split where consecutive
-  * gap > 30 min), so the state keeps a LIST of open sessions — an
-  * event within the merge window [start-gap, last+gap] of one or two
-  * sessions merges into them (two when it bridges); an event outside
-  * every window opens a new session, INCLUDING a straggler that
-  * precedes the current session (it is held open and can merge with
-  * further stragglers, not emitted as a premature singleton). A
-  * session is emitted only when the watermark passes last+gap — the
-  * point after which Spark drops any event that could still reach its
-  * window — so every event the batch query would see lands in the same
-  * session in both engines. Adjacent open sessions are > gap apart by
-  * construction (a merging event would have touched both), mirroring
-  * the batch split exactly.
-  *
-  * State boundedness with out-of-order arrivals: a late view can LOWER
-  * t_view, which can retroactively qualify an earlier click (and that
-  * can re-qualify an earlier purchase), so a session must remember
-  * more than the three current step times. It does NOT need the whole
-  * session: t_view only decreases as events arrive, so the qualifying
-  * click set only GROWS, so t_click only decreases — a click later
-  * than the current t_click can never become the minimum. Each session
-  * therefore keeps only clicks ≤ current t_click and purchases ≤
-  * current t_purchase (everything, while the step is still open).
-  * In-order traffic keeps both lists at size ≤ 1 and the session list
-  * at size ≤ 2 (one closable, one live); the lists grow only with
-  * step-type events that PRECEDE their qualifying predecessor, and the
-  * session list only with out-of-order islands — both bounded by the
-  * watermark horizon and purged as it advances. */
+  * State: an open session keeps every click and purchase time it has
+  * seen (two `collect_list`s), since any of them may still become a
+  * step once a later-arriving view lowers t_view. Both lists are purged
+  * with the session when the watermark passes its end. */
 object FunnelState {
 
-  final case class FEvent(
-      user_id: Long, ts: java.sql.Timestamp, event_id: Long, event_type: String)
-
-  final case class OpenFunnel(
-      startUs: Long, lastUs: Long, nEvents: Long,
-      minView: Option[Long], clicks: List[Long], purchases: List[Long])
-
-  /** State wrapper: open sessions, pairwise > gap apart, any order. */
-  final case class FunnelSessions(sessions: List[OpenFunnel])
-
   /** Session bounds and step times in epoch micros (the batch frame's
-    * exact unit, so parity is integer equality, never fp formatting).
-    * `closed_by_timeout` records the emission path — true when the
-    * timeout callback flushed the session, false when an event-driven
-    * invocation swept it — diagnostic only; parity ignores it. */
+    * exact unit, so parity is integer equality). */
   final case class ClosedFunnel(
       user_id: Long, t_start: Long, t_end: Long, n_events: Long,
-      t_view: Option[Long], t_click: Option[Long], t_purchase: Option[Long],
-      closed_by_timeout: Boolean)
+      t_view: Option[Long], t_click: Option[Long], t_purchase: Option[Long])
 
-  private[graft] def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000) % 1000
-
-  /** Current strict-order step times from the (pruned) state. */
-  private[streaming] def steps(f: OpenFunnel): (Option[Long], Option[Long], Option[Long]) = {
-    val tv = f.minView
-    val tc = tv.flatMap(v => f.clicks.filter(_ > v).minOption)
-    val tp = tc.flatMap(c => f.purchases.filter(_ > c).minOption)
-    (tv, tc, tp)
-  }
-
-  /** Re-establish the pruning invariant (keep clicks ≤ t_click,
-    * purchases ≤ t_purchase; keep all while the step is unresolved). */
-  private def pruned(f: OpenFunnel): OpenFunnel = {
-    val (_, tc, tp) = steps(f)
-    f.copy(clicks = f.clicks.filter(c => tc.forall(c <= _)),
-      purchases = f.purchases.filter(p => tp.forall(p <= _)))
-  }
-
-  /** Fold one event into an open session. */
-  private[streaming] def addEvent(f: OpenFunnel, eventType: String, tUs: Long): OpenFunnel = {
-    val grown = eventType match {
-      case "view" => f.copy(minView = Some(f.minView.fold(tUs)(math.min(_, tUs))))
-      case "click" => f.copy(clicks = tUs :: f.clicks)
-      case "purchase" => f.copy(purchases = tUs :: f.purchases)
-      case _ => f
-    }
-    pruned(grown.copy(
-      startUs = math.min(f.startUs, tUs), lastUs = math.max(f.lastUs, tUs),
-      nEvents = f.nEvents + 1))
-  }
-
-  /** Merge two open sessions bridged by a new event. Pruning is
-    * merge-safe: the merged minView is ≤ each constituent's, so each
-    * qualifying set only grows and each step time only decreases; any
-    * click/purchase a constituent discarded was strictly above its own
-    * step time, whose (kept) witness still qualifies in the merged
-    * session, so a discarded entry can never be the merged minimum. */
-  private[streaming] def mergeSessions(a: OpenFunnel, b: OpenFunnel): OpenFunnel =
-    pruned(OpenFunnel(
-      math.min(a.startUs, b.startUs), math.max(a.lastUs, b.lastUs),
-      a.nEvents + b.nEvents,
-      (a.minView.toList ++ b.minView.toList).minOption,
-      a.clicks ::: b.clicks, a.purchases ::: b.purchases))
-
-  private def fresh(eventType: String, tUs: Long): OpenFunnel =
-    addEvent(OpenFunnel(tUs, tUs, 0L, None, Nil, Nil), eventType, tUs)
-
-  /** Watermark-passed test, ceil-to-ms consistent with the timeout we
-    * set (truncation would let the timeout fire inside the gap) and
-    * STRICT: at wm == ceil(last+gap) an event landing exactly on the
-    * boundary is still deliverable (Spark drops only ts < watermark),
-    * so the session must stay open one more watermark tick. */
-  private def closable(f: OpenFunnel, gapUs: Long, wmMs: Long): Boolean =
-    (f.lastUs + gapUs + 999L) / 1000L < wmMs
-
-  private[graft] def updateFunnel(
-      gapUs: Long)(
-      userId: Long, events: Iterator[FEvent], state: GroupState[FunnelSessions])
-  : Iterator[ClosedFunnel] = {
-    def close(f: OpenFunnel, byTimeout: Boolean): ClosedFunnel = {
-      val (tv, tc, tp) = steps(f)
-      ClosedFunnel(userId, f.startUs, f.lastUs, f.nEvents, tv, tc, tp, byTimeout)
-    }
-    val wmMs = state.getCurrentWatermarkMs()
-
-    def park(open: List[OpenFunnel]): Unit =
-      if (open.isEmpty) state.remove()
-      else {
-        state.update(FunnelSessions(open))
-        // fire once the watermark passes the EARLIEST still-open merge
-        // window (ceil to ms); closable uses strict <, so kept
-        // sessions have ceil >= wmMs — legal because Spark rejects
-        // only timeout timestamps strictly BELOW the watermark
-        // (timeout == watermark is accepted; if that check ever
-        // tightened to <=, the boundary case here would throw)
-        state.setTimeoutTimestamp(
-          open.map(f => (f.lastUs + gapUs + 999L) / 1000L).min)
-      }
-
-    if (state.hasTimedOut) {
-      val ss = state.getOption.map(_.sessions).getOrElse(Nil)
-      val (done, still) = ss.partition(closable(_, gapUs, wmMs))
-      park(still)
-      return done.sortBy(_.startUs).map(close(_, byTimeout = true)).iterator
-    }
-
-    // same per-batch order as the batch window spec: (ts, event_id)
-    val sorted = events.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-    var sessions = state.getOption.map(_.sessions).getOrElse(Nil)
-    sorted.foreach { e =>
-      val t = micros(e.ts)
-      val (touched, rest) =
-        sessions.partition(s => t >= s.startUs - gapUs && t <= s.lastUs + gapUs)
-      val target = touched.reduceOption(mergeSessions) match {
-        case Some(s) => addEvent(s, e.event_type, t)
-        case None => fresh(e.event_type, t)
-      }
-      sessions = target :: rest
-    }
-    val (done, still) = sessions.partition(closable(_, gapUs, wmMs))
-    park(still)
-    done.sortBy(_.startUs).map(close(_, byTimeout = false)).iterator
-  }
-
-  /** events(user_id, ts, event_id, event_type) stream → closed
-    * session-funnel stream. The caller must watermark `ts`; output is
-    * append-mode. One shuffle on user_id; state is per active user,
-    * purged by the watermark. */
-  def funnelize(events: DataFrame, gapMs: Long = SessionState.DefaultGapMs,
-                watermark: String = "1 hour"): Dataset[ClosedFunnel] = {
+  /** events(user_id, ts, event_type) stream → closed session-funnel
+    * stream (append mode). One shuffle on user_id. */
+  def funnelize(events: DataFrame, watermark: String = "1 hour"): Dataset[ClosedFunnel] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select($"user_id".cast("long"), $"ts",
-        $"event_id".cast("long"), $"event_type".cast("string"))
+    val t = unix_micros($"ts")
+    def timesOf(eventType: String) = collect_list(when($"event_type" === eventType, t))
+    events.select($"user_id".cast("long").as("user_id"), $"ts",
+        $"event_type".cast("string").as("event_type"))
       .withWatermark("ts", watermark)
-      .as[FEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelSessions, ClosedFunnel](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        updateFunnel(gapMs * 1000L))
+      .groupBy($"user_id", session_window($"ts", SessionGap))
+      .agg(min(t).as("t_start"), max(t).as("t_end"), count(lit(1)).as("n_events"),
+        min(when($"event_type" === "view", t)).as("t_view"),
+        timesOf("click").as("clicks"), timesOf("purchase").as("purchases"))
+      .withColumn("t_click", array_min(filter($"clicks", _ > $"t_view")))
+      .withColumn("t_purchase", array_min(filter($"purchases", _ > $"t_click")))
+      .select($"user_id", $"t_start", $"t_end", $"n_events",
+        $"t_view", $"t_click", $"t_purchase")
+      .as[ClosedFunnel]
   }
 }

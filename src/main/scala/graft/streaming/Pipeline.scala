@@ -315,7 +315,7 @@ object Pipeline {
   def readTweets(s: SparkSession, tweetsPath: String): DataFrame =
     s.read.parquet(tweetsPath).drop("_batch_id")
 
-  /** STREAMING INVERTED-INDEX MAINTENANCE (VERDICT r15 #6) — one
+  /** STREAMING INVERTED-INDEX MAINTENANCE — one
     * micro-batch's (doc_id, text) documents upserted into the SAME
     * bucketed postings artifact the batch lifecycle builds (q134) and
     * appends (q137): postings come from the ONE shared definition
@@ -438,7 +438,7 @@ object Pipeline {
     appendNew(hits, reportTable, Seq("eval_id", "train_id"))
   }
 
-  /** STREAMING SPAN-EVIDENCE GUARD (VERDICT r19 #8) — q197's
+  /** STREAMING SPAN-EVIDENCE GUARD — q197's
     * pair-level core running at ingest time: each micro-batch of
     * (doc_id, text) training documents is screened for verbatim token
     * spans against the STANDING held-out eval set through the ONE

@@ -2,86 +2,37 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.queries.EventQueries.SessionGap
 
-/** Custom streaming state (SURVEY §2.9 / north-star toolbox):
-  * gap-based sessionization over an event stream with
-  * `flatMapGroupsWithState` + event-time timeout — the stateful-op
-  * escape hatch for semantics windows can't express (a session's end
-  * is data-dependent, not clock-aligned).
+/** Gap-based sessionization of an event stream (SURVEY §2.9) on
+  * Spark's own `session_window`, the operator and gap that batch q28
+  * uses (`EventQueries.sessionizeRaw`). Stream and batch therefore
+  * split sessions by one rule: a new session starts where consecutive
+  * events of a user are more than [[SessionGap]] apart, compared in
+  * exact microseconds.
   *
-  * State per user: open session (start, last-seen, count, value sum).
-  * An event beyond the gap closes the open session and emits it; the
-  * event-time timeout (watermark-driven) closes sessions of users who
-  * went silent — state is bounded by (active users) and purged by the
-  * watermark, never unbounded like the reference's seen-set
-  * (twitter_producer.py:202-205).
-  */
+  * Append mode: a session is emitted once the watermark passes its end
+  * (last event + gap). An event that arrives out of order but within
+  * the watermark extends, or bridges, the open sessions it touches,
+  * exactly as if it had arrived in order. State holds the open
+  * sessions only and is purged by the watermark, never unbounded like
+  * the reference's seen-set (twitter_producer.py:202-205). */
 object SessionState {
 
-  final case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class OpenSession(startMs: Long, lastMs: Long, nEvents: Long, sumValue: Double)
   final case class ClosedSession(
       user_id: Long, session_start: java.sql.Timestamp, session_end: java.sql.Timestamp,
-      n_events: Long, sum_value: Double, closed_by_timeout: Boolean)
+      n_events: Long, sum_value: Double)
 
-  val DefaultGapMs: Long = 30 * 60 * 1000L
-
-  private[streaming] def updateUser(
-      gapMs: Long)(
-      userId: Long, events: Iterator[Event], state: GroupState[OpenSession])
-  : Iterator[ClosedSession] = {
-    def close(s: OpenSession, byTimeout: Boolean) = ClosedSession(
-      userId, new java.sql.Timestamp(s.startMs), new java.sql.Timestamp(s.lastMs),
-      s.nEvents, s.sumValue, byTimeout)
-
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(close(_, byTimeout = true)).iterator
-      state.remove()
-      return out.toSeq.iterator
-    }
-
-    val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.value))
-    var open = state.getOption
-    val closed = Seq.newBuilder[ClosedSession]
-    sorted.foreach { e =>
-      val t = e.ts.getTime
-      open match {
-        // merge window is [start-gap, last+gap]: a within-watermark
-        // late event extends the session backwards (start = min)
-        case Some(s) if t >= s.startMs - gapMs && t <= s.lastMs + gapMs =>
-          open = Some(s.copy(startMs = math.min(s.startMs, t),
-            lastMs = math.max(s.lastMs, t),
-            nEvents = s.nEvents + 1, sumValue = s.sumValue + e.value))
-        case Some(s) if t > s.lastMs + gapMs =>
-          closed += close(s, byTimeout = false)
-          open = Some(OpenSession(t, t, 1L, e.value))
-        case Some(s) => // t < start-gap: an earlier, already-complete session
-          closed += ClosedSession(userId, new java.sql.Timestamp(t),
-            new java.sql.Timestamp(t), 1L, e.value, closed_by_timeout = false)
-        case None =>
-          open = Some(OpenSession(t, t, 1L, e.value))
-      }
-    }
-    open.foreach { s =>
-      state.update(s)
-      // close the session once the watermark passes last-seen + gap
-      state.setTimeoutTimestamp(s.lastMs + gapMs)
-    }
-    closed.result().iterator
-  }
-
-  /** events(user_id, ts, value) stream → closed-session stream. The
-    * caller must watermark `ts`; output is append-mode. */
-  def sessionize(events: DataFrame, gapMs: Long = DefaultGapMs,
-                 watermark: String = "1 hour"): Dataset[ClosedSession] = {
+  /** events(user_id, ts, value) stream → closed-session stream. */
+  def sessionize(events: DataFrame, watermark: String = "1 hour"): Dataset[ClosedSession] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select($"user_id".cast("long"), $"ts", $"value".cast("double"))
+    events.select($"user_id".cast("long").as("user_id"), $"ts", $"value".cast("double").as("value"))
       .withWatermark("ts", watermark)
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(updateUser(gapMs))
+      .groupBy($"user_id", session_window($"ts", SessionGap))
+      .agg(min($"ts").as("session_start"), max($"ts").as("session_end"),
+        count(lit(1)).as("n_events"), sum($"value").as("sum_value"))
+      .select($"user_id", $"session_start", $"session_end", $"n_events", $"sum_value")
+      .as[ClosedSession]
   }
 }

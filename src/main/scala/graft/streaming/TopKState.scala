@@ -8,11 +8,10 @@ import graft.functions.TopKBy
   * type"): the [[graft.functions.TopKBy]] flat-array buffer carried as
   * `mapGroupsWithState` state — the streaming face of the batch q17
   * aggregate, completing the engine's batch↔stream parity discipline
-  * for its newest aggregate (VERDICT r10 #3 / r11 #1). Reference shape:
-  * the live "recent top tweets per sentiment" view the service keeps
-  * refreshing per poll cycle (sentiment_analysis.py:640-652), here as
-  * one incrementally-maintained stateful operator instead of a
-  * re-query.
+  * for its newest aggregate. Reference shape: the live "recent top
+  * tweets per sentiment" view the service keeps refreshing per poll
+  * cycle (sentiment_analysis.py:640-652), here as one
+  * incrementally-maintained stateful operator instead of a re-query.
   *
   * Parity argument (what the spec fuzzes): the k best of a multiset
   * under the total order (ord DESC, tie ASC) is a function of the
@@ -77,7 +76,7 @@ object TopKState {
     * it diverges from a batch `count(lit(1))` per group (which counts
     * null-ord/tie rows too). That is the intended semantics (a count
     * of events that could ever appear in the top-k), pinned by the
-    * null-semantics case in TopKStateSpec (ADVICE r12). */
+    * null-semantics case in TopKStateSpec. */
   def topk(events: DataFrame, k: Int = 5): Dataset[TopK] = {
     val spark = events.sparkSession
     import spark.implicits._

@@ -12,7 +12,7 @@ import graft.functions.FrequentItemsSketch
   *
   * Why this beats windowed counts at 100 TB: state per key is
   * O(capacity) FOREVER — no watermark needed to bound it (contrast
-  * [[SessionState]], where state is bounded by the watermark) — and
+  * [[SessionState]], whose open sessions the watermark purges) — and
   * the per-batch update is the same fold the batch aggregate runs, so
   * a replayed batch re-derives the same guarantees. Emission is one
   * row per (key, trigger): the current top-k with the sketch's exact

@@ -6,22 +6,23 @@ import org.apache.spark.sql.functions._
 import graft.streaming.FunnelState
 
 /** Streaming sessionized funnel: strict view→click→purchase order,
-  * out-of-order retro-qualification, gap/timeout close, and per-session
-  * parity with the batch q90 step frame (the q28 discipline). */
+  * out-of-order retro-qualification, gap split and watermark close, and
+  * per-session parity with the batch q90 step frame. */
 class FunnelStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+
   private def runStream(batches: Seq[Seq[(Long, Timestamp, Long, String)]],
-                        gapMs: Long = 30 * 60 * 1000L,
                         watermark: String = "0 seconds",
                         name: String = "funnel_test") = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Long, String)]
     val q = FunnelState.funnelize(
         mem.toDF().toDF("user_id", "ts", "event_id", "event_type"),
-        gapMs = gapMs, watermark = watermark)
+        watermark = watermark)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -35,8 +36,7 @@ class FunnelStateSpec extends SparkSpec {
         (r.getLong(0), r.getLong(1), r.getLong(3),
           Option(r.get(4)).map(_.asInstanceOf[Long]),
           Option(r.get(5)).map(_.asInstanceOf[Long]),
-          Option(r.get(6)).map(_.asInstanceOf[Long]),
-          r.getBoolean(7))
+          Option(r.get(6)).map(_.asInstanceOf[Long]))
       }.toSeq
     } finally q.stop()
   }
@@ -63,71 +63,40 @@ class FunnelStateSpec extends SparkSpec {
     def at(m: Int) = ts(f"2025-09-01 10:$m%02d:00")
     // batch 1 delivers click+purchase first; the view arrives in batch
     // 2 with an EARLIER timestamp (within gap and watermark) — the
-    // pruning invariant must have kept the click so both steps resolve
+    // session must still hold the click so both steps resolve
     val out = runStream(Seq(
       Seq((1L, at(10), 1L, "click"), (1L, at(12), 2L, "purchase")),
       Seq((1L, at(5), 3L, "view"))),
       watermark = "2 hours")
     assert(out.size == 1, s"one merged session expected: $out")
-    val (_, tStart, n, tv, tc, tp, _) = out.head
-    assert(n == 3L && tStart == FunnelState.micros(at(5)),
+    val (_, tStart, n, tv, tc, tp) = out.head
+    assert(n == 3L && tStart == micros(at(5)),
       s"late view must extend the session backwards: $out")
-    assert(tv.contains(FunnelState.micros(at(5))), s"t_view: $out")
-    assert(tc.contains(FunnelState.micros(at(10))), s"retro-qualified click: $out")
-    assert(tp.contains(FunnelState.micros(at(12))), s"retro-qualified purchase: $out")
+    assert(tv.contains(micros(at(5))), s"t_view: $out")
+    assert(tc.contains(micros(at(10))), s"retro-qualified click: $out")
+    assert(tp.contains(micros(at(12))), s"retro-qualified purchase: $out")
   }
 
   test("gap splits sessions; the watermark closes each as it passes its window") {
     def h(hh: Int, mm: Int) = ts(f"2025-09-01 $hh%02d:$mm%02d:00")
     val out = runStream(Seq(
       Seq((1L, h(10, 0), 1L, "view"), (1L, h(10, 5), 2L, "click")),
-      // 2h later: opens session B; A stays parked until the watermark
+      // 2h later: opens session B; A stays open until the watermark
       // (which only reaches 10:05 during this batch) passes 10:35
       Seq((1L, h(12, 30), 3L, "view")),
       Seq((1L, h(15, 0), 4L, "view"))))
     assert(out.size == 3, s"expected three gap-split sessions: $out")
-    val a = out.find(_._2 == FunnelState.micros(h(10, 0))).get
+    val a = out.find(_._2 == micros(h(10, 0))).get
     assert(a._3 == 2L && a._4.isDefined && a._5.isDefined,
       s"session A converted through click: $a")
     assert(out.filter(_ ne a).forall(s => s._3 == 1L && s._5.isEmpty),
       s"sessions B and C are view-only: $out")
   }
 
-  test("the event-driven sweep closes an expired session when data and watermark race") {
-    // In the MemoryStream harness processAllAvailable always runs a
-    // no-data batch after the watermark advances, so the timeout fires
-    // before any later data batch. On a real trigger cadence a key can
-    // receive data in the FIRST batch whose start watermark already
-    // passed an open window — updateFunnel must close it there (it
-    // cannot re-park: the timeout timestamp would precede the
-    // watermark). Drive that branch directly through TestGroupState.
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.FunnelState.{FEvent, FunnelSessions, OpenFunnel}
-    def h(hh: Int, mm: Int) = ts(f"2025-09-01 $hh%02d:$mm%02d:00")
-    val gapUs = 30 * 60 * 1000000L
-    val a = OpenFunnel(FunnelState.micros(h(10, 0)), FunnelState.micros(h(10, 5)),
-      2L, Some(FunnelState.micros(h(10, 0))), List(FunnelState.micros(h(10, 5))), Nil)
-    // watermark already at 13:00, past A's 10:35 merge window
-    val state = TestGroupState.create[FunnelSessions](
-      org.apache.spark.api.java.Optional.of(FunnelSessions(List(a))),
-      GroupStateTimeout.EventTimeTimeout(), batchProcessingTimeMs = 0L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.of(h(13, 0).getTime),
-      hasTimedOut = false)
-    val out = FunnelState.updateFunnel(gapUs)(
-      1L, Iterator(FEvent(1L, h(14, 0), 9L, "view")), state).toList
-    assert(out.map(c => (c.t_start, c.n_events, c.closed_by_timeout)) ==
-      List((FunnelState.micros(h(10, 0)), 2L, false)),
-      s"expired A must close via the sweep, not re-park: $out")
-    assert(state.getOption.map(_.sessions.map(_.nEvents)) == Some(List(1L)),
-      s"the fresh 14:00 session stays parked: ${state.getOption}")
-    assert(state.getTimeoutTimestampMs.get() == h(14, 30).getTime,
-      s"timeout re-set to the live session's window: ${state.getTimeoutTimestampMs}")
-  }
-
   test("pre-window stragglers merge into one session, not premature singletons") {
-    // the round-10 ADVICE divergence: events older than start-gap but
-    // inside the watermark used to be emitted one-by-one; batch merges
-    // them. The multi-session state must hold them open and merge.
+    // events older than start-gap but inside the watermark must stay
+    // open and merge with each other, as batch merges them, not be
+    // emitted one by one
     def h(hh: Int, mm: Int) = ts(f"2025-09-01 $hh%02d:$mm%02d:00")
     val out = runStream(Seq(
       Seq((1L, h(12, 0), 1L, "view")),
@@ -135,11 +104,11 @@ class FunnelStateSpec extends SparkSpec {
       Seq((1L, h(9, 0), 2L, "click"), (1L, h(9, 10), 3L, "view"))),
       watermark = "6 hours")
     assert(out.size == 2, s"straggler pair must form ONE session: $out")
-    val straggler = out.find(_._2 == FunnelState.micros(h(9, 0))).get
+    val straggler = out.find(_._2 == micros(h(9, 0))).get
     assert(straggler._3 == 2L, s"both stragglers in one session: $straggler")
-    assert(straggler._4.contains(FunnelState.micros(h(9, 10))) && straggler._5.isEmpty,
+    assert(straggler._4.contains(micros(h(9, 10))) && straggler._5.isEmpty,
       s"click precedes the view, so no strict-order conversion: $straggler")
-    assert(out.exists(s => s._2 == FunnelState.micros(h(12, 0)) && s._3 == 1L),
+    assert(out.exists(s => s._2 == micros(h(12, 0)) && s._3 == 1L),
       s"the original session stays intact: $out")
   }
 
@@ -151,11 +120,11 @@ class FunnelStateSpec extends SparkSpec {
       Seq((1L, h(10, 25), 3L, "click"))), // within gap of BOTH: bridges
       watermark = "6 hours")
     assert(out.size == 1, s"bridge must merge the islands: $out")
-    val (_, tStart, n, tv, tc, tp, _) = out.head
-    assert(n == 3L && tStart == FunnelState.micros(h(10, 0)), s"merged bounds: $out")
-    assert(tv.contains(FunnelState.micros(h(10, 0))) &&
-      tc.contains(FunnelState.micros(h(10, 25))) &&
-      tp.contains(FunnelState.micros(h(10, 50))),
+    val (_, tStart, n, tv, tc, tp) = out.head
+    assert(n == 3L && tStart == micros(h(10, 0)), s"merged bounds: $out")
+    assert(tv.contains(micros(h(10, 0))) &&
+      tc.contains(micros(h(10, 25))) &&
+      tp.contains(micros(h(10, 50))),
       s"full strict-order conversion through the bridge: $out")
   }
 
@@ -165,9 +134,9 @@ class FunnelStateSpec extends SparkSpec {
     // sessions and purchase-heavy users), micro-batch boundaries, and
     // — trials 4+ — fully shuffled delivery, so stragglers older than
     // an open session's merge window and bridge events arrive in every
-    // order. The multi-session state makes the final closed set equal
-    // to the batch gap split regardless of arrival order (within the
-    // watermark, held wide here so nothing is dropped).
+    // order. The final closed set must equal the batch gap split
+    // regardless of arrival order (within the watermark, held wide
+    // here so nothing is dropped).
     val rnd = new scala.util.Random(31)
     val types = Seq("view", "click", "purchase", "other")
     (1 to 8).foreach { trial =>
@@ -186,8 +155,7 @@ class FunnelStateSpec extends SparkSpec {
       val chunks = delivered.grouped(
         math.max(1, delivered.length / (1 + rnd.nextInt(4)) + 1)).map(_.toSeq).toSeq
       val streamed = runStream(chunks, name = s"funnel_fuzz_$trial",
-          watermark = if (shuffled) "30 days" else "0 seconds")
-        .map { case (u, tStart, n, tv, tc, tp, _) => (u, tStart, n, tv, tc, tp) }.toSet
+          watermark = if (shuffled) "30 days" else "0 seconds").toSet
       val batch = graft.queries.EventQueries.sessionSteps(
           rows.toDF("user_id", "ts", "event_id", "event_type"))
         .select($"user_id", $"t_start", $"n_events", $"t_view", $"t_click", $"t_purchase")
@@ -205,15 +173,13 @@ class FunnelStateSpec extends SparkSpec {
 
   test("batch q90 step frame and the streaming funnel agree per session on the fixture") {
     // all fixture users, events fed chronologically in 3 chunks so
-    // sessions span micro-batches; in-order delivery makes the
-    // streaming merge window equal the batch gap split exactly
+    // sessions span micro-batches
     val ev = Tables.events(spark, sf)
       .select($"user_id", $"ts", $"event_id", $"event_type")
     val rows = ev.orderBy($"ts", $"event_id")
       .as[(Long, Timestamp, Long, String)].collect()
     val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).map(_.toSeq).toSeq
-    val streamed = runStream(chunks, watermark = "0 seconds", name = "funnel_parity")
-      .map { case (u, tStart, n, tv, tc, tp, _) => (u, tStart, n, tv, tc, tp) }.toSet
+    val streamed = runStream(chunks, watermark = "0 seconds", name = "funnel_parity").toSet
     val batch = graft.queries.EventQueries.sessionSteps(ev)
       .select($"user_id", $"t_start", $"n_events", $"t_view", $"t_click", $"t_purchase")
       .collect().map { r =>

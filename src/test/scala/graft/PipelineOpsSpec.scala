@@ -640,8 +640,8 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got.map(_._4).sum == events.length)
   }
   test("q107 co-presence equals a Scala session-fold model on the fixture") {
-    // third implementation: driver-side gap fold (the SessionStateSpec
-    // discipline) → distinct (session, type) → pair counts + lift
+    // third implementation: driver-side gap fold → distinct
+    // (session, type) → pair counts + lift
     val evs = Tables.events(spark, sf)
       .select($"user_id", $"event_id", $"ts", $"event_type")
       .as[(Long, Long, java.sql.Timestamp, String)].collect()
@@ -670,6 +670,21 @@ class PipelineOpsSpec extends SparkSpec {
     val got = graft.queries.EventQueries.sessionCopresence(spark, sf)
       .as[(String, String, Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == model, s"got=$got\nmodel=$model")
+  }
+
+  test("q28 session gap: 1,800,000,000 µs apart is one session, 1,800,000,001 µs two") {
+    // the oracle splits iff consecutive events are > 1800000000 µs
+    // apart; session_window merges while the distance is <= its gap
+    val dir = java.nio.file.Files.createTempDirectory("graft-q28-gap").toString
+    val t0 = 1756720800000000L // 2025-09-01 10:00:00 UTC in micros
+    Seq((1L, 1L, t0), (1L, 2L, t0 + 1800000000L), (2L, 3L, t0), (2L, 4L, t0 + 1800000001L))
+      .toDF("user_id", "event_id", "us")
+      .select($"user_id", $"event_id", lit("view").as("event_type"),
+        timestamp_micros($"us").as("ts"), lit(1.0).as("value"))
+      .write.parquet(s"$dir/events.parquet")
+    val perUser = graft.queries.EventQueries.sessionizeRaw(spark, dir)
+      .groupBy($"user_id").count().as[(Long, Long)].collect().toMap
+    assert(perUser == Map(1L -> 1L, 2L -> 2L), s"sessions per user: $perUser")
   }
 
   test("q90 funnel: strict step ordering and session boundaries (constructed data)") {

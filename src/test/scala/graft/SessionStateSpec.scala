@@ -5,8 +5,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.SessionState
 
-/** flatMapGroupsWithState sessionization: gap-close, timeout-close,
-  * state boundedness semantics. */
+/** Streaming sessionization on `session_window`: gap split, watermark
+  * close, out-of-order merges, and per-session parity with batch q28;
+  * plus the Misra–Gries trending state. */
 class SessionStateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,13 +17,12 @@ class SessionStateSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Double)]
     val sessions = SessionState.sessionize(
-      mem.toDF().toDF("user_id", "ts", "value"), gapMs = 30 * 60 * 1000L,
-      watermark = "0 seconds")
+      mem.toDF().toDF("user_id", "ts", "value"), watermark = "0 seconds")
     val q = sessions.writeStream.format("memory").queryName("fmgws_test")
       .outputMode("append").start()
     try {
       // user 1: two events 10 min apart (one session), then an event
-      // 2 hours later (gap-close → emits first session, opens second)
+      // 2 hours later (the gap splits them into two sessions)
       mem.addData(
         (1L, ts("2025-09-01 10:00:00"), 1.0),
         (1L, ts("2025-09-01 10:10:00"), 2.0),
@@ -30,20 +30,20 @@ class SessionStateSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData((1L, ts("2025-09-01 12:10:00"), 3.0))
       q.processAllAvailable()
-      // advance watermark far past everyone → timeout-close all open
+      // advance the watermark far past everyone → close all open
       mem.addData((99L, ts("2025-09-01 20:00:00"), 0.0))
       q.processAllAvailable()
       mem.addData((98L, ts("2025-09-02 10:00:00"), 0.0))
       q.processAllAvailable()
 
       val rows = spark.table("fmgws_test")
-        .select($"user_id", $"n_events", $"sum_value", $"closed_by_timeout")
-        .as[(Long, Long, Double, Boolean)].collect().toSet
-      // user 1 session A: 2 events sum 3.0 closed by gap
-      assert(rows.contains((1L, 2L, 3.0, false)), s"missing gap-closed session: $rows")
-      // user 1 session B (1 event, 3.0) and user 2 (1 event, 5.0) closed by timeout
-      assert(rows.contains((1L, 1L, 3.0, true)), s"missing timeout session u1: $rows")
-      assert(rows.contains((2L, 1L, 5.0, true)), s"missing timeout session u2: $rows")
+        .select($"user_id", $"n_events", $"sum_value")
+        .as[(Long, Long, Double)].collect().toSet
+      // user 1 session A: 2 events sum 3.0, split from B by the gap
+      assert(rows.contains((1L, 2L, 3.0)), s"missing gap-split session: $rows")
+      // user 1 session B (1 event, 3.0) and user 2 (1 event, 5.0)
+      assert(rows.contains((1L, 1L, 3.0)), s"missing session B of u1: $rows")
+      assert(rows.contains((2L, 1L, 5.0)), s"missing session of u2: $rows")
     } finally q.stop()
   }
 
@@ -51,7 +51,7 @@ class SessionStateSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Double)]
     val sessions = SessionState.sessionize(
-      mem.toDF().toDF("user_id", "ts", "value"), gapMs = 30 * 60 * 1000L,
+      mem.toDF().toDF("user_id", "ts", "value"),
       watermark = "2 hours") // wide watermark lets late rows through
     val q = sessions.writeStream.format("memory").queryName("ooo_test")
       .outputMode("append").start()
@@ -61,9 +61,9 @@ class SessionStateSpec extends SparkSpec {
       // late but within gap of session start → extends backwards
       mem.addData((1L, ts("2025-09-01 09:45:00"), 2.0))
       q.processAllAvailable()
-      // older than start-gap (09:45-30min = 09:15) but still inside
-      // the 2h watermark → own single-event session, closed immediately
-      // (events BEHIND the watermark never reach the operator at all)
+      // 45 min before 09:45 but still inside the 2h watermark → its
+      // own single-event session (events BEHIND the watermark never
+      // reach the operator at all)
       mem.addData((1L, ts("2025-09-01 09:00:00"), 5.0))
       q.processAllAvailable()
       // flush remaining state
@@ -75,31 +75,70 @@ class SessionStateSpec extends SparkSpec {
         .select($"session_start", $"n_events", $"sum_value")
         .as[(Timestamp, Long, Double)].collect().toSet
       assert(rows.contains((ts("2025-09-01 09:00:00"), 1L, 5.0)),
-        s"too-old event must close as its own session: $rows")
+        s"an event more than the gap earlier must form its own session: $rows")
       assert(rows.contains((ts("2025-09-01 09:45:00"), 2L, 3.0)),
         s"late within-gap event must extend the session backwards: $rows")
     } finally q.stop()
   }
 
-  test("batch q28 and a replay through the same gap logic agree on session counts") {
-    // the driver-side fold of updateUser over a single user's events
-    // must equal the window-function sessionization for that user
-    val events = Tables.events(spark, sf)
-      .filter($"user_id" === 7).orderBy($"ts")
-      .select($"ts", $"value").collect()
-      .map(r => SessionState.Event(7L, r.getTimestamp(0), r.getDouble(1)))
-    // gap measured in integer MICROS exactly like q28 (ms truncation
-    // here would disagree with the query near the 30-minute boundary)
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    var sessions = 0
-    var last: Option[Long] = None
-    events.foreach { e =>
-      if (last.forall(l => micros(e.ts) - l > 1800000000L)) sessions += 1
-      last = Some(micros(e.ts))
-    }
-    val q28 = graft.queries.EventQueries.sessionize(spark, sf)
-      .filter($"user_id" === 7).count()
-    assert(q28 == sessions, s"batch=$q28 fold=$sessions")
+  /** Streams `batches` (one micro-batch each) through sessionize,
+    * then two far-future sentinel events close every open session. */
+  private def runSessions(batches: Seq[Seq[(Long, Timestamp, Double)]],
+                          watermark: String, name: String) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Timestamp, Double)]
+    val q = SessionState.sessionize(mem.toDF().toDF("user_id", "ts", "value"), watermark = watermark)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      Seq("2030-01-01 00:00:00", "2030-06-01 00:00:00").foreach { t =>
+        mem.addData((9999L, ts(t), 0.0)); q.processAllAvailable()
+      }
+      spark.table(name).filter($"user_id" =!= 9999L)
+    } finally q.stop()
+  }
+
+  test("stream and batch q28 agree per session on the fixture") {
+    // all fixture users, fed chronologically in 3 chunks so sessions
+    // span micro-batches
+    val rows = Tables.events(spark, sf).orderBy($"ts", $"event_id")
+      .select($"user_id", $"ts", $"value").as[(Long, Timestamp, Double)].collect()
+    val chunks = rows.grouped(rows.length / 3 + 1).map(_.toSeq).toSeq
+    val streamed = runSessions(chunks, "0 seconds", "sessions_parity")
+      .select($"user_id", date_format($"session_start", "yyyy-MM-dd HH:mm:ss"), $"n_events",
+        expr("(unix_micros(session_end) - unix_micros(session_start)) div 1000000"))
+      .as[(Long, String, Long, Long)].collect().toSet
+    val batch = graft.queries.EventQueries.sessionizeRaw(spark, sf)
+      .select($"user_id", $"session_start", $"n_events", $"duration_s")
+      .as[(Long, String, Long, Long)].collect().toSet
+    assert(batch.size > rows.map(_._1).distinct.length, "fixture must split some user's sessions")
+    assert(streamed == batch,
+      s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
+  }
+
+  test("a late straggler bridging an earlier session merges it, as q28 does") {
+    // 10:00, then 09:45, then 09:00 (45 min before 09:45), then 09:20
+    // arrives late and sits within the gap of both 09:00 and 09:45:
+    // batch sees 09:00, 09:20, 09:45, 10:00 — one 4-event session
+    val out = runSessions(Seq(
+      Seq((1L, ts("2025-09-01 10:00:00"), 1.0)),
+      Seq((1L, ts("2025-09-01 09:45:00"), 2.0)),
+      Seq((1L, ts("2025-09-01 09:00:00"), 4.0)),
+      Seq((1L, ts("2025-09-01 09:20:00"), 8.0))), "2 hours", "sessions_bridge")
+      .select($"session_start", $"session_end", $"n_events", $"sum_value")
+      .as[(Timestamp, Timestamp, Long, Double)].collect().toSeq
+    assert(out == Seq((ts("2025-09-01 09:00:00"), ts("2025-09-01 10:00:00"), 4L, 15.0)),
+      s"one bridged session expected: $out")
+  }
+
+  test("the gap is compared in exact micros: 1,800,000,999 µs apart splits") {
+    // both events truncate to the same 1800 s in milliseconds; q28's
+    // rule (> 1800000000 µs) splits them
+    val out = runSessions(Seq(Seq(
+      (1L, ts("2025-09-01 10:00:00"), 1.0),
+      (1L, ts("2025-09-01 10:30:00.000999"), 2.0))), "0 seconds", "sessions_micros")
+      .select($"n_events", $"sum_value").as[(Long, Double)].collect().toSet
+    assert(out == Set((1L, 1.0), (1L, 2.0)), s"two single-event sessions expected: $out")
   }
 
   test("streaming trending: MG state accumulates across batches with valid bounds") {
