@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -190,14 +190,14 @@ object EventQueries {
   /** Top-k per group (W1 generalized per SURVEY §2.6): 5 highest-value
     * events per type.
     *
-    * Round 10 reshape: the round-1 form was `Window.partitionBy(
-    * event_type) + row_number <= 5` — a rank window on a
-    * LOW-CARDINALITY key, which at scale funnels every event of a
-    * type into one task for a full sort (and even the WindowGroupLimit
-    * rewrite still sorts each map partition wholesale first). Now a
-    * single groupBy with the bounded [[graft.functions.TopKBy]]
-    * aggregate: each task keeps an O(k) buffer per type (map-side
-    * combine), only ≤ 5 rows per (type, task) cross the one exchange,
+    * Not `Window.partitionBy(event_type) + row_number <= 5`: a rank
+    * window on a LOW-CARDINALITY key funnels every event of a type
+    * into one task for a full sort at scale (and even the
+    * WindowGroupLimit rewrite still sorts each map partition wholesale
+    * first). Instead a single groupBy with the bounded
+    * [[graft.functions.TopKBy]] aggregate: each task keeps an O(k)
+    * buffer per type (map-side combine), only ≤ 5 rows per
+    * (type, task) cross the one exchange,
     * and nothing is ever sorted but the final ≤ 5·types survivors —
     * parallelism stays at the task count regardless of how few types
     * exist. PlanSpec pins "no WindowExec, two-phase
@@ -208,7 +208,7 @@ object EventQueries {
     Tables.events(s, dir)
       .groupBy($"event_type")
       // strict: a null value/event_id would silently diverge from the
-      // window's NULLS LAST padding — fail loudly instead (ADVICE r10)
+      // window's NULLS LAST padding — fail loudly instead
       .agg(graft.functions.TopKBy.top_k_by($"value", $"event_id", 5, strict = true).as("top"))
       .select($"event_type", posexplode($"top"))
       .select($"event_type", $"col.tie".as("event_id"),
@@ -346,31 +346,35 @@ object EventQueries {
       |SELECT day, daily_users, rolling_users, true AS hll_within_5pct
       |FROM daily JOIN roll USING (day) ORDER BY day""".stripMargin
 
-  /** The 30-minute session gap of q28, q107 and the streaming
-    * sessionizers, as a `session_window` duration. `session_window`
-    * merges an event whose distance from the session's last event is
-    * at most the gap, so this splits iff consecutive events are more
-    * than 1800000000 µs apart — the oracle's `> 1800000000` rule. */
+  /** The 30-minute session gap, as a `session_window` duration.
+    * `session_window` merges an event whose distance from the
+    * session's last event is at most the gap, so this splits iff
+    * consecutive events are more than 1800000000 µs apart — the
+    * oracle's `> 1800000000` rule. */
   val SessionGap: String = "1800000000 microseconds"
 
+  /** THE session grouping: per user, [[SessionGap]] session windows.
+    * q28, q90, q107, q162, q163 and the streaming `SessionState` and
+    * `FunnelState` all aggregate over it, so batch and stream split
+    * sessions by one rule. One shuffle on user_id; sessions are
+    * assigned and aggregated in one sort-based pass.
+    *
+    * Rows with a NULL `ts` are dropped: Spark's `SessionWindowing`
+    * rule filters on `ts IS NOT NULL` before sessionizing. The oracle's
+    * lag form would keep them in the preceding session; no fixture or
+    * degenerate corpus carries a NULL `ts`. */
+  private[graft] def userSessions(ev: DataFrame): RelationalGroupedDataset =
+    ev.groupBy(col("user_id"), session_window(col("ts"), SessionGap))
+
   /** Sessionization: gap-based user sessions (30-minute inactivity
-    * closes a session) via `session_window` with [[SessionGap]] — the
-    * operator and gap the streaming `SessionState` uses, so batch and
-    * stream sessions agree by construction. One shuffle on user_id.
-    * Realizes SURVEY §2.9's session concept the reference never had. */
+    * closes a session) over [[userSessions]]. Realizes SURVEY §2.9's
+    * session concept the reference never had. */
   def sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // A lag + running-sum window pair would be SEQUENTIALLY dependent
-    // (the sum consumes the lag output), so Catalyst could never fuse
-    // the two WindowExecs; batch `session_window` aggregation is ONE
-    // sort-based pass that assigns and aggregates sessions in-stream.
     // The only WindowExec is the per-user session NUMBERING, which runs
     // over the aggregated one-row-per-session frame (tiny) and reuses
     // the user_id partitioning — PlanSpec pins exactly one window node
     // and one exchange up to the export sort.
-    //
-    // Boundary fidelity: [[SessionGap]] splits exactly where the
-    // oracle's `diff > 1800000000 µs` rule does.
     //
     // All time arithmetic in integer MICROS so Spark and the oracle
     // truncate identically (unix_timestamp would floor each operand
@@ -387,8 +391,7 @@ object EventQueries {
     * frame's shape (the checkpoint would hide it behind an RDD scan). */
   private[graft] def sessionizeRaw(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sessions = Tables.events(s, dir)
-      .groupBy($"user_id", session_window($"ts", SessionGap))
+    val sessions = userSessions(Tables.events(s, dir))
       .agg(count(lit(1)).as("n_events"),
         expr("(unix_micros(max(ts)) - unix_micros(min(ts))) div 1000000").as("duration_s"),
         date_format(min($"ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -399,20 +402,18 @@ object EventQueries {
       .select($"user_id", $"session_idx", $"n_events", $"duration_s", $"session_start")
   }
 
-  /** q90: SESSIONIZED FUNNEL — per 30-minute-gap session (q28's
-    * session arithmetic verbatim), did the user progress
-    * view → click → purchase in STRICT time order? The step times are
-    * session-scoped window minima, each conditioned on the previous
-    * step's time (`min(t WHERE type='click' AND t > t_view)`), so a
-    * click before the first view does not count and the whole match
-    * is one pass of window functions — no joins, no self-products,
-    * the standard funnel shape at any scale (two exchanges: user_id
-    * for sessionization, (user_id, session_idx) for the step
-    * windows; then a one-row global rollup).
+  /** q90: SESSIONIZED FUNNEL — per [[userSessions]] session, did the
+    * user progress view → click → purchase in STRICT time order? The
+    * step times come from the session aggregate itself (see
+    * [[sessionSteps]]), so a click before the first view does not count
+    * and the whole match is one session pass — no joins, no
+    * self-products, no per-event window. The event frame crosses one
+    * exchange (user_id, for the sessions); then a one-row global
+    * rollup.
     *
     * Strictness is on integer MICROS (`t > t_view`) — deterministic
-    * and identical cross-engine (the q28 precedent); conversion
-    * fractions use the round-3 half-up integer division. */
+    * and identical cross-engine; conversion fractions use the integer
+    * half-up 4 dp division `(20000·a + b) div 2b`. */
   def sessionFunnel(s: SparkSession, dir: String): DataFrame =
     sessionFunnelOver(Tables.events(s, dir))
 
@@ -420,7 +421,7 @@ object EventQueries {
     * frame — injectable so ordering edge cases the fixture can't
     * guarantee (a click BEFORE the session's first view, a purchase
     * before the click, step chains split across a session gap) have
-    * a constructed-data spec (the round-7 vacuous-test rule). */
+    * a constructed-data spec. */
   private[graft] def sessionFunnelOver(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
@@ -438,34 +439,26 @@ object EventQueries {
           .as("frac_purchase"))
   }
 
-  /** q90's per-session step frame — (user_id, session_idx, session
-    * bounds, event count, strict-order step times in epoch MICROS) —
-    * exposed so FunnelStateSpec can check the streaming funnel
-    * (`streaming.FunnelState`, a `session_window` aggregation) against
-    * it per session, not just on the rollup. */
+  /** THE funnel step definition, shared by q90, q163 and the streaming
+    * `FunnelState`: one row per [[userSessions]] session with its
+    * bounds, event count and strict-order step times, all in epoch
+    * MICROS — t_view = min view time; t_click = min click time >
+    * t_view; t_purchase = min purchase time > t_click. Clicks and
+    * purchases are collected per session (`collect_list`) because a
+    * step qualifies only against the session's own earlier step. */
   private[graft] def sessionSteps(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val gapFlag = when(
-      unix_micros($"ts") - unix_micros(lag($"ts", 1).over(byUser)) > 1800000000L, 1)
-      .otherwise(0)
-    val w = Window.partitionBy($"user_id", $"session_idx")
-    ev
-      .withColumn("new_session", gapFlag)
-      .withColumn("session_idx", sum($"new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("t", unix_micros($"ts"))
-      .withColumn("t_view", min(when($"event_type" === "view", $"t")).over(w))
-      .withColumn("t_click",
-        min(when($"event_type" === "click" && $"t" > $"t_view", $"t")).over(w))
-      .withColumn("t_purchase",
-        min(when($"event_type" === "purchase" && $"t" > $"t_click", $"t")).over(w))
-      .groupBy($"user_id", $"session_idx")
-      .agg(min($"t").as("t_start"), max($"t").as("t_end"),
-        count(lit(1)).as("n_events"),
-        max($"t_view").as("t_view"), max($"t_click").as("t_click"),
-        max($"t_purchase").as("t_purchase"))
+    val t = unix_micros($"ts")
+    def timesOf(eventType: String) = collect_list(when($"event_type" === eventType, t))
+    userSessions(ev)
+      .agg(min(t).as("t_start"), max(t).as("t_end"), count(lit(1)).as("n_events"),
+        min(when($"event_type" === "view", t)).as("t_view"),
+        timesOf("click").as("clicks"), timesOf("purchase").as("purchases"))
+      .withColumn("t_click", array_min(filter($"clicks", _ > $"t_view")))
+      .withColumn("t_purchase", array_min(filter($"purchases", _ > $"t_click")))
+      .select($"user_id", $"t_start", $"t_end", $"n_events",
+        $"t_view", $"t_click", $"t_purchase")
   }
 
   val sessionFunnelSql: String =
@@ -513,30 +506,25 @@ object EventQueries {
     * funnel hypothesis ranking, which the reference's per-record SQL
     * surface cannot express.
     *
-    * Scale shape (round 15 reshape, VERDICT r14 #3): ONE pass over
-    * events. Session assignment is q28's one user_id shuffle; the
-    * per-(user, session) `collect_set(event_type)` reuses that
-    * partitioning (HashPartitioning(user_id) satisfies the clustering
-    * on (user_id, session_idx) — no new exchange), so the old
-    * distinct + st⋈st self-join + two extra recomputing branches are
-    * gone. From each session's sorted type set one explode emits a
+    * Scale shape: ONE pass over events. Session assignment is
+    * [[userSessions]]' one user_id shuffle, and the per-session
+    * `collect_set(event_type)` is computed in the same aggregate, so
+    * there is no distinct, no self-join and no recomputing branch.
+    * From each session's sorted type set one explode emits a
     * session marker (null,null), one single (t,null) per type, and
     * one ordered pair (a,b) per a<b — so the SAME tiny
     * count-aggregate (≤ |types|² + |types| + 1 groups; event_type is
     * a small enum) yields n_sessions, n_a/n_b, and n_both at once.
     * That bounded result is merged on the driver (same
     * constant-bounded materialization class as the merges tables /
-    * 1-row argmax sites). The lift ratio keeps the round-3 integer
-    * half-up 4 dp division so both engines agree on exact midpoints
+    * 1-row argmax sites). The lift ratio keeps the integer half-up
+    * 4 dp division so both engines agree on exact midpoints
     * (int64-safe to ~10^9 sessions × 10^4 pairs). */
   def sessionCopresence(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // session membership via the same native session_window pass as
-    // q28 (gap = SessionGap: split iff `diff > 1800 s`, the oracle's
-    // rule); co-presence needs no session NUMBERS, so no window node
-    // exists anywhere in this plan
-    val sessions = Tables.events(s, dir)
-      .groupBy($"user_id", session_window($"ts", SessionGap))
+    // session membership via [[userSessions]]; co-presence needs no
+    // session NUMBERS, so no window node exists anywhere in this plan
+    val sessions = userSessions(Tables.events(s, dir))
       .agg(array_sort(collect_set($"event_type")).as("types"))
     val nullT = lit(null).cast("string")
     val entries = concat(
@@ -638,8 +626,8 @@ object EventQueries {
       |  round(quantile_cont(value, 0.99), 4) AS p99
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** Approximate percentiles — the 100 TB sibling of q29 (VERDICT r01
-    * next-steps #10): `percentile_approx` keeps a fixed-size mergeable
+  /** Approximate percentiles — the 100 TB sibling of q29:
+    * `percentile_approx` keeps a fixed-size mergeable
     * Greenwald–Khanna sketch per group (map-side partials, no
     * sort-every-group like exact percentile). Self-validating like
     * q19, with a RANK-SANDWICH bound rather than a value tolerance
@@ -795,10 +783,10 @@ object EventQueries {
       |  true AS overestimate_holds, true AS within_4x_eps
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** q63: the PRODUCTION-shaped heavy-hitters query (VERDICT r02 #6):
-    * top-5 trending users per event type straight from the
-    * Misra–Gries sketch — ONE aggregation, no exact-count harness, so
-    * the bench row prices the sketch itself (q57 keeps the
+  /** q63: the PRODUCTION-shaped heavy-hitters query: top-5 trending
+    * users per event type straight from the Misra–Gries sketch — ONE
+    * aggregation, no exact-count harness, so the bench row prices the
+    * sketch itself (q57 keeps the
     * theorem-validated form as the correctness row; its exact-count
     * validation joins cost ~100× the sketch on skewed data). Rows-only
     * check by design: the estimates are sketch-order-dependent and
@@ -818,9 +806,9 @@ object EventQueries {
       .domainOrdered($"event_type", $"rank")
   }
 
-  /** q64: z-order layout rewrite under a CORRECTNESS oracle (VERDICT
-    * r02 #7): write a z-ordered copy of `events` on (user_id, value)
-    * via [[graft.operators.Scale.zorderWrite]], then run a selective
+  /** q64: z-order layout rewrite under a CORRECTNESS oracle: write a
+    * z-ordered copy of `events` on (user_id, value) via
+    * [[graft.operators.Scale.zorderWrite]], then run a selective
     * TWO-SIDED filter over the rewritten copy. The oracle runs the
     * same filter over the ORIGINAL table in DuckDB — a hash match
     * proves the Morton rewrite is lossless (no row lost, duplicated,
@@ -848,12 +836,12 @@ object EventQueries {
       |WHERE user_id BETWEEN 100 AND 130 AND value BETWEEN 40.0 AND 70.0
       |ORDER BY event_id""".stripMargin
 
-  /** Un-materialized q67 stack. Round 10: the round-3 form was one
-    * `Window.partitionBy(event_type)` over the raw corpus — the
-    * low-cardinality anti-pattern the PlanSpec lint rejects (it was
-    * the LAST genuine instance, visible only here because the
-    * registered query's checkpoint hides it from the sweep). All
-    * five analytics derive from the EXACT GLOBAL RANK, and a rank is
+  /** Un-materialized q67 stack. Not one `Window.partitionBy(
+    * event_type)` over the raw corpus — the low-cardinality
+    * anti-pattern the PlanSpec lint rejects (this frame is checked
+    * directly because the registered query's checkpoint hides it from
+    * the sweep). All five analytics derive from the EXACT GLOBAL
+    * RANK, and a rank is
     * a prefix count — so the q70/q75/q85 two-level construction
     * applies: shard each type by VALUE-QUANTILE buckets (monotone, so
     * concatenating shards in shard order IS the (value, event_id)
@@ -1135,7 +1123,8 @@ object EventQueries {
   def eventAnomalies(s: SparkSession, dir: String): DataFrame =
     eventAnomaliesOver(Tables.events(s, dir))
 
-  /** q139 over an injectable (event_type, ts) frame (round-7 rule). */
+  /** q139 over an injectable (event_type, ts) frame, so constructed
+    * specs reach cases the fixture cannot guarantee. */
   private[graft] def eventAnomaliesOver(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
@@ -1183,7 +1172,7 @@ object EventQueries {
     * like n·Σxy break past 2^53 — and past Long at ~1e10 events/day
     * over a year — while centered x is bounded by the type's active
     * SPAN in days, keeping every product exactly representable for
-    * any realistic domain; ADVICE r15). The slope then assembles from
+    * any realistic domain). The slope then assembles from
     * FIVE EXACT INTEGER SUMS per type
     * (n, Σx, Σy, Σxy, Σx²) folded in one map-side-combined aggregate:
     *   slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
@@ -1196,16 +1185,15 @@ object EventQueries {
     * cross-engine trap the double divide sidesteps). A type active on
     * a single day has denominator 0; its slope is GUARDED to NULL
     * (n ≥ 2) — without the guard Spark's non-ANSI divide yields NULL
-    * while DuckDB's IEEE divide yields NaN and `rising` diverges
-    * (ADVICE r15).
+    * while DuckDB's IEEE divide yields NaN and `rising` diverges.
     * Scale: one aggregate over (type, day) counts (the per-type
     * min-day frame is |types|-bounded, broadcast); 5 longs of state
     * per type. */
   def eventTrend(s: SparkSession, dir: String): DataFrame =
     eventTrendOver(Tables.events(s, dir))
 
-  /** q142 over an injectable (event_type, ts) frame (round-7 rule:
-    * slopes of ±1 and 0 are hand-checkable on constructed days). */
+  /** q142 over an injectable (event_type, ts) frame: slopes of ±1
+    * and 0 are hand-checkable on constructed days. */
   private[graft] def eventTrendOver(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
@@ -1284,7 +1272,7 @@ object EventQueries {
     * pandas `merge_asof(tolerance=…)` constraint: a click is only
     * attributed to a purchase made within the preceding 10 minutes
     * (the attribution-window rule every ads/analytics pipeline
-    * carries). Exercises the round-15 `tolerance` parameter of the
+    * carries). Exercises the `tolerance` parameter of the
     * custom operator end-to-end; the oracle is DuckDB's native ASOF
     * with the same integer-micros gap bound as a post-filter — sound
     * on both engines because backward as-of keeps the LATEST match,
@@ -1328,7 +1316,7 @@ object EventQueries {
 
   /** q111: FORWARD AS-OF — for each click, the user's NEXT purchase
     * (time-to-conversion, the mirror of q77's attribution lookup and
-    * pandas `direction="forward"`). Runs on the round-15
+    * pandas `direction="forward"`). Runs on the
     * [[graft.plans.AsOfJoin.asofJoinForward]] reduction (time
     * negation over the same O(1)-state merge scan); the oracle is
     * DuckDB's native ASOF with the inequality flipped
@@ -1369,7 +1357,7 @@ object EventQueries {
 
   /** q112: NEAREST AS-OF — each click attributed to its closest
     * purchase in EITHER direction (pandas `direction="nearest"`,
-    * ties backward), on the round-15
+    * ties backward), on the
     * [[graft.plans.AsOfJoin.asofJoinNearest]] two-pass composition.
     * `offset_s` is signed: positive = the purchase preceded the
     * click. The oracle reconstructs nearest from DuckDB's two native
@@ -1435,7 +1423,7 @@ object EventQueries {
     * unobservable); the right side is pre-aggregated to one row per
     * (user, minute) — count + integer-cents sum, the q12 exactness
     * discipline — so the match payload is tie-free and deterministic
-    * on both engines. Exercises the round-15 `allowExact = false`
+    * on both engines. Exercises the `allowExact = false`
     * merge-scan mode (advance test `<` instead of `≤`: an equal-time
     * right row is neither matched nor consumed, staying buffered for
     * later left rows). Oracle: DuckDB's native ASOF with the strict
@@ -1871,16 +1859,40 @@ object EventQueries {
       |  CAST(band AS BIGINT) AS band, count(*) AS n_users
       |FROM b GROUP BY 1, 2 ORDER BY outcome, band""".stripMargin
 
+  /** Exact lower quantiles from a histogram: `h` is an ascending
+    * sorted array of (v BIGINT, c count) structs and `n` = Σ c. For
+    * each percent p the result struct has a field `p<p>` holding the
+    * smallest v whose running count reaches position
+    * `(p·n + 99) div 100` = ceil(p·n/100) — the integer lower-quantile
+    * rule the oracles re-derive with a cumulative window or row_number,
+    * no interpolation, no float. NULL where no position is reached
+    * (an empty histogram). One fold over the domain-sized histogram,
+    * shared by q132, q163 and q179. */
+  private[graft] def lowerQuantiles(h: Column, n: Column, percents: Int*): Column = {
+    val ks = percents.map(p => call_function("div", n * p + 99, lit(100)))
+    val names = percents.map(p => s"p$p")
+    val unset = names.map(nm => lit(null).cast("long").as(nm))
+    aggregate(h, struct(lit(0L).as("cum") +: unset: _*),
+      (acc, x) => {
+        val cum2 = acc("cum") + x("c")
+        struct(cum2.as("cum") +: names.zip(ks).map { case (nm, k) =>
+          when(acc(nm).isNull && cum2 >= k, x("v")).otherwise(acc(nm)).as(nm)
+        }: _*)
+      },
+      acc => struct(names.map(nm => acc(nm).as(nm)): _*))
+  }
+
   /** q179: WINSORIZED VALUE SUMMARY per event type — the robust
     * preprocessing step every metrics pipeline runs before averaging
     * a heavy-tailed measure: clamp to the type's own exact [p1, p99]
     * and report how much mass the clamp moved. All arithmetic rides
     * the INTEGER-CENTS domain (the q12/q86 rule), and both
     * percentiles come from the q132 bounded-domain histogram pattern:
-    * per-type (cents → count) histogram, thresholds found by ONE fold
-    * over the ≤domain-sized sorted histogram (p1 = smallest v with
-    * cum ≥ ceil(n/100), p99 = smallest v with cum ≥ ceil(99n/100)) —
-    * no sort, no window, state bounded by the VALUE DOMAIN. The
+    * per-type (cents → count) histogram, thresholds found by ONE
+    * [[lowerQuantiles]] fold over the ≤domain-sized sorted histogram
+    * (p1 = smallest v with cum ≥ ceil(n/100), p99 = smallest v with
+    * cum ≥ ceil(99n/100)) — no sort, no window, state bounded by the
+    * VALUE DOMAIN. The
     * clamped statistics are then computed from the HISTOGRAM ITSELF
     * (Σ c·clamp(v)), so the corpus is scanned exactly once.
     * Scale: one map-side-combined (type, cents) exchange; everything
@@ -1900,19 +1912,8 @@ object EventQueries {
     val thr = hist.groupBy($"event_type")
       .agg(sort_array(collect_list(struct($"v", $"c"))).as("h"),
         sum($"c").as("n"))
-      .withColumn("k1", expr("(n + 99) div 100"))
-      .withColumn("k99", expr("(99 * n + 99) div 100"))
-      .withColumn("t", aggregate($"h",
-        struct(lit(0L).as("cum"), lit(Long.MinValue).as("lo"), lit(Long.MinValue).as("hi")),
-        (acc, x) => {
-          val cum2 = acc("cum") + x("c")
-          struct(cum2.as("cum"),
-            when(acc("lo") === Long.MinValue && cum2 >= $"k1", x("v"))
-              .otherwise(acc("lo")).as("lo"),
-            when(acc("hi") === Long.MinValue && cum2 >= $"k99", x("v"))
-              .otherwise(acc("hi")).as("hi"))
-        }))
-      .select($"event_type", $"n", $"t.lo".as("lo_cents"), $"t.hi".as("hi_cents"))
+      .withColumn("t", lowerQuantiles($"h", $"n", 1, 99))
+      .select($"event_type", $"n", $"t.p1".as("lo_cents"), $"t.p99".as("hi_cents"))
     hist.join(broadcast(thr), Seq("event_type"))
       .groupBy($"event_type", $"n", $"lo_cents", $"hi_cents")
       .agg(
@@ -2071,10 +2072,10 @@ object EventQueries {
     // LEFT bucket join + conditional count: zero-click errors survive
     // the probe join (their two probe rows aggregate to 0), so no
     // second join back to the error relation is needed — one shuffle
-    // fewer than the inner-join + left-join-back form (round 9; the
-    // range predicate moves from a join filter into the count
-    // condition, which is equivalent because each in-range click
-    // falls in exactly one of the two probed buckets).
+    // fewer than the inner-join + left-join-back form (the range
+    // predicate moves from a join filter into the count condition,
+    // which is equivalent because each in-range click falls in
+    // exactly one of the two probed buckets).
     probes.select($"event_id", $"user_id", $"ts", $"t_err", $"bkt")
       .join(clicks, Seq("user_id", "bkt"), "left")
       .groupBy($"event_id", $"user_id", $"ts")
@@ -2181,7 +2182,7 @@ object EventQueries {
       |GROUP BY 1, 2, 3 ORDER BY event_type, bucket""".stripMargin
 
   /** q162: SESSION SEQUENCE MINING — frequent event-type trigrams
-    * within q28's 30-minute-gap sessions (process mining / "what do
+    * within [[userSessions]] sessions (process mining / "what do
     * users actually do" path analysis), the ORDERED sibling of
     * q107's unordered co-presence. Each session's events collapse to
     * one ordered type list (the per-session `collect_list` is
@@ -2199,15 +2200,7 @@ object EventQueries {
   private[graft] def sessionSequencesOver(ev: DataFrame, k: Int): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val gapFlag = when(
-      unix_micros($"ts") - unix_micros(lag($"ts", 1).over(byUser)) > 1800000000L, 1)
-      .otherwise(0)
-    val seqs = ev
-      .withColumn("new_session", gapFlag)
-      .withColumn("session_idx", sum($"new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy($"user_id", $"session_idx")
+    val seqs = userSessions(ev)
       .agg(sort_array(collect_list(struct(
         unix_micros($"ts").as("t"), $"event_id".as("e"), $"event_type".as("y")))).as("evs"))
     val tri = expr(
@@ -2252,16 +2245,15 @@ object EventQueries {
     * q90's converted sessions. Quantiles are EXACT without a corpus
     * sort via the q132/q139 bounded-domain discipline: durations are
     * session-bounded integers, so the (value, count) histogram is
-    * domain-sized, one sorted fold reads all three positions
-    * (position ceil(q·n/100), the lower-quantile rule — no
-    * interpolation, no float), and the oracle re-derives the same
-    * positions with a row_number window. Zero converted sessions
-    * yields NULL quantiles on both engines. */
+    * domain-sized, one [[lowerQuantiles]] fold reads all three
+    * positions, and the oracle re-derives the same positions with a
+    * row_number window. Zero converted sessions yields NULL quantiles
+    * on both engines. */
   def funnelTimeToConvert(s: SparkSession, dir: String): DataFrame =
     funnelTimeToConvertOver(Tables.events(s, dir))
 
-  /** q163 over an injectable events frame (shares q90's
-    * [[sessionSteps]] strict-order chain — one definition). */
+  /** q163 over an injectable events frame (q90's [[sessionSteps]]
+    * step frame — one definition). */
   private[graft] def funnelTimeToConvertOver(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
@@ -2270,23 +2262,9 @@ object EventQueries {
       .select(expr("(t_purchase - t_view) div 1000000").as("v"))
     durs.groupBy($"v").agg(count(lit(1)).as("c"))
       .agg(sort_array(collect_list(struct($"v", $"c"))).as("h"), sum($"c").as("n"))
-      .withColumn("k50", expr("(50 * n + 99) div 100"))
-      .withColumn("k90", expr("(90 * n + 99) div 100"))
-      .withColumn("k99", expr("(99 * n + 99) div 100"))
-      .withColumn("q", aggregate($"h",
-        struct(lit(0L).as("cum"), lit(-1L).as("p50"), lit(-1L).as("p90"), lit(-1L).as("p99")),
-        (acc, x) => {
-          val cum2 = acc("cum") + x("c")
-          struct(cum2.as("cum"),
-            when(acc("p50") === -1L && cum2 >= $"k50", x("v")).otherwise(acc("p50")).as("p50"),
-            when(acc("p90") === -1L && cum2 >= $"k90", x("v")).otherwise(acc("p90")).as("p90"),
-            when(acc("p99") === -1L && cum2 >= $"k99", x("v")).otherwise(acc("p99")).as("p99"))
-        },
-        acc => acc))
+      .withColumn("q", lowerQuantiles($"h", $"n", 50, 90, 99))
       .select(coalesce($"n", lit(0L)).as("n_converted"),
-        when($"q.p50" === -1L, lit(null).cast("long")).otherwise($"q.p50").as("p50_s"),
-        when($"q.p90" === -1L, lit(null).cast("long")).otherwise($"q.p90").as("p90_s"),
-        when($"q.p99" === -1L, lit(null).cast("long")).otherwise($"q.p99").as("p99_s"))
+        $"q.p50".as("p50_s"), $"q.p90".as("p90_s"), $"q.p99".as("p99_s"))
   }
 
   /** Oracle: q90's session/step CTEs verbatim, then row_number
@@ -2583,7 +2561,7 @@ object EventQueries {
     * conversion is integer-div ppm (q190's div rule, NULL for a
     * signup-free arm); the chi-square cell follows the q114 per-cell
     * IEEE contract (e = CAST(total AS DOUBLE)/2, one mirrored chain,
-    * round 6, no double summation).
+    * `round(·, 6)`, no double summation).
     *
     * Plan at 100 TB: one map-side-combined (user) exchange → a 2-row
     * arm rollup; the 1-row total broadcasts. Nothing driver-side. */

@@ -578,9 +578,9 @@ object TextQueries {
     * That makes the EXACT p10 computable without any corpus-wide
     * sort: per-source histogram `(source, v) → c` (one map-side-
     * combined aggregate), then the threshold is the smallest v whose
-    * running count reaches `k = ceil(n/10) = (n+9) div 10` — found by
-    * folding the ≤10001-entry sorted histogram with
-    * `aggregate(sort_array(collect_list(...)))`. Aggregation state is
+    * running count reaches `k = ceil(n/10)` — found by one
+    * [[EventQueries.lowerQuantiles]] fold over the ≤10001-entry sorted
+    * histogram. Aggregation state is
     * bounded by the VALUE DOMAIN, not the corpus, which is what makes
     * this the 100 TB exact-quantile pattern (GK/q56 is the companion
     * for unbounded domains, at ε precision). The ≤|sources| threshold
@@ -617,18 +617,7 @@ object TextQueries {
     val thr = hist.groupBy($"source")
       .agg(sort_array(collect_list(struct($"v", $"c"))).as("h"),
         sum($"c").as("n"))
-      .withColumn("k", expr("(n + 9) div 10"))
-      .withColumn("floor_v",
-        aggregate($"h",
-          struct(lit(0L).as("cum"), lit(-1L).as("t")),
-          (acc, x) => {
-            val cum2 = acc("cum") + x("c")
-            struct(cum2.as("cum"),
-              when(acc("t") === -1L && cum2 >= $"k", x("v"))
-                .otherwise(acc("t")).as("t"))
-          },
-          acc => acc("t")))
-      .select($"source", $"floor_v")
+      .select($"source", EventQueries.lowerQuantiles($"h", $"n", 10)("p10").as("floor_v"))
     m.join(broadcast(thr), Seq("source"))
       .select($"doc_id", $"source", $"v", $"floor_v",
         ($"v" >= $"floor_v").as("kept"))

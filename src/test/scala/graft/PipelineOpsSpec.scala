@@ -674,17 +674,29 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q28 session gap: 1,800,000,000 µs apart is one session, 1,800,000,001 µs two") {
     // the oracle splits iff consecutive events are > 1800000000 µs
-    // apart; session_window merges while the distance is <= its gap
+    // apart; session_window merges while the distance is <= its gap.
+    // q90's step frame and q107's session count must split the same way.
+    import graft.queries.EventQueries
     val dir = java.nio.file.Files.createTempDirectory("graft-q28-gap").toString
     val t0 = 1756720800000000L // 2025-09-01 10:00:00 UTC in micros
-    Seq((1L, 1L, t0), (1L, 2L, t0 + 1800000000L), (2L, 3L, t0), (2L, 4L, t0 + 1800000001L))
-      .toDF("user_id", "event_id", "us")
-      .select($"user_id", $"event_id", lit("view").as("event_type"),
+    Seq((1L, 1L, "view", t0), (1L, 2L, "click", t0 + 1800000000L),
+        (2L, 3L, "view", t0), (2L, 4L, "click", t0 + 1800000001L))
+      .toDF("user_id", "event_id", "event_type", "us")
+      .select($"user_id", $"event_id", $"event_type",
         timestamp_micros($"us").as("ts"), lit(1.0).as("value"))
       .write.parquet(s"$dir/events.parquet")
-    val perUser = graft.queries.EventQueries.sessionizeRaw(spark, dir)
+    val expected = Map(1L -> 1L, 2L -> 2L)
+    val perUser = EventQueries.sessionizeRaw(spark, dir)
       .groupBy($"user_id").count().as[(Long, Long)].collect().toMap
-    assert(perUser == Map(1L -> 1L, 2L -> 2L), s"sessions per user: $perUser")
+    assert(perUser == expected, s"q28 sessions per user: $perUser")
+    val stepsPerUser = EventQueries.sessionSteps(Tables.events(spark, dir))
+      .groupBy($"user_id").count().as[(Long, Long)].collect().toMap
+    assert(stepsPerUser == expected, s"q90 step-frame sessions per user: $stepsPerUser")
+    // q107 reports the session total on its one (click, view) pair row
+    val copresence = EventQueries.sessionCopresence(spark, dir)
+      .select("type_a", "type_b", "n_sessions").as[(String, String, Long)].collect().toSeq
+    assert(copresence == Seq(("click", "view", expected.values.sum)),
+      s"q107 n_sessions: $copresence")
   }
 
   test("q90 funnel: strict step ordering and session boundaries (constructed data)") {

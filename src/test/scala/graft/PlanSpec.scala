@@ -52,12 +52,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q28: sessionize is one session_window pass + one numbering window over sessions") {
-    // round 15: the lag + running-sum pair (two sequentially-dependent
-    // WindowExecs over every event) became a single batch
-    // session_window aggregation; the only WindowExec left is the
-    // per-user session numbering, which runs over the one-row-per-
-    // session aggregate, and the event frame crosses the wire once
-    // (the checkpoint + export sort sit above the tiny session frame).
+    // sessions are one batch session_window aggregation; the only
+    // WindowExec is the per-user session numbering, which runs over
+    // the one-row-per-session aggregate, and the event frame crosses
+    // the wire once (the checkpoint + export sort sit above the tiny
+    // session frame).
     val df = graft.queries.EventQueries.sessionizeRaw(spark, sf)
     df.count()
     val p = df.queryExecution.executedPlan.toString
@@ -67,6 +66,32 @@ class PlanSpec extends SparkSpec {
       s"expected the native session_window aggregation:\n$p")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       s"event frame must cross the wire exactly once:\n$p")
+  }
+
+  test("q90/q162/q163: sessions and funnel steps plan no window; q90's events cross one exchange") {
+    // the session grouping and the funnel steps are one aggregate over
+    // userSessions — no lag + running-sum pair, no per-event step windows
+    import graft.queries.EventQueries
+    val ev = Tables.events(spark, sf)
+    // collect() finalizes the adaptive plan; its string holds the final
+    // plan and then the initial one (the final plan may fold an empty
+    // stage away, e.g. q163 with no converted session)
+    def executed(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    val plans = Seq(
+      "q90" -> executed(EventQueries.sessionFunnelOver(ev)),
+      "q163" -> executed(EventQueries.funnelTimeToConvertOver(ev)),
+      "q162" -> executed(EventQueries.sessionSequencesOver(ev, 20)))
+    plans.foreach { case (q, p) =>
+      assert(!p.contains("Window "), s"$q must plan no window node:\n$p")
+      assert(p.contains("MergingSessions"), s"$q: expected the native session_window aggregation:\n$p")
+    }
+    val q90Final = plans.head._2.split("== Initial Plan ==").head
+    val hashExchanges = "Exchange hashpartitioning\\([^,)]*".r.findAllIn(q90Final).toList
+    assert(hashExchanges.size == 1 && hashExchanges.head.contains("user_id"),
+      s"q90's event frame must cross exactly one exchange, on user_id:\n$q90Final")
   }
 
   test("q02: global top-k plans as TakeOrderedAndProject (no full sort)") {
