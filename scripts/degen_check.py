@@ -15,6 +15,10 @@ validating pattern): those bind at real SFs and go vacuous here. The
 artifact records them explicitly so the expected set is versioned.
 
 Usage: python3 scripts/degen_check.py [--src sfDir] [--out CORRECTNESS_DEGEN.json]
+                                     [--work DIR]
+`--work` names the directory the fixtures and Verify dumps go to (default
+/tmp/graft_degen), so two checkouts can run the check at once. Verify runs
+on as many cores as `nproc` reports.
 Prerequisite: compiled classes (sbt compile).
 """
 import json, os, subprocess, sys
@@ -26,12 +30,14 @@ from make_artifacts import OPENS
 
 RECIPES = ("tiny", "mono", "emptydocs")
 CP = f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*"
+# the processors this process may run on: what `nproc` prints
+CPUS = str(len(os.sched_getaffinity(0)))
 
 
 def java(main, *args):
     cmd = f"java {OPENS} -Xmx8g -cp '{CP}' {main} " + " ".join(args)
     res = subprocess.run(cmd, shell=True, capture_output=True, text=True,
-                         env=dict(os.environ, SPARK_GRAFT_CPUS="8"))
+                         env=dict(os.environ, SPARK_GRAFT_CPUS=CPUS))
     if res.returncode != 0:
         sys.stderr.write(f"{main} {args} failed (rc={res.returncode}):\n"
                          + "\n".join(res.stderr.splitlines()[-20:]) + "\n")
@@ -47,8 +53,10 @@ def main():
         src = argv[argv.index("--src") + 1]
     if "--out" in argv:
         out_path = argv[argv.index("--out") + 1]
-
     base = "/tmp/graft_degen"
+    if "--work" in argv:
+        base = argv[argv.index("--work") + 1]
+
     java("graft.MakeDegen", src, base)
     art = {"_meta": {
         "source_fixture": src,
@@ -66,7 +74,7 @@ def main():
                              "non-MATCH is a regression"}}
     for recipe in RECIPES:
         fixture = f"{base}/{recipe}"
-        vout = f"/tmp/graft_degen_vout_{recipe}"
+        vout = f"{base}_vout_{recipe}"
         subprocess.run(f"rm -rf {vout}", shell=True)
         java("graft.Verify", fixture, vout)
         results = compare(fixture, vout)

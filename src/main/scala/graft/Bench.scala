@@ -48,7 +48,9 @@ package graft
   * Output: stdout carries only the totals and the five slowest queries
   * (≈400 bytes, whole in a small retained tail); the per-query record
   * (cold, warm, range, runs, the cold run's GC ms, [[PhaseTimer]]
-  * phases, flags, errors) goes to `$SPARK_GRAFT_BENCH_FULL` (default
+  * phases, flags, errors, and the [[Measure.Ledger]] of the cold run as
+  * `ledger_cold` and of each successful warm run as `ledger_warm`,
+  * aligned with `warm_runs`) goes to `$SPARK_GRAFT_BENCH_FULL` (default
   * `BENCH_FULL.json`). */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -163,22 +165,18 @@ object Bench {
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
         .trim.split("\\s+").take(3).mkString(" ")
     } catch { case _: Throwable => "" }
-    def calibration(): Double = try {
-      // One untimed execution first: the probe's own codegen + C2 JIT
-      // ramp otherwise lands entirely in the START measurement (3-8×
-      // the end reading on an idle host), burying the load signal the
-      // probe exists to expose. Warming the exact shape makes start and
-      // end measure the same steady state, so their ratio is load only.
-      def probe() = Measure.noop(spark.range(20000000L)
-        .selectExpr("(id * 2654435761) % 1000003 AS k").groupBy("k").count())
-      probe()
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        probe()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      runs(1) // median-of-3, same estimator as the queries
-    } catch { case _: Throwable => -1.0 } // sentinel must never sink the bench
+    // One untimed execution first (inside [[Measure.sample]]): the
+    // probe's own codegen + C2 JIT ramp otherwise lands entirely in the
+    // START measurement (3-8× the end reading on an idle host), burying
+    // the load signal the probe exists to expose. Warming the exact
+    // shape makes start and end measure the same steady state, so their
+    // ratio is load only. -1 when the probe failed: the sentinel must
+    // never sink the bench.
+    def calibration(): Double = {
+      val s = Measure.sample(spark, sfDir, (sp, _) => sp.range(20000000L)
+        .selectExpr("(id * 2654435761) % 1000003 AS k").groupBy("k").count(), warm = 3)
+      if (s.err.isEmpty) s.median else -1.0
+    }
     val loadStart = loadavg()
     val calibStart = calibration()
     // provenance stamp: which measurement protocol
@@ -301,6 +299,8 @@ object Bench {
         (if (phasesCold.nonEmpty) ",\"phases_cold\":" + jphases(phasesCold) else "") +
         (if (phasesWarm.nonEmpty) ",\"phases_warm\":" + jphases(phasesWarm) else "") +
         (if (s.cold.gcMs > 0) ",\"gc_ms\":" + s.cold.gcMs else "") +
+        ",\"ledger_cold\":" + s.cold.ledger.json +
+        ",\"ledger_warm\":" + s.warm.filter(_.err.isEmpty).map(_.ledger.json).mkString("[", ",", "]") +
         (if (retried.contains(r.name)) ",\"retried\":true" else "") +
         (if (s.err.isEmpty && priorRegressed(r))
           ",\"prior_warm\":" + jnum(priorWarm(r.name)) +

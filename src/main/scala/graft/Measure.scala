@@ -1,11 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
-/** The one way to time a registered query: [[once]] times one run and
-  * [[sample]] is the one estimator over runs, shared by Bench and
-  * `Profile med`.
+/** The one way to time a query: [[once]] times one run and records its
+  * [[Ledger]], and [[sample]] is the one estimator over runs, shared by
+  * Bench (full suite, subsets, its calibration probe) and the sf1 /
+  * MLlib scripts that drive Bench.
   *
   * A query is materialized through the `noop` sink, which pulls every
   * output column through the full physical plan but writes nothing
@@ -13,11 +18,27 @@ import org.apache.spark.sql.functions.{count, lit}
   * final sort, under-measuring projection-shaped queries). */
 object Measure {
 
+  /** What one run cost the scheduler and the code generator: Spark jobs
+    * started, stages completed and their tasks, the tasks' summed
+    * `executorRunTime` ms, and Janino compiles (the count of
+    * `CodegenMetrics`' compilation-time histogram). A run at the
+    * per-job floor shows many jobs against little run time; a warm run
+    * that recompiles shows `compiles > 0`. */
+  case class Ledger(jobs: Long, stages: Long, tasks: Long, runMs: Long, compiles: Long) {
+    def -(o: Ledger): Ledger =
+      Ledger(jobs - o.jobs, stages - o.stages, tasks - o.tasks, runMs - o.runMs,
+        compiles - o.compiles)
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"executor_run_ms":$runMs,""" +
+        s""""compiles":$compiles}"""
+  }
+
   /** One timed execution: wall seconds (negative when the query threw),
     * the first error message, the [[PhaseTimer]] seconds the query
-    * function spent in eager artifact work, and the JVM's GC
-    * milliseconds during the run. */
-  case class Run(sec: Double, err: Option[String], phases: Map[String, Double], gcMs: Long) {
+    * function spent in eager artifact work, the JVM's GC milliseconds
+    * during the run, and the run's [[Ledger]]. */
+  case class Run(sec: Double, err: Option[String], phases: Map[String, Double], gcMs: Long,
+      ledger: Ledger) {
     /** This run, or an exception naming `name` when the query threw —
       * for the harnesses whose run must fail on a query error. */
     def orFail(name: String): Run = {
@@ -65,21 +86,52 @@ object Measure {
 
   /** Build and materialize `fn(spark, dir)` once. The phase accumulator
     * is drained before the run (discarding anything a previous failure
-    * left behind) and after it, so `phases` belong to this run only. */
+    * left behind) and after it, so `phases` belong to this run only; the
+    * ledger is the difference of the context's totals read before and
+    * after the run, outside the timed span. */
   def once(spark: SparkSession, dir: String,
       fn: (SparkSession, String) => DataFrame): Run = {
     PhaseTimer.drain()
+    val before = totals(spark)
     val gc0 = gcMillis()
     val t0 = System.nanoTime()
-    try {
-      noop(fn(spark, dir))
-      Run((System.nanoTime() - t0) / 1e9, None, PhaseTimer.drain(), gcMillis() - gc0)
-    } catch {
-      case e: Throwable =>
-        Run(-(System.nanoTime() - t0) / 1e9,
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName)), PhaseTimer.drain(),
-          gcMillis() - gc0)
+    val err =
+      try { noop(fn(spark, dir)); None }
+      catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    Run(if (err.isEmpty) sec else -sec, err, PhaseTimer.drain(), gcMillis() - gc0,
+      totals(spark) - before)
+  }
+
+  /** The running totals behind every [[Ledger]]: one listener per
+    * SparkContext, installed by the first measured run on it. */
+  private final class JobCounter extends SparkListener {
+    private val jobs, stages, tasks, runMs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks)
     }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) runMs.addAndGet(t.taskMetrics.executorRunTime)
+    def totals: Ledger = Ledger(jobs.get, stages.get, tasks.get, runMs.get,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+  }
+
+  /** The context's totals once every event posted so far has reached
+    * the counter: the listener bus is drained first, so a run's last
+    * stage and task events are in the reading. */
+  private def totals(spark: SparkSession): Ledger = {
+    val sc = spark.sparkContext
+    val counter = synchronized {
+      GraftColumnBridge.listeners[JobCounter](sc).headOption.getOrElse {
+        val c = new JobCounter
+        sc.addSparkListener(c)
+        c
+      }
+    }
+    GraftColumnBridge.drainListeners(sc)
+    counter.totals
   }
 
   private def gcMillis(): Long = {

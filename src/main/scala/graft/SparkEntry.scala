@@ -48,7 +48,7 @@ object SparkEntry {
     * scale. See [[graft.queries.Scale.oracleTierGuard]]. */
   val oracleTierQueries: Set[String] =
     Set("q45_embedding_neardups", "q47_nn_within_label",
-      // r16 (VERDICT r15 #2): complete (lang, length-band) blocking
+      // complete (lang, length-band) blocking
       // is O(n²/blocks) with ~dozens of blocks — exact ≤10% edit
       // distance has no known subquadratic complete blocking, so the
       // exact form is pinned to the oracle tier; the recall-bounded

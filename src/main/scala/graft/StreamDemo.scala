@@ -1,14 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.api.TweetApi
 import graft.streaming.Pipeline
 
 /** Demo/acceptance driver for the streaming path: replays envelope
   * JSONL through the full pipeline (file source — same parse path as
-  * Kafka after `value`), then serves the reference's API surface over
-  * the resulting tweets table. Usage: runMain graft.StreamDemo [dir]. */
+  * Kafka after `value`), serves the reference's API surface over the
+  * resulting tweets table, then runs the Kafka round-trip leg
+  * ([[kafkaRoundTrip]]). Usage: runMain graft.StreamDemo [dir]. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(Files.createTempDirectory("graft-demo").toString)
@@ -77,6 +79,40 @@ object StreamDemo {
     val csv = new java.io.File(s"$dir/export_csv").listFiles().filter(_.getName.endsWith(".csv")).head
     println(s"=== /export csv header+first line ===")
     scala.io.Source.fromFile(csv).getLines().take(2).foreach(println)
+    kafkaRoundTrip(spark, in, s"$dir/kafka")
     spark.stop()
+  }
+
+  /** Kafka round-trip leg (S2/K1, KAFKA_NOTE.md): publishes the replayed
+    * envelopes in `feed` through [[Pipeline.kafkaSink]] and reads the
+    * topic back through [[Pipeline.kafkaSource]], printing one JSON line
+    * with the rows that came back. It ACTIVATES ONLY when the connector
+    * jar is on the classpath AND a broker is named — e.g. a cluster
+    * operator ran with
+    *   --packages org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2
+    *   SPARK_GRAFT_KAFKA=host:9092 SPARK_GRAFT_KAFKA_TOPIC=graft-bench
+    * Without either, the leg reports "inactive" instead of failing —
+    * the honest boundary between compile-only and runtime-verified. */
+  private def kafkaRoundTrip(spark: SparkSession, feed: String, ckpt: String): Unit = {
+    val kafkaJar =
+      try { Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider"); true }
+      catch { case _: ClassNotFoundException => false }
+    (sys.env.get("SPARK_GRAFT_KAFKA"), kafkaJar) match {
+      case (Some(bootstrap), true) =>
+        val topic = sys.env.getOrElse("SPARK_GRAFT_KAFKA_TOPIC", "graft-bench")
+        // the publish leg runs Pipeline.kafkaSink exactly as deployed
+        // (a streaming writer over a file stream), one-shot; then the
+        // topic is read back through Pipeline.kafkaSource
+        Pipeline.kafkaSink(spark.readStream.text(feed), bootstrap, topic, s"$ckpt/sink")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        Pipeline.kafkaSource(spark, bootstrap, topic)
+          .writeStream.format("memory").queryName("kafka_roundtrip")
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", s"$ckpt/src").start().awaitTermination()
+        val back = spark.table("kafka_roundtrip").count()
+        println(s"""{"metric":"kafka_roundtrip_rows","value":$back,"unit":"rows"}""")
+      case _ =>
+        println(s"""{"metric":"kafka_roundtrip_rows","value":-1,"unit":"rows","inactive":true,"jar_present":$kafkaJar,"broker_named":${sys.env.contains("SPARK_GRAFT_KAFKA")}}""")
+    }
   }
 }

@@ -19,12 +19,12 @@ object Tables {
     * read per `spark.read.parquet` call; across a 100-query bench
     * that is seconds of pure overhead. Schemas are a property of the
     * file CONTENTS, so the key carries a content signature: if the
-    * driver regenerates a fixture mid-session (it did, round 13 —
-    * events.ts flipped TIMESTAMP(NANOS) → TIMESTAMP(MICROS)), the
-    * stale entry is simply never hit again. File listing itself is
+    * driver regenerates a fixture mid-session (events.ts has flipped
+    * TIMESTAMP(NANOS) → TIMESTAMP(MICROS) that way), the stale entry
+    * is simply never hit again. File listing itself is
     * cached by Spark's shared FileStatusCache.
     *
-    * The signature is taken from LEAF FILES (round 15, ADVICE): for a
+    * The signature is taken from LEAF FILES: for a
     * directory-shaped dataset the key is max-mtime + total-length +
     * count over its part files, because directory mtime alone is
     * unreliable exactly where it matters — S3A fake directories
@@ -163,7 +163,8 @@ object Tables {
     * human-readable diagnostic line per drift (empty = all green).
     * Bench and Verify run this FIRST, so a driver-side fixture regen
     * that changes a physical type costs one loud line instead of N
-    * opaque per-query analysis errors (round 13 cost 24). */
+    * opaque per-query analysis errors (one such regen failed 24
+    * queries). */
   def sentinel(s: SparkSession, dir: String): Seq[String] = {
     expectedSchemas.toSeq.sortBy(_._1).flatMap { case (table, expected) =>
       val actual: Either[String, StructType] =

@@ -10,7 +10,7 @@ import scala.util.hashing.MurmurHash3
   * shape* (schema, partitioning, batched execution) is real and
   * tested.
   *
-  * CODEC (round 15, de-stubbed): payloads whose magic bytes identify a
+  * CODEC: payloads whose magic bytes identify a
   * JDK-decodable format are REALLY decoded with zero extra
   * dependencies — PNG/JPEG/GIF/BMP via `javax.imageio` (true
   * width/height metadata, grid-pooled luminance embedding over the

@@ -93,7 +93,7 @@ object Scale {
         // check-and-apply must be atomic: two concurrent callers
         // interleaving get/set could store the LOSING thread's pair
         // and force a redundant setCheckpointDir (extra UUID dir) on
-        // the next call (ADVICE r12). setCheckpointDir itself is
+        // the next call. setCheckpointDir itself is
         // cheap and rare, so a plain lock beats a CAS retry loop.
         appliedCheckpointDir.synchronized {
           val prev = appliedCheckpointDir.get()
@@ -131,7 +131,7 @@ object Scale {
     new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
   /** Spread an under-partitioned scan before a heavy per-row
-    * projection (r21): small fixtures arrive as one parquet row-group
+    * projection: small fixtures arrive as one parquet row-group
     * → ONE scan partition, which serializes everything projected
     * directly after the scan (the q131/q145/q58 lesson, measured at
     * 2–4 s per site at sf0.1). Repartitioning UNCONDITIONALLY is the
@@ -229,9 +229,9 @@ object Scale {
     * footer's column min/max is the skipping index; ScaleSpec
     * measures the span shrink on both columns vs a linear sort).
     *
-    * Plan shape (round 4 — replaced three chained repartitionByRange
-    * shuffles, each of whose RangePartitioner sampling pass
-    * re-executed the upstream shuffle): ONE `percentile_approx`
+    * Plan shape (not three chained repartitionByRange shuffles, each
+    * of whose RangePartitioner sampling pass would re-execute the
+    * upstream shuffle): ONE `percentile_approx`
     * aggregation computes `gridBuckets−1` cutpoints per column (a
     * mergeable GK sketch — map-side partials, one tiny driver-side
     * result, the same bounded-collect pattern as the IVF centroids);

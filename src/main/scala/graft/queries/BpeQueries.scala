@@ -9,7 +9,7 @@ import graft.functions.Bpe
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The BPE subword-tokenization operator family (VERDICT r12 #1) —
+/** The BPE subword-tokenization operator family —
   * the one LLM-pipeline capability the engine still budgeted in
   * whitespace approximations. Three pieces:
   *
@@ -335,13 +335,13 @@ object BpeQueries {
        |GROUP BY m.n_merges, m.canon""".stripMargin
 
   /** q98: q85's QUALITY-RANKED BUDGET SELECTION budgeted in BPE
-    * subword tokens — the currency upgrade VERDICT r12 asked for. The
+    * subword tokens instead of whitespace tokens. The
     * registered row runs under the PINNED table so DuckDB reproduces
     * the full selection (which docs get admitted) end-to-end; callers
     * budgeting under a trained artifact pass `loadBpeTable(...)` to
     * the same operator via [[TrainQueries.budgetSelectWith]]. Budget
     * 2000 BPE tokens ≈ 10 of each source's 25 sf0.01 docs — the
-    * parameter BINDS at gate scale (round-7 vacuous-test rule). */
+    * parameter BINDS at gate scale (the non-vacuous-spec rule). */
   def bpeBudgetSelect(s: SparkSession, dir: String, budget: Long = 2000L): DataFrame =
     TrainQueries.budgetSelectWith(s, dir, budget,
       Bpe.bpe_token_count(col("text"), Bpe.pinned))
@@ -387,7 +387,7 @@ object BpeQueries {
        |FROM cum GROUP BY 1, 2 ORDER BY source, pack_id""".stripMargin
 
   /** q102: q98's QUALITY-RANKED BUDGET SELECTION under the TRAINED
-    * merge table — VERDICT r13 #6. q98 stays pinned so the selection
+    * merge table. q98 stays pinned so the selection
     * oracle is cheap; this row pays the full price: the DuckDB oracle
     * RE-TRAINS the table via [[bpeTrainingChainSql]] (q101's
     * machinery) and re-derives every document's subword cost through
@@ -461,7 +461,7 @@ object BpeQueries {
     * source, the corpus-profiling number a tokenizer owner watches
     * (a source whose ratio drifts low is fragmenting into char-level
     * tokens — out-of-domain for the vocabulary). One stateless scan +
-    * one tiny per-source aggregate; the ratio uses the round-3
+    * one tiny per-source aggregate; the ratio uses the
     * integer half-up division so both engines agree on exact 4 dp
     * midpoints. Pinned table for the same oracle-exactness reason as
     * q98/q99. */

@@ -157,7 +157,7 @@ object DedupQueries {
   def normalizedDedup(s: SparkSession, dir: String): DataFrame =
     normalizedDedupOver(Tables.documents(s, dir))
 
-  /** q123 over an injectable (doc_id, text) frame (round-7 rule: the
+  /** q123 over an injectable (doc_id, text) frame (non-vacuous-spec rule: the
     * fixture has no canonical-form duplicates, so grouping behavior
     * binds only on constructed variants). */
   private[graft] def normalizedDedupOver(docs: DataFrame): DataFrame = {
@@ -203,10 +203,10 @@ object DedupQueries {
     * the naive cross-product-then-filter form — but each join bucket
     * holds ≤ 2·50 rows regardless of corpus size, so candidate
     * enumeration is O(n·w), never O(n²) within a source group. */
-  // no trailing global sort (r20): the range-partitioner sampling
+  // no trailing global sort: the range-partitioner sampling
   // pass re-executes the pair join (the plan's only heavy stage) and
   // the driver's hash compare is row-order-insensitive (the q33/q43
-  // round-2 precedent; check.py sorts rows before hashing)
+  // precedent; check.py sorts rows before hashing)
   def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsRaw(s, dir)
 
@@ -229,9 +229,9 @@ object DedupQueries {
       .select($"id_a", $"id_b", $"jaccard")
   }
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -278,7 +278,7 @@ object DedupQueries {
     * checkpoint and out the final assembly — [[minhashDedupValidated]]
     * needs (keeper decision × fingerprint) per doc, and computing fp
     * in the SAME scan that computes signatures removes the second
-    * `documents` scan plus a 5k×5k re-join the round-8 profile showed
+    * `documents` scan plus a 5k×5k re-join a profile showed
     * costing ~0.3 s of q43's warm time (at 100 TB it removes an
     * entire table scan, which matters far more). */
   private def minhashDedupCore(s: SparkSession, dir: String,
@@ -342,7 +342,7 @@ object DedupQueries {
     * bit bands (any identical quarter → candidate; catches all pairs
     * with Hamming ≤ 3), verified by bit_count(xor) ≤ 3. */
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairsRaw(s, dir) // unsorted: the q42 r20 sampling rule
+    simhashPairsRaw(s, dir) // unsorted: the q42 sampling rule
 
   private def simhashPairsRaw(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -437,8 +437,8 @@ object DedupQueries {
         Seq("id_a", "id_b"), "left_outer")
       .agg(count(lit(1)).as("n_sub"),
         (count(lit(1)) === coalesce(sum($"hit"), lit(0))).as("subset_complete"))
-    // has_pairs binds exactly where the exhaustive audit binds
-    // (r18 verdict #8): it pins "the banding emitted >= 1 pair" only
+    // has_pairs binds exactly where the exhaustive audit binds:
+    // it pins "the banding emitted >= 1 pair" only
     // when the audit slice PROVES near-dup pairs exist (where it is
     // implied by subset_complete, so a silent-empty LSH still fails),
     // and goes STRUCTURALLY VACUOUS on corpora with no qualifying
@@ -469,12 +469,12 @@ object DedupQueries {
       .filter($"id_b" > $"id_a")
       .withColumn("cosine", round(cosine_similarity($"emb_a", $"emb_b"), 6))
       .filter($"cosine" >= 0.4)
-      .select($"id_a", $"id_b", $"cosine") // unsorted: the q42 r20 sampling rule
+      .select($"id_a", $"id_b", $"cosine") // unsorted: the q42 sampling rule
   }
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -487,7 +487,7 @@ object DedupQueries {
       |    ON a.label = b.label AND b.vec_id > a.vec_id)
       |WHERE cosine >= 0.4 ORDER BY id_a, id_b""".stripMargin
 
-  /** Scale-path sibling of q45 (VERDICT r01 "What's wrong" #3):
+  /** Scale-path sibling of q45:
     * embedding near-dup pairs with LSH-bucket candidate generation +
     * exact cosine re-rank — candidates come from one bucket-keyed
     * shuffle via [[graft.functions.HyperplaneBucket]] (auto plane
@@ -500,10 +500,10 @@ object DedupQueries {
     * exhaustive small-sf oracle. Oracle-hash-checked: the integer-
     * derived planes are reproduced as double literals in SQL. */
   def embeddingNearDupsLsh(s: SparkSession, dir: String): DataFrame =
-    embeddingNearDupsLshRaw(s, dir) // unsorted: the q42 r20 sampling rule
+    embeddingNearDupsLshRaw(s, dir) // unsorted: the q42 sampling rule
 
-  /** HOT-BUCKET second-level split (VERDICT r19 #5). Auto plane
-    * sizing (r18) pins the EXPECTED bucket size, but a dense semantic
+  /** HOT-BUCKET second-level split. Auto plane
+    * sizing pins the EXPECTED bucket size, but a dense semantic
     * cluster collides into one bucket no matter how many first-level
     * planes exist (near-parallel vectors share every sign), so the
     * per-bucket pair enumeration inside it stays quadratic — the
@@ -581,9 +581,9 @@ object DedupQueries {
         s"THEN ${1 << p} ELSE 0 END)"
     }.mkString(" + ")
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -647,7 +647,7 @@ object DedupQueries {
       .select($"id".as("doc_id"), $"cluster_id")
   }
 
-  /** The connected-components core behind q66 (and round 14's q106):
+  /** The connected-components core behind q66 (and q106):
     * min-label propagation with double pointer jumping over ANY
     * (id_a, id_b) edge frame and (id) node frame — the graph source
     * is a parameter, the algorithm is shared. Returns (id,
@@ -659,8 +659,8 @@ object DedupQueries {
       .reliableCheckpoint() // the pair join runs once, not once per round
     val und = edges.unionByName(
       edges.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-    // SEED (round 15, VERDICT #6): label₀ = min over the CLOSED
-    // NEIGHBORHOOD — exactly what propagation round 1 produces from
+    // SEED: label₀ = min over the CLOSED
+    // NEIGHBORHOOD — exactly what the first propagation round produces from
     // identity labels, but computed as one aggregate over the edge
     // frame (with identity labels that round's two joins are pure
     // renames, so the old first round paid three frames + a union +
@@ -693,7 +693,7 @@ object DedupQueries {
         .select($"id", $"jump".as("cluster_id"))
       val hop = labels.unionByName(viaEdges).unionByName(viaJump)
         .groupBy($"id").agg(min($"cluster_id").as("cluster_id"))
-      // second pointer jump INSIDE the round's plan (round 4): label ←
+      // second pointer jump INSIDE the round's plan: label ←
       // label-of-label once more before materializing. Rounds to
       // fixpoint drop 9 → 5 on the fixture graph; at cluster scale
       // each round is a full shuffle barrier, so halving the round
@@ -927,7 +927,7 @@ object DedupQueries {
     * Same [[componentsOver]] core as q66: edges come from the
     * bucket-keyed LSH shuffle with the hot-bucket second-level split
     * (never an all-pairs product, and dense clusters no longer pay a
-    * quadratic bucket — VERDICT r19 #5), rounds are
+    * quadratic bucket), rounds are
     * O(log diameter) shuffle barriers. The oracle recomputes the
     * components by recursive-CTE closure over the SAME edge SQL (the
     * q54 pair graph is itself hash-verified), so two different
@@ -972,9 +972,9 @@ object DedupQueries {
     * `|len_a - len_b| <= dist <= maxLen/10`, and both the DP
     * threshold and the band width are DERIVED from the corpus
     * (`maxDist = maxLen div 10`, `W = greatest(64, maxDist + 1)` over
-    * the ASCII-pinned domain — one column-pruned length agg; ADVICE
-    * r15: the former hardcoded 56/64 silently dropped qualifying
-    * pairs past 560-char texts), so `W > maxDist >= dist` and the
+    * the ASCII-pinned domain — one column-pruned length agg; a
+    * hardcoded 56/64 would silently drop qualifying pairs past
+    * 560-char texts), so `W > maxDist >= dist` and the
     * pair's bands differ by at most 1 at ANY text length.
     * The probe side therefore emits three keys (band-1, band, band+1)
     * and the join stays a pure EQUI-join on (lang, band) — bands are
@@ -993,7 +993,7 @@ object DedupQueries {
     * two definitions coincide — the whole fixture qualifies, and at
     * scale non-ASCII rows route through q123's normalization first.
     *
-    * ORACLE TIER (VERDICT r15 #2): the (lang, band) blocks are
+    * ORACLE TIER: the (lang, band) blocks are
     * COMPLETE but FEW — block cardinality is ~|langs| × maxLen/W, so
     * candidate pairs grow as O(n²/blocks) and the operator cannot
     * run as written at 100× corpus. It is gated by
@@ -1006,7 +1006,7 @@ object DedupQueries {
       Tables.documents(s, dir), "q131_editdist_neardups",
       "q44_simhash_pairs (recall-bounded token-level SimHash bands)"))
 
-  /** q131 over an injectable (doc_id, lang, text) frame (round-7
+  /** q131 over an injectable (doc_id, lang, text) frame (non-vacuous-spec
     * rule: specs construct corpora with hand-checkable distances). */
   private[graft] def editDistanceNearDupsOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
@@ -1020,16 +1020,16 @@ object DedupQueries {
     // runs. Counting only a char subset keeps the bound sound
     // (subset L1 ≤ true L1 ⇒ the filter only ever keeps extra
     // pairs). 66 s → ~4 s at sf0.1 on this filter alone.
-    // FUSED expressions, not 37 scalar columns (r20): the former
-    // per-char `length − length(translate(·))` columns scanned and
-    // re-allocated the text 37 times per row — measured 2.2 s per
+    // FUSED expressions, not 37 scalar columns: per-char
+    // `length − length(translate(·))` columns scan and re-allocate
+    // the text 37 times per row — measured 2.2 s per
     // evaluation site at sf0.1, the dominant cost of the whole
     // operator once the DP was bag-filtered. [[CharBagCounts]] builds
     // the same 37 counts in one byte pass and [[IntArrayL1]] folds
     // the same abs-diff sum in one codegen'd loop; both are
     // value-identical to the column compositions (ExpressionsSpec
     // fuzz-pins this), so the candidate algebra — and the oracle —
-    // are unchanged. (The r7 lesson about interpreted zip_with
+    // are unchanged. (The lesson about interpreted zip_with
     // lambdas motivated the scalar columns; the fused expressions
     // keep everything inside WholeStageCodegen too, without the
     // 37-scan projection.)
@@ -1046,7 +1046,7 @@ object DedupQueries {
     // safety net.
     val ascii = docs.filter(octet_length($"text") === length($"text"))
     // One column-pruned scan for the length domain: maxDist and the
-    // band width W are corpus properties, not constants (ADVICE r15).
+    // band width W are corpus properties, not constants.
     // The single-row collect is the sanctioned bounded-frame pattern;
     // at 100 TB this is a footer-stats-cheap agg over one column.
     val maxLen: Long = ascii
@@ -1085,7 +1085,7 @@ object DedupQueries {
       .repartition(s.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
     val matches = survivors
-      // PER-PAIR DP band (r20, guide §1.2 "per-task work"): a pair can
+      // PER-PAIR DP band: a pair can
       // only qualify with dist ≤ least(len)/10, so banding the DP at
       // the PAIR's own bound instead of the corpus-wide maxDist does
       // strictly less work per candidate (O(least/10 · n) vs
@@ -1124,9 +1124,9 @@ object DedupQueries {
   /** The q131 oracle parameterized by an EXTRA documents predicate —
     * `""` is the registered full-corpus oracle; q145's oracle embeds
     * the audit-slice form (`AND doc_id % 2 = 0 AND doc_id < 4000`) to
-    * COMPUTE its audit witness instead of pinning it (VERDICT r17
-    * #3). NOTE the slice predicate must restrict DOCS (both the band
-    * width w and the pair universe), exactly like the Spark audit,
+    * COMPUTE its audit witness instead of pinning it. NOTE the slice
+    * predicate must restrict DOCS (both the band width w and the pair
+    * universe), exactly like the Spark audit,
     * which runs editDistanceNearDupsOver on the filtered frame. */
   private[graft] def editDistanceNearDupsSqlOver(extraWhere: String): String = {
     val alphabet = ('a' to 'z') ++ ('0' to '9')
@@ -1173,8 +1173,8 @@ object DedupQueries {
   private val EditLshRecallFloor = 60
 
   /** q145: CHAR-LEVEL NEAR-DUP AT SCALE — the recall-bounded LSH tier
-    * in front of q131's exact rule (VERDICT r15 #2, option (a); q131
-    * itself stays the oracle-tier ground truth). Candidates must share
+    * in front of q131's exact rule (q131 itself stays the oracle-tier
+    * ground truth). Candidates must share
     *  (1) an identical band of the 64-bit SimHash over CHARACTER
     *      4-GRAMS (the char-level profile word-token SimHash (q44)
     *      cannot see — a one-char edit shifts ≤ 4 grams), and
@@ -1226,8 +1226,8 @@ object DedupQueries {
       .select(($"n_exact" > 0 && $"n_hit" * 100L >= $"n_exact" * EditLshRecallFloor)
           .as("audit_recall_ok"),
         ($"n_exact" > 0).as("audit_nonempty"))
-    // has_pairs binds exactly where the exact-blocking audit binds
-    // (r18 verdict #8): when the audit finds qualifying pairs the
+    // has_pairs binds exactly where the exact-blocking audit binds:
+    // when the audit finds qualifying pairs the
     // recall floor already forces the LSH to surface some, so
     // found_pairs must hold; with no audit pair the witness is
     // STRUCTURALLY VACUOUS — degenerate recipes cross-engine-MATCH
@@ -1239,7 +1239,7 @@ object DedupQueries {
   }
 
   /** q145's pair pipeline over an injectable (doc_id, lang, text)
-    * frame (round-7 rule). Emits (doc_a, doc_b, len_a, len_b, dist). */
+    * frame (non-vacuous-spec rule). Emits (doc_a, doc_b, len_a, len_b, dist). */
   private[graft] def editDistanceNearDupsLshRaw(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -1258,10 +1258,10 @@ object DedupQueries {
     // ~4 s of shingle work on one core (measured; the q131 pushdown
     // lesson, projection-shaped). The checkpoint then feeds BOTH join
     // sides and the late text fetch without recomputing the shingle
-    // scan. The shingle fingerprint is the fused SimHashCharGrams
-    // (r21, guide §4): the previous
+    // scan. The shingle fingerprint is the fused SimHashCharGrams;
+    // the unfused
     // `simhash64(transform(sequence(...), i -> substring(text, i, 4)))`
-    // ran an interpreted lambda materializing a per-row gram array —
+    // runs an interpreted lambda materializing a per-row gram array —
     // value-identical by the fuzz-pinned expression contract.
     val d = ascii
       .repartition(s.sparkContext.defaultParallelism)
@@ -1269,7 +1269,7 @@ object DedupQueries {
         length($"text").cast("long").as("len"),
         expr(s"length(text) div $bandW").as("lband"),
         graft.functions.expressions.simhash_char4($"text").as("fp"),
-        // fused one-pass bag (r20) — see editDistanceNearDupsOver
+        // fused one-pass bag — see editDistanceNearDupsOver
         graft.functions.expressions.char_bag($"text").as("bag"))
       .reliableCheckpoint()
     val simBands = array((0 until EditLshBands).map(b =>
@@ -1329,7 +1329,7 @@ object DedupQueries {
     // corpora; audit_recall_ok pins its recall theorem exactly where
     // that witness binds. has_pairs is the SAME literal-true pin it
     // always was, but the Spark side now computes it as
-    // found_pairs OR NOT audit_nonempty (r18 verdict #8): binding
+    // found_pairs OR NOT audit_nonempty: binding
     // wherever the audit proves pairs exist, structurally vacuous on
     // degenerate corpora — so all three degen recipes MATCH.
     val auditExists = "(SELECT count(*) FROM (" +
@@ -1402,7 +1402,7 @@ object DedupQueries {
       .filter($"n_a" >= minGrams && $"n_b" >= minGrams &&
         $"n_shared" * 2 >= least($"n_a", $"n_b"))
       .select($"doc_a", $"doc_b", $"n_a", $"n_b", $"n_shared",
-        // integer half-up 4 dp (the round-3 rounding rule)
+        // integer half-up 4 dp (the half-up rounding rule)
         (expr("(20000 * n_shared + least(n_a, n_b)) div (2 * least(n_a, n_b))") / 10000.0)
           .as("containment"))
       .orderBy($"doc_a", $"doc_b")

@@ -190,7 +190,7 @@ object SentimentQueries {
     import s.implicits._
     // coalesce: bool_and over ZERO docs is NULL, not a violated
     // theorem — vacuous truth on empty corpora (the q44 discipline,
-    // r18 degenerate gate)
+    // held by the degenerate-corpus gate)
     vaderDocs(s, dir).agg(
       count(lit(1)).as("n_docs"),
       coalesce(expr("bool_and(compound is not null and positive is not null and negative is not null and neutral is not null)"), lit(true)).as("all_scored"),

@@ -73,15 +73,15 @@ object SimilarityQueries {
       .withColumn("cosine", round(cosine_similarity($"emb_a", $"emb_b"), 6))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
-      // unsorted (r20): the q42 sampling rule — the trailing sort's
-      // range-sampling pass re-ran the window stage; hash compare is
+      // unsorted: the q42 sampling rule — a trailing sort's
+      // range-sampling pass would re-run the window stage; hash compare is
       // row-order-insensitive
       .select($"id_a", $"id_b".as("nearest_id"), $"cosine", $"label")
   }
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -175,7 +175,7 @@ object SimilarityQueries {
       |  WHERE a.vec_id < 10)
       |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
-  /** Scale-path sibling of q47 (VERDICT r01 "What's wrong" #3): the
+  /** Scale-path sibling of q47: the
     * per-vector nearest neighbor computed over LSH-bucket candidates
     * with exact cosine re-rank — one bucket-keyed shuffle instead of
     * a label-block cross product. Output shrinks to vectors that have
@@ -318,8 +318,8 @@ object SimilarityQueries {
       |WHERE rn = 1 ORDER BY id_a""".stripMargin
 
   /** IVF-style ANN with LEARNED centroids (the upgrade over q48's
-    * data-independent hyperplanes; VERDICT r01 noted q47 as the IVF
-    * stand-in): spherical k-means (k=16, 5 Lloyd iterations) trained
+    * data-independent hyperplanes, and the scale path q47's exact scan
+    * stands in for): spherical k-means (k=16, 5 Lloyd iterations) trained
     * on a DETERMINISTIC bounded sample (vec_id < 256, seeded by data
     * order, driver-side — index TRAINING is the one legitimately
     * driver-bounded step; above [[IvfTrainerHandoff]] cells
@@ -456,7 +456,7 @@ object SimilarityQueries {
       .select($"embedding").as[Array[Float]].collect()
     require(sample.nonEmpty,
       "cannot train IVF centroids on an empty embeddings corpus")
-    // DEGRADE, don't refuse (r17 degenerate sweep): a sub-k corpus
+    // DEGRADE, don't refuse (degenerate-corpus gate): a sub-k corpus
     // trains min(k, n) centroids — k-means with more clusters than
     // points is undefined, fewer cells is the well-defined analogue
     // (every real SF has n ≥ 256, so kEff == k wherever an oracle
@@ -506,7 +506,7 @@ object SimilarityQueries {
     * index — exactly the argmax rule the former
     * array_position/array_max pair computed); a null embedding keeps
     * its null cell. DOCUMENTED semantic change vs the pre-fusion
-    * composition (round-18 advice): a non-null but DEGENERATE
+    * composition: a non-null but DEGENERATE
     * embedding (zero norm, null element, or centroid-length mismatch
     * — all-or-none conditions across centroids) used to get a null
     * cell via array_position(cosines, array_max(cosines)) over an
@@ -557,13 +557,13 @@ object SimilarityQueries {
   private[graft] def ivfAssignment(s: SparkSession, dir: String,
       cent: Array[Array[Double]]): DataFrame = {
     import s.implicits._
-    // Spread the scan BEFORE the projection (r21; the q145/q131
+    // Spread the scan BEFORE the projection (the q145/q131
     // pushdown lesson, projection-shaped): projected directly after
     // the scan, the k-cosine probe assignment inherits the scan's
     // partitioning — the fixture's single row-group serialized the
     // whole assignment (and everything downstream of the checkpoint,
-    // including q58's audit pair join) on ONE task (Profile jobs:
-    // two 1-task stages carrying 2.2 of q58's 2.4 s taskRunSum).
+    // including q58's audit pair join) on ONE task (two 1-task
+    // stages carried 2.2 of q58's 2.4 s of summed task run time).
     // Scale.spreadScan is conditional, so at real corpus sizes —
     // where the scan already yields plenty of partitions — no extra
     // shuffle is added. Per-row assignment is order-independent;
@@ -642,7 +642,7 @@ object SimilarityQueries {
   def buildIvfIndex(s: SparkSession, dir: String, table: String): Unit = {
     import s.implicits._
     val cent = trainCentroids(s, dir)
-    // same conditional pre-projection spread as ivfAssignment (r21):
+    // same conditional pre-projection spread as ivfAssignment:
     // the bucketed write shuffles by cell afterwards either way, but
     // the k-cosine assignment itself must not run on the scan's
     // (single row-group) partitioning
@@ -750,7 +750,7 @@ object SimilarityQueries {
     // ONE count settles AQE for the plan pin AND supplies n_points —
     // the former shape ran the stored NN join a third time under the
     // final agg just to recount what the settling count already knew
-    // (r20; the exceptAll branches below still read `stored` live —
+    // (the exceptAll branches below still read `stored` live —
     // checkpointing them was tried and REVERTED, the single-plan
     // exceptAll reuses its identical subtrees more cheaply than two
     // materializations, see OPTIMIZATION_r20.md §4)
@@ -759,7 +759,7 @@ object SimilarityQueries {
     val nEx = "Exchange hashpartitioning".r.findAllIn(plan).size
     // the live train+assign pipeline exists ONLY to verify the stored
     // answers — price it as its own phase so the serve-path number in
-    // the bench artifact is not inflated by validation (VERDICT r19 #3)
+    // the bench artifact is not inflated by validation
     val nDiff = graft.PhaseTimer.timed("validate") {
       val live = ivfNnFrom(ivfAssigned(s, dir, trainCentroids(s, dir)))
       stored.exceptAll(live).union(live.exceptAll(stored)).count()
@@ -852,7 +852,7 @@ object SimilarityQueries {
         $"serve_exact", $"audit_nonempty")
   }
 
-  /** The audit-slice witness, COMPUTED (VERDICT r17 #3): DuckDB
+  /** The audit-slice witness, COMPUTED: DuckDB
     * reproduces "the audit audited something" from the slice
     * predicates instead of pinning a literal, so the oracle matches
     * the engine's honest `false` on degenerate corpora too. (The
@@ -1082,8 +1082,8 @@ object SimilarityQueries {
   }
 
   /** Projection coordinates z_j = (x − mean)·w_j — element views over
-    * the fused one-pass [[graft.functions.PcaProjectExpr]] (r20: the
-    * former per-coordinate aggregate/zip_with composition walked the
+    * the fused one-pass [[graft.functions.PcaProjectExpr]] (a
+    * per-coordinate aggregate/zip_with composition would walk the
     * embedding through interpreted lambdas once per coordinate — 8×
     * per row, the dominant per-row cost of q89/q91/q93; the fused
     * expression is fuzz-pinned bit-identical, null and length
@@ -1113,7 +1113,7 @@ object SimilarityQueries {
       }
     }
     // corpus-side: variance totals under the centered projection —
-    // one fused pass (norm + k coords); see [[pcaCoords]] (r20)
+    // one fused pass (norm + k coords); see [[pcaCoords]]
     val zz = graft.functions.expressions.pca_project(
       $"embedding", mean, comps, withNormSq = true)
     val totalSq = element_at(zz, 1)
@@ -1138,8 +1138,8 @@ object SimilarityQueries {
       |FROM embeddings WHERE embedding IS NOT NULL""".stripMargin
 
   /** q91: PCA AS A PIPELINE STAGE — near-dup pair candidates from the
-    * SIGNS of the top-8 principal coordinates (VERDICT r09 #4: compose
-    * q89 into the ANN path). The PCA axes are DATA-ADAPTED LSH
+    * SIGNS of the top-8 principal coordinates (q89 composed into the
+    * ANN path). The PCA axes are DATA-ADAPTED LSH
     * hyperplanes: where q54's random hyperplanes split the corpus
     * blindly, the principal directions split along maximum variance,
     * so sign agreement concentrates genuinely-near vectors. Banding
@@ -1332,7 +1332,7 @@ object SimilarityQueries {
     val fresh = emb.select($"vec_id", array(pcaCoords(s, meanF, compsF): _*).as("z"))
     val nDiff = proj.exceptAll(fresh).union(fresh.exceptAll(proj)).count()
     val (mean, _) = loadPcaModel(s, tbl)
-    // norm-only fused pass (empty component matrix) — see pcaCoords (r20)
+    // norm-only fused pass (empty component matrix) — see pcaCoords
     val totalSq = element_at(graft.functions.expressions.pca_project(
       $"embedding", mean, Array.empty, withNormSq = true), 1)
     val zSq = aggregate($"z", lit(0.0), (acc, x) => acc + x * x)
@@ -1416,7 +1416,7 @@ object SimilarityQueries {
       graft.functions.HllSketch.hll_union_distinct($"sketch").as("est_stored"),
       count(lit(1)).as("n_sources"),
       // empty store (empty corpus): no sketch rows, so 0 bytes — the
-      // coalesces keep the row honest instead of NULL (r18 degen gate)
+      // coalesces keep the row honest instead of NULL (degenerate-corpus gate)
       coalesce(max(length($"sketch")).cast("long"), lit(0L)).as("sketch_bytes"))
     val direct = Tables.documents(s, dir).agg(
       graft.functions.HllSketch.hll_distinct(fp).as("est_direct"),
@@ -1429,7 +1429,7 @@ object SimilarityQueries {
   }
 
   // n_sources counts GROUPS, so a NULL source is one more group —
-  // count(DISTINCT source) alone would exclude it (ADVICE r12). The
+  // count(DISTINCT source) alone would exclude it. The
   // Spark side deliberately keeps the null group: dropping it would
   // break merge_exact (per-source sketches must PARTITION the corpus
   // for union-of-stored ≡ one-pass).
@@ -1444,7 +1444,7 @@ object SimilarityQueries {
        |FROM documents""".stripMargin
 
   /** The q91 pipeline over any (vec_id, embedding) frame — injectable
-    * so planted exact-copy recall has a spec (round-7 rule). */
+    * so planted exact-copy recall has a spec (non-vacuous-spec rule). */
   private[graft] def pcaAnnPairsOver(embIn: DataFrame): DataFrame = {
     val s = embIn.sparkSession
     import s.implicits._
@@ -1509,7 +1509,7 @@ object SimilarityQueries {
       .select($"embedding").as[Array[Float]].collect()
     require(sample.nonEmpty,
       "cannot train PQ codebooks on an empty embeddings corpus")
-    // DEGRADE, don't refuse (r17 degenerate sweep): a sub-K' corpus
+    // DEGRADE, don't refuse (degenerate-corpus gate): a sub-K' corpus
     // trains min(K', n) codewords per subspace — codes simply range
     // over fewer values; every real SF has n >= 256 so kp == K'
     // wherever an oracle prices this
@@ -1654,7 +1654,7 @@ object SimilarityQueries {
       .agg(count(lit(1)).as("n_audited"),
         // coalesce: sum over ZERO audited rows is NULL (degenerate
         // corpora can have no query in the audit id range), and
-        // getLong on it would throw — r17 degenerate sweep
+        // getLong on it would throw (degenerate-corpus gate)
         coalesce(sum(when($"served_nn" === $"exact_nn", 1L).otherwise(0L)),
           lit(0L)).as("n_hit"))
       .head()
@@ -1820,7 +1820,7 @@ object SimilarityQueries {
     // the probe explode carries ONLY (q_id, src_id, cell): the m ADC
     // lookup tables are ~2k doubles per query, and hanging them on
     // the exploded rows multiplies that payload by nprobe through the
-    // cell shuffle (measured r18: 4.5× exchange volume moving np
+    // cell shuffle (measured: 4.5× exchange volume moving np
     // 4→18 under auto geometry, the whole serve family +2-3× warm at
     // sf1). They rejoin AFTER the cell join as a broadcast keyed on
     // q_id — bounded by the external-query-set contract (the same
@@ -1871,7 +1871,7 @@ object SimilarityQueries {
     val audit = served.join(ref, Seq("q_id"))
       .agg(count(lit(1)).as("n_audited"),
         // coalesce: sum over ZERO audited rows is NULL (degenerate
-        // corpora can land no query in the audit id range) — r17
+        // corpora can land no query in the audit id range)
         coalesce(sum(when($"served_nn" === $"ref_nn", 1L).otherwise(0L)),
           lit(0L)).as("n_hit"))
       .head()
@@ -2131,7 +2131,7 @@ object SimilarityQueries {
   def anchorRoutingAudit(s: SparkSession, dir: String, nAnchors: Int = 16,
                          boundary: Double = 0.02): DataFrame = {
     import s.implicits._
-    // DEGRADE, don't refuse (r17 degenerate sweep): the audit routes
+    // DEGRADE, don't refuse (degenerate-corpus gate): the audit routes
     // to the anchor rows that EXIST below the id cap — a sparse corpus
     // yields fewer anchors, a single anchor yields NULL margins, zero
     // anchors yield the all-empty grid, each exactly the oracle's

@@ -57,8 +57,8 @@ object TextQueries {
     // the list_filter matters only for the EMPTY string: DuckDB's
     // string_split('', '') yields [''] and unicode('') is -1, which
     // would hash '' to -1 where the Spark fold (a loop that never
-    // runs) gives 0 — a boundary divergence the r18 degenerate gate
-    // caught on q101's empty-merge-list fingerprint
+    // runs) gives 0 — a boundary divergence the degenerate-corpus
+    // gate catches on q101's empty-merge-list fingerprint
     s"""list_reduce(
        |    list_prepend(CAST(0 AS BIGINT),
        |      list_transform(list_filter(string_split($input, ''), ch -> ch <> ''),
@@ -206,14 +206,14 @@ object TextQueries {
     * vocabulary-bounded df aggregate → per-doc top-3 window
     * (WindowGroupLimit bounds the sort) → checkpointed export sort.
     *
-    * The df side (round 15, VERDICT #7): round 4's count-window form
-    * shuffled the ENTIRE tf relation on term just to count rows per
-    * term — then shuffled it AGAIN on doc_id for the rank window. The
+    * The df side: a count-window form would shuffle the ENTIRE tf
+    * relation on term just to count rows per term — then shuffle it
+    * AGAIN on doc_id for the rank window. The
     * df aggregate's exchange instead carries at most vocab×partitions
     * partially-combined rows, the broadcast join adds no exchange on
     * the tf side, and tf's own groupBy exchange is reused between the
     * df branch and the join branch (AQE stage reuse), so tf crosses
-    * the wire once, not three times. (Round 4's A/B rejected a
+    * the wire once, not three times. (An A/B rejected a
     * SHUFFLE df join — the broadcast form is the one that removes an
     * exchange rather than adding one.)
     *
@@ -222,7 +222,7 @@ object TextQueries {
     * +,−,×,÷ are IEEE-exact so both engines compute bit-identical
     * doubles, while `ln` is not correctly-rounded and could flip a
     * 4 dp rounding at a boundary — the same determinism rule as the
-    * round-2 sqrt-based scorer (sqrt IS correctly-rounded). */
+    * sqrt-based scorer (sqrt IS correctly-rounded). */
   def tfidfTopTerms(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, dir)
@@ -524,7 +524,7 @@ object TextQueries {
       // expected counts under the pooled distribution; the integer
       // product (ca+cb)*na is exact in BIGINT long before the one
       // division makes it a double. try_divide mirrors DuckDB's
-      // NULL-on-zero-divisor rule (r17 degenerate sweep: a one-
+      // NULL-on-zero-divisor rule (degenerate-corpus gate: a one-
       // language corpus has ea or eb = 0 and its chi2 is NULL on
       // both engines, never an ANSI error); on nonzero divisors it
       // is the identical double division
@@ -866,7 +866,7 @@ object TextQueries {
     * pair — vocabulary²-bounded, not corpus-bounded); every
     * iteration then joins the vocabulary-sized score frame against
     * the vocabulary²-bounded edge frame WITHOUT a broadcast hint
-    * (VERDICT r15 #3: the score frame has one row per distinct
+    * (the score frame has one row per distinct
     * token — at web-corpus vocabulary a forced broadcast ships
     * multi-GB to every executor, 3×; size-aware planning/AQE
     * broadcasts it only while it actually fits, and both sides hash
@@ -962,7 +962,7 @@ object TextQueries {
       Scale.writeBucketed(s.table(tbl).groupBy($"term").agg(count(lit(1)).as("df")),
         s"${tbl}_vocab", "term", 32)
       // coalesce: sum over an EMPTY corpus slice is NULL and would
-      // poison the stored meta (r17 degenerate sweep)
+      // poison the stored meta (degenerate-corpus gate)
       dl.agg(count(lit(1)).as("n_docs"),
           coalesce(sum($"dl"), lit(0L)).as("sum_dl"))
         .write.mode("overwrite").format("parquet").saveAsTable(s"${tbl}_meta")
@@ -974,7 +974,7 @@ object TextQueries {
     val m = s.table(s"${tbl}_meta").select($"n_docs", $"sum_dl").head()
     val nDocs = m.getLong(0)
     // empty index: no postings exist, so avgdl never reaches a score —
-    // any finite value avoids the 0/0 NaN (r17 degenerate sweep)
+    // any finite value avoids the 0/0 NaN (degenerate-corpus gate)
     val avgdl = if (nDocs == 0L) 1.0 else m.getLong(1).toDouble / nDocs
     val p = s.table(tbl).filter($"term".isin(Bm25Terms: _*))
     val v = s.table(s"${tbl}_vocab").filter($"term".isin(Bm25Terms: _*))
@@ -1230,7 +1230,7 @@ object TextQueries {
   def scoreQuantileNorm(s: SparkSession, dir: String): DataFrame =
     scoreQuantileNormOver(Tables.documents(s, dir))
 
-  /** q190 over an injectable documents frame (the round-7 rule). */
+  /** q190 over an injectable documents frame (the non-vacuous-spec rule). */
   private[graft] def scoreQuantileNormOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -1295,7 +1295,7 @@ object TextQueries {
     * window left is the rarest-term pick (per-eval distinct-term
     * frames); the twin's rank is COUNTED against its broadcast score
     * (1 + |strictly ahead|) rather than materializing a row_number
-    * over every candidate — same value, no candidate sort (r17).
+    * over every candidate — same value, no candidate sort.
     * Eval terms absent from the corpus drop out of the
     * query on BOTH engines (they cannot rank anything). Scoring
     * floors each (term, doc) partial to ppm BEFORE the per-doc sum —
@@ -1307,15 +1307,15 @@ object TextQueries {
       TrainQueries.decontamPairsOver(docs))
     val train = docs.filter($"source" =!= "src0")
     // One tokenized view feeds three DERIVED frames, none of which
-    // shuffles a corpus-sized (doc, term, tf) relation (the r17
-    // reshape — the former tf checkpoint was exchanged twice, by term
-    // for df and again for the scoring join):
+    // shuffles a corpus-sized (doc, term, tf) relation (a tf
+    // checkpoint would be exchanged twice, by term for df and again
+    // for the scoring join):
     //  * dl is MAP-ONLY: the BM25 doc length is just the token count;
     //  * dfT explodes DISTINCT terms and map-side-combines by term —
     //    identical to counting tf rows per term, one bounded exchange;
     //  * the scoring tf is built ONLY for the queried terms, pruned by
     //    a broadcast hash join before its (tiny) groupBy exchange.
-    // SCAN-VS-MATERIALIZE, measured (r18, VERDICT r17 #6): a
+    // SCAN-VS-MATERIALIZE, measured: a
     // checkpointed (doc_id, toks, dl) feeding the corpus-stats agg,
     // dfT, and tfQ was tried and is a WASH at sf0.1 (6.2–6.9 s warm
     // both ways) — the three consumers re-scan a column-pruned text
@@ -1331,15 +1331,14 @@ object TextQueries {
       .select($"doc_id", explode(array_distinct($"toks")).as("term"))
       .groupBy($"term").agg(count(lit(1)).as("df"))
     // corpus stats as a 1-ROW FRAME broadcast-cross-joined into the
-    // scoring select (r21, guide §1/§5): the former driver-side
-    // head() was a dedicated driver action — and its own tokenize
-    // scan of the train slice — run before any scoring job could
-    // start; folded into the scored checkpoint's job, the scan still
-    // happens exactly once but costs no extra driver round-trip.
+    // scoring select: a driver-side head() would be a dedicated
+    // driver action — with its own tokenize scan of the train slice —
+    // run before any scoring job could start; folded into the scored
+    // checkpoint's job, the scan still happens exactly once but costs no extra driver round-trip.
     // Values identical: n_docs and avgdl are the same long/double
     // (long→double is exact below 2^53, and the when() reproduces
-    // the empty-train avgdl=1.0 guard from the r17 degenerate
-    // sweep), and the scoring arithmetic below keeps q150's exact
+    // the empty-train avgdl=1.0 guard of the degenerate-corpus
+    // gate), and the scoring arithmetic below keeps q150's exact
     // association order with the scalars as columns.
     val stats = toksD
       .agg(count(lit(1)).as("n_docs"),
@@ -1372,7 +1371,7 @@ object TextQueries {
     // corpus-row exchange in the whole scoring path is the posting
     // groupBy, already pruned to Σ df rows
     // BOTH scoring aggregates repartition EXPLICITLY by their group
-    // key (r20, guide §2.5): the posting rows are tiny in BYTES but
+    // key: the posting rows are tiny in BYTES but
     // each carries real aggregation work, so AQE's byte-based
     // coalescing folds these exchanges to one partition and
     // serializes the scoring on one core (the q131 repartition
@@ -1406,11 +1405,11 @@ object TextQueries {
       Seq("eval_id", "train_id"), "left")
     val withScore = twinScore.filter($"t_score".isNotNull)
       .select($"eval_id", $"train_id", $"t_score")
-    // ONE pass over scored for BOTH tail aggregates (r21, guide §1.2):
-    // the former tail read the checkpointed scored twice (the n_better
-    // count and the per-eval candidate count) through two independent
-    // groupBy subtrees. A left broadcast join against the (bounded,
-    // eval-benchmark-contract) twin scores keys every scored row by
+    // ONE pass over scored for BOTH tail aggregates, not two reads of
+    // the checkpointed scored (the n_better count and the per-eval
+    // candidate count) through two independent groupBy subtrees. A
+    // left broadcast join against the (bounded, eval-benchmark-contract)
+    // twin scores keys every scored row by
     // its eval's twins, so one (eval_id, train_id) aggregate yields
     //  - n_candidates: the group's row count — each scored row of the
     //    eval appears exactly once per twin (or once under a null
@@ -1436,7 +1435,7 @@ object TextQueries {
       .join(nCand, Seq("eval_id"), "left")
       .select($"eval_id", $"train_id", $"twin_rank",
         coalesce($"n_candidates", lit(0L)).as("n_candidates"))
-    // unsorted (r21, the r20 q42/q127 precedent): the driver's compare
+    // unsorted (the q42/q127 unsorted-output rule): the driver's compare
     // hashes rows order-insensitively and the trailing range exchange's
     // sampling pass re-executes the (uncheckpointed) tail joins; the
     // oracle SQL keeps its ORDER BY as documentation of the canonical
@@ -1444,9 +1443,9 @@ object TextQueries {
   }
 
   /** Parameterized like the Spark side (the q81 rule). */
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -1506,8 +1505,8 @@ object TextQueries {
 
   /** q196: SPAN-EVIDENCE RETRIEVAL — rank candidate training documents
     * for each eval document by their LONGEST COMMON VERBATIM TOKEN
-    * SPAN. This operationalizes q191's spec-pinned honest negative
-    * (VERDICT r17 #8): BM25 mid-packs a verbatim twin among equal-bag
+    * SPAN. This operationalizes q191's spec-pinned honest negative:
+    * BM25 mid-packs a verbatim twin among equal-bag
     * impostors because bag-of-terms scoring cannot see adjacency;
     * span evidence isolates it — the membership/contamination ranking
     * ("did we train on this, verbatim?") a training-data pipeline
@@ -1627,7 +1626,7 @@ object TextQueries {
 
   /** The PAIR-LEVEL span-evidence chain behind q197 and the streaming
     * ingest guard ([[graft.streaming.Pipeline.screenSpanBatch]] —
-    * stream ≡ batch is structural, the round-7 rule): best common
+    * stream ≡ batch is structural, the non-vacuous-spec rule): best common
     * span per (eval, train) pair with offsets, over injectable
     * frames. Per-pair results carry NO cross-train-document state, so
     * a micro-batch of train docs screens to exactly the rows the

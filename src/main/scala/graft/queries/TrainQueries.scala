@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Artifacts, Tables}
@@ -174,7 +174,7 @@ object TrainQueries {
   // DuckDB sum() over BIGINT yields HUGEINT, which pandas/pyarrow read
   // as float64 — the driver's repr-sensitive hash then sees `1435.0` vs
   // Spark's `1435` and mismatches even though every value is equal (the
-  // exact failure CORRECTNESS_r04/r05 recorded). Both the window cum and
+  // exact failure the oracle check flags). Both the window cum and
   // the output sum are therefore CAST back to BIGINT.
   val tokenPackSql: String =
     """WITH toks AS (
@@ -213,7 +213,7 @@ object TrainQueries {
       .select(col("doc_id"),
         size(col("_bi")).cast("long").as("n_bigrams"),
         (size(col("_bi")) - size(array_distinct(col("_bi")))).cast("long").as("n_dup"))
-      // 4 dp ratio in INTEGER arithmetic (the round-3 rounding-tie
+      // 4 dp ratio in INTEGER arithmetic (the half-up rounding-tie
       // rule): floor((20000·d + b)/(2b)) is half-up rounding of
       // 10000·d/b, identical in both engines at any scale — a double
       // round(d/b, 4) diverges on true 4 dp midpoints (e.g. 7/160).
@@ -291,7 +291,7 @@ object TrainQueries {
     // NARROW (doc_id, text) relation before the scrub projection:
     // global orderBy plans a RangePartitioner sampling pass that
     // re-executes its child, so sorting after the projection would
-    // run every regex twice (the q33 lesson, round 2).
+    // run every regex twice (the q33 lesson).
     val scrub = graft.functions.expressions.regex_scrub($"text", piiPatterns)
     Tables.documents(s, dir)
       .select($"doc_id", $"text").orderBy($"doc_id")
@@ -326,9 +326,9 @@ object TrainQueries {
     * the docs of a weight-1 source to ANY prefix of the mixture, so a
     * training run that stops early still sees the configured mix.
     *
-    * The per-source rank uses q70's TWO-LEVEL construction (round 10:
-    * the round-5 form was `row_number() OVER (PARTITION BY source)`
-    * directly on the corpus — the low-cardinality-window anti-pattern
+    * The per-source rank uses q70's TWO-LEVEL construction (not
+    * `row_number() OVER (PARTITION BY source)` directly on the corpus
+    * — the low-cardinality-window anti-pattern
     * the PlanSpec lint now rejects; a rank is just a prefix COUNT, so
     * the same shard/offset split applies): (1) row_number within each
     * (source, doc_id div 1000) shard, (2) shard row-counts → running
@@ -707,17 +707,17 @@ object TrainQueries {
   def dupNgramFraction(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     dupNgramFractionOver(Tables.documents(s, dir), n)
 
-  /** q122 over an injectable (doc_id, text) frame (round-7 rule:
+  /** q122 over an injectable (doc_id, text) frame (non-vacuous-spec rule:
     * specs construct corpora where the dup/unique boundary is
     * hand-checkable). */
   private[graft] def dupNgramFractionOver(docs: DataFrame, n: Int = 8): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // COUNT-1 COMPLEMENT reshape (r20, guide §2.3/§2.4): the former
-    // plan exploded the gram fps TWICE (once into the ≥2-doc dup-fp
-    // aggregate, once as the join probe), joined the corpus-gram
-    // stream against the dup set, and re-aggregated every gram row by
-    // doc_id — at broadcast-defying scale that is two corpus-gram
+    // COUNT-1 COMPLEMENT reshape: a plan that explodes the gram fps
+    // TWICE (once into the ≥2-doc dup-fp aggregate, once as the join
+    // probe), joins the corpus-gram stream against the dup set, and
+    // re-aggregates every gram row by doc_id — at broadcast-defying
+    // scale that is two corpus-gram
     // exchanges plus an fp-keyed join of the whole gram stream.
     // Identity used instead: per-doc fps are DISTINCT (gramFps), so
     //   n_dup(doc) = n_grams(doc) − |fps of doc with corpus count 1|
@@ -738,17 +738,17 @@ object TrainQueries {
       .select($"doc_id", $"n_grams",
         ($"n_grams" - coalesce($"n_uniq", lit(0L))).as("n_dup"))
       .select($"doc_id", $"n_grams", $"n_dup",
-        // integer-cents half-up division (the round-3 rounding rule)
+        // integer-cents half-up division (the half-up rounding rule)
         when($"n_grams" === 0, lit(0.0))
           .otherwise(
             expr("(20000 * n_dup + n_grams) div (2 * n_grams)") / 10000.0)
-          .as("dup_frac")) // unsorted (r20): the sampling pass re-ran the
+          .as("dup_frac")) // unsorted: a sampling pass would re-run the
       // map-side gram count; hash compare is row-order-insensitive
   }
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -845,7 +845,7 @@ object TrainQueries {
   private[graft] def filterStackOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // count-1 complement reshape — see [[dupNgramFractionOver]] (r20):
+    // count-1 complement reshape — see [[dupNgramFractionOver]]:
     // nd = ng − n_uniq with ng computed map-side, so the dup-gram
     // signal costs ONE gram explode + ONE fp exchange instead of two
     // explodes, an fp join of the gram stream, and a gram-stream
@@ -865,7 +865,7 @@ object TrainQueries {
         ($"stateless_bits"
           + when(($"ng" - coalesce($"n_uniq", lit(0L))) * 5 > $"ng", 4L)
             .otherwise(0L)).as("reasons"))
-      .withColumn("keep", $"reasons" === 0L) // unsorted: the q122 r20 rule
+      .withColumn("keep", $"reasons" === 0L) // unsorted: q122's unsorted-output rule
   }
 
   /** The q127 verdict chain as a reusable CTE body (ends with `v`:
@@ -909,9 +909,9 @@ object TrainQueries {
       |      AS BIGINT) AS reasons
       |  FROM s LEFT JOIN per USING (doc_id))""".stripMargin
 
-  /** Unordered-result note (ADVICE r20): the Spark side emits these
-    * rows UNSORTED — the trailing ORDER BY was dropped because the
-    * range sampler re-executed the heavy final stage purely to order
+  /** Unordered-result note: the Spark side emits these
+    * rows UNSORTED — no trailing ORDER BY, because the range sampler
+    * would re-execute the heavy final stage purely to order
     * output the driver hashes order-insensitively (check.py sorts
     * rows before hashing). This oracle statement keeps its ORDER BY
     * as the canonical presentation; row order is NOT part of the
@@ -1108,7 +1108,7 @@ object TrainQueries {
     * aggregate. Docs shorter than 8 tokens have no grams and are
     * reported with n_grams = 0 via the left join + coalesce.
     *
-    * Round 10 — the bloom prefilter is WIRED IN, not just "ready":
+    * The bloom prefilter is WIRED IN, not just "ready":
     * at 100 TB the train side is ~the whole corpus and its distinct
     * 8-gram space is what crosses the exchange; a 1M-bit Bloom built
     * over the (small) held-out side's grams (q72's operator — one
@@ -1123,7 +1123,7 @@ object TrainQueries {
   def contamination(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     contaminationOver(Tables.documents(s, dir), n)
 
-  /** q79 over an injectable documents frame (the round-7 rule: the
+  /** q79 over an injectable documents frame (the non-vacuous-spec rule: the
     * empty-held-out branch can't bind on the fixture, which always
     * has src0 rows — the spec constructs a frame without them). */
   private[graft] def contaminationOver(docs: DataFrame, n: Int = 8): DataFrame = {
@@ -1157,7 +1157,7 @@ object TrainQueries {
       .select($"doc_id",
         coalesce($"n_grams", lit(0L)).as("n_grams"),
         coalesce($"n_hit", lit(0L)).as("n_hit"),
-        // integer-cents half-up division (the round-3 rounding rule);
+        // integer-cents half-up division (the half-up rounding rule);
         // coalesce INSIDE the arithmetic — n_grams/n_hit are null (not
         // 0) for short docs at this point in the plan
         when(coalesce($"n_grams", lit(0L)) === 0, lit(0.0))
@@ -1218,7 +1218,7 @@ object TrainQueries {
   def contaminationSpan(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     contaminationSpanOver(Tables.documents(s, dir), n)
 
-  /** q172 over an injectable documents frame (the round-7 rule: the
+  /** q172 over an injectable documents frame (the non-vacuous-spec rule: the
     * island-chaining arithmetic gets hand-built shared-span specs). */
   private[graft] def contaminationSpanOver(docs: DataFrame, n: Int = 8): DataFrame = {
     val s = docs.sparkSession
@@ -1325,26 +1325,35 @@ object TrainQueries {
       .filter($"source" === "src0" && length($"text") >= 80)
       .select($"doc_id",
         $"text".substr(greatest(lit(1), floor(length($"text") / 4)).cast("int"), lit(60)))
-    // ENFORCE the bounded-sidecar contract before collecting (the
-    // q45/q47 oracleTierGuard discipline): the probe side must be an
-    // eval benchmark (thousands of rows), never a corpus split. The
-    // limit(cap+1).count() probe stops scanning at cap+1 rows, so the
-    // guard itself never pays a full pass.
-    // clamp to Int range BEFORE the limit(): a configured cap ≥
-    // Int.MaxValue would overflow toInt to a negative limit and fail
-    // the query instead of applying the guard — and a collect beyond
-    // 2³¹ rows is impossible anyway, so the clamp loses nothing
-    val cap = math.min(
-      s.conf.getOption("spark.graft.decontam.maxProbes").getOrElse("100000").toLong,
-      Int.MaxValue - 1L)
-    val overCap = probeFrame.limit(cap.toInt + 1).count() > cap
-    require(!overCap,
+    // the probe side must be an eval benchmark (thousands of rows),
+    // never a corpus split
+    val probes = cappedProbes(probeFrame, cap =>
       s"decontamination probe set exceeds $cap rows — the probe side must be a " +
         "bounded eval benchmark, not a corpus split; the compiled automaton is a " +
         "driver-built broadcast sidecar and grows with it. Shrink the probe set " +
         "or raise spark.graft.decontam.maxProbes.")
-    val probes = probeFrame.collect().map(r => (r.getLong(0), r.getString(1)))
+      .map(r => (r.getLong(0), r.getString(1)))
     graft.functions.AhoCorasick.build(probes)
+  }
+
+  /** The bounded-sidecar contract of q182's probe set and q198's triage
+    * feed, enforced in the collect itself: the collect reads at most
+    * cap+1 rows of `frame` and fails with `overCap(cap)` when more than
+    * `cap` came back, so the guard pays no full pass and no separate
+    * count.
+    * The cap is `spark.graft.decontam.maxProbes` (default 100000),
+    * clamped to Int range before the limit: a configured cap ≥
+    * Int.MaxValue would overflow to a negative limit and fail the query
+    * instead of applying the guard, and a collect beyond 2³¹ rows is
+    * impossible anyway. */
+  private def cappedProbes(frame: DataFrame, overCap: Long => String): Array[Row] = {
+    val cap = math.min(
+      frame.sparkSession.conf.getOption("spark.graft.decontam.maxProbes")
+        .getOrElse("100000").toLong,
+      Int.MaxValue - 1L)
+    val rows = frame.limit(cap.toInt + 1).collect()
+    require(rows.length <= cap, overCap(cap))
+    rows
   }
 
   /** The ONE scan chain shared by the registered batch query and the
@@ -1360,7 +1369,7 @@ object TrainQueries {
       .select($"eval_id", $"train_id")
   }
 
-  /** q182 over an injectable documents frame (the round-7 rule: the
+  /** q182 over an injectable documents frame (the non-vacuous-spec rule: the
     * constructed specs plant probes mid-document and at edit sites). */
   private[graft] def decontamPairsOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
@@ -1381,7 +1390,7 @@ object TrainQueries {
       |FROM ev e JOIN tr t ON contains(t.text, e.pat)
       |ORDER BY eval_id, train_id""".stripMargin
 
-  /** q198: END-TO-END DECONTAMINATION REPORT (VERDICT r19 #6) — the
+  /** q198: END-TO-END DECONTAMINATION REPORT — the
     * q191→q196→q197 triage arc closed with q182's verifier, as ONE
     * query: for every (eval doc, evidence_rank ≤ m) row of q197's
     * span-offsets feed, re-check the claimed span VERBATIM against
@@ -1427,12 +1436,7 @@ object TrainQueries {
       .withColumn("probe", concat_ws(" ",
         slice($"etoks", ($"eval_start" + 1).cast("int"), $"span_tokens".cast("int"))))
       .drop("etoks")
-    // bounded-sidecar contract before collecting — same cap as q182
-    val cap = math.min(
-      s.conf.getOption("spark.graft.decontam.maxProbes").getOrElse("100000").toLong,
-      Int.MaxValue - 1L)
-    val rows = probeFrame.limit(cap.toInt + 1).collect()
-    require(rows.length <= cap,
+    val rows = cappedProbes(probeFrame, cap =>
       s"decontamination triage feed exceeds $cap rows — the eval side must be a " +
         "bounded benchmark; raise spark.graft.decontam.maxProbes if it genuinely is.")
     if (rows.isEmpty) {
@@ -2458,7 +2462,7 @@ object TrainQueries {
   /** The q94 pipeline over any (doc_id, text) frame — injectable so
     * the growth-stability and all-three-splits-populated properties
     * have a spec on a corpus large enough to bind (the fixture's 500
-    * ids may leave the 1%-bands thin; round-7 rule). */
+    * ids may leave the 1%-bands thin; non-vacuous-spec rule). */
   private[graft] def splitAssignOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -2634,7 +2638,7 @@ object TrainQueries {
     // level's design; stating it structurally (instead of an
     // unpartitioned window) keeps WindowExec's "No Partition
     // Defined" warning — the #1 signal cluster ops teams grep for —
-    // out of the logs (VERDICT r12 #6). The two declarative
+    // out of the logs. The two declarative
     // alternatives measured worse: a lit-partitioned window
     // constant-folds back to an EMPTY partition spec (warning
     // returns), and a triangle self-join re-plans the aggregate —

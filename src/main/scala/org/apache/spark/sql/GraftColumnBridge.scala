@@ -1,13 +1,18 @@
 package org.apache.spark.sql
 
+import scala.reflect.ClassTag
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters that
-  * Spark 4 moved behind the classic/connect split. Custom Catalyst
-  * expressions (graft.functions) need both directions to expose a
-  * `Column` API. Standard pattern for Spark extension libraries.
+  * Spark 4 moved behind the classic/connect split, and to the
+  * `private[spark]` listener bus. Custom Catalyst expressions
+  * (graft.functions) need both converter directions to expose a
+  * `Column` API; [[graft.Measure]] needs the bus to read its per-run
+  * ledger. Standard pattern for Spark extension libraries.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +27,12 @@ object GraftColumnBridge {
   /** The analyzed logical plan of a DataFrame (for building custom
     * operators over already-resolved children). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** The listeners of class `T` registered on `sc`. */
+  def listeners[T <: SparkListenerInterface: ClassTag](sc: SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
+
+  /** Block until every event posted to `sc`'s listener bus so far has
+    * reached every listener. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

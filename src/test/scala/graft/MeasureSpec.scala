@@ -1,15 +1,18 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The shared bench estimator ([[Measure.Sample]]), Bench's row flags
   * and prior-record reader, and the JSON string escaper, on hand-built
-  * runs — no Spark session. */
-class MeasureSpec extends AnyFunSuite {
+  * runs; the per-run [[Measure.Ledger]] on a fixed query; and the lint
+  * that keeps [[Measure]] the one timer. */
+class MeasureSpec extends SparkSpec {
 
+  private val noJobs = Measure.Ledger(0, 0, 0, 0, 0)
   private def ok(sec: Double, phases: Map[String, Double] = Map.empty) =
-    Measure.Run(sec, None, phases, 0L)
-  private def failed(sec: Double, msg: String) = Measure.Run(-sec, Some(msg), Map.empty, 0L)
+    Measure.Run(sec, None, phases, 0L, noJobs)
+  private def failed(sec: Double, msg: String) = Measure.Run(-sec, Some(msg), Map.empty, 0L, noJobs)
   private def sample(cold: Double, warm: Double*) = Measure.Sample(ok(cold), warm.map(ok(_)))
   private def row(s: Measure.Sample) = Bench.Row("q", s, s)
 
@@ -111,5 +114,54 @@ class MeasureSpec extends AnyFunSuite {
       .readValue(Json.str(nasty), classOf[String])
     assert(back == nasty)
     assert(!Json.str(nasty).exists(_ < ' '), "no raw control character in the literal")
+  }
+
+  /** A fixed aggregate: four input partitions of 500k rows each (enough
+    * task work to read in milliseconds), one shuffle. */
+  private def agg(s: SparkSession, dir: String): DataFrame =
+    s.range(0, 2000000, 1, 4).groupBy((col("id") % 104729).as("k")).count()
+
+  test("ledger: a fixed aggregate's jobs and stages, each run counted on its own") {
+    val first = Measure.once(spark, sf, agg).orFail("agg").ledger
+    val second = Measure.once(spark, sf, agg).orFail("agg").ledger
+    // AQE runs the map stage as its own job (4 tasks), then the result
+    // stage over the coalesced partitions
+    assert(first.jobs == 2 && first.stages == 2 && first.tasks >= 5, s"first run: $first")
+    assert(second.jobs == 2 && second.stages == 2 && second.tasks == first.tasks,
+      s"the second run reports its own counts, not a running total: $second")
+    assert(first.runMs > 0 && second.runMs > 0, s"the tasks' executor run time is summed: $second")
+  }
+
+  test("ledger: the reading waits for a slow listener bus instead of racing it") {
+    // a listener on the same bus that takes 100 ms per task event holds
+    // back every later event, so counts read right after the run would
+    // miss the run's last stages
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(100)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      val l = Measure.once(spark, sf, agg).orFail("agg").ledger
+      assert(l.jobs == 2 && l.stages == 2, s"events still queued were missed: $l")
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("ledger: a new shape compiles; a second identical run of a simple aggregate compiles 0") {
+    // the modulus appears in no other query, so its generated code is
+    // new to the JVM on the first run
+    def fresh(s: SparkSession, dir: String): DataFrame =
+      s.range(0, 1000, 1, 4).groupBy((col("id") % 7919).as("k")).count()
+    val cold = Measure.once(spark, sf, fresh).orFail("fresh").ledger
+    val warm = Measure.once(spark, sf, fresh).orFail("fresh").ledger
+    assert(cold.compiles > 0, s"the first run of a new shape must compile: $cold")
+    assert(warm.compiles == 0, s"the identical second run must hit the codegen cache: $warm")
+  }
+
+  test("timing sites: only Measure, PhaseTimer and IvfProbe read System.nanoTime") {
+    val sites = SourceLint.offenders("src/main/scala", """System\.nanoTime\(""".r, owner = "")
+    val files = sites.map(o => java.nio.file.Paths.get(o.takeWhile(_ != ':')).getFileName.toString)
+    assert(files.toSet == Set("Measure.scala", "PhaseTimer.scala", "IvfProbe.scala"),
+      s"a query run is timed through graft.Measure:\n${sites.mkString("\n")}")
   }
 }

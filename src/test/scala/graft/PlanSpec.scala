@@ -8,10 +8,22 @@ import graft.queries.Relational
   * group-limit, sketch aggregates partial-merge. */
 class PlanSpec extends SparkSpec {
 
-  private def planOf(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    df.count() // force AQE final plan
-    df.queryExecution.executedPlan.toString
+  private def planOf(name: String): String = finalPlan(SparkEntry.queries(name)(spark, sf))
+
+  /** The final adaptive plan of `df` itself. The Dataset's own query
+    * execution runs to the end (a `count()` or a noop write would plan
+    * and run a different Dataset and leave this one's adaptive plan
+    * initial), and only the final plan is read, never the initial one
+    * printed beside it. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        assert(a.isFinalPlan, "collect() must finalize the adaptive plan")
+        a.executedPlan.toString
+      case p => p.toString
+    }
   }
 
   test("q01: shipdate filter and column pruning reach the parquet scan") {
@@ -57,9 +69,7 @@ class PlanSpec extends SparkSpec {
     // the one-row-per-session aggregate, and the event frame crosses
     // the wire once (the checkpoint + export sort sit above the tiny
     // session frame).
-    val df = graft.queries.EventQueries.sessionizeRaw(spark, sf)
-    df.count()
-    val p = df.queryExecution.executedPlan.toString
+    val p = finalPlan(graft.queries.EventQueries.sessionizeRaw(spark, sf))
     assert("Window ".r.findAllIn(p).size == 1,
       s"expected exactly one window node (session numbering):\n$p")
     assert(p.contains("UpdatingSessions") || p.contains("session_window"),
@@ -95,9 +105,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q02: global top-k plans as TakeOrderedAndProject (no full sort)") {
-    val df = Relational.recentOrders(spark, sf)
-    df.count()
-    val p = df.queryExecution.executedPlan.toString
+    val p = finalPlan(Relational.recentOrders(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$p")
   }
 
@@ -196,9 +204,7 @@ class PlanSpec extends SparkSpec {
     // became the two-level quantile-shard construction — the corpus
     // window must key on (event_type, shard), never event_type alone,
     // and the per-shard offset/edge frame rides in broadcast.
-    val df = graft.queries.EventQueries.valueWindowStatsCore(spark, sf)
-    df.count()
-    val p = df.queryExecution.executedPlan.toString
+    val p = finalPlan(graft.queries.EventQueries.valueWindowStatsCore(spark, sf))
     assert("hashpartitioning\\(event_type[#0-9L]*, shard".r.findFirstIn(p).isDefined,
       s"corpus window exchange must key on (event_type, shard):\n$p")
     assert(p.contains("BroadcastHashJoin"),
