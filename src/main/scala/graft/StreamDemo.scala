@@ -83,11 +83,11 @@ object StreamDemo {
     spark.stop()
   }
 
-  /** Kafka round-trip leg (S2/K1, KAFKA_NOTE.md): publishes the replayed
-    * envelopes in `feed` through [[Pipeline.kafkaSink]] and reads the
-    * topic back through [[Pipeline.kafkaSource]], printing one JSON line
-    * with the rows that came back. It ACTIVATES ONLY when the connector
-    * jar is on the classpath AND a broker is named — e.g. a cluster
+  /** Kafka round-trip leg (S2/K1, KAFKA_NOTE.md): subscribes to the
+    * topic through [[Pipeline.kafkaSource]], then publishes the replayed
+    * envelopes in `feed` through [[Pipeline.kafkaSink]], printing one
+    * JSON line with the rows that came back. It ACTIVATES ONLY when the
+    * connector jar is on the classpath AND a broker is named — e.g. a cluster
     * operator ran with
     *   --packages org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2
     *   SPARK_GRAFT_KAFKA=host:9092 SPARK_GRAFT_KAFKA_TOPIC=graft-bench
@@ -100,15 +100,19 @@ object StreamDemo {
     (sys.env.get("SPARK_GRAFT_KAFKA"), kafkaJar) match {
       case (Some(bootstrap), true) =>
         val topic = sys.env.getOrElse("SPARK_GRAFT_KAFKA_TOPIC", "graft-bench")
-        // the publish leg runs Pipeline.kafkaSink exactly as deployed
-        // (a streaming writer over a file stream), one-shot; then the
-        // topic is read back through Pipeline.kafkaSource
+        // the consumer subscribes FIRST: Pipeline.kafkaSource starts at
+        // the latest offsets, which its first trigger pins, so a consumer
+        // started after the publish would read nothing
+        val consumer = Pipeline.kafkaSource(spark, bootstrap, topic)
+          .writeStream.format("memory").queryName("kafka_roundtrip")
+          .option("checkpointLocation", s"$ckpt/src").start()
+        consumer.processAllAvailable()
+        // the publish leg runs Pipeline.kafkaSink exactly as deployed (a
+        // streaming writer over the raw envelope lines), one-shot
         Pipeline.kafkaSink(spark.readStream.text(feed), bootstrap, topic, s"$ckpt/sink")
           .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        Pipeline.kafkaSource(spark, bootstrap, topic)
-          .writeStream.format("memory").queryName("kafka_roundtrip")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", s"$ckpt/src").start().awaitTermination()
+        consumer.processAllAvailable()
+        consumer.stop()
         val back = spark.table("kafka_roundtrip").count()
         println(s"""{"metric":"kafka_roundtrip_rows","value":$back,"unit":"rows"}""")
       case _ =>

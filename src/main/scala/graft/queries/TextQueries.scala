@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.{Artifacts, Tables}
 import graft.operators.Scale
 import graft.operators.Scale.CheckpointOps
@@ -1291,155 +1292,139 @@ object TextQueries {
     * RAREST corpus terms ((df ASC, term ASC) tie-break — determinism
     * both engines); candidates are the posting-list union of those
     * terms — Σ df of the queried terms, the search-engine cost model
-    * (q150's serve note), never a corpus scan per query. The only
-    * window left is the rarest-term pick (per-eval distinct-term
-    * frames); the twin's rank is COUNTED against its broadcast score
-    * (1 + |strictly ahead|) rather than materializing a row_number
-    * over every candidate — same value, no candidate sort.
-    * Eval terms absent from the corpus drop out of the
-    * query on BOTH engines (they cannot rank anything). Scoring
-    * floors each (term, doc) partial to ppm BEFORE the per-doc sum —
-    * BIGINT, order-independent, exact cross-engine. */
+    * (q150's serve note), never a corpus scan per query. Eval terms
+    * absent from the corpus drop out of the query on BOTH engines (they
+    * cannot rank anything). Scoring floors each (term, doc) partial to
+    * ppm BEFORE the per-doc sum — BIGINT, order-independent, exact
+    * cross-engine.
+    *
+    * Execution contract: a warm call plans and runs only the stages
+    * its answer needs. Its bounded frames are three eval-bounded driver
+    * collects, each under the `spark.graft.decontam.maxProbes` cap
+    * ([[TrainQueries.cappedProbes]]):
+    *  1. the truth pairs: q182's hits, unsorted and unmaterialized
+    *     ([[TrainQueries.decontamHitsOver]]);
+    *  2. the query terms (≤ m per truth eval), picked by the one window;
+    *     the corpus stats ride that scan as an observation;
+    *  3. the rank tail ([[retrievalTail]]): one (eval_id, train_id)
+    *     aggregate, at most one row per truth pair plus one per eval.
+    * The truth evals, truth pairs and query terms go back into the
+    * plan as literal sets (`isin`), which start no job; the query terms
+    * also join the postings as one broadcast. The output rows are
+    * assembled on the driver. The twin's rank is COUNTED
+    * (1 + |candidates strictly ahead|), never taken from a sort over the
+    * candidates — same value as the oracle's row_number. */
   def retrievalEval(s: SparkSession, dir: String, m: Int = 8): DataFrame = {
+    val (truth, tail) = retrievalTail(s, dir, m)
+    val rows = retrievalCollect(tail, "rank tail")
+    // tail rows: (eval_id, train_id or NULL, n_candidates, n_better);
+    // every group of one eval counts the same candidate rows
+    val nCand = rows.groupMapReduce(_.getLong(0))(_.getLong(2))(math.max)
+    val rank = rows.filterNot(_.isNullAt(1)).map(r =>
+      (r.getLong(0), r.getLong(1)) -> Math.toIntExact(r.getLong(3) + 1L)).toMap
+    val out = truth.map { case (e, t) =>
+      Row(e, t, rank.get((e, t)).map(Int.box).orNull, nCand.getOrElse(e, 0L))
+    }
+    // unsorted (the q42/q127 unsorted-output rule): the driver's compare
+    // hashes rows order-insensitively; the oracle SQL keeps its ORDER BY
+    // as documentation of the canonical presentation order
+    s.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("eval_id", LongType), StructField("train_id", LongType),
+      StructField("twin_rank", IntegerType), StructField("n_candidates", LongType,
+        nullable = false))))
+  }
+
+  /** One of q191's eval-bounded driver collects, under the probe cap. */
+  private def retrievalCollect(frame: DataFrame, what: String): Array[Row] =
+    TrainQueries.cappedProbes(frame, cap =>
+      s"q191 $what: more than $cap rows — the eval side must be a bounded " +
+        "benchmark; raise spark.graft.decontam.maxProbes if it genuinely is.")
+
+  /** q191's truth pairs and the frame that scores and ranks them: its
+    * rows are (eval_id, train_id, n_candidates, n_better), one per
+    * (truth eval, scored twin) and one with a NULL train_id per truth
+    * eval none of whose twins scored. PlanSpec pins this frame's plan. */
+  private[graft] def retrievalTail(s: SparkSession, dir: String,
+      m: Int): (Array[(Long, Long)], DataFrame) = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val truth = graft.operators.Scale.checkpointed(
-      TrainQueries.decontamPairsOver(docs))
+    val truth = retrievalCollect(TrainQueries.decontamHitsOver(docs), "truth pairs")
+      .map(r => (r.getLong(0), r.getLong(1)))
     val train = docs.filter($"source" =!= "src0")
-    // One tokenized view feeds three DERIVED frames, none of which
-    // shuffles a corpus-sized (doc, term, tf) relation (a tf
-    // checkpoint would be exchanged twice, by term for df and again
-    // for the scoring join):
-    //  * dl is MAP-ONLY: the BM25 doc length is just the token count;
-    //  * dfT explodes DISTINCT terms and map-side-combines by term —
-    //    identical to counting tf rows per term, one bounded exchange;
-    //  * the scoring tf is built ONLY for the queried terms, pruned by
-    //    a broadcast hash join before its (tiny) groupBy exchange.
-    // SCAN-VS-MATERIALIZE, measured: a
-    // checkpointed (doc_id, toks, dl) feeding the corpus-stats agg,
-    // dfT, and tfQ was tried and is a WASH at sf0.1 (6.2–6.9 s warm
-    // both ways) — the three consumers re-scan a column-pruned text
-    // column and re-split, which costs about what writing + thrice
-    // reading the tokenized intermediate costs, because the token
-    // arrays are no smaller than the text they came from. At 100 TB
-    // the same arithmetic holds (4 pruned parquet scans ≈ 1 scan +
-    // 1 write + 3 reads of an equal-sized intermediate), and the
-    // scans additionally enjoy source-filter pushdown, so the
-    // re-scan shape is kept deliberately.
+    // SCAN-VS-MATERIALIZE, measured: a checkpointed (doc_id, toks, dl)
+    // feeding df, the corpus stats and the scoring tf was a WASH at
+    // sf0.1 (6.2–6.9 s warm both ways) — the token arrays are no
+    // smaller than the text they came from, and the scans enjoy
+    // source-filter pushdown — so each consumer re-scans and re-splits
     val toksD = train.select($"doc_id", split(trim($"text"), "\\s+").as("toks"))
+    // the corpus stats are an observation on the df scan, so they cost
+    // no job of their own. When that scan is provably empty, AQE prunes
+    // it and the observation comes back without values: that is the
+    // empty training corpus (n_docs 0, avgdl 1.0, the degenerate-corpus
+    // gate), and no candidate can score then anyway.
+    val statsObs = Observation("q191_corpus_stats")
     val dfT = toksD
-      .select($"doc_id", explode(array_distinct($"toks")).as("term"))
+      .observe(statsObs, count(lit(1)).as("n_docs"),
+        sum(size($"toks").cast("long")).as("s_dl"))
+      .select(explode(array_distinct($"toks")).as("term"))
       .groupBy($"term").agg(count(lit(1)).as("df"))
-    // corpus stats as a 1-ROW FRAME broadcast-cross-joined into the
-    // scoring select: a driver-side head() would be a dedicated
-    // driver action — with its own tokenize scan of the train slice —
-    // run before any scoring job could start; folded into the scored
-    // checkpoint's job, the scan still happens exactly once but costs no extra driver round-trip.
-    // Values identical: n_docs and avgdl are the same long/double
-    // (long→double is exact below 2^53, and the when() reproduces
-    // the empty-train avgdl=1.0 guard of the degenerate-corpus
-    // gate), and the scoring arithmetic below keeps q150's exact
-    // association order with the scalars as columns.
-    val stats = toksD
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(size($"toks").cast("long")), lit(0L)).as("s_dl"))
-      .select($"n_docs",
-        when($"n_docs" === 0L, lit(1.0))
-          .otherwise($"s_dl".cast("double") / $"n_docs").as("avgdl"))
-    val evalToks = docs.filter($"source" === "src0")
+    val truthEvals = truth.map(_._1).distinct.toSeq
+    val evalToks = docs.filter($"source" === "src0" && $"doc_id".isin(truthEvals: _*))
       .select($"doc_id".as("eval_id"),
         explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
     val wQ = Window.partitionBy($"eval_id").orderBy($"df".asc, $"term".asc)
-    // ≤ m·|eval| rows, consumed twice (the broadcast prune set AND the
-    // scoring join) — checkpoint so the df aggregation + rarest-term
-    // window run once, not once per consumer
-    val qterms = graft.operators.Scale.checkpointed(
+    val qterms = retrievalCollect(
       evalToks.join(dfT, "term")
         .withColumn("rn", row_number().over(wQ)).filter($"rn" <= m)
-        .select($"eval_id", $"term", $"df"))
+        .select($"eval_id", $"term", $"df"), "query terms")
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val stats = statsObs.get
+    val nDocs = stats.get("n_docs").fold(0L)(_.asInstanceOf[Long])
+    val sDl = stats.get("s_dl").flatMap(Option(_)).fold(0L)(_.asInstanceOf[Long])
+    val avgdl = if (nDocs == 0L) 1.0 else sDl.toDouble / nDocs
     // every arithmetic step mirrors q150's oracle association order
-    val idf = (($"df" * lit(-1L) + $"n_docs") + lit(0.5)) / ($"df" + lit(0.5))
+    val idf = (($"df" * lit(-1L) + lit(nDocs)) + lit(0.5)) / ($"df" + lit(0.5))
     val tfn = ($"tf" * lit(2.2)) /
-      ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * ($"dl" / $"avgdl")))
-    // posting rows for queried terms only: the broadcast semi-prune
-    // runs BEFORE any exchange, so the corpus-sized token stream never
-    // shuffles — only the Σ df posting rows do (the search-engine cost
-    // model, now also the plan's exchange volume)
-    val qset = qterms.select($"term").distinct()
-    // dl rides each surviving token row (one long), so scoring needs
-    // NO join back to a corpus-sized doc-length frame — the only
-    // corpus-row exchange in the whole scoring path is the posting
-    // groupBy, already pruned to Σ df rows
-    // BOTH scoring aggregates repartition EXPLICITLY by their group
-    // key: the posting rows are tiny in BYTES but
-    // each carries real aggregation work, so AQE's byte-based
-    // coalescing folds these exchanges to one partition and
-    // serializes the scoring on one core (the q131 repartition
-    // lesson, aggregate-shaped — measured 3.0 → 1.1 s at sf0.1,
-    // where the 30-word fixture vocabulary makes the posting union
-    // its worst case). A user repartition is exempt from coalescing;
-    // defaultParallelism keeps it scale-adaptive.
+      ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * ($"dl" / lit(avgdl))))
+    // posting rows for queried terms only: the literal term set prunes
+    // the token stream BEFORE any exchange, so only the Σ df posting
+    // rows shuffle (the search-engine cost model). dl rides each
+    // surviving row, so scoring needs no join back to a doc-length
+    // frame. BOTH scoring aggregates repartition EXPLICITLY by their
+    // group key: the posting rows are tiny in BYTES but each carries
+    // real aggregation work, so AQE's byte-based coalescing would fold
+    // these exchanges to one partition and serialize the scoring on one
+    // core (measured 3.0 → 1.1 s at sf0.1). A user repartition is exempt
+    // from coalescing; defaultParallelism keeps it scale-adaptive.
     val tfQ = toksD
       .select($"doc_id", size($"toks").cast("long").as("dl"),
         explode($"toks").as("term"))
-      .join(broadcast(qset), "term")
+      .filter($"term".isin(qterms.map(_._2).distinct.toSeq: _*))
       .repartition(s.sparkContext.defaultParallelism, $"doc_id", $"term")
       .groupBy($"doc_id", $"term")
       .agg(count(lit(1)).as("tf"), max($"dl").as("dl"))
-    val scored = graft.operators.Scale.checkpointed(
-      qterms.join(tfQ, "term")
-        .crossJoin(broadcast(stats))
-        .select($"eval_id", $"doc_id",
-          floor(lit(1000000.0) * idf * tfn).cast("long").as("sc"))
-        .repartition(s.sparkContext.defaultParallelism, $"eval_id", $"doc_id")
-        .groupBy($"eval_id", $"doc_id").agg(sum($"sc").as("score")))
-    // Only the TWIN's rank is reported, so ranking the whole candidate
-    // frame (a per-eval sort window over every posting-union member)
-    // is wasted work: rank(twin) ≡ 1 + |candidates strictly ahead
-    // under (score DESC, doc_id ASC)| — a broadcast of the truth-pair
-    // scores (bounded by the q182 eval-benchmark contract, like the
-    // probe automaton) plus one map-side-combined count. Same value as
-    // the oracle's row_number, no corpus-candidate sort anywhere.
-    val twinScore = truth.join(
-      scored.select($"eval_id", $"doc_id".as("train_id"), $"score".as("t_score")),
-      Seq("eval_id", "train_id"), "left")
-    val withScore = twinScore.filter($"t_score".isNotNull)
-      .select($"eval_id", $"train_id", $"t_score")
-    // ONE pass over scored for BOTH tail aggregates, not two reads of
-    // the checkpointed scored (the n_better count and the per-eval
-    // candidate count) through two independent groupBy subtrees. A
-    // left broadcast join against the (bounded, eval-benchmark-contract)
-    // twin scores keys every scored row by
-    // its eval's twins, so one (eval_id, train_id) aggregate yields
-    //  - n_candidates: the group's row count — each scored row of the
-    //    eval appears exactly once per twin (or once under a null
-    //    train_id when no twin scored), so every group of one eval
-    //    counts the same |scored rows of eval| the old per-eval
-    //    groupBy counted;
-    //  - n_better: the strictly-ahead count under the same
-    //    (score DESC, doc_id ASC) predicate as before.
-    // Same values, one fewer scored scan + exchange.
-    val tailAgg = scored.join(broadcast(withScore), Seq("eval_id"), "left")
+    val scored = broadcast(qterms.toSeq.toDF("eval_id", "term", "df"))
+      .join(tfQ, "term")
+      .select($"eval_id", $"doc_id",
+        floor(lit(1000000.0) * idf * tfn).cast("long").as("sc"))
+      .repartition(s.sparkContext.defaultParallelism, $"eval_id", $"doc_id")
+      .groupBy($"eval_id", $"doc_id").agg(sum($"sc").as("score"))
+    // the twins' scores (≤ one per truth pair) broadcast into ONE tail
+    // aggregate over the candidates: keyed by each eval's twins (a NULL
+    // train_id when none scored), every group of one eval counts that
+    // eval's candidate rows, and n_better counts the candidates strictly
+    // ahead of its twin under (score DESC, doc_id ASC)
+    val twins = scored
+      .filter(struct($"eval_id", $"doc_id").isin(truth.toSeq.map { case (e, t) =>
+        struct(lit(e).as("eval_id"), lit(t).as("doc_id")) }: _*))
+      .select($"eval_id", $"doc_id".as("train_id"), $"score".as("t_score"))
+    val tail = scored.join(broadcast(twins), Seq("eval_id"), "left")
       .groupBy($"eval_id", $"train_id")
       .agg(count(lit(1)).as("n_candidates"),
         sum(when($"score" > $"t_score" ||
           ($"score" === $"t_score" && $"doc_id" < $"train_id"), 1L)
           .otherwise(0L)).as("n_better"))
-    val ranks = tailAgg.filter($"train_id".isNotNull)
-      .select($"eval_id", $"train_id",
-        ($"n_better" + 1L).cast("int").as("twin_rank"))
-    val nCand = tailAgg.groupBy($"eval_id")
-      .agg(max($"n_candidates").as("n_candidates"))
-    truth
-      .join(ranks, Seq("eval_id", "train_id"), "left")
-      .join(nCand, Seq("eval_id"), "left")
-      .select($"eval_id", $"train_id", $"twin_rank",
-        coalesce($"n_candidates", lit(0L)).as("n_candidates"))
-    // unsorted (the q42/q127 unsorted-output rule): the driver's compare
-    // hashes rows order-insensitively and the trailing range exchange's
-    // sampling pass re-executes the (uncheckpointed) tail joins; the
-    // oracle SQL keeps its ORDER BY as documentation of the canonical
-    // presentation order, which is not part of the contract
+    (truth, tail)
   }
 
   /** Parameterized like the Spark side (the q81 rule). */

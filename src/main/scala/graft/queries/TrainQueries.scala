@@ -1336,17 +1336,18 @@ object TrainQueries {
     graft.functions.AhoCorasick.build(probes)
   }
 
-  /** The bounded-sidecar contract of q182's probe set and q198's triage
-    * feed, enforced in the collect itself: the collect reads at most
-    * cap+1 rows of `frame` and fails with `overCap(cap)` when more than
-    * `cap` came back, so the guard pays no full pass and no separate
-    * count.
+  /** The bounded-sidecar contract of every eval-bounded driver collect
+    * (q182's probe set, q191's truth pairs, query terms and rank tail,
+    * q198's triage feed), enforced in the collect itself: the collect
+    * reads at most cap+1 rows of `frame` and fails with `overCap(cap)`
+    * when more than `cap` came back, so the guard pays no full pass and
+    * no separate count.
     * The cap is `spark.graft.decontam.maxProbes` (default 100000),
     * clamped to Int range before the limit: a configured cap ≥
     * Int.MaxValue would overflow to a negative limit and fail the query
     * instead of applying the guard, and a collect beyond 2³¹ rows is
     * impossible anyway. */
-  private def cappedProbes(frame: DataFrame, overCap: Long => String): Array[Row] = {
+  private[graft] def cappedProbes(frame: DataFrame, overCap: Long => String): Array[Row] = {
     val cap = math.min(
       frame.sparkSession.conf.getOption("spark.graft.decontam.maxProbes")
         .getOrElse("100000").toLong,
@@ -1374,10 +1375,19 @@ object TrainQueries {
   private[graft] def decontamPairsOver(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val ac = evalProbeAutomaton(docs)
-    val hits = decontamHits(
-      docs.filter($"source" =!= "src0").select($"doc_id", $"text"), ac)
-    graft.operators.Scale.checkpointed(hits).orderBy($"eval_id", $"train_id")
+    graft.operators.Scale.checkpointed(decontamHitsOver(docs))
+      .orderBy($"eval_id", $"train_id")
+  }
+
+  /** q182's (eval_id, train_id) hit pairs of `docs`, unsorted and not
+    * materialized: the probe automaton is built (one capped collect),
+    * the training scan is planned. q191 collects these as its truth
+    * pairs, so it pays neither q182's checkpoint nor its sort. */
+  private[graft] def decontamHitsOver(docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    decontamHits(docs.filter($"source" =!= "src0").select($"doc_id", $"text"),
+      evalProbeAutomaton(docs))
   }
 
   val decontamPairsSql: String =

@@ -501,11 +501,20 @@ object Pipeline {
     * with the tested to_json path. */
   def kafkaSink(df: DataFrame, bootstrap: String, topic: String,
                 checkpoint: String): DataStreamWriter[Row] =
-    df.select(to_json(struct(col("*"))).as("value"))
+    df.select(kafkaValue(df).as("value"))
       .writeStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrap)
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
+
+  /** The envelope JSON each row of `df` publishes. A frame of one
+    * string column is raw envelope lines (the shape the text and Kafka
+    * sources read), published as they are; any other frame is envelope
+    * rows, published as their JSON object. */
+  private[graft] def kafkaValue(df: DataFrame): Column = df.schema.fields match {
+    case Array(f) if f.dataType == org.apache.spark.sql.types.StringType => col(f.name)
+    case _ => to_json(struct(col("*")))
+  }
 
   /** K4: CSV export sink (sentiment_analysis.py:695-707) — header'd
     * CSV of an export query result; coalesce(1) mirrors the

@@ -480,16 +480,49 @@ class PlanSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("q191: exactly one window (rarest-term pick) — the candidate rank is counted, never sorted (r17)") {
-    val p = planOf("q191_retrieval_eval")
-    // the r17 reshape replaced the per-eval row_number over every
-    // posting-union candidate with a broadcast-count of strictly-
-    // better scores; a second Window reappearing means the candidate
-    // sort crept back
-    val windows = "Window".r.findAllIn(p).size
-    assert(windows <= 1, s"expected at most the qterms window, found $windows:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the query-term prune and twin-score joins must broadcast:\n$p")
+  test("q191 rank tail: no window, no sort; the term prune runs before the posting exchange") {
+    // q191's output rows are assembled on the driver from the rank tail,
+    // so the pin reads the frame that scores and ranks. The only window
+    // (the rarest-term pick) runs in the query-term collect before it; a
+    // Window or Sort here is the per-eval candidate sort coming back.
+    val p = finalPlan(graft.queries.TextQueries.retrievalTail(spark, sf, 8)._2)
+    assert(!p.contains("Window"), s"the candidate rank must be counted, not windowed:\n$p")
+    assert(!p.contains("Sort ["), s"no sort over the candidates:\n$p")
+    // the query terms and the twin scores broadcast into their joins
+    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
+      s"the query-term and twin-score joins must broadcast:\n$p")
+    // the query-term set filters the token stream map-side: the filter
+    // sits below (prints after) the posting exchange, not above it
+    val lines = p.split("\n")
+    val postingEx = lines.indexWhere(_.contains("Exchange hashpartitioning(doc_id"))
+    val prune = lines.indexWhere(l => l.contains("Filter") && l.contains("term") &&
+      (l.contains("INSET") || l.contains(" IN (")))
+    assert(postingEx >= 0 && prune > postingEx,
+      s"the query-term prune must run before the posting exchange:\n$p")
+  }
+
+  test("q92: the pinned stored-NN plan is the final plan of the materialized Dataset") {
+    import graft.queries.SimilarityQueries
+    SimilarityQueries.ivfStoredNn(spark, sf).collect() // builds or reuses the index
+    val (stored, plan) = SimilarityQueries.storedNn(spark, Artifacts.name("ivf_q92", sf))
+    assert(plan.contains("AdaptiveSparkPlan isFinalPlan=true"), plan)
+    assert(!plan.contains("== Initial Plan =="), plan)
+    assert(plan.contains("Bucketed: true"), s"home side reads the bucketed layout:\n$plan")
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2, plan)
+    assert(stored.count() == spark.table(Artifacts.name("ivf_q92", sf)).count())
+    val r = SimilarityQueries.ivfStoredNn(spark, sf).head()
+    assert(r.getBoolean(1) && r.getBoolean(2) && r.getLong(3) == 2L, r)
+  }
+
+  test("per-job floor: a warm q191 runs at most 14 jobs and a warm q92 at most 13") {
+    // each job is planning, scheduling and generated code; a checkpoint,
+    // a sort, a re-plan or an exceptAll coming back shows here first
+    for ((name, most) <- Seq("q191_retrieval_eval" -> 14L, "q92_ivf_stored_nn" -> 13L)) {
+      val fn = SparkEntry.queries(name)
+      Measure.once(spark, sf, fn).orFail(name)
+      val warm = Measure.once(spark, sf, fn).orFail(name).ledger
+      assert(warm.jobs <= most, s"$name warm run: ${warm.json}")
+    }
   }
 
   test("q196: eval grams broadcast, corpus-side gram stream never shuffles before the hit join (r18)") {
